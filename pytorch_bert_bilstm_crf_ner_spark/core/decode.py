@@ -41,7 +41,8 @@ def _resolve_table(id2ent_items: tuple) -> dict:
     the id2ent ITEMS — a mutated or different vocab gets its own table."""
     id2ent = dict(id2ent_items)
     out = {}
-    for tid in id2ent:
+    # id 0 resolves through id2ent[1] even when the vocab has no key 0
+    for tid in id2ent.keys() | ({0} if 1 in id2ent else set()):
         prefix, etype = _resolve(tid, id2ent)
         out[tid] = (
             prefix.startswith("S"),

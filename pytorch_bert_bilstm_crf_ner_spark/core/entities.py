@@ -54,8 +54,9 @@ def alias_edges(rows=ENTITY_DICT_ROWS) -> list[tuple[int, int]]:
 def connected_components_py(
     node_ids: list[int], edges: list[tuple[int, int]]
 ) -> dict[int, int]:
-    """Union-find; component representative = MIN id (matches the Spark
-    min-label-propagation operator, `operators/canonicalize.py`)."""
+    """Union-find; component representative = MIN id (matches
+    `operators/canonicalize.py::connected_components` on both its driver
+    path, which calls this, and its large-star/small-star loop)."""
     parent = {n: n for n in node_ids}
 
     def find(x: int) -> int:

@@ -1,19 +1,15 @@
 """Entity canonicalization: connected components over the alias-sharing
-graph, as iterative DataFrame min-label propagation (A7 per SURVEY.md
-§2.6; the reference's only analog is exact-string dedupe, `scripts/
-server.py:60-72` / `data_augment/aug.py:55-56` — component grouping is the
-north_star upgrade).
+graph (A7 per SURVEY.md §2.6; the reference's only analog is exact-string
+dedupe, `scripts/server.py:60-72` / `data_augment/aug.py:55-56` — component
+grouping is the north_star upgrade).
 
-Implementation notes for scale: plain min-label propagation converges in
-O(graph diameter) rounds; alias-sharing graphs are unions of stars
-(diameter <= 2 per shared alias, chains only when an entity shares several
-aliases), so a small ``max_iter`` suffices.  Each round is one shuffle on
-``id``; ``localCheckpoint`` truncates lineage so plans don't grow.  For
-adversarial long-chain graphs (near-dup chains A~B~C~... WILL occur at
-corpus scale) pass ``algorithm="star"`` — alternating large-star /
+One CC path, shared by :func:`canonical_entities` and
+`operators/dedup.py::neardup_clusters`: the symmetrized edge list is
+counted once; up to ``DRIVER_CC_MAX_EDGES`` rows it is solved on the
+driver with union-find, and above that with alternating large-star /
 small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond") over the same DataFrame primitives, converging in O(log n)
-rounds instead of O(diameter).
+Beyond"), which converges in O(log n) rounds whatever the graph's
+diameter — near-dup drift chains A~B~C~... included.
 """
 
 from __future__ import annotations
@@ -21,166 +17,67 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..core.entities import connected_components_py
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iter: int = 25,
-    materialize: str = "local_checkpoint",
-    algorithm: str = "min_label",
-    stats: dict | None = None,
-    driver_side_threshold: int | None = None,
-) -> DataFrame:
-    """edges(src bigint, dst bigint), undirected -> (id, component) with
-    component = min id reachable.  ``vertices(id)`` adds isolated nodes.
+# Symmetrized edge rows (both directions, duplicates counted) up to which
+# components are solved on the driver.
+DRIVER_CC_MAX_EDGES = 1_000_000
 
-    ``algorithm`` picks the iteration scheme — the round budget rule:
 
-    - ``"min_label"`` (default): label propagation, one shuffle per round,
-      converges in O(graph diameter) rounds.  Right when the graph is
-      known to be shallow (alias-sharing graphs are unions of stars,
-      diameter <= ~4; LSH near-dup graphs at moderate thresholds).  If
-      ``max_iter`` rounds pass without convergence this RAISES rather than
-      returning silently-wrong partial components — switch to ``"star"``.
-    - ``"star"``: alternating large-star / small-star (Kiveris et al.),
-      two shuffles per round, O(log n) rounds regardless of diameter —
-      the choice for adversarial chains (a 1000-node path converges in
-      ~10 rounds vs 999 for min_label; pinned by tests/test_star_cc.py).
+def _pin(df: DataFrame) -> DataFrame:
+    """Lazy checkpoint: reliable when ``sc.getCheckpointDir()`` is set
+    (flat plans that survive executor loss), local otherwise (flat plans;
+    blocks live on executor local storage, so an executor loss fails the
+    job).  Either way the frame is computed once, by its first action."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
-    ``materialize`` picks how per-round frames are pinned so the loop
-    doesn't re-execute the upstream edge pipeline every iteration:
 
-    - ``"local_checkpoint"`` (default): LAZY ``localCheckpoint`` —
-      truncates lineage (plans stay flat over rounds) and materializes on
-      first use, not at construction.  Checkpoint blocks live on executor
-      local storage and are NOT fault-tolerant: an executor loss mid-run
-      fails the job, which must rerun from the last pipeline checkpoint.
-      Right for interactive / bounded runs.
-    - ``"persist"``: ``MEMORY_AND_DISK`` persist, superseded rounds
-      unpersisted.  Lineage is kept, so executor failure recomputes
-      instead of failing.  CAVEAT: kept lineage means the LOGICAL plan
-      grows multiplicatively with round count (each round references the
-      previous frame several times), so Catalyst analysis time explodes
-      beyond ~6-8 rounds — use only for short loops (alias stars), never
-      for ``algorithm="star"`` on deep graphs.
-    - ``"checkpoint"``: reliable ``df.checkpoint`` (requires
-      ``sc.setCheckpointDir`` on fault-tolerant storage) — flat plans AND
-      executor-loss tolerance: the long-multi-round / 100 TB setting.
+def connected_components(edges: DataFrame, max_iter: int = 25,
+                         stats: dict | None = None) -> DataFrame:
+    """edges(src, dst), undirected -> (id, component) with component = min
+    id reachable; both columns keep the edges' id type.  Every id on an
+    edge is emitted, so an isolated node is passed as the self-loop
+    (id, id) and comes back as its own component.
 
-    ``stats``, if given, receives ``{"rounds": n}`` on return.
+    The symmetrized edge list is checkpointed (:func:`_pin`) and counted
+    — the size gate:
 
-    ``driver_side_threshold`` (round-6, opt-in, ``vertices is None``
-    only): the `canonical_entities` pattern — when the SYMMETRIZED edge
-    list fits under the limit-guarded collect, components are solved
-    with one collect + python union-find (min-id representative ==
-    min-label closure) instead of the iterative loops, replacing N
-    per-round jobs with one.  Over the threshold, the already-
-    materialized edge checkpoint feeds the distributed path unchanged —
-    the 100 TB shape is untouched.
+    - at most ``DRIVER_CC_MAX_EDGES`` rows: one collect and a union-find
+      on the driver (min-id representative, the same fixed point as the
+      star loop); the checkpoint blocks are released before returning, so
+      no RDD stays persisted;
+    - over the limit no edge row reaches the driver: the checkpoint feeds
+      the large-star/small-star loop, whose rounds are pinned the same
+      way.  The loop RAISES if ``max_iter`` rounds pass without
+      convergence rather than return partial components.
+
+    ``stats``, if given, receives ``{"rounds": n}`` (0 on the driver path).
     """
-    if materialize not in ("local_checkpoint", "persist", "checkpoint"):
-        raise ValueError(f"materialize: {materialize!r}")
-    if algorithm not in ("min_label", "star"):
-        raise ValueError(f"algorithm: {algorithm!r}")
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if materialize == "persist":
-            from pyspark.storagelevel import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        if materialize == "checkpoint":
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    def _unpin(df: DataFrame) -> None:
-        if materialize == "persist":
-            df.unpersist()
-
-    # materialize the symmetric edge list ONCE: the loop below scans it
-    # every iteration, and without this the ENTIRE upstream edge pipeline
-    # (e.g. an LSH near-dup candidate search) would re-execute per round
-    pinned_sym = _pin(
+    sym = _pin(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
     )
-    if driver_side_threshold and vertices is None:
-        rows = pinned_sym.limit(driver_side_threshold + 1).collect()
-        if len(rows) <= driver_side_threshold:
-            from ..core.entities import connected_components_py
-
-            ids = sorted({r["a"] for r in rows} | {r["b"] for r in rows})
-            cmap = connected_components_py(
-                ids, [(r["a"], r["b"]) for r in rows]
-            )
-            if stats is not None:
-                stats["rounds"] = 0
-            return edges.sparkSession.createDataFrame(
-                [(i, c) for i, c in cmap.items()],
-                "id BIGINT, component BIGINT",
-            )
-    # verts BEFORE dropping self-loops: a node appearing only as (x, x)
-    # must still be emitted (as its own component)
-    verts = pinned_sym.select(F.col("a").alias("id")).distinct()
-    sym = pinned_sym.filter(F.col("a") != F.col("b"))
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id"))).distinct()
-
-    if algorithm == "star":
-        comp = _star_components(
-            sym, verts, max_iter, _pin, _unpin,
-            persist_mode=(materialize == "persist"), stats=stats,
-        )
-        _unpin(pinned_sym)
-        return comp
-
-    comp = _pin(verts.withColumn("component", F.col("id")))
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        rounds += 1
-        # neighbor's current label flows along each edge
-        msgs = sym.join(comp, sym.b == comp.id, "inner").select(
-            F.col("a").alias("id"), "component"
-        )
-        new_comp = _pin(
-            comp.select("id", "component")
-            .union(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        if materialize == "persist":
-            # fully materialize new_comp's cache BEFORE dropping comp: the
-            # limit(1) convergence probe below may populate only part of
-            # it, and comp feeds new_comp's lineage twice (union + msgs) —
-            # unpersisting early would force long recomputation chains in
-            # later rounds (round-3 ADVICE)
-            new_comp.count()
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        _unpin(comp)
-        comp = new_comp
-        if changed == 0:
-            converged = True
-            break
+    if sym.count() > DRIVER_CC_MAX_EDGES:
+        return _star_components(sym, max_iter, stats)
+    try:
+        rows = sym.collect()
+    finally:
+        # a checkpointed frame has no public unpersist: drop its blocks
+        # through the RDD the plan reads
+        sym._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    ids = sorted({r["a"] for r in rows})
+    cmap = connected_components_py(ids, [(r["a"], r["b"]) for r in rows])
     if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        raise RuntimeError(
-            f"min-label propagation did not converge in {max_iter} rounds "
-            "(graph diameter exceeds the round budget) — rerun with "
-            'algorithm="star" (O(log n) rounds) or raise max_iter'
-        )
-    return comp
+        stats["rounds"] = 0
+    id_type = sym.schema["a"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(
+        list(cmap.items()), f"id {id_type}, component {id_type}"
+    )
 
 
-def _star_components(sym: DataFrame, verts: DataFrame, max_iter: int,
-                     _pin, _unpin, persist_mode: bool,
+def _star_components(sym: DataFrame, max_iter: int,
                      stats: dict | None) -> DataFrame:
     """Alternating large-star / small-star over a pinned symmetric edge
     list -> (id, component).  Each round is two grouped shuffles; the edge
@@ -219,20 +116,19 @@ def _star_components(sym: DataFrame, verts: DataFrame, max_iter: int,
             F.col("hi2").alias("hi"), F.col("lo2").alias("lo")
         )
 
+    # verts BEFORE dropping self-loops: a node appearing only as (x, x)
+    # must still be emitted (as its own component)
+    verts = sym.select(F.col("a").alias("id")).distinct()
     directed = _pin(
-        sym.filter(F.col("a") > F.col("b")).select(
-            F.col("a").alias("hi"), F.col("b").alias("lo")
-        )
+        sym.filter(F.col("a") > F.col("b"))
+        .select(F.col("a").alias("hi"), F.col("b").alias("lo"))
+        .distinct()
     )
     rounds = 0
     converged = False
     for _ in range(max_iter):
         rounds += 1
         nxt = _pin(_small_star(_large_star(directed)))
-        if persist_mode:
-            # same rule as the min-label loop: fully materialize the new
-            # cache before the probe/unpersist can strand partial caches
-            nxt.count()
         # convergence = identical edge sets.  Both frames are DISTINCT by
         # construction, so set equality == "no (hi, lo) appears with an
         # unbalanced +1/-1 tag" — ONE job with ONE shuffle, where the old
@@ -247,7 +143,6 @@ def _star_components(sym: DataFrame, verts: DataFrame, max_iter: int,
             .limit(1)
             .count()
         )
-        _unpin(directed)
         directed = nxt
         if delta == 0:
             converged = True
@@ -272,50 +167,24 @@ def _star_components(sym: DataFrame, verts: DataFrame, max_iter: int,
     )
 
 
-def canonical_entities(entity_dict: DataFrame, max_iter: int = 25,
-                       driver_side_threshold: int = 1_000_000) -> DataFrame:
+def canonical_entities(entity_dict: DataFrame) -> DataFrame:
     """entity_dict -> (entity_id, canonical_id, canonical_name): entities
     sharing an (alias, type) key are merged; canonical_name is the name of
     the component's min entity_id.
 
-    The dictionary is broadcast-sized by definition in this pipeline, so
-    below ``driver_side_threshold`` rows the components are computed with
-    driver-side union-find (one collect of (entity_id, alias, type) — no
-    iterative shuffles); the distributed min-label-propagation loop is the
-    path for genuinely large alias graphs."""
-    rows = entity_dict.select("entity_id", "alias", "type").limit(
-        driver_side_threshold + 1
-    ).collect()
-    if len(rows) <= driver_side_threshold:
-        # one collect, no iterative shuffles
-        from collections import defaultdict
-
-        from ..core.entities import connected_components_py
-
-        by_alias: dict[tuple[str, str], list[int]] = defaultdict(list)
-        for r in rows:
-            by_alias[(r["alias"], r["type"])].append(r["entity_id"])
-        edge_rows = []
-        for ids_ in by_alias.values():
-            ids_ = sorted(set(ids_))
-            edge_rows.extend((ids_[0], other) for other in ids_[1:])
-        ids = sorted({r["entity_id"] for r in rows})
-        cmap = connected_components_py(ids, edge_rows)
-        comp = entity_dict.sparkSession.createDataFrame(
-            [(i, c) for i, c in cmap.items()], "id BIGINT, component BIGINT"
+    Each (alias, type) group links its min entity_id to every member,
+    the min itself included as a self-loop, so every entity reaches
+    :func:`connected_components` — a broadcast-sized dictionary takes its
+    driver union-find, a genuinely large alias graph the star loop."""
+    edges = (
+        entity_dict.groupBy("alias", "type")
+        .agg(
+            F.min("entity_id").alias("src"),
+            F.collect_set("entity_id").alias("ids"),
         )
-    else:
-        edges = (
-            entity_dict.groupBy("alias", "type")
-            .agg(
-                F.min("entity_id").alias("src"),
-                F.collect_set("entity_id").alias("ids"),
-            )
-            .select("src", F.explode("ids").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
-        verts = entity_dict.select(F.col("entity_id").alias("id")).distinct()
-        comp = connected_components(edges, verts, max_iter)
+        .select("src", F.explode("ids").alias("dst"))
+    )
+    comp = connected_components(edges)
     # min canonical_name per id: deterministic (and identical to the
     # recursive-CTE DuckDB twin) even if an entity_id ever carried two
     # distinct canonical_name spellings in the dictionary

@@ -746,11 +746,12 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (large-star/small-star, O(log n) rounds) over
-    embedding near-dup pairs (the keep-one-per-cluster dedup step); twin =
-    recursive-CTE closure over the SAME LSH-candidates + exact-re-verify
-    pair list, so equality is independent of both LSH recall and the CC
-    algorithm choice."""
+    """Connected components over embedding near-dup pairs (the
+    keep-one-per-cluster dedup step): driver union-find up to
+    ``DRIVER_CC_MAX_EDGES`` symmetrized edges, large-star/small-star
+    above; twin = recursive-CTE closure over the SAME LSH-candidates +
+    exact-re-verify pair list, so equality is independent of both LSH
+    recall and which CC path ran."""
     from ..operators.dedup import neardup_clusters
 
     n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")

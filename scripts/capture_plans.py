@@ -4,8 +4,8 @@
 Usage: python scripts/capture_plans.py <suffix> [query ...]
 Writes plans/r06/<query>_<suffix>.txt for each named query (default: the
 24 bench-listed queries).  Plan-only — nothing is executed except the
-driver-side literal derivation some query builders do (ivf centroids,
-canonical_entities' bounded collect).
+driver-side work some query builders do (ivf centroids, the
+connected-components size gate of canonical_entities and neardup_clusters).
 """
 
 from __future__ import annotations

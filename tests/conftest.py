@@ -63,3 +63,14 @@ def spark():
     s = get_spark(app_name="tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def restore_checkpoint_dir(spark):
+    """Unset the session's checkpoint dir after the test: the star CC loop
+    switches to reliable ``checkpoint`` whenever one is set, so a dir
+    left behind would change the path every later test takes.  PySpark
+    has no public unset; the JVM field is reset directly."""
+    yield
+    sc = spark.sparkContext
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())

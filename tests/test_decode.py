@@ -34,6 +34,15 @@ def test_id0_quirk_opens_and_closes_spans():
     assert bioes_decode_flat(tags, "xy", ID2ENT) == [("xy", 0, "PRO")]
 
 
+def test_id0_quirk_without_vocab_key_0():
+    # a hand-built vocab with no key 0 still resolves tag 0 through id 1
+    id2ent = {1: "B-PRO", 2: "E-PRO", 3: "S-ORG"}
+    assert bioes_decode_flat([0, 2, 3], "xyz", id2ent) == [
+        ("xy", 0, "PRO"),
+        ("z", 2, "ORG"),
+    ]
+
+
 def test_b_without_e_dropped():
     tags = [ENT2ID["B-NAME"], ENT2ID["I-NAME"], ENT2ID["B-ORG"]]
     assert bioes_decode_flat(tags, "abc", ID2ENT) == []

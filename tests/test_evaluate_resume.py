@@ -121,68 +121,64 @@ def test_evaluate_extractor_job(spark):
     assert micro2.collect()[0]["f1"] < 1.0
 
 
-def test_distributed_connected_components(spark):
-    """The min-label-propagation loop (the scale path the driver-side
-    union-find fast path replaces for small dictionaries)."""
+def test_distributed_connected_components(spark, monkeypatch):
+    """The large-star/small-star loop (the scale path the driver-side
+    union-find takes over below ``DRIVER_CC_MAX_EDGES``), forced by a
+    zero limit; the isolated node comes in as a self-loop."""
     from pytorch_bert_bilstm_crf_ner_spark.core.entities import (
         connected_components_py,
     )
-    from pytorch_bert_bilstm_crf_ner_spark.operators.canonicalize import (
-        connected_components,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators import canonicalize
 
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
     # chain 1-2-3-4-5, star 10-(11,12,13), isolated 20, pair 30-31
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (30, 31)]
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13),
+             (20, 20), (30, 31)]
     edges_df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-    verts_df = spark.createDataFrame([(20,)], "id BIGINT")
     got = {
         r["id"]: r["component"]
-        for r in connected_components(edges_df, verts_df).collect()
+        for r in canonicalize.connected_components(edges_df).collect()
     }
-    nodes = sorted({n for e in edges for n in e} | {20})
+    nodes = sorted({n for e in edges for n in e})
     want = connected_components_py(nodes, edges)
     assert got == want
     assert got[5] == 1 and got[13] == 10 and got[20] == 20 and got[31] == 30
 
 
-def test_connected_components_materialize_modes_agree(spark):
-    """`persist` (fault-tolerant, lineage kept) and the default lazy
-    `local_checkpoint` must give identical components; unknown modes err."""
-    import pytest
+def test_connected_components_materialize_modes_agree(
+        spark, monkeypatch, tmp_path, restore_checkpoint_dir):
+    """The star loop's two materialize modes — lazy ``localCheckpoint``
+    (no checkpoint dir) and reliable ``checkpoint`` (dir set) — must give
+    identical components."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators import canonicalize
 
-    from pytorch_bert_bilstm_crf_ner_spark.operators.canonicalize import (
-        connected_components,
-    )
-
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+    sc = spark.sparkContext
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (30, 31)]
     edges_df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-    local = {tuple(r) for r in connected_components(edges_df).collect()}
-    persist = {
-        tuple(r)
-        for r in connected_components(edges_df, materialize="persist").collect()
+    assert sc.getCheckpointDir() is None
+    local = {tuple(r) for r in canonicalize.connected_components(edges_df).collect()}
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    reliable = {
+        tuple(r) for r in canonicalize.connected_components(edges_df).collect()
     }
-    assert local == persist and len(local) == 9
-    with pytest.raises(ValueError):
-        connected_components(edges_df, materialize="eager")
+    assert local == reliable and len(local) == 9
 
 
-def test_canonical_entities_driver_and_distributed_branches_agree(spark):
+def test_canonical_entities_driver_and_distributed_branches_agree(
+        spark, monkeypatch):
     """VERDICT r2 #9: the driver-side union-find fast path and the
-    distributed min-label branch must stay equivalence-pinned — run both on
-    the same dictionary by forcing the threshold."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.canonicalize import (
-        canonical_entities,
-    )
+    distributed star loop must stay equivalence-pinned — run both on the
+    same dictionary by forcing the limit to 0."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators import canonicalize
     from pytorch_bert_bilstm_crf_ner_spark.sources.entity_dict import (
         entity_dict_df,
     )
 
     ed = entity_dict_df(spark)
-    fast = {tuple(r) for r in canonical_entities(ed).collect()}
-    dist = {
-        tuple(r)
-        for r in canonical_entities(ed, driver_side_threshold=0).collect()
-    }
+    fast = {tuple(r) for r in canonicalize.canonical_entities(ed).collect()}
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+    dist = {tuple(r) for r in canonicalize.canonical_entities(ed).collect()}
     assert fast == dist and len(fast) > 10
 
 

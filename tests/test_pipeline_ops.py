@@ -291,6 +291,24 @@ def test_simhash_banding_rejects_unsound_params(spark):
         simhash_neardup_pairs(docs, max_hamming=4, n_bands=4)
 
 
+def test_simhash_rejects_bits_over_60(spark):
+    """Past 60 bits the packed md5 prefix overflows BIGINT and the NULL
+    cast would silently drop votes; both formulations must refuse."""
+    import pytest as _pytest
+
+    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
+        simhash,
+        simhash_expr,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
+    with _pytest.raises(ValueError, match="at most 60"):
+        simhash(docs, bits=64)
+    with _pytest.raises(ValueError, match="at most 60"):
+        simhash_expr("text", bits=64)
+    assert simhash(docs, bits=60).columns == ["doc_id", "simhash"]
+
+
 def test_simhash_banding_cap_twin_parity(spark):
     """max_band_docs is plumbed through both the Spark operator and the
     SQL twin; the registered query is uncapped, so pin the capped route's

@@ -1,24 +1,31 @@
-"""Large-star/small-star connected components (adversarial long-chain
-graphs): same answers as min-label propagation / the pure-python
-union-find on the same inputs, but O(log n) rounds instead of
-O(diameter) — the scale story for near-dup chains (A~B~C~...) that
-defeat label propagation's round budget."""
+"""Connected components: the size-gated driver union-find and the
+large-star/small-star loop give the same answers as the pure-python
+union-find; the star loop needs O(log n) rounds instead of O(diameter) —
+the scale story for near-dup chains (A~B~C~...).  ``star_only`` patches
+the driver limit to 0 so the star cases exercise the loop."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 from pytorch_bert_bilstm_crf_ner_spark.core.entities import (
     connected_components_py,
 )
+from pytorch_bert_bilstm_crf_ner_spark.operators import canonicalize
 from pytorch_bert_bilstm_crf_ner_spark.operators.canonicalize import (
     connected_components,
 )
 
 
-def _edges_df(spark, pairs):
+@pytest.fixture
+def star_only(monkeypatch):
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+
+
+def _edges_df(spark, pairs, id_type="BIGINT"):
     return spark.createDataFrame(
-        [(int(a), int(b)) for a, b in pairs], "src BIGINT, dst BIGINT"
+        [(int(a), int(b)) for a, b in pairs], f"src {id_type}, dst {id_type}"
     )
 
 
@@ -29,6 +36,10 @@ def _comp_map(df):
 def _expected(pairs):
     ids = sorted({v for e in pairs for v in e})
     return connected_components_py(ids, pairs)
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 FIXTURES = {
@@ -47,87 +58,65 @@ FIXTURES = {
 
 
 @pytest.mark.parametrize("name", sorted(FIXTURES))
-def test_star_matches_union_find(spark, name):
+def test_star_matches_union_find(spark, star_only, name):
     pairs = FIXTURES[name]
-    got = _comp_map(
-        connected_components(_edges_df(spark, pairs), max_iter=50,
-                             algorithm="star")
-    )
+    got = _comp_map(connected_components(_edges_df(spark, pairs), max_iter=50))
     assert got == _expected(pairs)
 
 
-def test_min_label_matches_star_and_union_find(spark):
-    """Both distributed algorithms agree with each other AND the python
-    union-find on the same (short-diameter) input."""
+def test_fast_path_matches_star_and_union_find(spark, monkeypatch):
+    """The driver path and the star loop agree with each other AND the
+    python union-find on the same input."""
     pairs = FIXTURES["mixed"]
     edges = _edges_df(spark, pairs)
     want = _expected(pairs)
-    assert _comp_map(connected_components(edges, max_iter=25)) == want
-    assert _comp_map(connected_components(edges, algorithm="star")) == want
+    assert _comp_map(connected_components(edges)) == want
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+    assert _comp_map(connected_components(edges)) == want
 
 
-def test_star_handles_isolated_vertices(spark):
-    edges = _edges_df(spark, [(1, 2)])
-    verts = spark.createDataFrame([(i,) for i in range(5)], "id BIGINT")
-    got = _comp_map(
-        connected_components(edges, vertices=verts, algorithm="star")
-    )
+def test_star_handles_isolated_vertices(spark, star_only):
+    """Isolated nodes are passed as (id, id) self-loops."""
+    edges = _edges_df(spark, [(1, 2), (0, 0), (3, 3), (4, 4)])
+    got = _comp_map(connected_components(edges))
     assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4}
 
 
-def test_star_round_count_on_long_path(spark):
-    """300-node path: min-label would need 299 rounds (it RAISES at a
-    10-round budget instead of returning wrong partial labels); star
-    converges in O(log n) — pinned <= 12 rounds observed (9 actual)."""
+def test_star_round_count_on_long_path(spark, star_only):
+    """300-node path: label propagation would need 299 rounds; star
+    converges in O(log n) — pinned <= 12 rounds observed (9 actual).  A
+    budget too small RAISES instead of returning partial components."""
     edges = _edges_df(spark, [(i, i + 1) for i in range(299)])
     stats: dict = {}
-    got = _comp_map(
-        connected_components(edges, max_iter=50, algorithm="star", stats=stats)
-    )
+    got = _comp_map(connected_components(edges, max_iter=50, stats=stats))
     assert got == {i: 0 for i in range(300)}
     assert stats["rounds"] <= 12, stats
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=10)
+        connected_components(edges, max_iter=2)
 
 
-def test_star_persist_mode_equivalence(spark):
-    """persist mode keeps lineage, so plans grow multiplicatively per
-    round — correct (and tested) on SHORT loops like this 4-round
-    fixture; deep graphs must use checkpoint/local_checkpoint."""
-    pairs = FIXTURES["mixed"]
-    got = _comp_map(
-        connected_components(
-            _edges_df(spark, pairs), max_iter=50, algorithm="star",
-            materialize="persist",
-        )
-    )
-    assert got == _expected(pairs)
-
-
-def test_star_checkpoint_mode_deep_graph(spark, tmp_path):
-    """Reliable-checkpoint mode: flat plans + fault tolerance — the
-    long-loop materialization; equivalent on a deep shuffled path."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_star_checkpoint_mode_deep_graph(spark, star_only, tmp_path,
+                                         restore_checkpoint_dir):
+    """With a checkpoint dir set the loop pins rounds with reliable
+    checkpoints (flat plans + fault tolerance); same answer on a deep
+    shuffled path, and the checkpoint files land in that dir."""
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     pairs = FIXTURES["shuffled_path"]
-    got = _comp_map(
-        connected_components(
-            _edges_df(spark, pairs), max_iter=50, algorithm="star",
-            materialize="checkpoint",
-        )
-    )
+    got = _comp_map(connected_components(_edges_df(spark, pairs), max_iter=50))
     assert got == _expected(pairs)
+    assert any(p.name.startswith("rdd-") for p in ckpt.rglob("*"))
 
 
-def test_neardup_chain_defaults_to_star(spark):
+def test_neardup_chain_defaults_to_star(spark, monkeypatch):
     """Chain-shaped NEAR-DUP fixture (round-4 VERDICT #2): 32 embeddings
     built as a sliding window of 25 ones, so consecutive vectors have
     cosine 24/25 = 0.96 (>= the 0.95 threshold) and every other pair is
-    <= 23/25 = 0.92 — the pair graph is a 31-hop chain.  min-label's old
-    default (25-round budget) REFUSES this graph; the shipping
-    neardup_clusters default (algorithm="star") finishes it."""
-    import pyspark.sql.functions as F
-
+    <= 23/25 = 0.92 — the pair graph is a 31-hop chain, which a
+    25-round label-propagation budget could not finish.  neardup_clusters
+    resolves it on the driver path and, over the limit, on the star
+    loop."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
         embedding_neardup_pairs,
         neardup_clusters,
@@ -144,24 +133,77 @@ def test_neardup_chain_defaults_to_star(spark):
     got = {(r["vec_a"], r["vec_b"]) for r in pairs.collect()}
     assert got == {(i, i + 1) for i in range(n_vec - 1)}, got
 
-    # the pre-round-5 default would have raised at corpus scale
-    edges = pairs.select(
-        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=25, algorithm="min_label")
+    def clusters():
+        return {
+            r["vec_id"]: r["cluster_id"]
+            for r in neardup_clusters(emb, 0.95, method="brute").collect()
+        }
 
-    clusters = {
-        r["vec_id"]: r["cluster_id"]
-        for r in neardup_clusters(emb, 0.95, method="brute").collect()
-    }
-    assert clusters == {i: 0 for i in range(n_vec)}
+    assert clusters() == {i: 0 for i in range(n_vec)}
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+    assert clusters() == {i: 0 for i in range(n_vec)}
 
 
-def test_min_label_rounds_tracked(spark):
+def test_rounds_tracked(spark, monkeypatch):
+    edges = _edges_df(spark, FIXTURES["star"])
     stats: dict = {}
-    connected_components(
-        _edges_df(spark, FIXTURES["star"]), max_iter=25, stats=stats
-    )
-    # star graph: one propagation round + one fixed-point confirmation
+    connected_components(edges, stats=stats)
+    assert stats["rounds"] == 0
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", 0)
+    connected_components(edges, stats=stats)
+    # star graph: already the converged shape, one confirming round
     assert 1 <= stats["rounds"] <= 3
+
+
+def test_fast_path_leaves_no_persisted_rdd(spark):
+    """The size gate caches the symmetrized edge list; the driver path
+    must release it, for a bare edge list and for neardup_clusters."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
+        neardup_clusters,
+    )
+
+    before = _persisted(spark)
+    stats: dict = {}
+    got = _comp_map(
+        connected_components(_edges_df(spark, FIXTURES["mixed"]), stats=stats)
+    )
+    assert got == _expected(FIXTURES["mixed"]) and stats["rounds"] == 0
+    assert _persisted(spark) == before
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i % 3)]) for i in range(12)],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    )
+    assert neardup_clusters(emb, 0.99, method="brute").count() == 12
+    assert _persisted(spark) == before
+
+
+def test_int_ids_keep_type_on_both_paths(spark, monkeypatch):
+    edges = _edges_df(spark, FIXTURES["mixed"], id_type="INT")
+    want = _expected(FIXTURES["mixed"])
+    for limit in (canonicalize.DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", limit)
+        stats: dict = {}
+        comp = connected_components(edges, stats=stats)
+        assert comp.schema.simpleString() == "struct<id:int,component:int>"
+        assert _comp_map(comp) == want
+        assert (stats["rounds"] == 0) == (limit > 0)
+
+
+def test_over_limit_graph_never_collects(spark, monkeypatch):
+    """A graph one row over the driver limit runs the star loop, and no
+    DataFrame is collected to the driver on the way."""
+    pairs = FIXTURES["tree"]
+    edges = _edges_df(spark, pairs)
+    n_sym = 2 * len(pairs)  # the gate counts both directions of each edge
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_EDGES", n_sym - 1)
+
+    def _no_collect(self):
+        raise AssertionError("edge rows moved to the driver")
+
+    stats: dict = {}
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "collect", _no_collect)
+        comp = connected_components(edges, stats=stats)
+    assert stats["rounds"] >= 1
+    assert _comp_map(comp) == _expected(pairs)
