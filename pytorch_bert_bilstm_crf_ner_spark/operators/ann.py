@@ -1,17 +1,30 @@
-"""Similarity search over the ``embeddings`` table (array<float> column).
+"""Similarity search over the ``embeddings`` table (vec_id, array<float>).
 
-- :func:`cosine_topk` — brute-force cosine top-k, the exactness baseline:
-  broadcast the (small) query set, JVM-side ``zip_with``/``aggregate`` dot
-  products, per-query ``row_number`` window for the top-k.  Has an exact
-  DuckDB twin.
-- :func:`lsh_cosine_topk` — the scale path: random-hyperplane (sign) LSH.
-  Hyperplanes are seeded numpy, shipped as a broadcast-joined literal
-  table; bucket = md5 of the sign bits, candidates = bucket equi-join
-  (multi-probe over H tables), exact re-rank inside buckets.  At 100 TB
-  the bucket join replaces the quadratic cross join; recall is tunable
-  via (n_planes, n_tables).  No SQL twin (seeded-hyperplane generation
-  isn't ANSI SQL) — covered by a pytest recall check vs the brute-force
-  baseline.
+Every embedding dot product, norm and centroid score runs in ONE kernel
+family: Arrow-batched numpy stages (``mapInArrow``) that widen each batch
+to float64 and accumulate ONE DIMENSION AT A TIME in index order, i.e.
+the ((0.0 + x0*y0) + x1*y1) + ... chain of IEEE double adds, never a BLAS
+matmul (its reduction order varies with threading).  Each kernel reads the
+vector width from the batch and rejects null or ragged rows.
+
+- :func:`pair_cosine_parts` — (dot, norm_a, norm_b) per candidate pair;
+  the division, ROUND and threshold stay Spark-side in the callers.
+- :func:`lsh_buckets` — sign bits against hyperplane literals, packed into
+  one BIGINT bucket per hash table, row-locally (no join, no Exchange).
+- :func:`_assign_to_centroid` — the ``depth`` best centroids per vector by
+  cosine against centroid literals (IVF assignment and query probe).
+
+Operators, each with a hash-checked DuckDB twin (``*_sql``):
+
+- :func:`cosine_topk` — exact top-k: the <= ``n_queries`` query rows are
+  broadcast against the corpus, per-query ``row_number`` top-k.
+- :func:`lsh_cosine_topk` — seeded random-hyperplane LSH: candidates share
+  a (table_id, bucket) with a query (equi-join against the broadcast query
+  buckets), exact re-rank; recall tuned by (n_planes, n_tables).
+- :func:`ivf_cosine_topk` — inverted file over caller-supplied centroids
+  (:func:`ivf_train_centroids`): every vector joins its nearest centroid's
+  bucket, each query searches its ``nprobe`` nearest buckets, exact
+  re-rank.
 """
 
 from __future__ import annotations
@@ -21,77 +34,50 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _flat2d(col, width: int | None = None) -> np.ndarray:
+    """pyarrow list<float> column -> (rows, width) float64 (exact widening).
 
-
-def _dot_lit(col: str, vec) -> F.Column:
-    """Codegen'd dot product of an array column against a PYTHON-LITERAL
-    vector: the unrolled sum ``((0.0 + c[0]*v0) + c[1]*v1) + ...`` is the
-    exact same chain of IEEE double ops as :func:`_dot`'s interpreted fold
-    (same order, same leading 0.0 seed; `D` literals parse to the same
-    doubles repr round-trips), so results are bit-identical — but
-    whole-stage-codegen'd instead of per-element lambda interpretation
-    (guide §4.1: interpreted HOFs lose ~3x+ to codegen).  Built as ONE
-    ``F.expr`` string: building the tree Column-by-Column costs a py4j
-    round trip per node (~seconds for a 64-term sum)."""
-    terms = " + ".join(
-        f"CAST(`{col}`[{d}] AS DOUBLE) * {float(v)!r}D"
-        for d, v in enumerate(vec)
-    )
-    return F.expr(f"CAST(0.0 AS DOUBLE) + {terms}")
-
-
-def _dot_cols(a: str, b: str, dim: int | None) -> F.Column:
-    """Dot product of two array columns; with ``dim`` known the sum is
-    unrolled element-wise (codegen, bit-identical order to the fold),
-    else it falls back to the interpreted HOF fold."""
-    if dim is None:
-        return _dot(a, b)
-    terms = " + ".join(
-        f"CAST(`{a}`[{d}] AS DOUBLE) * CAST(`{b}`[{d}] AS DOUBLE)"
-        for d in range(dim)
-    )
-    return F.expr(f"CAST(0.0 AS DOUBLE) + {terms}")
-
-
-def _with_norm(df: DataFrame, prefix: str, dim: int | None = None) -> DataFrame:
-    return df.select(
-        F.col("vec_id").alias(f"{prefix}_id"),
-        F.col("embedding").alias(f"{prefix}_emb"),
-        F.sqrt(_dot_cols("embedding", "embedding", dim)).alias(f"{prefix}_norm"),
-    )
-
-
-def _flat2d(col, n: int, dim: int) -> np.ndarray:
-    """pyarrow list<float> column -> (n, dim) float64 (exact widening)."""
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64).reshape(n, dim)
+    Every row's width is read from the list offsets, so a null row, a null
+    element, or a row whose width differs from ``width`` (default: the
+    first row's) raises ValueError instead of being re-cut by the reshape
+    into wrong vectors."""
+    if col.null_count:
+        raise ValueError("embedding has a null row")
+    lens = col.value_lengths().to_numpy(zero_copy_only=False)
+    if width is None:
+        width = int(lens[0])
+    bad = lens != width
+    if bad.any():
+        raise ValueError(
+            f"embedding rows must have equal widths: got {int(lens[bad][0])}, "
+            f"expected {width}")
+    flat = col.flatten()
+    if flat.null_count:
+        raise ValueError("embedding has a null element")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(
+        len(col), width)
 
 
 def _int64(col) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def pair_cosine_parts(pairs: DataFrame, dim: int) -> DataFrame:
+def pair_cosine_parts(pairs: DataFrame) -> DataFrame:
     """(vec_a, vec_b, emb_a, emb_b) -> (vec_a, vec_b, dot, norm_a, norm_b)
-    via ONE Arrow-batched numpy stage (guide §4.2) — the exact-cosine
-    re-verify's heavy arithmetic, vectorized across the batch.
+    via ONE Arrow-batched numpy stage — the exact-cosine re-verify's heavy
+    arithmetic, vectorized across the batch.  ``emb_a`` and ``emb_b`` must
+    have one common width per batch (ValueError otherwise).
 
     Bit-exactness contract: ``dot``/norm sums accumulate in float64 ONE
     DIMENSION AT A TIME in index order (each ``+=`` is a single IEEE
-    double add per element) — exactly the JVM fold's
-    ((0.0 + x0) + x1) + ... chain; ``np.sqrt`` is the same IEEE sqrt as
-    Spark's SQRT.  The division, ROUND and threshold comparison stay
-    SPARK-SIDE in the callers, so every emitted float is produced by the
-    identical engine ops as before (and as the DuckDB twins).
+    double add per element) — the sequential ((0.0 + x0) + x1) + ... fold;
+    ``np.sqrt`` is the same IEEE sqrt as Spark's SQRT.  The division,
+    ROUND and threshold comparison stay SPARK-SIDE in the callers, so
+    every emitted float is produced by the same engine ops as the DuckDB
+    twins compare against.
 
     Why not a JVM expression: an unrolled 64-term sum is evaluated
-    interpreted (no codegen at this size) ~3x slower than even the HOF
+    interpreted (no codegen at this size) ~3x slower than even an HOF
     fold, and the optimizer duplicates it into join conditions; an opaque
     kernel is evaluated exactly once and is immune to both (measured in
     OPTIMIZATION_r06.md)."""
@@ -103,12 +89,12 @@ def pair_cosine_parts(pairs: DataFrame, dim: int) -> DataFrame:
             n = batch.num_rows
             if n == 0:
                 continue
-            A = _flat2d(batch.column("emb_a"), n, dim)
-            B = _flat2d(batch.column("emb_b"), n, dim)
+            A = _flat2d(batch.column("emb_a"))
+            B = _flat2d(batch.column("emb_b"), A.shape[1])
             dot = np.zeros(n, dtype=np.float64)
             na = np.zeros(n, dtype=np.float64)
             nb = np.zeros(n, dtype=np.float64)
-            for d in range(dim):
+            for d in range(A.shape[1]):
                 dot += A[:, d] * B[:, d]
                 na += A[:, d] * A[:, d]
                 nb += B[:, d] * B[:, d]
@@ -129,24 +115,17 @@ def pair_cosine_parts(pairs: DataFrame, dim: int) -> DataFrame:
     )
 
 
-def _rerank_candidates(cand: DataFrame, embeddings: DataFrame, dim: int,
-                       a_key: str = "q_id", b_key: str = "c_id") -> DataFrame:
-    """Attach embeddings to (a_key, b_key) candidate pairs and compute the
-    exact-cosine parts with :func:`pair_cosine_parts`; returns
-    (a_key, b_key, cos_sim) with cos_sim = round(dot/(na*nb), 4) computed
-    Spark-side (bit-identical to the old per-pair fold)."""
-    a = embeddings.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
+def _side(embeddings: DataFrame, s: str) -> DataFrame:
+    """(vec_<s>, emb_<s>): one side of a pair frame."""
+    return embeddings.select(
+        F.col("vec_id").alias(f"vec_{s}"), F.col("embedding").alias(f"emb_{s}")
     )
-    b = embeddings.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-    )
-    pairs = (
-        cand.select(F.col(a_key).alias("vec_a"), F.col(b_key).alias("vec_b"))
-        .join(a, "vec_a")
-        .join(b, "vec_b")
-    )
-    return pair_cosine_parts(pairs, dim).select(
+
+
+def _cosine(pairs: DataFrame, a_key: str, b_key: str) -> DataFrame:
+    """(vec_a, vec_b, emb_a, emb_b) pairs -> (a_key, b_key, cos_sim) with
+    cos_sim = round(dot / (norm_a * norm_b), 4) computed Spark-side."""
+    return pair_cosine_parts(pairs).select(
         F.col("vec_a").alias(a_key),
         F.col("vec_b").alias(b_key),
         F.round(
@@ -155,42 +134,21 @@ def _rerank_candidates(cand: DataFrame, embeddings: DataFrame, dim: int,
     )
 
 
-def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                dim: int | None = None) -> DataFrame:
-    """Top-k cosine neighbors for the first ``n_queries`` vec_ids:
-    (query_id, neighbor_id, cos_sim, rank).  Pass ``dim`` (e.g. from
-    parquet footer metadata) to route the per-pair dot products through
-    the Arrow numpy kernel (bit-identical values, see
-    :func:`pair_cosine_parts`); without it the interpreted-fold path is
-    kept (dim-agnostic)."""
-    if dim is not None:
-        q = embeddings.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-        )
-        c = embeddings.select(
-            F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-        )
-        pairs = c.join(F.broadcast(q), F.col("vec_a") != F.col("vec_b"))
-        scored = pair_cosine_parts(pairs, dim).select(
-            F.col("vec_a").alias("q_id"),
-            F.col("vec_b").alias("c_id"),
-            F.round(
-                F.col("dot") / (F.col("norm_a") * F.col("norm_b")), 4
-            ).alias("cos_sim"),
-        )
-    else:
-        q = _with_norm(embeddings.filter(F.col("vec_id") < n_queries), "q")
-        c = _with_norm(embeddings, "c")
-        scored = (
-            c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
-            .withColumn(
-                "cos_sim",
-                F.round(
-                    _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")),
-                    4,
-                ),
-            )
-        )
+def _rerank_candidates(cand: DataFrame, embeddings: DataFrame,
+                       a_key: str = "q_id", b_key: str = "c_id") -> DataFrame:
+    """Attach embeddings to (a_key, b_key) candidate pairs and return
+    (a_key, b_key, cos_sim), the exact cosine from :func:`_cosine`."""
+    pairs = (
+        cand.select(F.col(a_key).alias("vec_a"), F.col(b_key).alias("vec_b"))
+        .join(_side(embeddings, "a"), "vec_a")
+        .join(_side(embeddings, "b"), "vec_b")
+    )
+    return _cosine(pairs, a_key, b_key)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (q_id, c_id, cos_sim), ranked by (cos_sim desc,
+    c_id asc): (query_id, neighbor_id, cos_sim, rank)."""
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("c_id").asc()
     )
@@ -204,6 +162,21 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
             "rank",
         )
     )
+
+
+def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
+                k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors for the first ``n_queries`` vec_ids:
+    (query_id, neighbor_id, cos_sim, rank).  The query rows are broadcast
+    against the corpus (nested-loop join on vec_a != vec_b) and every
+    pair is scored by :func:`pair_cosine_parts`, which takes the vector
+    width from each Arrow batch.  The recall baseline for the approximate
+    operators; DuckDB twin :func:`cosine_topk_sql`."""
+    q = _side(embeddings.filter(F.col("vec_id") < n_queries), "a")
+    pairs = _side(embeddings, "b").join(
+        F.broadcast(q), F.col("vec_a") != F.col("vec_b")
+    )
+    return _topk(_cosine(pairs, "q_id", "c_id"), k)
 
 
 def cosine_topk_sql(n_queries: int = 10, k: int = 5) -> str:
@@ -250,7 +223,7 @@ def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
     # row-locally).  Bit-exactness contract with the SQL twins: the dot
     # products accumulate in float64 ONE DIMENSION AT A TIME in index
     # order (`acc += emb[:, d] * P[d, :]` — each += is a single IEEE
-    # double add per element), which is exactly the old fold's
+    # double add per element), which is exactly the sequential fold's
     # ((0.0 + e0*p0) + e1*p1) + ... chain, so every sign bit — and hence
     # every bucket id — is unchanged.  NO matmul here: BLAS reduction
     # order varies with threading/kernel (the ivf_train_centroids
@@ -272,10 +245,7 @@ def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
             n = batch.num_rows
             if n == 0:
                 continue
-            vec_id = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = batch.column("embedding")
-            flat = emb.flatten().to_numpy(zero_copy_only=False)
-            emb64 = flat.astype(np.float64).reshape(n, n_dim)
+            emb64 = _flat2d(batch.column("embedding"), n_dim)
             acc = np.zeros((n, P.shape[1]), dtype=np.float64)
             for d in range(n_dim):
                 acc += emb64[:, d : d + 1] * P[d : d + 1, :]
@@ -285,7 +255,7 @@ def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
                 out[:, t_index[k]] += contrib[:, k]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(vec_id.astype(np.int64), n_tab)),
+                    pa.array(np.repeat(_int64(batch.column("vec_id")), n_tab)),
                     pa.array(np.tile(table_arr, n)),
                     pa.array(out.reshape(-1)),
                 ],
@@ -314,111 +284,48 @@ def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
         .select("q_id", F.col("vec_id").alias("c_id"))
         .distinct()
     )
-    scored = _rerank_candidates(cand, embeddings, dim)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "cos_sim",
-            "rank",
-        )
-    )
+    return _topk(_rerank_candidates(cand, embeddings), k)
 
 
 # --------------------------------------------------------------------- #
-# IVF (inverted-file) ANN: k-means coarse quantizer -> per-centroid
-# buckets -> nprobe-bucket candidate search with exact re-rank.
+# IVF (inverted-file) ANN: centroid literals -> per-centroid buckets ->
+# nprobe-bucket candidate search with exact re-rank.
 
-def kmeans_centroids(embeddings: DataFrame, k: int = 16, max_iter: int = 5,
-                     seed: int = 7) -> list[list[float]]:
-    """Lloyd's k-means over the embedding column with pure DataFrame ops.
-
-    The per-iteration state (k x dim centroids) is driver-sized by
-    definition, so each round collects it and re-broadcasts it as a
-    literal table — the classic Spark k-means shape: assignment is a
-    broadcast join + min_by, the update is one posexplode + hash
-    aggregation.  Deterministic: init picks the k lowest xxhash64(vec_id)
-    rows (a seeded pseudo-random sample stable at any partitioning).
-    """
-    init = (
-        embeddings.select(
-            "vec_id", "embedding", F.xxhash64("vec_id", F.lit(seed)).alias("h")
-        )
-        .orderBy("h")
-        .limit(k)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in init]
-    for _ in range(max_iter):
-        assigned = _assign_to_centroid(embeddings, centroids)
-        new_rows = (
-            assigned.select(
-                "centroid_id", F.posexplode("embedding").alias("pos", "val")
-            )
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("val").alias("val"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda s: s["val"],
-                ).alias("centroid")
-            )
-            .collect()
-        )
-        by_id = {r["centroid_id"]: [float(x) for x in r["centroid"]] for r in new_rows}
-        # empty clusters keep their previous centroid
-        centroids = [by_id.get(i, c) for i, c in enumerate(centroids)]
-    return centroids
+def _centroid_matrix(centroids: list[list[float]]) -> tuple[np.ndarray, np.ndarray]:
+    """(dim, k) centroid matrix and the k centroid L2 norms (per-dim
+    fixed-order accumulation).  Raises ValueError for ragged, non-finite or
+    zero-norm centroids, whose cosine against any vector is undefined."""
+    C = np.array(centroids, dtype=np.float64)
+    if C.ndim != 2 or not C.size:
+        raise ValueError("centroids must be a non-empty list of equal-width vectors")
+    norm = np.zeros(C.shape[0], dtype=np.float64)
+    for d in range(C.shape[1]):
+        norm += C[:, d] * C[:, d]
+    norm = np.sqrt(norm)
+    # a NaN/inf component (or an overflowing square) makes the norm non-finite
+    bad = ~(np.isfinite(norm) & (norm > 0))
+    if bad.any():
+        raise ValueError(
+            f"centroid {int(np.argmax(bad))} is zero-norm or non-finite")
+    return C.T, norm
 
 
-def _lit_norm(vec) -> float:
-    """Driver-side L2 norm with the EXACT fold order Spark's
-    ``sqrt(_dot(v, v))`` would use on the same literal array (leading 0.0,
-    left-assoc double adds, IEEE sqrt) — so a python-precomputed constant
-    can replace the per-row recomputation bit-identically."""
-    import math
+def _assign_to_centroid(embeddings: DataFrame, centroids: list[list[float]],
+                        depth: int = 1) -> DataFrame:
+    """(vec_id, centroid_id): each vector's ``depth`` nearest centroids by
+    cosine, best first — ``depth=1`` is the IVF assignment, ``nprobe`` on
+    the query rows is the probe.  Centroids are driver-held literals
+    (k x dim), so this is ONE Arrow-batched numpy stage, no join.
 
-    s = 0.0
-    for v in vec:
-        s = s + float(v) * float(v)
-    return math.sqrt(s)
-
-
-def _centroid_scores(centroids: list[list[float]]) -> list[F.Column]:
-    """Per-centroid cosine score columns over the ``embedding`` column —
-    one codegen projection against literal centroids (norms precomputed
-    driver-side, same IEEE ops as the old per-row sqrt-of-fold)."""
-    dim = len(centroids[0])
-    norm_e = F.sqrt(_dot_cols("embedding", "embedding", dim))
-    return [
-        _dot_lit("embedding", c) / (norm_e * F.lit(_lit_norm(c)))
-        for c in centroids
-    ]
-
-
-def _assign_to_centroid(embeddings: DataFrame,
-                        centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, centroid_id, embedding): nearest centroid by dot product
-    over L2-normalized vectors == cosine assignment.
-
-    Round-6 rewrite: the centroids are driver-held literals by
-    construction (k x dim), so assignment is ONE Arrow-batched numpy
-    stage instead of a broadcast join + groupBy ``max_by`` (which
-    shuffled every row).  Bit-exactness: per-dim fixed-order float64
-    accumulation == the old fold (see pair_cosine_parts' contract); the
-    score division order matches (dot / (norm_e * norm_c)); np.argmax
-    takes the FIRST maximal index == the old (max score, lowest
-    centroid_id) tie rule."""
-    dim = len(centroids[0])
-    C = np.array(centroids, dtype=np.float64).T          # (dim, k)
-    norm_c = np.array([_lit_norm(c) for c in centroids], dtype=np.float64)
-    emb_type = embeddings.schema["embedding"].dataType.simpleString()
+    Bit-exactness: per-dim fixed-order float64 accumulation (see
+    :func:`pair_cosine_parts`), score = dot / (norm_e * norm_c) in that
+    order.  Ranking is a stable sort on (score desc, centroid_id asc) with
+    NaN ranked greatest — np.argmax's first-max rule at depth 1, and the
+    twins' ``ORDER BY score DESC, centroid_id``.  A zero-norm vector scores
+    NaN against every centroid, so its centroids rank by id."""
+    C, norm_c = _centroid_matrix(centroids)
+    dim, k = C.shape
+    depth = min(depth, k)
 
     def assign(batches):
         import pyarrow as pa
@@ -427,25 +334,25 @@ def _assign_to_centroid(embeddings: DataFrame,
             n = batch.num_rows
             if n == 0:
                 continue
-            E = _flat2d(batch.column("embedding"), n, dim)
-            acc = np.zeros((n, C.shape[1]), dtype=np.float64)
+            E = _flat2d(batch.column("embedding"), dim)
+            acc = np.zeros((n, k), dtype=np.float64)
             ne = np.zeros(n, dtype=np.float64)
             for d in range(dim):
                 acc += E[:, d : d + 1] * C[d : d + 1, :]
                 ne += E[:, d] * E[:, d]
             score = acc / (np.sqrt(ne)[:, None] * norm_c[None, :])
-            best = np.argmax(score, axis=1).astype(np.int32)
+            key = np.where(np.isnan(score), -np.inf, -score)
+            best = np.argsort(key, axis=1, kind="stable")[:, :depth]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(_int64(batch.column("vec_id"))),
-                    pa.array(best),
-                    batch.column("embedding"),
+                    pa.array(np.repeat(_int64(batch.column("vec_id")), depth)),
+                    pa.array(best.reshape(-1).astype(np.int32)),
                 ],
-                names=["vec_id", "centroid_id", "embedding"],
+                names=["vec_id", "centroid_id"],
             )
 
     return embeddings.select("vec_id", "embedding").mapInArrow(
-        assign, f"vec_id BIGINT, centroid_id INT, embedding {emb_type}"
+        assign, "vec_id BIGINT, centroid_id INT"
     )
 
 
@@ -462,8 +369,8 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
     lowest centroid_id — so the returned centroids can be inlined as
     LITERALS into both the Spark plan and the DuckDB twin (the
     `lsh_cosine_topk_sql` precedent), removing iterative float drift from
-    the cross-engine comparison entirely.  For quantizers too big to
-    train driver-side, use the distributed :func:`kmeans_centroids`."""
+    the cross-engine comparison entirely.  The trainer is driver-side by
+    design: :func:`ivf_cosine_topk` takes its centroids as literals."""
     import hashlib
 
     ids = [int(i) for i in vec_ids]
@@ -503,75 +410,38 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
     return [[float(x) for x in c] for c in cents]
 
 
-def ivf_cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                    n_centroids: int = 8, nprobe: int = 3,
-                    max_iter: int = 3, seed: int = 7,
-                    centroids: list[list[float]] | None = None) -> DataFrame:
-    """IVF ANN: bucket every vector by its nearest k-means centroid; for
-    each query, search only the ``nprobe`` nearest buckets, exact cosine
-    re-rank inside.  The 100 TB shape: the bucket assignment is one
-    broadcast join (centroids are driver-sized), the candidate join is an
-    equi-join on centroid_id — no quadratic stage anywhere.  Recall is
-    tuned by (n_centroids, nprobe); pytest pins it against the brute-force
-    cosine_topk.
-
-    ``centroids`` supplies a pre-trained quantizer (e.g.
-    :func:`ivf_train_centroids`) — the hash-twin route, since the same
-    literals feed :func:`ivf_cosine_topk_sql`; omitted, the quantizer is
-    trained in-Spark with :func:`kmeans_centroids` (rows-only)."""
-    if centroids is None:
-        centroids = kmeans_centroids(embeddings, n_centroids, max_iter, seed)
-    dim = len(centroids[0])
+def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
+                    n_queries: int = 10, k: int = 5,
+                    nprobe: int = 3) -> DataFrame:
+    """IVF ANN over pre-trained ``centroids`` (e.g.
+    :func:`ivf_train_centroids`, whose literals also feed the DuckDB twin
+    :func:`ivf_cosine_topk_sql`): bucket every vector by its nearest
+    centroid; for each query, search only its ``nprobe`` nearest buckets,
+    exact cosine re-rank inside.  Assignment and probe are the same kernel
+    (:func:`_assign_to_centroid`, depth 1 over the corpus and depth
+    ``nprobe`` over the <= ``n_queries`` query rows); the candidate join is
+    an equi-join on centroid_id — no quadratic stage anywhere.  Recall is
+    tuned by (len(centroids), nprobe); pytest pins it against
+    :func:`cosine_topk`.  Zero-norm or non-finite centroids raise
+    ValueError when the plan is built."""
     assigned = _assign_to_centroid(embeddings, centroids)
+    probes = _assign_to_centroid(
+        embeddings.filter(F.col("vec_id") < n_queries), centroids,
+        depth=nprobe,
+    ).select(F.col("vec_id").alias("q_id"), "centroid_id")
 
-    # nprobe nearest centroids per query vector — round-6: a row-local
-    # array_sort over literal-centroid score structs replaces the former
-    # broadcast-join + window row_number (one Exchange + sort gone).
-    # (-score asc, centroid_id asc) sorts exactly like the old
-    # (score desc, centroid_id asc) ranking: negation is IEEE-exact.
-    probe_structs = [
-        F.struct((-score).alias("neg_score"),
-                 F.lit(i).cast("int").alias("centroid_id"))
-        for i, score in enumerate(_centroid_scores(centroids))
-    ]
-    q_buckets = (
-        embeddings.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(
-                F.slice(F.array_sort(F.array(*probe_structs)), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("q_id", F.col("p.centroid_id").alias("centroid_id"))
-    )
-
-    # q_buckets is <= n_queries x nprobe rows: broadcast it so the
+    # probes is <= n_queries x nprobe rows: broadcast it so the
     # full-corpus assignment side is never shuffled by the 8-key
     # centroid_id (a guaranteed-skew shuffle key).  No distinct: IVF
     # assigns every vector to EXACTLY ONE centroid and the nprobe ids per
     # query are distinct by construction, so a (q, c) pair can only arise
-    # once — the dedup Exchange was a no-op (round-6; LSH keeps its
-    # distinct, where multi-table collisions are real).
+    # once (LSH keeps its distinct, where multi-table collisions are real).
     cand = (
-        assigned.select("vec_id", "centroid_id")
-        .join(F.broadcast(q_buckets), "centroid_id")
+        assigned.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", F.col("vec_id").alias("c_id"))
     )
-    scored = _rerank_candidates(cand, embeddings, dim)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "cos_sim",
-            "rank",
-        )
-    )
+    return _topk(_rerank_candidates(cand, embeddings), k)
 
 
 def ivf_cosine_topk_sql(centroids: list[list[float]], n_queries: int = 10,

@@ -329,10 +329,10 @@ def simhash_expr(text_col: str = "text", bits: int = SIMHASH_BITS):
                 w -> CAST(conv(substring(md5(w), 1, {bits // 4}), 16, 10)
                           AS BIGINT)),
       array_repeat(0, {bits}),
-      (acc, v) -> zip_with(acc, sequence(0, {bits - 1}), (a, b) ->
+      (acc, v) -> transform(acc, (a, b) ->
           a + (CAST(shiftright(v, {bits - 1} - b) & 1 AS INT) * 2 - 1)),
       votes -> aggregate(
-          zip_with(votes, sequence(0, {bits - 1}), (v, b) ->
+          transform(votes, (v, b) ->
             IF(v > 0, shiftleft(CAST(1 AS BIGINT), {bits - 1} - b),
                CAST(0 AS BIGINT))),
           CAST(0 AS BIGINT), (a, x) -> a + x))
@@ -508,25 +508,6 @@ FROM votes GROUP BY doc_id
 # embedding-cosine near-duplicates
 
 
-def _with_norm(df: DataFrame, suffix: str, dim: int | None = None) -> DataFrame:
-    # dim known -> unrolled codegen sum (bit-identical order to the HOF
-    # fold: leading 0.0, left-assoc double adds); dim unknown -> the fold
-    from .ann import _dot_cols
-
-    return df.select(
-        F.col("vec_id").alias(f"vec_{suffix}"),
-        F.col("embedding").alias(f"emb_{suffix}"),
-        F.sqrt(_dot_cols("embedding", "embedding", dim)).alias(f"norm_{suffix}"),
-    )
-
-
-def _dot_ab(dim: int | None = None):
-    # built lazily: Column construction needs an active SparkSession
-    from .ann import _dot_cols
-
-    return _dot_cols("emb_a", "emb_b", dim)
-
-
 def auto_n_planes(n: int) -> int:
     """Bucket-count sizing shared by the Spark plan AND the SQL twin
     (both must derive the same value from the same row count or their LSH
@@ -567,7 +548,6 @@ def md5_plane_rows(dim: int, n_planes: int, n_tables: int = 16,
 
 def embedding_neardup_pairs(embeddings: DataFrame,
                             threshold: float = 0.95,
-                            method: str = "lsh",
                             n_planes: int | None = None,
                             n_tables: int = 16,
                             seed: int = 7,
@@ -575,83 +555,66 @@ def embedding_neardup_pairs(embeddings: DataFrame,
                             dim: int | None = None) -> DataFrame:
     """(vec_a, vec_b, cos_sim) for pairs above threshold; vec_a < vec_b.
 
-    ``method="lsh"`` (default, the 100 TB shape): sign-LSH bucketing
-    (`operators/ann.py::lsh_buckets`) generates candidate pairs via an
-    equi-join on (table_id, bucket); candidates are re-verified with the
-    exact cosine before the threshold filter, so precision is always 1.0
-    and recall is the LSH collision probability — for a pair at cosine s,
-    1 - (1 - (1 - acos(s)/pi)^n_planes)^n_tables (0.997 at s = 0.5 with
-    3 planes / 16 tables; see BASELINE.md).  ``n_planes=None`` sizes the
-    bucket count to the corpus: max(3, floor(log2(n / 60))), i.e. ~60
-    vectors per bucket, so the candidate join stays near-linear as n
-    grows instead of degrading toward quadratic with fixed buckets.
-    ``method="brute"`` is the exact quadratic baseline kept as the pytest
-    recall oracle — NOT the plan to run at scale.
+    Sign-LSH bucketing (`operators/ann.py::lsh_buckets`) over md5-derived
+    hyperplanes generates candidate pairs via an equi-join on (table_id,
+    bucket); candidates are re-verified with the exact cosine
+    (`operators/ann.py::_rerank_candidates`) before the threshold filter,
+    so precision is always 1.0 and recall is the LSH collision probability
+    — for a pair at cosine s, 1 - (1 - (1 - acos(s)/pi)^n_planes)^n_tables
+    (0.997 at s = 0.5 with 3 planes / 16 tables; see BASELINE.md).
+    ``n_planes=None`` sizes the bucket count to the corpus: max(3,
+    floor(log2(n / 60))), i.e. ~60 vectors per bucket, so the candidate
+    join stays near-linear as n grows instead of degrading toward
+    quadratic with fixed buckets.  The exact quadratic baseline is a
+    test-side oracle (``tests/conftest.py::brute_neardup_pairs``), not a
+    plan.
 
     Pass ``n`` (row count, for auto-sizing ``n_planes``) and ``dim``
-    (embedding width) when known — e.g. from parquet footer metadata — so
-    plan construction launches ZERO Spark jobs; at 100 TB an implicit
-    ``count()`` is a full scan before the real query starts.  Omitted,
-    they fall back to one ``count()`` / one ``head(1)`` (empty input
-    yields an empty pair frame rather than a TypeError).
+    (embedding width, for the hyperplanes) when known — e.g. from parquet
+    footer metadata — so plan construction launches ZERO Spark jobs; at
+    100 TB an implicit ``count()`` is a full scan before the real query
+    starts.  Omitted, they fall back to one ``count()`` / one ``head(1)``
+    (empty input yields an empty pair frame rather than a TypeError).
     """
-    if method == "brute":
-        a = _with_norm(embeddings, "a")
-        b = _with_norm(embeddings, "b")
-        pairs = a.crossJoin(b).filter(F.col("vec_a") < F.col("vec_b"))
-    else:
-        from .ann import lsh_buckets
+    from .ann import _rerank_candidates, lsh_buckets
 
-        if n_planes is None:
-            if n is None:
-                n = embeddings.count()
-            n_planes = auto_n_planes(n)
-        if dim is None:
-            head = embeddings.select("embedding").head(1)
-            if not head:
-                # empty input: no pairs (and no hyperplanes to build)
-                return embeddings.sparkSession.createDataFrame(
-                    [], "vec_a BIGINT, vec_b BIGINT, cos_sim DOUBLE"
-                )
-            dim = len(head[0]["embedding"])
-        # Candidate generation stays (vec_id, table, bucket) self-join +
-        # distinct: a leftmost-shared-table dedup (emit each pair from its
-        # first colliding table, no distinct Exchange) was tried in round
-        # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
-        # collision rows cost more than the 16-byte-pair distinct it saved
-        # (3.4s vs 1.9s at sf0.1; see OPTIMIZATION_r06.md).
-        buckets = lsh_buckets(
-            embeddings, dim=dim, n_planes=n_planes, n_tables=n_tables,
-            seed=seed,
-            plane_rows=md5_plane_rows(dim, n_planes, n_tables, seed),
-        )
-        cand = (
-            buckets.alias("x")
-            .join(buckets.alias("y"), ["table_id", "bucket"])
-            .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-            .select(
-                F.col("x.vec_id").alias("vec_a"),
-                F.col("y.vec_id").alias("vec_b"),
+    if n_planes is None:
+        if n is None:
+            n = embeddings.count()
+        n_planes = auto_n_planes(n)
+    if dim is None:
+        head = embeddings.select("embedding").head(1)
+        if not head:
+            # empty input: no pairs (and no hyperplanes to build)
+            return embeddings.sparkSession.createDataFrame(
+                [], "vec_a BIGINT, vec_b BIGINT, cos_sim DOUBLE"
             )
-            .distinct()
+        dim = len(head[0]["embedding"])
+    # Candidate generation stays (vec_id, table, bucket) self-join +
+    # distinct: a leftmost-shared-table dedup (emit each pair from its
+    # first colliding table, no distinct Exchange) was tried in round
+    # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
+    # collision rows cost more than the 16-byte-pair distinct it saved
+    # (3.4s vs 1.9s at sf0.1; see OPTIMIZATION_r06.md).
+    buckets = lsh_buckets(
+        embeddings, dim=dim, n_planes=n_planes, n_tables=n_tables,
+        seed=seed,
+        plane_rows=md5_plane_rows(dim, n_planes, n_tables, seed),
+    )
+    cand = (
+        buckets.alias("x")
+        .join(buckets.alias("y"), ["table_id", "bucket"])
+        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
+        .select(
+            F.col("x.vec_id").alias("vec_a"),
+            F.col("y.vec_id").alias("vec_b"),
         )
-        # exact re-verify through the Arrow cosine kernel (round-6):
-        # dot/norms vectorized in numpy with the fold's exact add order;
-        # ROUND + threshold stay Spark-side, so emitted values are
-        # bit-identical to the old per-pair fold (and the SQL twin)
-        from .ann import _rerank_candidates
-
-        return (
-            _rerank_candidates(cand, embeddings, dim,
-                               a_key="vec_a", b_key="vec_b")
-            .filter(F.col("cos_sim") >= threshold)
-            .select("vec_a", "vec_b", "cos_sim")
-        )
+        .distinct()
+    )
+    # ROUND + threshold stay Spark-side, so emitted values are
+    # bit-identical to the SQL twin's
     return (
-        pairs.withColumn(
-            "cos_sim",
-            F.round(_dot_ab() / (F.col("norm_a") * F.col("norm_b")), 4),
-        )
+        _rerank_candidates(cand, embeddings, a_key="vec_a", b_key="vec_b")
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
     )
@@ -736,22 +699,20 @@ WHERE ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS 
 
 
 def neardup_clusters(embeddings: DataFrame, threshold: float = 0.95,
-                     method: str = "lsh",
                      n: int | None = None,
                      dim: int | None = None) -> DataFrame:
     """(vec_id, cluster_id): cluster_id = min vec_id reachable through
     above-threshold near-dup pairs.  Only vectors appearing in at least
     one pair are emitted (singletons are their own trivial cluster).
-    Pairs come from :func:`embedding_neardup_pairs` (LSH route by
-    default); components come from
+    Pairs come from :func:`embedding_neardup_pairs` (LSH candidates +
+    exact re-verify); components come from
     :func:`~.canonicalize.connected_components` — driver union-find for
     a pair graph of up to ``DRIVER_CC_MAX_EDGES`` symmetrized edges, the
     large-star/small-star loop (O(log n) rounds, so near-dup drift chains
     A~B~C~... finish) above it."""
     from .canonicalize import connected_components
 
-    pairs = embedding_neardup_pairs(embeddings, threshold, method=method,
-                                    n=n, dim=dim)
+    pairs = embedding_neardup_pairs(embeddings, threshold, n=n, dim=dim)
     edges = pairs.select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )

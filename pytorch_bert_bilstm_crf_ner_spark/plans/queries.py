@@ -640,10 +640,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import cosine_topk
 
-    _n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")
-    return cosine_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), dim=dim
-    )
+    return cosine_topk(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,10 +710,10 @@ _IVF_TWIN_STATE: dict[str, str | None] = {
 
 
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: numpy-trained coarse quantizer (centroid literals shared
-    with the DuckDB twin — the lsh_ann precedent, VERDICT r2 #3) + nprobe
-    bucket probe, exact re-rank.  The in-Spark `kmeans_centroids` trainer
-    remains the path for quantizers too large to train driver-side."""
+    """IVF ANN: coarse quantizer trained driver-side in numpy on a
+    bounded sample (`_ivf_centroids`; centroid literals shared with the
+    DuckDB twin — the lsh_ann precedent, VERDICT r2 #3) + nprobe bucket
+    probe, exact re-rank (`operators/ann.py::ivf_cosine_topk`)."""
     from ..operators.ann import ivf_cosine_topk
 
     served = _IVF_TWIN_STATE["served_from"]

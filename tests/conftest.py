@@ -74,3 +74,26 @@ def restore_checkpoint_dir(spark):
     yield
     sc = spark.sparkContext
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+def brute_neardup_pairs(embeddings, threshold: float):
+    """Exact near-dup oracle for the LSH route: every vec_id pair a < b
+    (crossJoin), exact cosine through ``_rerank_candidates``, threshold
+    filter — (vec_a, vec_b, cos_sim).  Quadratic: small inputs only."""
+    import pyspark.sql.functions as F
+
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
+        _rerank_candidates,
+    )
+
+    ids = embeddings.select("vec_id")
+    cand = (
+        ids.select(F.col("vec_id").alias("vec_a"))
+        .crossJoin(ids.select(F.col("vec_id").alias("vec_b")))
+        .filter(F.col("vec_a") < F.col("vec_b"))
+    )
+    return (
+        _rerank_candidates(cand, embeddings, a_key="vec_a", b_key="vec_b")
+        .filter(F.col("cos_sim") >= threshold)
+        .select("vec_a", "vec_b", "cos_sim")
+    )

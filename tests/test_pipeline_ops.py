@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+from .conftest import brute_neardup_pairs
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -107,7 +109,7 @@ def test_embedding_neardup_lsh_route_vs_brute(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     brute = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, 0.5, method="brute").collect()
+        for r in brute_neardup_pairs(emb, 0.5).collect()
     }
     lsh = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
@@ -117,7 +119,7 @@ def test_embedding_neardup_lsh_route_vs_brute(spark):
     # at a looser threshold the LSH result must stay a subset (precision 1)
     brute45 = {
         (r["vec_a"], r["vec_b"])
-        for r in embedding_neardup_pairs(emb, 0.45, method="brute").collect()
+        for r in brute_neardup_pairs(emb, 0.45).collect()
     }
     lsh45 = {
         (r["vec_a"], r["vec_b"])
@@ -213,17 +215,23 @@ def test_ivf_oracle_follows_query_sf_dir():
 
 
 def test_ivf_ann_recall(spark):
-    """IVF (k-means + nprobe buckets) vs brute-force cosine top-k."""
+    """IVF (numpy-trained centroids + nprobe buckets) vs brute-force
+    cosine top-k; centroids trained on the collected rows as the
+    registered query trains them."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
         cosine_topk,
         ivf_cosine_topk,
+        ivf_train_centroids,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    rows = emb.select("vec_id", "embedding").collect()
+    cents = ivf_train_centroids(
+        [r["vec_id"] for r in rows], [list(r["embedding"]) for r in rows],
+        k=8, max_iter=3, seed=7,
+    )
     exact = cosine_topk(emb, n_queries=10, k=5).collect()
-    approx = ivf_cosine_topk(
-        emb, n_queries=10, k=5, n_centroids=8, nprobe=3
-    ).collect()
+    approx = ivf_cosine_topk(emb, cents, n_queries=10, k=5, nprobe=3).collect()
     exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
     approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
@@ -234,11 +242,11 @@ def test_ivf_ann_recall(spark):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_sims:
             assert abs(r["cos_sim"] - exact_sims[key]) < 1e-9
-    # determinism (seeded init + min_by tie-breaks)
+    # determinism (deterministic centroids + first-max tie rule)
     again = {
         (r["query_id"], r["neighbor_id"])
         for r in ivf_cosine_topk(
-            emb, n_queries=10, k=5, n_centroids=8, nprobe=3
+            emb, cents, n_queries=10, k=5, nprobe=3
         ).collect()
     }
     assert again == approx_set

@@ -6,6 +6,8 @@ cross product.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -58,6 +60,24 @@ def test_no_cartesian_product_in_registered_plans(spark, name):
 
     df = SPARK_QUERIES[name](spark, SF_DIR)
     assert "CartesianProduct" not in _plan(df), name
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cosine_topk", "lsh_ann_topk", "ivf_ann_topk", "embedding_neardup",
+     "neardup_clusters"],
+)
+def test_embedding_dots_run_only_in_arrow_kernels(spark, name):
+    """One formulation per operation: every embedding dot, norm and
+    centroid score runs in the Arrow numpy kernels (operators/ann.py), so
+    the executed plan holds no JVM-side dot — no ``zip_with``/``aggregate``
+    fold and no indexed ``embedding[i]`` arithmetic."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.queries import SPARK_QUERIES
+
+    plan = _plan(SPARK_QUERIES[name](spark, SF_DIR))
+    assert "zip_with" not in plan, plan
+    assert not re.search(r"\baggregate\(", plan), plan
+    assert not re.search(r"#\d+L?\[\d+\]", plan), plan
 
 
 def test_simhash_shuffles_only_precombined_votes(spark):

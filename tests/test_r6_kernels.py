@@ -9,6 +9,8 @@ import hashlib
 import math
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import PythonException
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -68,7 +70,7 @@ def test_pair_cosine_parts_matches_sequential_fold(spark):
         ],
         "vec_a BIGINT, vec_b BIGINT, emb_a ARRAY<FLOAT>, emb_b ARRAY<FLOAT>",
     )
-    for r in pair_cosine_parts(pairs, dim).collect():
+    for r in pair_cosine_parts(pairs).collect():
         a, b = rows[r["vec_a"]], rows[r["vec_b"]]
         assert r["dot"] == _fold_dot(a, b)
         assert r["norm_a"] == math.sqrt(_fold_dot(a, a))
@@ -77,7 +79,9 @@ def test_pair_cosine_parts_matches_sequential_fold(spark):
 
 def test_ivf_assignment_matches_fold_argmax(spark):
     """Kernel assignment == argmax of sequential-fold cosine scores with
-    the (max score, lowest centroid_id) tie rule."""
+    the (max score, lowest centroid_id) tie rule; at depth ``nprobe`` the
+    probe emits the sequential-fold ranking (score desc, centroid_id asc).
+    A zero-norm vector scores NaN everywhere, so it ranks by centroid id."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
         _assign_to_centroid,
     )
@@ -85,22 +89,91 @@ def test_ivf_assignment_matches_fold_argmax(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(48)
     rows = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     dim = len(next(iter(rows.values())))
+    zero_id = max(rows) + 1
+    emb = emb.select("vec_id", "embedding")
+    emb = emb.unionByName(
+        spark.createDataFrame([(zero_id, [0.0] * dim)], emb.schema))
     cents = [
         [((int(hashlib.md5(f"{c}|{d}".encode()).hexdigest()[:8], 16)
            / 4294967295) * 2 - 1) for d in range(dim)]
         for c in range(4)
     ]
+    nprobe = 3
     got = {r["vec_id"]: r["centroid_id"]
            for r in _assign_to_centroid(emb, cents).collect()}
+    probed: dict = {}
+    for r in _assign_to_centroid(emb, cents, depth=nprobe).collect():
+        probed.setdefault(r["vec_id"], []).append(r["centroid_id"])
     for vid, vec in rows.items():
         ne = math.sqrt(_fold_dot(vec, vec))
         best_i, best_s = 0, None
+        scores = []
         for i, c in enumerate(cents):
             nc = math.sqrt(_fold_dot(c, c))
             s = _fold_dot(vec, c) / (ne * nc)
+            scores.append((-s, i))
             if best_s is None or s > best_s:
                 best_i, best_s = i, s
         assert got[vid] == best_i, vid
+        assert probed[vid] == [i for _s, i in sorted(scores)[:nprobe]], vid
+    assert got[zero_id] == 0
+    assert probed[zero_id] == list(range(nprobe))
+
+
+def test_ivf_rejects_degenerate_centroids(spark):
+    """A zero-norm or non-finite centroid has no cosine: ivf_cosine_topk
+    raises ValueError while building the plan."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
+        ivf_cosine_topk,
+        ivf_train_centroids,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    rows = emb.collect()
+    dim = len(rows[0]["embedding"])
+    cents = ivf_train_centroids(
+        [r["vec_id"] for r in rows], [list(r["embedding"]) for r in rows],
+        k=4,
+    )
+    for bad in ([0.0] * dim, [float("nan")] + [1.0] * (dim - 1),
+                [float("inf")] + [1.0] * (dim - 1)):
+        with pytest.raises(ValueError, match="zero-norm or non-finite"):
+            ivf_cosine_topk(emb, centroids=[bad] + cents)
+
+
+def test_cosine_topk_rejects_ragged_rows(spark):
+    """Rows of widths 3 and 5 have no cosine; the kernel raises instead of
+    re-cutting them into two wrong equal-width vectors."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 2.0]), (1, [1.0, 0.0, 2.0, 1.0, 3.0])],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    )
+    with pytest.raises(PythonException, match="ValueError: embedding rows "
+                                              "must have equal widths"):
+        cosine_topk(emb, n_queries=2, k=1).collect()
+
+
+@pytest.mark.parametrize("case", ["ragged_rows", "unequal_widths", "null_row"])
+def test_pair_cosine_parts_rejects_malformed_rows(spark, case):
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
+        pair_cosine_parts,
+    )
+
+    w3, w5 = [1.0, 0.0, 2.0], [1.0, 0.0, 2.0, 1.0, 3.0]
+    rows = {
+        "ragged_rows": [(0, 1, w3, w3), (1, 0, w5, w5)],
+        "unequal_widths": [(0, 1, w3, w5), (1, 0, w5, w3)],
+        "null_row": [(0, 1, w3, w3), (1, 0, w3, None)],
+    }[case]
+    pairs = spark.createDataFrame(
+        rows,
+        "vec_a BIGINT, vec_b BIGINT, emb_a ARRAY<FLOAT>, emb_b ARRAY<FLOAT>",
+    ).coalesce(1)
+    match = "null row" if case == "null_row" else "must have equal widths"
+    with pytest.raises(PythonException, match=f"ValueError: embedding .*{match}"):
+        pair_cosine_parts(pairs).collect()
 
 
 def test_simhash_plans_single_exchange(spark):
