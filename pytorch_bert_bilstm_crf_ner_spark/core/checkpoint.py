@@ -7,8 +7,8 @@ the numpy model family: a flat ``state_dict`` of named arrays persisted as
 ``weights.npz`` + ``config.json``, loaded STRICTLY (missing/unexpected
 keys raise, shapes must match), and a broadcast factory so a Spark job
 reads the checkpoint ONCE on the driver, ships it to executors via
-``sc.broadcast``, and each python worker rebuilds the tagger from the
-broadcast bytes — the "weights loaded once per worker" path that a real
+``sc.broadcast``, and each task rebuilds the tagger from the broadcast
+bytes — the "weights read once per job" path that a real
 BERT state_dict would take through the same seam
 (`operators/tagging.py::make_tag_turns_udf`).
 """
@@ -112,8 +112,9 @@ def load_tagger(path: str) -> DeterministicTagger:
 def broadcast_tagger_factory(spark, path: str):
     """Read the checkpoint ONCE on the driver, ``sc.broadcast`` it, and
     return a ``tagger_factory`` for `make_tag_turns_udf` /
-    `extract_mentions`: each executor python worker rebuilds the tagger
-    from the broadcast value (config + named arrays), never re-reading the
+    `extract_mentions`: the tag UDF calls it once per task (partition),
+    not once per python worker, and it rebuilds the tagger from the
+    broadcast value (config + named arrays), never re-reading the
     checkpoint files — the distributed-serving shape of the reference's
     `load_model_and_parallel` + `predict.py` flow."""
     with open(os.path.join(path, "config.json"), encoding="utf-8") as f:

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..core.entities import connected_components_py
+from ..sources.local import local_frame
 
 # Symmetrized edge rows (both directions, duplicates counted) up to which
 # components are solved on the driver.
@@ -72,8 +73,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     if stats is not None:
         stats["rounds"] = 0
     id_type = sym.schema["a"].dataType.simpleString()
-    return edges.sparkSession.createDataFrame(
-        list(cmap.items()), f"id {id_type}, component {id_type}"
+    return local_frame(
+        edges.sparkSession, cmap.items(), f"id {id_type}, component {id_type}"
     )
 
 

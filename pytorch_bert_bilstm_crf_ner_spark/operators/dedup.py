@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..sources.local import local_frame
+
 # ------------------------------------------------------------------ #
 # exact duplicates (hash groupBy)
 
@@ -586,8 +588,9 @@ def embedding_neardup_pairs(embeddings: DataFrame,
         head = embeddings.select("embedding").head(1)
         if not head:
             # empty input: no pairs (and no hyperplanes to build)
-            return embeddings.sparkSession.createDataFrame(
-                [], "vec_a BIGINT, vec_b BIGINT, cos_sim DOUBLE"
+            return local_frame(
+                embeddings.sparkSession, [],
+                "vec_a BIGINT, vec_b BIGINT, cos_sim DOUBLE",
             )
         dim = len(head[0]["embedding"])
     # Candidate generation stays (vec_id, table, bucket) self-join +

@@ -4,11 +4,13 @@ M8, `predict_gdcq.py` D2) fused into ONE Arrow-batched iterator pandas UDF.
 
 Why this shape (and not per-row Python): the iterator form
 (``Iterator[pd.Series] -> Iterator[pd.Series]``) constructs the tagger once
-per executor python worker (weights regenerated from the small seeded
-config — nothing heavy is shipped; a real-BERT path would broadcast the
-state_dict instead), then every Arrow batch is tokenized, Viterbi-decoded
-and FSM-span-decoded as whole numpy batches.  ``spark.sql.execution.arrow
-.maxRecordsPerBatch`` bounds batch memory (B x Lmax x T fp32).
+per task — the iterator body runs once per partition, not once per python
+worker — with weights regenerated from the small seeded config (nothing
+heavy is shipped; a real-BERT path would broadcast the state_dict
+instead), then every Arrow batch of the partition is tokenized,
+Viterbi-decoded and FSM-span-decoded as whole numpy batches.
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
+(B x Lmax x T fp32).
 """
 
 from __future__ import annotations
@@ -42,14 +44,16 @@ MENTIONS_SCHEMA = ArrayType(SPAN_STRUCT)
 def make_tag_turns_udf(cfg: TaggerConfig | None = None, tagger_factory=None):
     """``tagger_factory`` swaps in another tagger with the same
     ``tag_batch`` interface — e.g. the real-model path
-    ``lambda: core.bert_encoder.BertCrfTagger(model_dir)`` (weights loaded
-    once per python worker thanks to the iterator form)."""
+    ``lambda: core.bert_encoder.BertCrfTagger(model_dir)``.  The iterator
+    body, and so ``factory()``, runs once per task (partition), not once
+    per python worker: a reused worker rebuilds the tagger for every
+    partition it serves."""
     cfg = cfg or TaggerConfig()
     factory = tagger_factory or (lambda: DeterministicTagger(cfg))
 
     @pandas_udf(MENTIONS_SCHEMA)
     def tag_turns(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        tagger = factory()  # once per python worker
+        tagger = factory()  # once per task (partition)
         for texts in batches:
             rows = tagger.tag_batch(texts.fillna("").tolist())
             yield pd.Series(
@@ -78,7 +82,7 @@ def extract_mentions(transcripts: DataFrame,
 
     ``tagger_factory`` routes checkpointed weights through the UDF — e.g.
     `core.checkpoint.broadcast_tagger_factory(spark, ckpt_dir)` (broadcast
-    state_dict, rebuilt once per python worker).
+    state_dict, rebuilt once per task).
     """
     tag_udf = make_tag_turns_udf(cfg, tagger_factory=tagger_factory)
     tagged = (

@@ -50,8 +50,8 @@ class PipelineConfig:
     preagg_cooccurrence: bool = True
     # Directory of a numpy-weights model checkpoint (`core/checkpoint.py`).
     # Set, the tag UDF runs from the checkpoint's weights: read ONCE on
-    # the driver, sc.broadcast to executors, tagger rebuilt per python
-    # worker — the production serve-from-trained-weights path
+    # the driver, sc.broadcast to executors, tagger rebuilt once per task
+    # (partition) — the production serve-from-trained-weights path
     # (reference `utils/trainUtils.py:86-115`).  None = cfg.tagger's
     # seeded weights.
     checkpoint_dir: str | None = None

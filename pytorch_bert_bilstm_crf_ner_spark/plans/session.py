@@ -4,7 +4,8 @@ Local mode stands in for a multi-executor cluster in this sandbox; the
 conf choices are the ones that matter at 100 TB: AQE (runtime re-plan,
 skew-join splitting, partition coalescing), Arrow batching sized so
 ``maxRecordsPerBatch x max_seq_len x num_tags`` fits executor memory, and
-python worker reuse so the tagger weights are constructed once per worker.
+python worker reuse so a task's worker is already up and its imports done
+(the tagger itself is still built once per task).
 """
 
 from __future__ import annotations
@@ -66,6 +67,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.python.worker.reuse", "true")
+        # generated-class cache (LRU, default 100 entries): one KG pass
+        # compiles ~150 distinct classes, so at 100 every rerun of the
+        # pass missed on every class — Janino recompiled all of them and
+        # the JIT re-warmed the fresh classes, the largest CPU cost of a
+        # warm pass
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,11 @@
 """Entity dictionary as a small Spark DataFrame — the broadcast side of the
-linking join (reference analog: per-type entity inventories,
-`data/cner/aug_data/*.txt` built by `data_augment/aug.py:31-59`)."""
+linking join, and the input of `canonical_entities`, `dict_mentions` and
+the streaming window join (reference analog: per-type entity inventories,
+`data/cner/aug_data/*.txt` built by `data_augment/aug.py:31-59`).
+
+The rows live on the driver, so the frame is a JVM ``LocalRelation``
+built through :func:`.local.local_frame`: scanning it runs no Python
+task."""
 
 from __future__ import annotations
 
@@ -13,6 +18,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.entities import ENTITY_DICT_ROWS
+from .local import local_frame
 
 ENTITY_DICT_SCHEMA = StructType(
     [
@@ -25,7 +31,7 @@ ENTITY_DICT_SCHEMA = StructType(
 
 
 def entity_dict_df(spark: SparkSession, rows=ENTITY_DICT_ROWS) -> DataFrame:
-    return spark.createDataFrame(list(rows), ENTITY_DICT_SCHEMA)
+    return local_frame(spark, rows, ENTITY_DICT_SCHEMA)
 
 
 def entity_dict_values_sql(rows=ENTITY_DICT_ROWS, alias: str = "d") -> str:

@@ -121,3 +121,44 @@ def test_minhash_signatures_single_combined_shuffle(spark):
     # string minima use sort-based aggregation; the property that matters
     # is the map-side partial combine before the exchange
     assert "partial_min" in plan, plan
+
+
+_PIPELINE_STAGES = (
+    "transcripts", "mentions", "linked", "canonical", "triples",
+)
+
+
+@pytest.fixture(scope="module")
+def pipeline_stages(spark):
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import run_pipeline
+
+    stages = run_pipeline(spark, SF_DIR)
+    yield stages
+    for df in stages.values():
+        df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "kind,name",
+    [("query", n) for n in sorted(
+        __import__(
+            "pytorch_bert_bilstm_crf_ner_spark.plans.queries",
+            fromlist=["SPARK_QUERIES"],
+        ).SPARK_QUERIES
+    )] + [("stage", s) for s in _PIPELINE_STAGES],
+)
+def test_no_python_rdd_scan(spark, request, kind, name):
+    """Driver-resident frames (entity dictionary, driver CC components,
+    empty-input frames) are Arrow ``LocalRelation``s: no executed plan
+    scans a pickled Python RDD (``Scan ExistingRDD``), so Python runs
+    only in the tag UDF and the mapInArrow/mapInPandas kernels, never to
+    unpickle rows the driver already held."""
+    if kind == "query":
+        from pytorch_bert_bilstm_crf_ner_spark.plans.queries import (
+            SPARK_QUERIES,
+        )
+
+        df = SPARK_QUERIES[name](spark, SF_DIR)
+    else:
+        df = request.getfixturevalue("pipeline_stages")[name]
+    assert "ExistingRDD" not in _plan(df), name

@@ -216,3 +216,33 @@ def test_over_limit_graph_never_collects(spark, monkeypatch):
         comp = connected_components(edges, stats=stats)
     assert stats["rounds"] >= 1
     assert _comp_map(comp) == _expected(pairs)
+
+
+@pytest.mark.parametrize("id_type", ["BIGINT", "STRING"])
+def test_empty_edges_keep_id_type(spark, id_type):
+    """No edges: zero components, ``id``/``component`` of the input's id
+    type (the driver path builds its frame from the declared schema, not
+    from values it does not have)."""
+    edges = spark.createDataFrame([], f"src {id_type}, dst {id_type}")
+    comp = connected_components(edges)
+    t = id_type.lower()
+    # the JVM side's schema, not the python-side copy the frame caches
+    assert comp._jdf.schema().simpleString() == f"struct<id:{t},component:{t}>"
+    assert comp.count() == 0
+
+
+def test_entity_dict_keeps_declared_schema(spark):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from pytorch_bert_bilstm_crf_ner_spark.sources.entity_dict import (
+        ENTITY_DICT_SCHEMA,
+        entity_dict_df,
+    )
+
+    df = entity_dict_df(spark)
+    assert df.schema == ENTITY_DICT_SCHEMA
+    # the JVM side too (non-null flags included), not only the python cache
+    jvm_schema = StructType.fromJson(json.loads(df._jdf.schema().json()))
+    assert jvm_schema == ENTITY_DICT_SCHEMA
