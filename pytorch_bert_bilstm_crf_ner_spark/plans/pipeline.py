@@ -9,20 +9,32 @@ Stages (SURVEY.md §3 "Spark lifecycle"):
 Resume semantics (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics"): every materialized stage writes
   <out>/<stage>/            stage rows (parquet, _SUCCESS marker)
-  <out>/_lineage/<stage>/   per-partition lineage rows
-                            (stage, partition_id, n_rows, written_at run id)
-A rerun with the same output dir skips every stage whose _SUCCESS exists
-and reads it back instead of recomputing — kill the job between stages and
-relaunch, and only the missing stages run.
+  <out>/_lineage/<stage>/   one row per written part file (one parquet
+                            file, _SUCCESS marker):
+                            (partition_id int, n_rows bigint, stage string,
+                             run_id string, file string)
+``partition_id`` is the writing task's partition (the ``part-NNNNN-`` of
+the file name), ``n_rows`` comes from the file's parquet footer and
+``file`` is the path relative to the stage directory (a task writes one
+file per ``pred=`` directory of the triples stage).  A stage costs one
+Spark write: the lineage is read from the footers on the driver, and the
+stage is read back with its known schema, so no job infers it.
+A rerun with the same output dir skips every stage whose two _SUCCESS
+markers exist and reads it back instead of recomputing — kill the job
+between stages and relaunch, and only the missing stages run.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
 from dataclasses import dataclass, field
 
-import pyspark.sql.functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..core.model import TaggerConfig
 from ..core.oracle import RelationConfig
@@ -57,28 +69,91 @@ class PipelineConfig:
     checkpoint_dir: str | None = None
 
 
+_LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("n_rows", pa.int64()),
+    ("stage", pa.string()),
+    ("run_id", pa.string()),
+    ("file", pa.string()),
+])
+_PART_FILE = re.compile(r"part-(\d{5})-.*\.parquet$")
+
+
+def _lineage_dir(out: str, stage: str) -> str:
+    return os.path.join(out, "_lineage", stage)
+
+
 def _stage_done(out: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(out, stage, "_SUCCESS"))
+    return all(os.path.exists(os.path.join(d, "_SUCCESS"))
+               for d in (os.path.join(out, stage), _lineage_dir(out, stage)))
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable: the schema a
+    parquet file source gives back for a written frame."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _read_stage(df: DataFrame, path: str, partition_by: tuple[str, ...]) -> DataFrame:
+    """Read a written stage back with ``df``'s schema made nullable and the
+    partition columns last, which is what schema inference returns, without
+    the Spark job that inference runs."""
+    fields = _nullable(df.schema).fields
+    schema = StructType([f for f in fields if f.name not in partition_by]
+                        + [f for c in partition_by for f in fields if f.name == c])
+    return df.sparkSession.read.schema(schema).parquet(path)
+
+
+def _write_lineage(path: str, ldir: str, stage: str, run_id: str) -> None:
+    """One lineage row per part file under ``path``, read from its parquet
+    footer, written to ``ldir`` as one parquet file: temp name, rename,
+    then _SUCCESS."""
+    rows = []
+    for dirpath, _dirs, files in os.walk(path):
+        for fn in files:
+            if m := _PART_FILE.match(fn):
+                f = os.path.join(dirpath, fn)
+                rows.append({"partition_id": int(m.group(1)),
+                             "n_rows": pq.read_metadata(f).num_rows,
+                             "stage": stage, "run_id": run_id,
+                             "file": os.path.relpath(f, path)})
+    rows.sort(key=lambda r: r["file"])
+    table = pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA)
+    os.makedirs(ldir, exist_ok=True)
+    tmp = os.path.join(ldir, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(ldir, "part-00000.parquet"))
+    open(os.path.join(ldir, "_SUCCESS"), "w").close()
 
 
 def _write_stage(df: DataFrame, out: str, stage: str, run_id: str,
                  partition_by: tuple[str, ...] = ()) -> DataFrame:
-    """Materialize a stage + its per-partition lineage, then read back."""
-    spark = df.sparkSession
-    path = os.path.join(out, stage)
+    """Materialize a stage with one Spark write, then its lineage, then
+    read it back.
+
+    Lineage is ``<out>/_lineage/<stage>/``: one row per written part file,
+    ``(partition_id int, n_rows bigint, stage string, run_id string, file
+    string)``, where ``partition_id`` is the writing task's partition (from
+    the ``part-NNNNN-`` file name), ``n_rows`` the file footer's row count
+    and ``file`` the path relative to the stage directory.  The old lineage
+    is removed before the write, so a run killed before the new lineage's
+    _SUCCESS leaves the stage not done."""
+    path, ldir = os.path.join(out, stage), _lineage_dir(out, stage)
+    if os.path.exists(ldir):
+        shutil.rmtree(ldir)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    lineage = (
-        spark.read.parquet(path)
-        .groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("run_id", F.lit(run_id))
-    )
-    lineage.write.mode("overwrite").parquet(os.path.join(out, "_lineage", stage))
-    return spark.read.parquet(path)
+    _write_lineage(path, ldir, stage, run_id)
+    return _read_stage(df, path, partition_by)
 
 
 def _materialize(df: DataFrame, out: str | None, stage: str, run_id: str,
@@ -86,7 +161,7 @@ def _materialize(df: DataFrame, out: str | None, stage: str, run_id: str,
     if out is None:
         return df
     if _stage_done(out, stage):
-        return df.sparkSession.read.parquet(os.path.join(out, stage))
+        return _read_stage(df, os.path.join(out, stage), partition_by)
     return _write_stage(df, out, stage, run_id, partition_by)
 
 

@@ -15,7 +15,11 @@ Local sandbox run:
         --output /tmp/kg_out
 
 The job is resumable: rerun with the same --output and completed stages
-are skipped (per-partition lineage under <output>/_lineage)."""
+are skipped.  Each stage's lineage is one parquet file under
+<output>/_lineage/<stage>/ with one row per written part file:
+(partition_id int, n_rows bigint, stage string, run_id string, file
+string) — the writing task's partition, the file footer's row count and
+the file's path relative to <output>/<stage>."""
 
 from __future__ import annotations
 

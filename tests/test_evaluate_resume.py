@@ -1,9 +1,13 @@
-"""Eval join + report, salted-linking parity, pipeline kill-and-resume."""
+"""Eval join + report, salted-linking parity, pipeline kill-and-resume,
+stage lineage and the cost of a stage write."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+
+import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -72,6 +76,104 @@ def test_pipeline_resume(spark, tmp_path):
     # triples stage WAS recomputed under r2
     got_t = {r["run_id"] for r in spark.read.parquet(f"{out}/_lineage/triples").collect()}
     assert got_t == {"r2"}
+
+
+STAGES = ("transcripts", "mentions", "canonical", "triples")
+
+
+def _run_ids(spark, out, stage):
+    return {r["run_id"] for r in spark.read.parquet(f"{out}/_lineage/{stage}").collect()}
+
+
+def test_stage_without_lineage_is_rerun(spark, tmp_path):
+    """A run killed between a stage's data write and its lineage write
+    leaves the stage not done: the rerun writes it (and its lineage) again
+    and leaves the other stages alone."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=out), run_id="r1")
+    shutil.rmtree(f"{out}/_lineage/mentions")
+    run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=out), run_id="r2")
+    assert _run_ids(spark, out, "mentions") == {"r2"}
+    assert _run_ids(spark, out, "transcripts") == {"r1"}
+
+
+def _jobs_in_group(sc, group, action):
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [(), ("pred",)], ids=["flat", "by_pred"])
+def test_stage_write_adds_no_jobs(spark, tmp_path, partition_by):
+    """Lineage and read-back run no Spark job: _write_stage costs exactly
+    what a bare parquet write of the same frame costs."""
+    import pyspark.sql.functions as F
+
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import _write_stage
+
+    df = (spark.range(0, 3000, numPartitions=4)
+          .withColumn("pred", F.concat(F.lit("p"), (F.col("id") % 3).cast("string")))
+          .repartition(4))
+
+    def bare():
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(tmp_path / "bare"))
+
+    sc = spark.sparkContext
+    g = f"stage-write-{tmp_path.name}"
+    n_bare = _jobs_in_group(sc, f"{g}/bare", bare)
+    n_stage = _jobs_in_group(
+        sc, f"{g}/stage",
+        lambda: _write_stage(df, str(tmp_path / "out"), "s", "r1", partition_by))
+    assert n_bare >= 1 and n_stage == n_bare
+
+
+def test_lineage_describes_written_files(spark, tmp_path):
+    """One lineage row per part file: its footer's row count, the writing
+    task's partition from the file name, its path under the stage dir.
+    Fresh and resumed runs read every stage back with the schema that
+    parquet schema inference gives."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out = str(tmp_path / "kg")
+    fresh = run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=out), run_id="r1")
+    for stage in STAGES:
+        parts = sorted(
+            os.path.relpath(os.path.join(d, fn), f"{out}/{stage}")
+            for d, _dirs, files in os.walk(f"{out}/{stage}")
+            for fn in files if fn.startswith("part-") and fn.endswith(".parquet"))
+        rows = spark.read.parquet(f"{out}/_lineage/{stage}").collect()
+        assert sorted(r["file"] for r in rows) == parts, stage
+        assert sum(r["n_rows"] for r in rows) == fresh[stage].count(), stage
+        for r in rows:
+            num = re.match(r"part-(\d{5})-", os.path.basename(r["file"])).group(1)
+            assert r["partition_id"] == int(num), r
+            assert (r["stage"], r["run_id"]) == (stage, "r1")
+            if stage == "triples":
+                assert os.path.dirname(r["file"]).startswith("pred="), r
+
+    resumed = run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=out), run_id="r2")
+    for stage in STAGES:
+        assert resumed[stage].schema == fresh[stage].schema, stage
+        assert fresh[stage].schema == spark.read.parquet(f"{out}/{stage}").schema, stage
+        assert _run_ids(spark, out, stage) == {"r1"}
+    assert fresh["triples"].columns == [
+        "subj", "obj", "conv_id", "turn_idx", "n_evidence", "pred"]
 
 
 def test_evaluate_extractor_job(spark):
