@@ -6,15 +6,31 @@ skew-join splitting, partition coalescing), Arrow batching sized so
 ``maxRecordsPerBatch x max_seq_len x num_tags`` fits executor memory, and
 python worker reuse so a task's worker is already up and its imports done
 (the tagger itself is still built once per task).
+
+Cold start: the JVM a session launches maps the classes of earlier
+sessions from a class-data-sharing archive instead of loading and
+verifying them again (``cds_java_options``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import logging
 import os
+import shlex
+import shutil
+import subprocess
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+CDS_DIR = "spark-kg-cds"
+log = logging.getLogger(__name__)
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -42,6 +58,154 @@ def ship_package(spark: SparkSession) -> str:
     return zpath
 
 
+def session_conf(
+    app_name: str = "kg-construct",
+    cores: int | None = None,
+    shuffle_partitions: int | None = None,
+    arrow_batch: int = 1024,
+    extra_conf: dict | None = None,
+) -> dict:
+    """The Spark conf ``get_spark`` builds its session from: the engine's
+    defaults, then ``extra_conf`` over them."""
+    cores = (cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0))
+             or len(os.sched_getaffinity(0)))
+    shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
+        "spark.python.worker.reuse": "true",
+        # generated-class cache (LRU, default 100 entries): one KG pass
+        # compiles ~150 distinct classes, so at 100 every rerun of the
+        # pass missed on every class — Janino recompiled all of them and
+        # the JIT re-warmed the fresh classes, the largest CPU cost of a
+        # warm pass
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", _default_heap()),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.executorEnv.OMP_NUM_THREADS": "1",
+        "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
+        "spark.executorEnv.MKL_NUM_THREADS": "1",
+        # shuffle/spill on tmpfs: the sandbox disk does ~230 MB/s and
+        # concurrent shuffle writers thrash it; a real cluster would have
+        # NVMe-backed local dirs
+        "spark.local.dir": (
+            os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
+            if os.path.isdir("/dev/shm")
+            else os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
+        ),
+        # managed tables (bucketing) land outside the repo
+        "spark.sql.warehouse.dir": os.environ.get(
+            "SPARK_WAREHOUSE_DIR",
+            os.path.join(tempfile.gettempdir(), "spark-warehouse"),
+        ),
+    }
+    conf.update(extra_conf or {})
+    return conf
+
+
+def _default_heap() -> str:
+    """Half of physical memory, at most 31g: from -Xmx32g up HotSpot turns
+    compressed oops off, and every object pointer doubles in width."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(half_mb, 31 * 1024)}m"
+
+
+def cds_java_options(driver_memory: str, java_options: str = "") -> str:
+    """``java_options`` with a class-data-sharing flag appended, for a driver
+    JVM that is about to be launched with ``-Xmx<driver_memory>``.
+
+    The archive is ``<tmp>/spark-kg-cds/<key>.jsa``, keyed on the java
+    binary, the classpath and the JVM options.  When it exists and a probe
+    JVM starts from it, the flag is ``-XX:SharedArchiveFile``; otherwise it
+    is ``-XX:ArchiveClassesAtExit`` to a file named after this process, so
+    the JVM writes the archive, with every class the session loaded, when
+    it exits.  A later call adopts such a dump once its writer has ended.
+
+    The dump refuses a non-empty directory on the classpath, and the conf
+    dir is one: when it holds only templates, ``SPARK_CONF_DIR`` is pointed
+    at an empty one; when it holds a real file, the JVM starts without
+    sharing."""
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf_dir):
+        real = sorted(n for n in os.listdir(conf_dir) if not n.endswith(".template"))
+        if real:
+            log.warning("starting the Spark JVM without class-data sharing: "
+                        "%s on its classpath holds %s",
+                        conf_dir, os.path.join(conf_dir, real[0]))
+            return java_options
+    root = os.path.join(tempfile.gettempdir(), CDS_DIR)
+    conf_dir = os.path.join(root, "conf")
+    os.makedirs(conf_dir, exist_ok=True)
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+
+    # the java that spark-class runs
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+            if os.environ.get("JAVA_HOME") else shutil.which("java") or "java")
+    jvm_options = f"-Xmx{driver_memory} {java_options}".strip()
+    key = hashlib.sha256(f"{jvm_options}\0{conf_dir}".encode())
+    for path in [os.path.realpath(java),
+                 *sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar")))]:
+        st = os.stat(path)
+        key.update(f"\0{path} {st.st_size} {st.st_mtime_ns}".encode())
+    archive = os.path.join(root, key.hexdigest()[:24] + ".jsa")
+
+    usable = os.path.exists(archive) and _starts_sharing(java, jvm_options, archive)
+    if not usable:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(archive)
+    for dump in glob.glob(glob.escape(archive) + ".*.tmp"):
+        writer = dump[len(archive) + 1:-len(".tmp")]
+        if writer.isdigit() and _alive(int(writer)):
+            continue
+        # a dump whose writer was killed is truncated: mapping it crashes
+        # the JVM (SIGBUS), so it is adopted only when a probe starts from it
+        with contextlib.suppress(FileNotFoundError):
+            if not usable and _starts_sharing(java, jvm_options, dump):
+                os.replace(dump, archive)
+                usable = True
+            else:
+                os.remove(dump)
+    if usable:
+        flag = f"-XX:SharedArchiveFile={archive}"
+    else:
+        # the dump warns about every class it skips; keep its errors only
+        flag = f"-XX:ArchiveClassesAtExit={archive}.{os.getpid()}.tmp -Xlog:cds*=error"
+    return f"{java_options} {flag}".strip()
+
+
+def _starts_sharing(java: str, jvm_options: str, archive: str) -> bool:
+    """Whether a JVM with these options starts from ``archive``: a truncated
+    archive aborts it, and one it cannot read makes it drop all sharing,
+    the JDK's own archive included, which its version banner then omits."""
+    try:
+        probe = subprocess.run(
+            [java, *shlex.split(jvm_options), f"-XX:SharedArchiveFile={archive}",
+             "-XX:+SuppressFatalErrorMessage", "-XX:-CreateCoredumpOnCrash", "-version"],
+            capture_output=True, timeout=60,
+        )
+    except subprocess.TimeoutExpired:
+        return False
+    return probe.returncode == 0 and b"sharing" in probe.stderr
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
 def get_spark(
     app_name: str = "kg-construct",
     cores: int | None = None,
@@ -49,55 +213,20 @@ def get_spark(
     arrow_batch: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
     # One Spark task = one python worker = ONE BLAS thread.  Without this,
     # every worker's numpy spawns n_cpu OpenBLAS threads (cores x 32
     # threads total) and the tag stage runs SLOWER with more cores.
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
         os.environ.setdefault(var, "1")
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.python.worker.reuse", "true")
-        # generated-class cache (LRU, default 100 entries): one KG pass
-        # compiles ~150 distinct classes, so at 100 every rerun of the
-        # pass missed on every class — Janino recompiled all of them and
-        # the JIT re-warmed the fresh classes, the largest CPU cost of a
-        # warm pass
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-        # shuffle/spill on tmpfs: the sandbox disk does ~230 MB/s and
-        # concurrent shuffle writers thrash it; a real cluster would have
-        # NVMe-backed local dirs
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
-            if os.path.isdir("/dev/shm")
-            else os.environ.get("SPARK_LOCAL_DIRS", "/tmp"),
-        )
-        # managed tables (bucketing) land outside the repo
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_WAREHOUSE_DIR",
-                os.path.join(tempfile.gettempdir(), "spark-warehouse"),
-            ),
-        )
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = session_conf(app_name, cores, shuffle_partitions, arrow_batch, extra_conf)
+    # only a JVM this call launches can start from an archive; spark-submit
+    # or an earlier session has one up already
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        conf["spark.driver.extraJavaOptions"] = cds_java_options(
+            conf["spark.driver.memory"], conf.get("spark.driver.extraJavaOptions", ""))
+    builder = SparkSession.builder
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ship_package(spark)
