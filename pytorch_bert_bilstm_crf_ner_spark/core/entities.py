@@ -4,8 +4,9 @@ Analog of the reference's per-type entity inventories
 (`data/cner/aug_data/*.txt`, built by `data_augment/aug.py:31-59`) upgraded
 with canonical ids: several aliases per entity and a few aliases shared by
 MULTIPLE entity ids, so canonicalization (connected components over the
-alias-sharing graph) has real work to do.  The same rows feed the broadcast
-linking join on the Spark side (`sources/entity_dict.py`).
+alias-sharing graph) has real work to do.  The pipeline canonicalizes these
+rows once on the driver (:func:`canonical_dict_rows`) and links mentions
+against the result in one broadcast join (`sources/entity_dict.py`).
 """
 
 from __future__ import annotations
@@ -75,8 +76,23 @@ def connected_components_py(
 
 def canonical_map(rows=ENTITY_DICT_ROWS) -> dict[int, tuple[int, str]]:
     """entity_id -> (canonical_id, canonical_name); canonical_name is the
-    name of the component's min entity_id."""
+    minimum spelling the dictionary gives the component's min entity_id
+    (the rule of `operators/canonicalize.py::canonical_entities` and its
+    recursive-CTE twin)."""
     ids = sorted({r[0] for r in rows})
     comp = connected_components_py(ids, alias_edges(rows))
-    names = {r[0]: r[3] for r in rows}
+    names: dict[int, str] = {}
+    for eid, _, _, name in rows:
+        names[eid] = min(names.get(eid, name), name)
     return {eid: (comp[eid], names[comp[eid]]) for eid in ids}
+
+
+def canonical_dict_rows(rows=ENTITY_DICT_ROWS) -> tuple[tuple[int, str, str, str], ...]:
+    """The dictionary with every entity replaced by its canonical entity:
+    distinct, sorted (canonical_id, alias, type, canonical_name) rows, the
+    shape of ``rows``.  Entities sharing an (alias, type) key fall into one
+    component, so each key maps to exactly one canonical entity and linking
+    against these rows links and canonicalizes in one join."""
+    cmap = canonical_map(rows)
+    return tuple(sorted({(cmap[eid][0], alias, etype, cmap[eid][1])
+                         for eid, alias, etype, _ in rows}))

@@ -103,13 +103,21 @@ def cooccurrence_evidence_preagg(
     # one conv_id repartition up front: HashPartitioning(conv_id)
     # satisfies (subset rule) the per-turn groupBy, the cross-turn
     # (conv_id, probe_turn) join, the same-turn self-join and their
-    # aggregations — every downstream Exchange of this function
-    # collapses into this single reused one (round-6; conv size is
-    # bounded so the partitioning cannot skew)
-    canonical_mentions = canonical_mentions.repartition(F.col("conv_id"))
+    # aggregations (conv size is bounded so the partitioning cannot
+    # skew).  The branches share that one exchange (the rest of the plan
+    # reads it as ReusedExchange) only if each sees the same subtree
+    # below it: the used columns and their null filters are fixed here,
+    # and the per-turn count reads `start` (non-null, so the same count)
+    # so that column pruning gives every branch the same projection.
+    cols = ("conv_id", "turn_idx", "start", "canonical_id")
+    canonical_mentions = (
+        canonical_mentions.select(*cols)
+        .filter(" AND ".join(f"{c} IS NOT NULL" for c in cols))
+        .repartition(F.col("conv_id"))
+    )
     per_turn = canonical_mentions.groupBy(
         "conv_id", "turn_idx", "canonical_id"
-    ).agg(F.count(F.lit(1)).alias("n_inst"))
+    ).agg(F.count("start").alias("n_inst"))
 
     probe = per_turn.select(
         "conv_id",

@@ -2,8 +2,9 @@
 resume.
 
 Stages (SURVEY.md §3 "Spark lifecycle"):
-  transcripts -> mentions (Arrow-batched tag UDF) -> linked (broadcast
-  dict join) -> canonical (CC canonicalization) -> triples (adjacency +
+  transcripts -> mentions (Arrow-batched tag UDF) -> canonical (one
+  broadcast join against the dictionary canonicalized once on the driver,
+  `core/entities.py::canonical_dict_rows`) -> triples (adjacency +
   windowed co-occurrence) -> partitioned graph table.
 
 Resume semantics (north_rule: "resumable from checkpoint with
@@ -36,9 +37,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
+from ..core.entities import canonical_dict_rows
 from ..core.model import TaggerConfig
 from ..core.oracle import RelationConfig
-from ..operators.canonicalize import canonical_entities, canonicalize_mentions
 from ..operators.linking import link_mentions
 from ..operators.relations import triples as build_triples
 from ..operators.tagging import extract_mentions
@@ -215,10 +216,18 @@ def run_pipeline(
         mentions = mentions.persist()
         mentions.count()
 
-    edict = entity_dict_df(spark)
-    linked = link_mentions(mentions, edict, broadcast_dict=cfg.broadcast_dict)
-    canon = canonical_entities(edict)
-    canonical = canonicalize_mentions(linked, canon)
+    # Link straight to canonical entities: the driver-held dictionary is
+    # canonicalized once (union-find over its alias-sharing graph), so one
+    # join replaces link -> connected components -> canonicalize.  Every
+    # (alias, type) key lies in one component, so the rows equal
+    # `canonicalize_mentions(link_mentions(...), canonical_entities(...))`;
+    # the dedupe still folds repeated turns.
+    canonical = (
+        link_mentions(mentions, entity_dict_df(spark, canonical_dict_rows()),
+                      broadcast_dict=cfg.broadcast_dict)
+        .withColumnRenamed("entity_id", "canonical_id")
+        .dropDuplicates(["conv_id", "turn_idx", "start", "mention", "canonical_id"])
+    )
     canonical = _materialize(canonical, out, "canonical", run_id)
     if out is None:
         canonical = canonical.persist()
@@ -234,7 +243,6 @@ def run_pipeline(
     return {
         "transcripts": transcripts,
         "mentions": mentions,
-        "linked": linked,
         "canonical": canonical,
         "triples": trip,
     }

@@ -339,10 +339,13 @@ def kg_triples_sql(transcripts_sql: str, canonical_entities_sql: str,
     from :func:`kg_mentions_sql` embedded as a CTE, then linking
     (alias+type equi-join), canonicalization (the recursive-CTE
     connected-components twin + DISTINCT — duplicate-key rows are fully
-    identical, see `operators/canonicalize.py::canonicalize_mentions`),
-    adjacency (LEAD window + between-text separator filter,
-    `operators/relations.py:31-79`), pre-aggregated cross-turn plus
-    instance-level same-turn co-occurrence (`relations.py:82-162`), and
+    identical, see `operators/canonicalize.py::canonicalize_mentions`;
+    the pipeline does both in one join against
+    `core/entities.py::canonical_dict_rows`, this twin keeps the two
+    steps as an independent check), adjacency (LEAD window +
+    between-text separator filter, `operators/relations.py:31-79`),
+    pre-aggregated cross-turn plus instance-level same-turn
+    co-occurrence (`relations.py:82-162`), and
     the evidence aggregation with post-agg name resolution
     (`relations.py:206-253`)."""
     rel = rel or RelationConfig()

@@ -124,7 +124,7 @@ def test_minhash_signatures_single_combined_shuffle(spark):
 
 
 _PIPELINE_STAGES = (
-    "transcripts", "mentions", "linked", "canonical", "triples",
+    "transcripts", "mentions", "canonical", "triples",
 )
 
 
@@ -162,3 +162,23 @@ def test_no_python_rdd_scan(spark, request, kind, name):
     else:
         df = request.getfixturevalue("pipeline_stages")[name]
     assert "ExistingRDD" not in _plan(df), name
+
+
+def test_cooccurrence_preagg_runs_one_repartition_exchange(
+        spark, pipeline_stages, tmp_path):
+    """`cooccurrence_evidence_preagg` repartitions by conv_id once and
+    every branch reads that exchange: the final AQE plan over a written
+    canonical stage holds exactly one REPARTITION_BY_COL exchange that is
+    not a ReusedExchange."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators.relations import (
+        cooccurrence_evidence_preagg,
+    )
+
+    path = str(tmp_path / "canonical")
+    pipeline_stages["canonical"].write.parquet(path)
+    df = cooccurrence_evidence_preagg(spark.read.parquet(path))
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    exchanges = [ln for ln in final.splitlines() if "REPARTITION_BY_COL" in ln]
+    assert sum("ReusedExchange" not in ln for ln in exchanges) == 1, final
+    assert any("ReusedExchange" in ln for ln in exchanges), final
