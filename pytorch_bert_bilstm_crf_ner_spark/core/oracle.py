@@ -19,6 +19,7 @@ from dataclasses import dataclass
 
 from .entities import ENTITY_DICT_ROWS, canonical_map
 from .model import DeterministicTagger
+from .pairing import SEPARATORS
 
 Turn = tuple[str, int, str]  # (conv_id, turn_idx, text)
 
@@ -96,7 +97,6 @@ def relation_triples(mentions, canonical, turns: list[Turn],
     evidence: dict[tuple[str, str, str, str], list[int]] = defaultdict(list)
 
     # adjacency within a turn
-    seps = ("，", ",", "。", "！", "!", "？", "?")
     for (conv, idx), ents in by_turn.items():
         ents = sorted(ents, key=lambda e: e[1])
         text = text_at[(conv, idx)]
@@ -105,7 +105,7 @@ def relation_triples(mentions, canonical, turns: list[Turn],
             if left[2] in cfg.adjacent_object_types or right[2] not in cfg.adjacent_object_types:
                 continue
             between = text[left[1] + len(left[0]) : right[1]]
-            if any(s in between for s in seps):
+            if any(s in between for s in SEPARATORS):
                 continue
             lc = canon_at.get((conv, idx, left[1], left[0]))
             rc = canon_at.get((conv, idx, right[1], right[0]))

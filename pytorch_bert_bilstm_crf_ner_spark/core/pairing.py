@@ -42,6 +42,22 @@ def adjacent_pairs(
     return leftover, relations
 
 
+def adjacent_starts(spans: list[Span], text: str) -> list[int | None]:
+    """Per span (in the given order), the start of the turn's next span by
+    start when no separator lies strictly between this span's end and that
+    start, else None — the text half of the pair rule, so the type half
+    and the linking can be checked without the turn text."""
+    order = sorted(range(len(spans)), key=lambda i: spans[i][1])
+    out: list[int | None] = [None] * len(spans)
+    for i, j in zip(order, order[1:]):
+        mention, start, _ = spans[i]
+        nxt = spans[j][1]
+        between = text[start + len(mention) : nxt]
+        if not any(sep in between for sep in SEPARATORS):
+            out[i] = nxt
+    return out
+
+
 def adjacent_triples(
     entities: list[Span],
     text: str,

@@ -204,13 +204,13 @@ def canonical_entities(entity_dict: DataFrame) -> DataFrame:
 def canonicalize_mentions(linked: DataFrame, canon: DataFrame) -> DataFrame:
     """Linked mentions -> canonical mentions, deduping rows that collapse
     to the same (conv, turn, start, mention, canonical_id) — exactly the
-    oracle's `core/oracle.py::canonicalize` semantics."""
+    oracle's `core/oracle.py::canonicalize` semantics.  Every column of
+    ``linked`` but entity_id and canonical_name passes through, in order,
+    followed by canonical_id and canonical_name."""
+    keep = [c for c in linked.columns if c not in ("entity_id", "canonical_name")]
     return (
         linked.drop("canonical_name")
         .join(F.broadcast(canon), "entity_id")
-        .select(
-            "conv_id", "turn_idx", "mention", "start", "type",
-            "canonical_id", "canonical_name",
-        )
+        .select(*keep, "canonical_id", "canonical_name")
         .dropDuplicates(["conv_id", "turn_idx", "start", "mention", "canonical_id"])
     )

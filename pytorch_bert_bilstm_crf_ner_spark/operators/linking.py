@@ -23,9 +23,10 @@ def link_mentions(
 ) -> DataFrame:
     """Inner join on (lower(mention), type) == (alias, type).
 
-    Returns (conv_id, turn_idx, mention, start, type, entity_id,
-    canonical_name); ambiguous aliases produce one row per matching
-    dictionary entity (collapsed later by canonicalization).
+    Returns every column of ``mentions`` (conv_id, turn_idx, mention,
+    start, type, ...) plus entity_id and canonical_name; ambiguous aliases
+    produce one row per matching dictionary entity (collapsed later by
+    canonicalization).
     """
     m = mentions.withColumn("alias_key", F.lower(F.col("mention")))
     d = entity_dict.select(
@@ -53,7 +54,4 @@ def link_mentions(
             & (m.salt == d.salt),
             "inner",
         )
-    return joined.select(
-        "conv_id", "turn_idx", "mention", "start",
-        "type", "entity_id", "canonical_name",
-    )
+    return joined.select(*mentions.columns, "entity_id", "canonical_name")

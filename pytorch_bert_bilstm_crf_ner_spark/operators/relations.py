@@ -1,21 +1,30 @@
 """Relation extraction -> (subj, pred, obj) triples.
 
-Two patterns, both keyed (no positional zips — reference J2 replaced by
-key-carrying joins):
+Every relation comes from ONE ``repartition(conv_id)`` of the canonical
+mentions, read by two window frames and one generator, with no join after
+it: ``HashPartitioning(conv_id)`` satisfies a window or an aggregation
+keyed by (conv_id, ...) but not a join, so both per-conversation pair
+patterns are written as frames.
 
 - **Adjacency (J4)** — generalization of `predict_gdcq.py:97-120`
-  ``post_process``: consecutive decoded mentions within a turn (ordered by
-  start via a (conv_id, turn_idx) window = the reference's sort at
-  `predict_gdcq.py:109`), left type outside the object set, right type
-  inside it, no sentence punctuation strictly between them
-  (`predict_gdcq.py:115`), both sides linked, distinct canonical ids.
-- **Co-occurrence** — linked mentions within ``window`` turns ahead in the
-  same conversation.  Implemented as a pure EQUI-join: the left side
-  explodes its turn_idx into (turn_idx .. turn_idx+window) probe keys, so
-  Catalyst gets a hash-joinable (conv_id, turn) key instead of a range
-  predicate — at 100 TB a theta/range join over hot conversations would be
-  the bottleneck; the explode costs only (window+1)x on the small mentions
-  relation and AQE skew-split handles hot conv_ids.
+  ``post_process``: consecutive decoded mentions within a turn, left type
+  outside the object set, right type inside it, no sentence punctuation
+  strictly between them (`predict_gdcq.py:115`), both sides linked,
+  distinct canonical ids.  The tag UDF already checked the text: each
+  span's ``adj_start`` is the start of the turn's next decoded span when
+  no separator lies between them (`operators/tagging.py`).  Here a
+  ``lead`` over the turn's LINKED spans (ordered by start) finds the next
+  linked span; the pair holds when it starts at ``adj_start`` (so the next
+  decoded span is itself linked) and the type rule holds.
+- **Co-occurrence** — linked mentions within ``cooccur_window`` turns
+  ahead in the same conversation, directed earlier -> later (same turn:
+  later start).  A ``rangeBetween(0, window)`` frame over the
+  conversation's turns collects the candidates; one explode and a filter
+  keep the later ones with a different canonical id.
+
+Names travel with the rows (``canonical_name``), so the triples need no
+name lookup: the plan is one Exchange, two Windows, a Generate and the
+final HashAggregate.
 """
 
 from __future__ import annotations
@@ -25,7 +34,98 @@ from pyspark.sql import DataFrame, Window
 
 from ..core.oracle import RelationConfig
 
-_SEP_PATTERN = "[，,。！!？?]"
+
+def relation_evidence(
+    canonical_mentions: DataFrame,
+    cfg: RelationConfig = RelationConfig(),
+) -> DataFrame:
+    """-> one row per relation instance: (conv_id, subj_cid, subj, pred,
+    obj_cid, obj, turn_idx, obj_turn), ``turn_idx`` the subject's turn and
+    ``obj_turn`` the object's.
+
+    ``canonical_mentions`` needs conv_id, turn_idx, start, type, adj_start,
+    canonical_id and canonical_name.  Those columns are projected and their
+    keys null-filtered before the single ``repartition(conv_id)``."""
+    cols = ("conv_id", "turn_idx", "start", "type", "adj_start",
+            "canonical_id", "canonical_name")
+    keys = ("conv_id", "turn_idx", "start", "canonical_id")
+    cm = (
+        canonical_mentions.select(*cols)
+        .filter(" AND ".join(f"{c} IS NOT NULL" for c in keys))
+        .repartition(F.col("conv_id"))
+    )
+    item = F.struct(
+        F.col("turn_idx"), F.col("start"),
+        F.col("canonical_id").alias("cid"), F.col("canonical_name").alias("name"),
+    )
+    in_turn = Window.partitionBy("conv_id", "turn_idx").orderBy("start")
+    objects = cfg.adjacent_object_types
+    adjacent = F.when(
+        ~F.col("type").isin(*objects)
+        & (F.lead("start").over(in_turn) == F.col("adj_start"))
+        & F.lead("type").over(in_turn).isin(*objects),
+        F.lead(item).over(in_turn),
+    )
+    ahead = F.collect_list(item).over(
+        Window.partitionBy("conv_id").orderBy("turn_idx")
+        .rangeBetween(0, cfg.cooccur_window)
+    )
+    # A window function and a generator cannot share one select: the
+    # frames are computed first, then one posexplode emits the adjacency
+    # object (position 0, null unless the pair holds) and the
+    # co-occurrence candidates (positions 1..).
+    framed = cm.select(
+        "conv_id", "turn_idx", "start", "canonical_id", "canonical_name",
+        adjacent.alias("adj"), ahead.alias("ahead"),
+    )
+    exploded = framed.select(
+        "conv_id", "turn_idx", "start", "canonical_id", "canonical_name",
+        F.posexplode(F.concat(F.array("adj"), F.col("ahead"))).alias("pos", "o"),
+    )
+    o = F.col("o")
+    later = (o["turn_idx"] > F.col("turn_idx")) | (
+        (o["turn_idx"] == F.col("turn_idx")) & (o["start"] > F.col("start"))
+    )
+    return (
+        exploded.filter(
+            o.isNotNull()
+            & (o["cid"] != F.col("canonical_id"))
+            & ((F.col("pos") == 0) | later)
+        )
+        .select(
+            "conv_id",
+            F.col("canonical_id").alias("subj_cid"),
+            F.col("canonical_name").alias("subj"),
+            F.when(F.col("pos") == 0, F.lit(cfg.adjacent_pred))
+            .otherwise(F.lit(cfg.cooccur_pred)).alias("pred"),
+            o["cid"].alias("obj_cid"),
+            o["name"].alias("obj"),
+            "turn_idx",
+            o["turn_idx"].alias("obj_turn"),
+        )
+    )
+
+
+def relation_triples(
+    canonical_mentions: DataFrame,
+    cfg: RelationConfig = RelationConfig(),
+) -> DataFrame:
+    """Distinct triples with evidence: (subj, pred, obj, conv_id,
+    turn_idx = min evidence turn, n_evidence).  The aggregation is keyed
+    by conv_id, so it reads :func:`relation_evidence`'s partitioning with
+    no further exchange."""
+    return (
+        relation_evidence(canonical_mentions, cfg)
+        .groupBy("conv_id", "subj_cid", "subj", "pred", "obj_cid", "obj")
+        .agg(F.min("turn_idx").alias("turn_idx"),
+             F.count(F.lit(1)).alias("n_evidence"))
+        .select("subj", "pred", "obj", "conv_id", "turn_idx", "n_evidence")
+    )
+
+
+# The three functions below are views over relation_evidence /
+# relation_triples kept for callers written against the earlier
+# join-based operators; their extra parameters are not read.
 
 
 def adjacent_relations(
@@ -34,48 +134,17 @@ def adjacent_relations(
     transcripts: DataFrame,
     cfg: RelationConfig = RelationConfig(),
 ) -> DataFrame:
-    """-> (conv_id, subj, pred, obj, turn_idx) evidence rows (with
-    multiplicity; aggregate in :func:`triples`)."""
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy("start")
-    m = (
-        mentions.withColumn("nxt_mention", F.lead("mention").over(w))
-        .withColumn("nxt_start", F.lead("start").over(w))
-        .withColumn("nxt_type", F.lead("type").over(w))
-        .filter(
-            (~F.col("type").isin(*cfg.adjacent_object_types))
-            & F.col("nxt_type").isin(*cfg.adjacent_object_types)
-        )
-    )
-    # fetch the between-text from the turn (substring is 1-based)
-    m = m.join(
-        transcripts.select("conv_id", "turn_idx", "text"),
-        ["conv_id", "turn_idx"],
-    ).withColumn(
-        "between",
-        F.expr("substring(text, start + length(mention) + 1, nxt_start - start - length(mention))"),
-    ).filter(~F.col("between").rlike(_SEP_PATTERN))
+    """-> (conv_id, subj_cid, pred, obj_cid, turn_idx) adjacency evidence
+    rows, with multiplicity: :func:`relation_evidence` filtered on
+    ``cfg.adjacent_pred``.
 
-    left = canonical_mentions.select(
-        "conv_id", "turn_idx", "start", "mention",
-        F.col("canonical_id").alias("subj_cid"),
-    )
-    right = canonical_mentions.select(
-        "conv_id", "turn_idx",
-        F.col("start").alias("nxt_start"),
-        F.col("mention").alias("nxt_mention"),
-        F.col("canonical_id").alias("obj_cid"),
-    )
+    ``mentions`` and ``transcripts`` are not read (the text check moved
+    into the tag UDF's ``adj_start``); they go when the benchmark's layer
+    sweep is re-pointed at :func:`relation_evidence`."""
     return (
-        m.join(left, ["conv_id", "turn_idx", "start", "mention"])
-        .join(right, ["conv_id", "turn_idx", "nxt_start", "nxt_mention"])
-        .filter(F.col("subj_cid") != F.col("obj_cid"))
-        .select(
-            "conv_id",
-            "subj_cid",
-            F.lit(cfg.adjacent_pred).alias("pred"),
-            "obj_cid",
-            "turn_idx",
-        )
+        relation_evidence(canonical_mentions, cfg)
+        .filter(F.col("pred") == cfg.adjacent_pred)
+        .select("conv_id", "subj_cid", "pred", "obj_cid", "turn_idx")
     )
 
 
@@ -83,138 +152,18 @@ def cooccurrence_evidence_preagg(
     canonical_mentions: DataFrame,
     cfg: RelationConfig = RelationConfig(),
 ) -> DataFrame:
-    """Pre-aggregated co-occurrence evidence — identical counts to the
-    instance-pair path, far less shuffle when entities repeat.
-
-    Split by case:
-    - cross-turn (t2 > t1): every instance of cid1@t1 pairs with every
-      instance of cid2@t2, so the evidence count is the PRODUCT of the two
-      per-(conv, turn, cid) multiplicities — aggregate counts first (rows
-      shrink from instances to distinct (turn, cid)), then the explode-to-
-      equi-join runs over the compact relation with n1*n2 as weight.
-    - same-turn (t2 == t1): direction depends on start order, which a
-      product cannot see — that slice stays instance-level (it is bounded
-      by mentions-per-turn, not by conversation length).
-
-    Output: (conv_id, subj_cid, pred, obj_cid, turn_idx, n_evidence) —
-    already weighted; aggregate with SUM(n_evidence), MIN(turn_idx).
-    """
-    W = cfg.cooccur_window
-    # one conv_id repartition up front: HashPartitioning(conv_id)
-    # satisfies (subset rule) the per-turn groupBy, the cross-turn
-    # (conv_id, probe_turn) join, the same-turn self-join and their
-    # aggregations (conv size is bounded so the partitioning cannot
-    # skew).  The branches share that one exchange (the rest of the plan
-    # reads it as ReusedExchange) only if each sees the same subtree
-    # below it: the used columns and their null filters are fixed here,
-    # and the per-turn count reads `start` (non-null, so the same count)
-    # so that column pruning gives every branch the same projection.
-    cols = ("conv_id", "turn_idx", "start", "canonical_id")
-    canonical_mentions = (
-        canonical_mentions.select(*cols)
-        .filter(" AND ".join(f"{c} IS NOT NULL" for c in cols))
-        .repartition(F.col("conv_id"))
-    )
-    per_turn = canonical_mentions.groupBy(
-        "conv_id", "turn_idx", "canonical_id"
-    ).agg(F.count("start").alias("n_inst"))
-
-    probe = per_turn.select(
-        "conv_id",
-        F.col("turn_idx").alias("src_turn"),
-        F.col("canonical_id").alias("subj_cid"),
-        F.col("n_inst").alias("n_src"),
-        F.explode(
-            F.sequence(F.col("turn_idx") + 1, F.col("turn_idx") + W)
-        ).alias("probe_turn"),
-    )
-    build = per_turn.select(
-        "conv_id",
-        F.col("turn_idx").alias("probe_turn"),
-        F.col("canonical_id").alias("obj_cid"),
-        F.col("n_inst").alias("n_dst"),
-    )
-    cross_turn = (
-        probe.join(build, ["conv_id", "probe_turn"])
-        .filter(F.col("subj_cid") != F.col("obj_cid"))
-        .select(
-            "conv_id",
-            "subj_cid",
-            F.lit(cfg.cooccur_pred).alias("pred"),
-            "obj_cid",
-            F.col("src_turn").alias("turn_idx"),
-            (F.col("n_src") * F.col("n_dst")).cast("long").alias("n_evidence"),
-        )
-    )
-
-    a = canonical_mentions.select(
-        "conv_id", "turn_idx",
-        F.col("start").alias("src_start"),
-        F.col("canonical_id").alias("subj_cid"),
-    )
-    b = canonical_mentions.select(
-        "conv_id", "turn_idx",
-        F.col("start").alias("dst_start"),
-        F.col("canonical_id").alias("obj_cid"),
-    )
-    same_turn = (
-        a.join(b, ["conv_id", "turn_idx"])
-        .filter(
-            (F.col("subj_cid") != F.col("obj_cid"))
-            & (F.col("dst_start") > F.col("src_start"))
-        )
-        .groupBy("conv_id", "turn_idx", "subj_cid", "obj_cid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_evidence"))
-        .select(
-            "conv_id",
-            "subj_cid",
-            F.lit(cfg.cooccur_pred).alias("pred"),
-            "obj_cid",
-            "turn_idx",
-            "n_evidence",
-        )
-    )
-    return cross_turn.unionByName(same_turn)
-
-
-def cooccurrence_relations(
-    canonical_mentions: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
-) -> DataFrame:
-    """Directed earlier->later pairs within the turn window, as evidence
-    rows (conv_id, subj, pred, obj, turn_idx = earlier turn)."""
-    W = cfg.cooccur_window
-    probe = canonical_mentions.select(
-        "conv_id",
-        F.col("turn_idx").alias("src_turn"),
-        F.col("start").alias("src_start"),
-        F.col("canonical_id").alias("subj_cid"),
-        F.explode(
-            F.sequence(F.col("turn_idx"), F.col("turn_idx") + W)
-        ).alias("probe_turn"),
-    )
-    build = canonical_mentions.select(
-        "conv_id",
-        F.col("turn_idx").alias("probe_turn"),
-        F.col("start").alias("dst_start"),
-        F.col("canonical_id").alias("obj_cid"),
-    )
+    """-> (conv_id, subj_cid, pred, obj_cid, turn_idx, n_evidence):
+    :func:`relation_evidence` filtered on ``cfg.cooccur_pred`` and counted
+    per (conv_id, subj_cid, pred, obj_cid, turn_idx, object turn), the
+    grain of the earlier pre-aggregated operator.  Aggregate with
+    SUM(n_evidence), MIN(turn_idx).  It goes when the benchmark's layer
+    sweep is re-pointed at :func:`relation_evidence`."""
     return (
-        probe.join(build, ["conv_id", "probe_turn"])
-        .filter(
-            (F.col("subj_cid") != F.col("obj_cid"))
-            & (
-                (F.col("probe_turn") > F.col("src_turn"))
-                | (F.col("dst_start") > F.col("src_start"))
-            )
-        )
-        .select(
-            "conv_id",
-            "subj_cid",
-            F.lit(cfg.cooccur_pred).alias("pred"),
-            "obj_cid",
-            F.col("src_turn").alias("turn_idx"),
-        )
+        relation_evidence(canonical_mentions, cfg)
+        .filter(F.col("pred") == cfg.cooccur_pred)
+        .groupBy("conv_id", "subj_cid", "pred", "obj_cid", "turn_idx", "obj_turn")
+        .agg(F.count(F.lit(1)).alias("n_evidence"))
+        .drop("obj_turn")
     )
 
 
@@ -225,44 +174,9 @@ def triples(
     cfg: RelationConfig = RelationConfig(),
     preagg_cooccurrence: bool = False,
 ) -> DataFrame:
-    """Distinct triples with evidence: (subj, pred, obj, conv_id,
-    turn_idx = min evidence turn, n_evidence).
+    """:func:`relation_triples` of ``canonical_mentions``.
 
-    ``preagg_cooccurrence=True`` swaps the instance-pair co-occurrence for
-    :func:`cooccurrence_evidence_preagg` (identical counts, compact
-    shuffle — the scale path when entities repeat within conversations;
-    equality is pinned by tests)."""
-    adj = adjacent_relations(mentions, canonical_mentions, transcripts, cfg).withColumn(
-        "n_evidence", F.lit(1).cast("long")
-    )
-    if preagg_cooccurrence:
-        co = cooccurrence_evidence_preagg(canonical_mentions, cfg)
-    else:
-        co = cooccurrence_relations(canonical_mentions, cfg).withColumn(
-            "n_evidence", F.lit(1).cast("long")
-        )
-    ev = adj.unionByName(co)
-    # Evidence rows carry canonical IDS, not names: the wide shuffle (one
-    # row per co-occurrence instance) moves two bigints instead of two
-    # entity-name strings; names are resolved AFTER the aggregation via a
-    # broadcast join against the tiny id->name map.
-    agg = ev.groupBy("conv_id", "subj_cid", "pred", "obj_cid").agg(
-        F.min("turn_idx").alias("turn_idx"),
-        F.sum("n_evidence").alias("n_evidence"),
-    )
-    names = canonical_mentions.select(
-        "canonical_id", "canonical_name"
-    ).dropDuplicates(["canonical_id"])
-    return (
-        agg.join(
-            F.broadcast(names.withColumnRenamed("canonical_id", "subj_cid")
-                        .withColumnRenamed("canonical_name", "subj")),
-            "subj_cid",
-        )
-        .join(
-            F.broadcast(names.withColumnRenamed("canonical_id", "obj_cid")
-                        .withColumnRenamed("canonical_name", "obj")),
-            "obj_cid",
-        )
-        .select("subj", "pred", "obj", "conv_id", "turn_idx", "n_evidence")
-    )
+    ``mentions``, ``transcripts`` and ``preagg_cooccurrence`` are not read;
+    they go when the benchmark's layer sweep is re-pointed at
+    :func:`relation_triples`."""
+    return relation_triples(canonical_mentions, cfg)

@@ -11,6 +11,14 @@ instead), then every Arrow batch of the partition is tokenized,
 Viterbi-decoded and FSM-span-decoded as whole numpy batches.
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
 (B x Lmax x T fp32).
+
+Each span also carries ``adj_start``: the start of the turn's next span
+(by start) when no `core/pairing.py::SEPARATORS` character lies between
+the two, else null (`core/pairing.py::adjacent_starts`).  That is the
+text half of the adjacency rule, computed here because only this stage
+holds the turn text next to its spans: the relations stage checks the
+type rule and the linking from the mention rows alone, with no
+transcripts join.
 """
 
 from __future__ import annotations
@@ -30,12 +38,14 @@ from pyspark.sql.types import (
 )
 
 from ..core.model import DeterministicTagger, TaggerConfig
+from ..core.pairing import adjacent_starts
 
 SPAN_STRUCT = StructType(
     [
         StructField("mention", StringType(), False),
         StructField("start", IntegerType(), False),
         StructField("type", StringType(), False),
+        StructField("adj_start", IntegerType(), True),
     ]
 )
 MENTIONS_SCHEMA = ArrayType(SPAN_STRUCT)
@@ -55,14 +65,15 @@ def make_tag_turns_udf(cfg: TaggerConfig | None = None, tagger_factory=None):
     def tag_turns(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         tagger = factory()  # once per task (partition)
         for texts in batches:
-            rows = tagger.tag_batch(texts.fillna("").tolist())
+            texts = texts.fillna("").tolist()
+            rows = tagger.tag_batch(texts)
             yield pd.Series(
                 [
                     [
-                        {"mention": m, "start": s, "type": t}
-                        for m, s, t in row
+                        {"mention": m, "start": s, "type": t, "adj_start": a}
+                        for (m, s, t), a in zip(row, adjacent_starts(row, text))
                     ]
-                    for row in rows
+                    for row, text in zip(rows, texts)
                 ]
             )
 
@@ -72,7 +83,8 @@ def make_tag_turns_udf(cfg: TaggerConfig | None = None, tagger_factory=None):
 def extract_mentions(transcripts: DataFrame,
                      cfg: TaggerConfig | None = None,
                      tagger_factory=None) -> DataFrame:
-    """transcripts -> mention rows (conv_id, turn_idx, mention, start, type).
+    """transcripts -> mention rows (conv_id, turn_idx, mention, start, type,
+    adj_start).
 
     Only (conv_id, turn_idx, text) enter the UDF stage (column pruning);
     empty turns are filtered first (reference P1, `preprocess.py:173-175`).
@@ -108,5 +120,6 @@ def extract_mentions(transcripts: DataFrame,
             F.col("sp.mention").alias("mention"),
             F.col("sp.start").alias("start"),
             F.col("sp.type").alias("type"),
+            F.col("sp.adj_start").alias("adj_start"),
         )
     )

@@ -2,10 +2,13 @@
 resume.
 
 Stages (SURVEY.md §3 "Spark lifecycle"):
-  transcripts -> mentions (Arrow-batched tag UDF) -> canonical (one
+  transcripts -> mentions (Arrow-batched tag UDF; each span carries
+  ``adj_start``, the text half of the adjacency rule) -> canonical (one
   broadcast join against the dictionary canonicalized once on the driver,
-  `core/entities.py::canonical_dict_rows`) -> triples (adjacency +
-  windowed co-occurrence) -> partitioned graph table.
+  `core/entities.py::canonical_dict_rows`) -> triples (adjacency and
+  windowed co-occurrence as window frames over one conv_id exchange of the
+  canonical stage, `operators/relations.py::relation_triples`) ->
+  partitioned graph table.
 
 Resume semantics (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics"): every materialized stage writes
@@ -41,7 +44,7 @@ from ..core.entities import canonical_dict_rows
 from ..core.model import TaggerConfig
 from ..core.oracle import RelationConfig
 from ..operators.linking import link_mentions
-from ..operators.relations import triples as build_triples
+from ..operators.relations import relation_triples
 from ..operators.tagging import extract_mentions
 from ..sources.entity_dict import entity_dict_df
 from ..sources.transcripts import transcripts_from_documents
@@ -55,11 +58,9 @@ class PipelineConfig:
     broadcast_dict: bool = True
     repartition: int | None = None     # parallelism of the UDF stage
     output_dir: str | None = None      # None = fully lazy, no materialization
-    # pre-aggregated co-occurrence evidence counting (identical triples,
-    # equality-pinned by tests): the default, because the instance-pair
-    # join's shuffle grows with mention multiplicity squared per turn while
-    # the preagg shuffle is bounded by distinct (conv, turn, entity).
-    # False = the instance-level debug path.
+    # Not read: there is one co-occurrence formulation.  Kept because the
+    # hash-frozen bench.py and the benchmark's layer sweep still set it;
+    # it goes when that sweep is re-pointed at relation_triples.
     preagg_cooccurrence: bool = True
     # Directory of a numpy-weights model checkpoint (`core/checkpoint.py`).
     # Set, the tag UDF runs from the checkpoint's weights: read ONCE on
@@ -193,16 +194,6 @@ def run_pipeline(
     n_part = cfg.repartition or spark.sparkContext.defaultParallelism
     transcripts = transcripts.repartition(n_part)
     transcripts = _materialize(transcripts, out, "transcripts", run_id)
-    # mentions/canonical/transcripts each feed 2+ downstream branches; when
-    # stages aren't materialized to parquet, cache them.  Only the stage
-    # guarding the EXPENSIVE model-forward UDF (mentions) gets an eager
-    # count — a lazy cache can be materialized concurrently by sibling
-    # branches of one action, and re-running the tag UDF is the one
-    # unaffordable recompute.  The cheap stages persist lazily: every
-    # extra count() is a scheduling barrier whose fixed latency caps
-    # scaling (Amdahl) on short jobs.
-    if out is None:
-        transcripts = transcripts.persist()
 
     tagger_factory = None
     if cfg.checkpoint_dir is not None:
@@ -212,6 +203,11 @@ def run_pipeline(
     mentions = extract_mentions(transcripts, cfg.tagger,
                                 tagger_factory=tagger_factory)
     mentions = _materialize(mentions, out, "mentions", run_id)
+    # Each stage feeds only the next one, so none needs a cache for reuse.
+    # When stages are not materialized to parquet, the mentions are still
+    # cached and counted eagerly: they guard the model-forward UDF, whose
+    # recompute (a second action over the lazy frames) is the one cost a
+    # caller cannot afford.
     if out is None:
         mentions = mentions.persist()
         mentions.count()
@@ -229,13 +225,8 @@ def run_pipeline(
         .dropDuplicates(["conv_id", "turn_idx", "start", "mention", "canonical_id"])
     )
     canonical = _materialize(canonical, out, "canonical", run_id)
-    if out is None:
-        canonical = canonical.persist()
 
-    trip = build_triples(
-        mentions, canonical, transcripts, cfg.relations,
-        preagg_cooccurrence=cfg.preagg_cooccurrence,
-    )
+    trip = relation_triples(canonical, cfg.relations)
     # graph table partitioned by predicate — partition pruning for
     # per-relation queries (Iceberg would add days(ts) etc.)
     trip = _materialize(trip, out, "triples", run_id, partition_by=("pred",))

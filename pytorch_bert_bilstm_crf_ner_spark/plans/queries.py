@@ -437,7 +437,9 @@ def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts = _transcripts(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    return extract_mentions(transcripts)
+    # adj_start feeds the relations stage only; the twin's columns are the
+    # five mention columns
+    return extract_mentions(transcripts).drop("adj_start")
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -100,7 +100,7 @@ def session_conf(
             if os.path.isdir("/dev/shm")
             else os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
         ),
-        # managed tables (bucketing) land outside the repo
+        # managed tables (saveAsTable) land outside the repo
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_WAREHOUSE_DIR",
             os.path.join(tempfile.gettempdir(), "spark-warehouse"),

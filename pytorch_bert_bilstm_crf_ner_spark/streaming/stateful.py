@@ -6,10 +6,11 @@ mentions pair with everything previously seen in that conversation plus
 the other new arrivals, and per-conversation state (the seen set) is kept
 by the engine in the state store, restored from the checkpoint across
 restarts.  This is the `applyInPandasWithState` re-expression of the batch
-`operators/relations.py::cooccurrence_relations` for continuously arriving
-transcripts (streaming simplification, documented: pairing is
-conversation-wide rather than turn-windowed — the window bound would
-otherwise keep per-turn state alive indefinitely for unordered arrivals).
+co-occurrence frame (`operators/relations.py::relation_evidence`) for
+continuously arriving transcripts (streaming simplification, documented:
+pairing is conversation-wide rather than turn-windowed — the window bound
+would otherwise keep per-turn state alive indefinitely for unordered
+arrivals).
 
 Directionality matches the batch operator's ordering rule: earlier
 (turn, start) mention -> later one.

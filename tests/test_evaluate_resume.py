@@ -140,6 +140,30 @@ def test_stage_write_adds_no_jobs(spark, tmp_path, partition_by):
     assert n_bare >= 1 and n_stage == n_bare
 
 
+def test_triples_stage_write_runs_two_jobs(spark, tmp_path):
+    """The triples stage is one conv_id exchange and one write: a resumed
+    run whose only missing stage is the triples runs exactly two Spark
+    jobs (the shuffle map stage and the write) more than a resumed run
+    with nothing to do."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out = str(tmp_path / "kg")
+    cfg = PipelineConfig(output_dir=out)
+    run_pipeline(spark, SF_DIR, cfg, run_id="r1")
+    sc, g = spark.sparkContext, f"triples-write-{tmp_path.name}"
+    n_done = _jobs_in_group(sc, f"{g}/done",
+                            lambda: run_pipeline(spark, SF_DIR, cfg, run_id="r2"))
+    shutil.rmtree(f"{out}/triples")
+    n_triples = _jobs_in_group(sc, f"{g}/triples",
+                               lambda: run_pipeline(spark, SF_DIR, cfg, run_id="r3"))
+    assert n_triples - n_done == 2
+    assert _run_ids(spark, out, "triples") == {"r3"}
+    assert _run_ids(spark, out, "canonical") == {"r1"}
+
+
 def test_lineage_describes_written_files(spark, tmp_path):
     """One lineage row per part file: its footer's row count, the writing
     task's partition from the file name, its path under the stage dir.
@@ -311,30 +335,40 @@ def test_triple_metrics_one_action(spark):
     assert perfect["precision"] == 1.0 and perfect["recall"] == 1.0
 
 
-def test_preagg_cooccurrence_equals_instance_level(spark):
-    """The compact-shuffle co-occurrence path must produce byte-identical
-    triples, including multiplicity counts for repeated entities."""
+def test_relation_triples_match_oracle_with_repeated_entities(spark):
+    """`relation_triples` equals `core/oracle.py::relation_triples` fed the
+    same mentions, canonical rows and turns, on synthetic transcripts
+    whose entities repeat within and across turns (evidence counts > 1)."""
+    from pytorch_bert_bilstm_crf_ner_spark.core import oracle
     from pytorch_bert_bilstm_crf_ner_spark.operators.canonicalize import (
         canonical_entities,
         canonicalize_mentions,
     )
     from pytorch_bert_bilstm_crf_ner_spark.operators.linking import link_mentions
-    from pytorch_bert_bilstm_crf_ner_spark.operators.relations import triples
+    from pytorch_bert_bilstm_crf_ner_spark.operators.relations import (
+        relation_triples,
+    )
     from pytorch_bert_bilstm_crf_ner_spark.operators.tagging import extract_mentions
     from pytorch_bert_bilstm_crf_ner_spark.sources.entity_dict import entity_dict_df
     from pytorch_bert_bilstm_crf_ner_spark.sources.synth import synth_transcripts
 
-    # synth text repeats vocabulary words within and across turns, so
-    # per-(turn, cid) multiplicities > 1 occur and exercise the products
     tr = synth_transcripts(spark, 300, partitions=4).persist()
     m = extract_mentions(tr).persist()
-    m.count()
     ed = entity_dict_df(spark)
     cm = canonicalize_mentions(link_mentions(m, ed), canonical_entities(ed)).persist()
-    cm.count()
-    base = {tuple(r) for r in triples(m, cm, tr).collect()}
-    fast = {tuple(r) for r in triples(m, cm, tr, preagg_cooccurrence=True).collect()}
-    assert len(base) > 1000
-    assert base == fast
-    for df in (tr, m, cm):
-        df.unpersist()
+    try:
+        turns = [tuple(r) for r in tr.select("conv_id", "turn_idx", "text").collect()]
+        mentions = [tuple(r) for r in
+                    m.select("conv_id", "turn_idx", "mention", "start", "type").collect()]
+        canonical = [tuple(r) for r in cm.select(
+            "conv_id", "turn_idx", "mention", "start", "type",
+            "canonical_id", "canonical_name").collect()]
+        want = oracle.relation_triples(mentions, canonical, turns)
+        got = sorted(tuple(r) for r in relation_triples(cm).collect())
+        assert got == want
+        assert len(got) > 1000
+        assert any(r[1] == "has_attribute" for r in got)
+        assert max(r[5] for r in got) > 1
+    finally:
+        for df in (tr, m, cm):
+            df.unpersist()

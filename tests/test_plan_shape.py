@@ -164,21 +164,20 @@ def test_no_python_rdd_scan(spark, request, kind, name):
     assert "ExistingRDD" not in _plan(df), name
 
 
-def test_cooccurrence_preagg_runs_one_repartition_exchange(
-        spark, pipeline_stages, tmp_path):
-    """`cooccurrence_evidence_preagg` repartitions by conv_id once and
-    every branch reads that exchange: the final AQE plan over a written
-    canonical stage holds exactly one REPARTITION_BY_COL exchange that is
-    not a ReusedExchange."""
+def test_relation_triples_run_one_exchange(spark, pipeline_stages, tmp_path):
+    """Every relation comes from one conv_id repartition of the canonical
+    stage: the final AQE plan of `relation_triples` over a written
+    canonical stage holds exactly one Exchange (windows, generator and
+    aggregation all read its partitioning) and no broadcast."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.relations import (
-        cooccurrence_evidence_preagg,
+        relation_triples,
     )
 
     path = str(tmp_path / "canonical")
     pipeline_stages["canonical"].write.parquet(path)
-    df = cooccurrence_evidence_preagg(spark.read.parquet(path))
-    df.collect()
+    df = relation_triples(spark.read.parquet(path))
+    assert df.collect()
     final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
-    exchanges = [ln for ln in final.splitlines() if "REPARTITION_BY_COL" in ln]
-    assert sum("ReusedExchange" not in ln for ln in exchanges) == 1, final
-    assert any("ReusedExchange" in ln for ln in exchanges), final
+    exchanges = [ln for ln in final.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "REPARTITION_BY_COL" in exchanges[0], final
+    assert "BroadcastExchange" not in final and "Join" not in final, final

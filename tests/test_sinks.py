@@ -18,34 +18,3 @@ def test_graph_sink_parquet_fallback(spark, tmp_path):
     one = spark.read.parquet(f"{target}/pred=co_occurs_with")
     assert one.count() == 1
 
-
-def test_bucketed_join_is_shuffle_free(spark):
-    import pyspark.sql.functions as F
-
-    from pytorch_bert_bilstm_crf_ner_spark.operators.tagging import extract_mentions
-    from pytorch_bert_bilstm_crf_ner_spark.plans.bucketing import (
-        bucketed_join_plan_is_shuffle_free,
-        write_bucketed,
-    )
-    from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import (
-        transcripts_from_documents,
-    )
-
-    tr = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-    m = extract_mentions(tr)
-    write_bucketed(tr, "tr_bucketed", ("conv_id",), 8, sort_cols=("conv_id",))
-    write_bucketed(m, "m_bucketed", ("conv_id",), 8, sort_cols=("conv_id",))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined, shuffle_free = bucketed_join_plan_is_shuffle_free(
-            spark, "m_bucketed", "tr_bucketed", ["conv_id"]
-        )
-        assert shuffle_free, "bucketed join should have no Exchange"
-        # sanity: same result as the plain join
-        plain = m.join(tr, "conv_id")
-        assert joined.count() == plain.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS tr_bucketed")
-        spark.sql("DROP TABLE IF EXISTS m_bucketed")
