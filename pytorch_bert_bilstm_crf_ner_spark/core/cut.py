@@ -69,11 +69,6 @@ def cut_sent_for_bert(text: str, max_seq_len: int) -> list[str]:
 _TIER3 = (re.compile(r"([,，])([^”’])"), r"\1\n\2")
 
 
-def cut_sentences_tier3(sent: str) -> list[str]:
-    """Third-rank split on ,， (`cut.py:24-28`)."""
-    return _apply((_TIER3,), sent)
-
-
 def _apply_pos(rules, sent: str, base: int) -> list[tuple[str, int]]:
     """Like :func:`_apply`, but each split piece carries its TRUE start
     offset in the original string (``base`` + position in ``sent``).

@@ -56,22 +56,3 @@ def adjacent_starts(spans: list[Span], text: str) -> list[int | None]:
         if not any(sep in between for sep in SEPARATORS):
             out[i] = nxt
     return out
-
-
-def adjacent_triples(
-    entities: list[Span],
-    text: str,
-    object_types: tuple[str, ...],
-    pred: str = "has_attribute",
-    separators: tuple[str, ...] = SEPARATORS,
-) -> list[tuple[str, str, str, int]]:
-    """(subj, pred, obj, subj_start) triples from the same pair rule —
-    the KG-facing generalization used by the relations operator."""
-    triples = []
-    for i in range(len(entities) - 1):
-        left, right = entities[i], entities[i + 1]
-        if left[-1] not in object_types and right[-1] in object_types:
-            between = text[left[1] + len(left[0]) : right[1]]
-            if not any(sep in between for sep in separators):
-                triples.append((left[0], pred, right[0], left[1]))
-    return triples

@@ -80,7 +80,7 @@ def pair_cosine_parts(pairs: DataFrame) -> DataFrame:
     interpreted (no codegen at this size) ~3x slower than even an HOF
     fold, and the optimizer duplicates it into join conditions; an opaque
     kernel is evaluated exactly once and is immune to both (measured in
-    OPTIMIZATION_r06.md)."""
+    BASELINE.md)."""
 
     def parts(batches):
         import pyarrow as pa

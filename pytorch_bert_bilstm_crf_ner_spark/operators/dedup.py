@@ -43,15 +43,6 @@ FROM documents GROUP BY md5(text) HAVING COUNT(*) > 1
 # word shingles
 
 
-def _shingle_array_sql(n: int = 3, text_col: str = "text") -> str:
-    """SQL fragment: the distinct n-word shingle array of one text value
-    (row-local, no explode)."""
-    words = f"split({text_col}, ' ')"
-    return (f"array_distinct(transform("
-            f"sequence(0, greatest(size({words}) - {n}, 0)), "
-            f"i -> array_join(slice({words}, i + 1, {n}), ' ')))")
-
-
 def _shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle): distinct n-word shingles per document.
 
@@ -563,7 +554,7 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     (`operators/ann.py::_rerank_candidates`) before the threshold filter,
     so precision is always 1.0 and recall is the LSH collision probability
     — for a pair at cosine s, 1 - (1 - (1 - acos(s)/pi)^n_planes)^n_tables
-    (0.997 at s = 0.5 with 3 planes / 16 tables; see BASELINE.md).
+    (0.996 at s = 0.5 with 3 planes / 16 tables; see BASELINE.md).
     ``n_planes=None`` sizes the bucket count to the corpus: max(3,
     floor(log2(n / 60))), i.e. ~60 vectors per bucket, so the candidate
     join stays near-linear as n grows instead of degrading toward
@@ -598,7 +589,7 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     # first colliding table, no distinct Exchange) was tried in round
     # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
     # collision rows cost more than the 16-byte-pair distinct it saved
-    # (3.4s vs 1.9s at sf0.1; see OPTIMIZATION_r06.md).
+    # (3.4s vs 1.9s at sf0.1; see BASELINE.md).
     buckets = lsh_buckets(
         embeddings, dim=dim, n_planes=n_planes, n_tables=n_tables,
         seed=seed,

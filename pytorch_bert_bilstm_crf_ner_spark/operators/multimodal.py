@@ -112,12 +112,3 @@ def decode_media(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFram
     return media.select("media_id", "kind", "payload").mapInPandas(
         decode, FEATURE_SCHEMA
     )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Per-kind metadata aggregation (SQL-twin-able part of the surface)."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg(F.coalesce("duration_ms", F.lit(0))).alias("avg_duration_ms"),
-    )

@@ -54,7 +54,6 @@ from ..sources.transcripts import transcripts_from_documents
 class PipelineConfig:
     tagger: TaggerConfig = field(default_factory=TaggerConfig)
     relations: RelationConfig = field(default_factory=RelationConfig)
-    words_per_turn: int = 12
     broadcast_dict: bool = True
     repartition: int | None = None     # parallelism of the UDF stage
     output_dir: str | None = None      # None = fully lazy, no materialization
@@ -185,7 +184,7 @@ def run_pipeline(
     transcripts = (
         transcripts_df
         if transcripts_df is not None
-        else transcripts_from_documents(spark, sf_dir, cfg.words_per_turn)
+        else transcripts_from_documents(spark, sf_dir)
     )
     # Units of parallel model work for the UDF stage.  Tagging is per-turn
     # (no co-location requirement — downstream windows/joins shuffle on

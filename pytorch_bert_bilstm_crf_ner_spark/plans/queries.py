@@ -67,7 +67,7 @@ def _words(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream aggregation reuses, and carrying the words array
     through the Generate cost more than the shuffle saved (consumer
     totals 19.3 s vs 24.4 s at 5x in the window's favor; worst single
-    case augmented_corpus 3.5 s vs 6.9 s).  See OPTIMIZATION_r06.md."""
+    case augmented_corpus 3.5 s vs 6.9 s).  See BASELINE.md."""
     t = _transcripts(spark, sf_dir)
     w = Window.partitionBy("conv_id", "turn_idx").orderBy("wpos").rowsBetween(
         Window.unboundedPreceding, -1

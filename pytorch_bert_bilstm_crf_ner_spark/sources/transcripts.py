@@ -19,10 +19,13 @@ parquet is the sandbox stand-in (same DataFrame downstream).
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 WORDS_PER_TURN = 12
 ROLES = ("user", "assistant", "tool")
@@ -30,7 +33,16 @@ EPOCH = datetime(2024, 1, 1)
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    """The documents table.  A single file is read with the schema of its
+    parquet footer, so no Spark job infers it; the schema is the file's
+    own, so a file without ``text`` still fails at plan build instead of
+    reading as an all-null column.  A directory (a Spark-written table) is
+    left to Spark's inference."""
+    path = f"{sf_dir}/documents.parquet"
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
+    schema = from_arrow_schema(pq.read_schema(path))
+    return spark.read.schema(schema).parquet(path)
 
 
 def derive_transcripts(docs: DataFrame, words_per_turn: int = WORDS_PER_TURN) -> DataFrame:
@@ -67,10 +79,8 @@ def derive_transcripts(docs: DataFrame, words_per_turn: int = WORDS_PER_TURN) ->
     )
 
 
-def transcripts_from_documents(
-    spark: SparkSession, sf_dir: str, words_per_turn: int = WORDS_PER_TURN
-) -> DataFrame:
-    return derive_transcripts(load_documents(spark, sf_dir), words_per_turn)
+def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return derive_transcripts(load_documents(spark, sf_dir))
 
 
 def transcripts_sql(words_per_turn: int = WORDS_PER_TURN) -> str:

@@ -164,6 +164,49 @@ def test_triples_stage_write_runs_two_jobs(spark, tmp_path):
     assert _run_ids(spark, out, "canonical") == {"r1"}
 
 
+def test_resumed_run_with_every_stage_done_runs_no_job(spark, tmp_path):
+    """Nothing to recompute costs nothing: the documents are read with
+    their footer's schema and every stage with its known one, so no job
+    infers a schema."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    cfg = PipelineConfig(output_dir=str(tmp_path / "kg"))
+    run_pipeline(spark, SF_DIR, cfg, run_id="r1")
+    n = _jobs_in_group(spark.sparkContext, f"resume-done-{tmp_path.name}",
+                       lambda: run_pipeline(spark, SF_DIR, cfg, run_id="r2"))
+    assert n == 0
+
+
+def test_documents_read_with_their_own_schema(spark, tmp_path):
+    """A documents file without ``text`` fails at plan build instead of
+    reading as nulls (zero mentions); a directory-shaped table reads the
+    same rows as the file."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import (
+        transcripts_from_documents,
+    )
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    (tmp_path / "no_text").mkdir()
+    pq.write_table(docs.drop(["text"]),
+                   str(tmp_path / "no_text" / "documents.parquet"))
+    with pytest.raises(AnalysisException, match="text"):
+        transcripts_from_documents(spark, str(tmp_path / "no_text"))
+
+    (tmp_path / "as_dir" / "documents.parquet").mkdir(parents=True)
+    pq.write_table(docs, str(tmp_path / "as_dir" / "documents.parquet"
+                             / "part-00000.parquet"))
+    got = transcripts_from_documents(spark, str(tmp_path / "as_dir"))
+    want = transcripts_from_documents(spark, SF_DIR)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_lineage_describes_written_files(spark, tmp_path):
     """One lineage row per part file: its footer's row count, the writing
     task's partition from the file name, its path under the stage dir.

@@ -12,7 +12,6 @@ from pytorch_bert_bilstm_crf_ner_spark.core.pairing import (
     SEPARATORS,
     adjacent_pairs,
     adjacent_starts,
-    adjacent_triples,
 )
 
 from .conftest import extract_function
@@ -21,6 +20,7 @@ from .conftest import extract_function
 def test_gdcq_readme_example():
     text = "多次购买了，效果不错哦，价格便宜"
     ents = [("不错", 8, "正面"), ("价格", 12, "价格"), ("便宜", 14, "正面")]
+    assert GDCQ_OBJECT_TYPES == ("正面", "中性", "负面")
     leftover, rels = adjacent_pairs(ents, text)
     assert rels == [("价格便宜", "正面")]
     assert leftover == [("不错", 8, "正面")]
@@ -48,16 +48,6 @@ def test_matches_reference_randomized():
         ours = adjacent_pairs(ents, text)
         theirs = tuple(ref(ents, text))
         assert ours == theirs
-
-
-def test_triples_form():
-    text = "aa bb cc"
-    ents = [("aa", 0, "NAME"), ("bb", 3, "TITLE"), ("cc", 6, "TITLE")]
-    out = adjacent_triples(ents, text, ("TITLE",), pred="has_attribute")
-    assert out == [
-        ("aa", "has_attribute", "bb", 0),
-    ]
-    assert GDCQ_OBJECT_TYPES == ("正面", "中性", "负面")
 
 
 @pytest.mark.parametrize("sep", SEPARATORS)
