@@ -20,12 +20,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..core.entities import ENTITY_DICT_ROWS
 from ..sources.entity_dict import entity_dict_df, entity_dict_values_sql
-from ..sources.transcripts import transcripts_from_documents, transcripts_sql
+from ..sources.transcripts import TRANSCRIPTS_SQL, transcripts_from_documents
 
 # --------------------------------------------------------------------- #
 # shared fragments
 
-_TR = transcripts_sql()
+_TR = TRANSCRIPTS_SQL
 _DICT_SQL = entity_dict_values_sql()
 
 # conv_id -> numeric id, erring LOUDLY on any id not shaped `conv_<n>`

@@ -9,7 +9,8 @@ python worker reuse so a task's worker is already up and its imports done
 
 Cold start: the JVM a session launches maps the classes of earlier
 sessions from a class-data-sharing archive instead of loading and
-verifying them again (``cds_java_options``).
+verifying them again (``cds_java_options``), and its JIT compilers spend
+a pass only on code that stays hot (``JIT_OPTIONS``).
 """
 
 from __future__ import annotations
@@ -30,6 +31,12 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 CDS_DIR = "spark-kg-cds"
+# Every compile tier waits for 4x HotSpot's invocation and back-edge counts,
+# so C2 compiles only what stays hot and skips the lukewarm code that cost
+# about half of a cold pass's CPU (BASELINE.md, "JIT policy").  Driver JVM
+# only: in local mode it runs the tasks too; cluster executors are
+# long-lived and keep HotSpot's defaults.
+JIT_OPTIONS = "-XX:CompileThresholdScaling=4"
 log = logging.getLogger(__name__)
 
 
@@ -66,7 +73,9 @@ def session_conf(
     extra_conf: dict | None = None,
 ) -> dict:
     """The Spark conf ``get_spark`` builds its session from: the engine's
-    defaults, then ``extra_conf`` over them."""
+    defaults, then ``extra_conf`` over them, then :data:`JIT_OPTIONS` in
+    front of the driver's JVM options, where a caller's own value of the
+    same flag comes later and wins."""
     cores = (cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0))
              or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
@@ -107,6 +116,8 @@ def session_conf(
         ),
     }
     conf.update(extra_conf or {})
+    conf["spark.driver.extraJavaOptions"] = (
+        f"{JIT_OPTIONS} {conf.get('spark.driver.extraJavaOptions', '')}".strip())
     return conf
 
 

@@ -45,9 +45,10 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def derive_transcripts(docs: DataFrame, words_per_turn: int = WORDS_PER_TURN) -> DataFrame:
-    """One conversation per document; turn k = words [k*W, (k+1)*W)."""
-    W = words_per_turn
+def derive_transcripts(docs: DataFrame) -> DataFrame:
+    """One conversation per document; turn k = words [k*W, (k+1)*W) for
+    W = :data:`WORDS_PER_TURN`."""
+    W = WORDS_PER_TURN
     words = F.split(F.col("text"), " ")
     df = docs.select(
         F.col("doc_id"),
@@ -83,23 +84,21 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return derive_transcripts(load_documents(spark, sf_dir))
 
 
-def transcripts_sql(words_per_turn: int = WORDS_PER_TURN) -> str:
-    """DuckDB twin of :func:`derive_transcripts` over the ``documents`` view."""
-    W = words_per_turn
-    return f"""
+# DuckDB twin of derive_transcripts over the ``documents`` view
+TRANSCRIPTS_SQL = f"""
 WITH w AS (
   SELECT doc_id, string_split(text, ' ') AS words FROM documents
 ), t AS (
   SELECT doc_id, words, CAST(u.k AS INT) AS turn_idx
   FROM w, LATERAL (
-    SELECT unnest(range(CAST(ceil(len(words) / {W}.0) AS BIGINT))) AS k
+    SELECT unnest(range(CAST(ceil(len(words) / {WORDS_PER_TURN}.0) AS BIGINT))) AS k
   ) u
 )
 SELECT
   printf('conv_%06d', doc_id) AS conv_id,
   turn_idx,
   (['user','assistant','tool'])[(turn_idx % 3) + 1] AS role,
-  array_to_string(words[turn_idx*{W} + 1 : turn_idx*{W} + {W}], ' ') AS text,
+  array_to_string(words[turn_idx*{WORDS_PER_TURN} + 1 : (turn_idx + 1)*{WORDS_PER_TURN}], ' ') AS text,
   CASE WHEN (turn_idx % 3) + 1 = 3
        THEN printf('tool_%d', doc_id % 4) END AS tool,
   TIMESTAMP '2024-01-01' + (doc_id*60 + turn_idx) * INTERVAL 1 SECOND AS ts
@@ -107,16 +106,13 @@ FROM t
 """
 
 
-TRANSCRIPTS_SQL = transcripts_sql()
-
-
-def derive_transcripts_py(doc_rows: list[tuple[int, str]],
-                          words_per_turn: int = WORDS_PER_TURN):
+def derive_transcripts_py(doc_rows: list[tuple[int, str]]):
     """Pure-python twin: [(doc_id, text)] -> list of transcript dicts."""
+    W = WORDS_PER_TURN
     out = []
     for doc_id, text in doc_rows:
         words = text.split(" ")
-        n_turns = -(-len(words) // words_per_turn)
+        n_turns = -(-len(words) // W)
         for k in range(n_turns):
             role = ROLES[k % 3]
             out.append(
@@ -124,7 +120,7 @@ def derive_transcripts_py(doc_rows: list[tuple[int, str]],
                     "conv_id": f"conv_{doc_id:06d}",
                     "turn_idx": k,
                     "role": role,
-                    "text": " ".join(words[k * words_per_turn : (k + 1) * words_per_turn]),
+                    "text": " ".join(words[k * W : (k + 1) * W]),
                     "tool": f"tool_{doc_id % 4}" if role == "tool" else None,
                     "ts": EPOCH + timedelta(seconds=doc_id * 60 + k),
                 }

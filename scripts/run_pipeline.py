@@ -6,8 +6,13 @@ Cluster launch (the north_rule's deployment shape):
     python scripts/make_pyfiles.py                      # -> dist/engine.zip
     spark-submit --py-files dist/engine.zip \
         --master <cluster-master> \
+        --driver-java-options "-XX:CompileThresholdScaling=4" \
         scripts/run_pipeline.py \
         --input /path/to/sf_dir --output /path/to/out --run-id run42
+
+spark-submit starts the driver JVM itself, so ``get_spark`` cannot give it
+the engine's JIT policy (``plans/session.py::JIT_OPTIONS``); the
+``--driver-java-options`` line does.
 
 Local sandbox run:
 

@@ -144,7 +144,9 @@ def test_real_conf_file_skips_sharing(cds_env, caplog):
 def test_truncated_archive_does_not_crash_a_session(cds_env):
     """A fresh interpreter meets a truncated archive under its own key,
     starts a session anyway, and its JVM leaves a new dump at exit."""
-    archive = miss_archive(session.cds_java_options(session.session_conf()["spark.driver.memory"]))
+    conf = session.session_conf()
+    archive = miss_archive(session.cds_java_options(
+        conf["spark.driver.memory"], conf["spark.driver.extraJavaOptions"]))
     full = str(cds_env / "full.jsa")
     dump_archive(full)
     with open(full, "rb") as src, open(archive, "wb") as dst:
@@ -188,11 +190,27 @@ def test_default_heap_keeps_compressed_oops(monkeypatch):
     assert session.session_conf()["spark.driver.memory"] == "2g"
 
 
-def test_session_jvm_uses_compressed_oops(spark):
+def vm_option(spark, name: str) -> str:
     jvm = spark.sparkContext._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
-    assert bean.getVMOption("UseCompressedOops").getValue() == "true"
+    return bean.getVMOption(name).getValue()
+
+
+def test_session_jvm_uses_compressed_oops(spark):
+    assert vm_option(spark, "UseCompressedOops") == "true"
+
+
+def test_jit_options_go_before_the_callers():
+    assert session.session_conf()["spark.driver.extraJavaOptions"] == session.JIT_OPTIONS
+    caller = "-XX:CompileThresholdScaling=1 -Dx=y"
+    conf = session.session_conf(extra_conf={"spark.driver.extraJavaOptions": caller})
+    # HotSpot takes a flag's last occurrence, so the caller's value wins
+    assert conf["spark.driver.extraJavaOptions"] == f"{session.JIT_OPTIONS} {caller}"
+
+
+def test_session_jvm_uses_jit_policy(spark):
+    assert float(vm_option(spark, "CompileThresholdScaling")) == 4
 
 
 def test_running_gateway_is_left_alone(spark, monkeypatch):

@@ -139,9 +139,7 @@ def test_registered_corpus_within_twin_scope():
     oracle runs) for BOTH bounds, so a driver data refresh fails here
     with a named cause before it ERRs inscrutably in the oracle run —
     and record that real headroom exists, not a knife-edge fit."""
-    from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import (
-        transcripts_sql,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import TRANSCRIPTS_SQL
 
     limit = TaggerConfig().max_seq_len - 2
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
@@ -150,7 +148,7 @@ def test_registered_corpus_within_twin_scope():
             f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
         )
         rows = con.execute(
-            f"SELECT conv_id, turn_idx, text FROM ({transcripts_sql()})"
+            f"SELECT conv_id, turn_idx, text FROM ({TRANSCRIPTS_SQL})"
         ).fetchall()
         assert rows, sf_dir
         too_long = [
