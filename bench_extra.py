@@ -12,7 +12,9 @@ Modes:
                          (no Spark): isolates python model cost from the
                          distribution layer.
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); the core count
+is ``get_spark``'s (SPARK_GRAFT_CPUS, else the CPU affinity mask), and
+the Spark modes print the session's defaultParallelism.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_EXTRA_REPEATS", "3"))
 
 
@@ -38,7 +39,7 @@ def bench_queries(names: list[str]) -> None:
     from pytorch_bert_bilstm_crf_ner_spark.plans.queries import SPARK_QUERIES
     from pytorch_bert_bilstm_crf_ner_spark.plans.session import get_spark
 
-    spark = get_spark(app_name="bench-extra", cores=CPUS)
+    spark = get_spark(app_name="bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     out = {}
@@ -53,8 +54,10 @@ def bench_queries(names: list[str]) -> None:
         spark.sparkContext.setJobDescription(None)
         out[name] = {"min": min(samples), "samples": samples}
         print(json.dumps({name: out[name]}), flush=True)
+    parallelism = spark.sparkContext.defaultParallelism
     spark.stop()
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "queries": out}))
+    print(json.dumps({"sf_dir": SF_DIR, "default_parallelism": parallelism,
+                      "queries": out}))
 
 
 def bench_pipeline_stages() -> None:
@@ -64,7 +67,7 @@ def bench_pipeline_stages() -> None:
     )
     from pytorch_bert_bilstm_crf_ner_spark.plans.session import get_spark
 
-    spark = get_spark(app_name="bench-extra-pipeline", cores=CPUS)
+    spark = get_spark(app_name="bench-extra-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -93,9 +96,11 @@ def bench_pipeline_stages() -> None:
         times["total"] = round(time.time() - t_all, 3)
         return times
 
+    parallelism = spark.sparkContext.defaultParallelism
     one_run()  # cold
     for _ in range(3):
-        print(json.dumps(one_run()), flush=True)
+        print(json.dumps({**one_run(), "default_parallelism": parallelism}),
+              flush=True)
     spark.stop()
 
 

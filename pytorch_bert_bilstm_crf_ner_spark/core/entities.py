@@ -87,12 +87,13 @@ def canonical_map(rows=ENTITY_DICT_ROWS) -> dict[int, tuple[int, str]]:
     return {eid: (comp[eid], names[comp[eid]]) for eid in ids}
 
 
-def canonical_dict_rows(rows=ENTITY_DICT_ROWS) -> tuple[tuple[int, str, str, str], ...]:
+def canonical_dict_rows() -> tuple[tuple[int, str, str, str], ...]:
     """The dictionary with every entity replaced by its canonical entity:
     distinct, sorted (canonical_id, alias, type, canonical_name) rows, the
-    shape of ``rows``.  Entities sharing an (alias, type) key fall into one
-    component, so each key maps to exactly one canonical entity and linking
-    against these rows links and canonicalizes in one join."""
-    cmap = canonical_map(rows)
+    shape of ``ENTITY_DICT_ROWS``.  Entities sharing an (alias, type) key
+    fall into one component, so each key maps to exactly one canonical
+    entity and linking against these rows links and canonicalizes in one
+    join."""
+    cmap = canonical_map(ENTITY_DICT_ROWS)
     return tuple(sorted({(cmap[eid][0], alias, etype, cmap[eid][1])
-                         for eid, alias, etype, _ in rows}))
+                         for eid, alias, etype, _ in ENTITY_DICT_ROWS}))

@@ -57,10 +57,10 @@ def link_mentions(mentions, rows=ENTITY_DICT_ROWS):
     return linked
 
 
-def canonicalize(linked, rows=ENTITY_DICT_ROWS):
+def canonicalize(linked):
     """Map entity ids to canonical (id, name); dedupe rows that became
     identical -> [(conv, turn, mention, start, type, canon_id, canon_name)]"""
-    cmap = canonical_map(rows)
+    cmap = canonical_map(ENTITY_DICT_ROWS)
     seen = set()
     out = []
     for conv, idx, mention, start, etype, eid in linked:
@@ -136,14 +136,12 @@ def relation_triples(mentions, canonical, turns: list[Turn],
     return triples
 
 
-def run_oracle(turns: list[Turn], tagger: DeterministicTagger | None = None,
-               rel_cfg: RelationConfig = RelationConfig()):
+def run_oracle(turns: list[Turn]):
     """Full single-process pipeline -> dict of stage outputs."""
-    tagger = tagger or DeterministicTagger()
-    mentions = extract_mentions(turns, tagger)
+    mentions = extract_mentions(turns)
     linked = link_mentions(mentions)
     canonical = canonicalize(linked)
-    triples = relation_triples(mentions, canonical, turns, rel_cfg)
+    triples = relation_triples(mentions, canonical, turns)
     return {
         "mentions": mentions,
         "linked": linked,

@@ -16,13 +16,13 @@ Span = tuple[str, int, str]  # (mention, start, type)
 # reference `predict_gdcq.py:96` — gdcq opinion polarity types
 GDCQ_OBJECT_TYPES = ("正面", "中性", "负面")
 SEPARATORS = ("，", ",", "。", "！", "!", "？", "?")
+# every separator is one character, so "no separator in the gap" is one
+# set-disjointness test over the gap's characters
+_SEPARATOR_SET = frozenset(SEPARATORS)
 
 
 def adjacent_pairs(
-    entities: list[Span],
-    text: str,
-    object_types: tuple[str, ...] = GDCQ_OBJECT_TYPES,
-    separators: tuple[str, ...] = SEPARATORS,
+    entities: list[Span], text: str
 ) -> tuple[list[Span], list[tuple[str, str]]]:
     """Returns (leftover_entities, relations) with the reference's exact
     semantics, generalized over the object-type set."""
@@ -32,9 +32,9 @@ def adjacent_pairs(
     consumed: list[Span] = []
     for i in range(len(entities) - 1):
         left, right = entities[i], entities[i + 1]
-        if left[-1] not in object_types and right[-1] in object_types:
+        if left[-1] not in GDCQ_OBJECT_TYPES and right[-1] in GDCQ_OBJECT_TYPES:
             between = text[left[1] + len(left[0]) : right[1]]
-            if not any(sep in between for sep in separators):
+            if _SEPARATOR_SET.isdisjoint(between):
                 relations.append((left[0] + right[0], right[-1]))
                 consumed.append(left)
                 consumed.append(right)
@@ -52,7 +52,6 @@ def adjacent_starts(spans: list[Span], text: str) -> list[int | None]:
     for i, j in zip(order, order[1:]):
         mention, start, _ = spans[i]
         nxt = spans[j][1]
-        between = text[start + len(mention) : nxt]
-        if not any(sep in between for sep in SEPARATORS):
+        if _SEPARATOR_SET.isdisjoint(text[start + len(mention) : nxt]):
             out[i] = nxt
     return out

@@ -74,27 +74,31 @@ FROM m
 """
 
 
-def doc_fingerprint(documents: DataFrame, k: int = 8) -> DataFrame:
+FINGERPRINT_K = 8  # chars per k-gram of doc_fingerprint and its twin
+
+
+def doc_fingerprint(documents: DataFrame) -> DataFrame:
     """(doc_id, fingerprint, n_grams): winnowing-style document fingerprint
     = min md5 over all char k-grams (rolling window), plus the k-gram
     count.  Duplicate-robust and engine-portable (string min of hashes)."""
+    n_grams = F.greatest(F.length("text") - FINGERPRINT_K + 1, F.lit(1))
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length("text") - k + 1, F.lit(1))),
-        lambda i: F.md5(F.col("text").substr(i, F.lit(k))),
+        F.sequence(F.lit(1), n_grams),
+        lambda i: F.md5(F.col("text").substr(i, F.lit(FINGERPRINT_K))),
     )
     return documents.select(
         "doc_id",
         F.array_min(grams).alias("fingerprint"),
-        F.greatest(F.length("text") - k + 1, F.lit(1)).cast("int").alias("n_grams"),
+        n_grams.cast("int").alias("n_grams"),
     )
 
 
-def doc_fingerprint_sql(k: int = 8) -> str:
+def doc_fingerprint_sql() -> str:
     return f"""
 SELECT doc_id,
-       (SELECT MIN(md5(substr(d.text, CAST(i AS INT), {k})))
-        FROM unnest(range(1, greatest(len(d.text) - {k} + 1, 1) + 1)) AS t(i)) AS fingerprint,
-       CAST(greatest(len(text) - {k} + 1, 1) AS INT) AS n_grams
+       (SELECT MIN(md5(substr(d.text, CAST(i AS INT), {FINGERPRINT_K})))
+        FROM unnest(range(1, greatest(len(d.text) - {FINGERPRINT_K} + 1, 1) + 1)) AS t(i)) AS fingerprint,
+       CAST(greatest(len(text) - {FINGERPRINT_K} + 1, 1) AS INT) AS n_grams
 FROM documents d
 """
 

@@ -33,6 +33,19 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+# Every top-k operator and its twin: queries are the first N_QUERIES
+# vec_ids, each returns its TOP_K neighbours.
+N_QUERIES = 10
+TOP_K = 5
+# seeded-numpy Gaussian hyperplanes of lsh_cosine_topk and its twin
+LSH_DIM = 64
+LSH_PLANES = 8
+LSH_TABLES = 4
+LSH_SEED = 7
+# IVF: buckets probed per query, training-sample cap of the quantizer
+NPROBE = 3
+IVF_MAX_TRAIN_ROWS = 65536
+
 
 def _flat2d(col, width: int | None = None) -> np.ndarray:
     """pyarrow list<float> column -> (rows, width) float64 (exact widening).
@@ -164,8 +177,8 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
-                k: int = 5) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                k: int = TOP_K) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` vec_ids:
     (query_id, neighbor_id, cos_sim, rank).  The query rows are broadcast
     against the corpus (nested-loop join on vec_a != vec_b) and every
@@ -179,9 +192,9 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
     return _topk(_cosine(pairs, "q_id", "c_id"), k)
 
 
-def cosine_topk_sql(n_queries: int = 10, k: int = 5) -> str:
+def cosine_topk_sql() -> str:
     return f"""
-WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {n_queries}),
+WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
@@ -194,12 +207,25 @@ SELECT query_id, neighbor_id, cos_sim,
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY cos_sim DESC, neighbor_id) AS rank
       FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
-def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
-                n_tables: int = 4, seed: int = 7,
+def _gaussian_plane_rows(dim: int, n_planes: int,
+                         n_tables: int) -> list[tuple[int, int, list[float]]]:
+    """(table_id, plane_id, plane) seeded-numpy Gaussian hyperplanes, the
+    one generator of the Spark plan's and the SQL twin's planes."""
+    rng = np.random.RandomState(LSH_SEED)
+    planes = rng.normal(size=(n_tables, n_planes, dim)).astype(float)
+    return [
+        (t, p, [float(x) for x in planes[t, p]])
+        for t in range(n_tables)
+        for p in range(n_planes)
+    ]
+
+
+def lsh_buckets(embeddings: DataFrame, dim: int = LSH_DIM,
+                n_planes: int = LSH_PLANES, n_tables: int = LSH_TABLES,
                 plane_rows: list[tuple[int, int, list[float]]] | None = None,
                 ) -> DataFrame:
     """(vec_id, table_id, bucket): sign-LSH bucket per hash table.
@@ -209,13 +235,7 @@ def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
     seeded-numpy Gaussian family whose twin inlines literals
     (:func:`lsh_cosine_topk_sql`)."""
     if plane_rows is None:
-        rng = np.random.RandomState(seed)
-        planes = rng.normal(size=(n_tables, n_planes, dim)).astype(float)
-        plane_rows = [
-            (int(t), int(p), [float(x) for x in planes[t, p]])
-            for t in range(n_tables)
-            for p in range(n_planes)
-        ]
+        plane_rows = _gaussian_plane_rows(dim, n_planes, n_tables)
     # Round-6 rewrite: ONE Arrow-batched numpy stage replaces the former
     # broadcast-plane join + interpreted HOF dot + groupBy-sum (guide
     # §4.2/§8.3: hand whole batches to vectorized native code; §2.4: the
@@ -267,12 +287,12 @@ def lsh_buckets(embeddings: DataFrame, dim: int = 64, n_planes: int = 8,
     )
 
 
-def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                    dim: int = 64, n_planes: int = 8, n_tables: int = 4,
-                    seed: int = 7) -> DataFrame:
+def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                    k: int = TOP_K, n_planes: int = LSH_PLANES,
+                    n_tables: int = LSH_TABLES) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in any table,
     exact cosine re-rank within candidates."""
-    buckets = lsh_buckets(embeddings, dim, n_planes, n_tables, seed)
+    buckets = lsh_buckets(embeddings, n_planes=n_planes, n_tables=n_tables)
     # the query side is <= n_queries x n_tables rows by construction:
     # broadcast it so the corpus bucket side is never shuffled
     qb = buckets.filter(F.col("vec_id") < n_queries).select(
@@ -357,8 +377,7 @@ def _assign_to_centroid(embeddings: DataFrame, centroids: list[list[float]],
 
 
 def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
-                        seed: int = 7,
-                        max_train_rows: int = 65536) -> list[list[float]]:
+                        seed: int = 7) -> list[list[float]]:
     """Driver-side numpy Lloyd training for the IVF coarse quantizer.
 
     The FAISS convention: the quantizer trains on a bounded driver-held
@@ -381,8 +400,8 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
     def h(vid: int) -> str:
         return hashlib.md5(f"{vid}|{seed}".encode()).hexdigest()
 
-    if len(ids) > max_train_rows:
-        keep = sorted(range(len(ids)), key=lambda j: h(ids[j]))[:max_train_rows]
+    if len(ids) > IVF_MAX_TRAIN_ROWS:
+        keep = sorted(range(len(ids)), key=lambda j: h(ids[j]))[:IVF_MAX_TRAIN_ROWS]
         keep.sort()
         v = v[keep]
         ids = [ids[j] for j in keep]
@@ -411,8 +430,8 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
 
 
 def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
-                    n_queries: int = 10, k: int = 5,
-                    nprobe: int = 3) -> DataFrame:
+                    n_queries: int = N_QUERIES, k: int = TOP_K,
+                    nprobe: int = NPROBE) -> DataFrame:
     """IVF ANN over pre-trained ``centroids`` (e.g.
     :func:`ivf_train_centroids`, whose literals also feed the DuckDB twin
     :func:`ivf_cosine_topk_sql`): bucket every vector by its nearest
@@ -444,8 +463,7 @@ def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
     return _topk(_rerank_candidates(cand, embeddings), k)
 
 
-def ivf_cosine_topk_sql(centroids: list[list[float]], n_queries: int = 10,
-                        k: int = 5, nprobe: int = 3) -> str:
+def ivf_cosine_topk_sql(centroids: list[list[float]]) -> str:
     """DuckDB twin of :func:`ivf_cosine_topk` given the SAME pre-trained
     centroid literals the Spark plan broadcasts (`ivf_train_centroids`).
     Assignment/probe scores are sequential double dot products from
@@ -477,7 +495,7 @@ qprobe AS (
   SELECT vec_id AS q_id, centroid_id FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                  ORDER BY score DESC, centroid_id) AS rn
-    FROM cscore WHERE vec_id < {n_queries}) WHERE rn <= {nprobe}
+    FROM cscore WHERE vec_id < {N_QUERIES}) WHERE rn <= {NPROBE}
 ),
 cand AS (
   SELECT DISTINCT qp.q_id, a.vec_id AS c_id
@@ -499,24 +517,19 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY cos_sim DESC, neighbor_id)
              AS rank
       FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
-def lsh_cosine_topk_sql(n_queries: int = 10, k: int = 5, dim: int = 64,
-                        n_planes: int = 8, n_tables: int = 4,
-                        seed: int = 7) -> str:
-    """DuckDB twin of :func:`lsh_cosine_topk`: the seeded hyperplanes are
-    generated HERE with the same numpy call and inlined as literal arrays,
-    so both engines hash identical planes.  Sign bits compare a double
+def lsh_cosine_topk_sql() -> str:
+    """DuckDB twin of :func:`lsh_cosine_topk`: the seeded hyperplanes come
+    from the same :func:`_gaussian_plane_rows` and are inlined as literal
+    arrays, so both engines hash identical planes.  Sign bits compare a double
     dot product against 0 on both sides; the re-rank cosine is rounded to
     4 before ordering/filtering exactly like the Spark column."""
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(n_tables, n_planes, dim)).astype(float)
     rows = ",\n    ".join(
-        f"({t}, {p}, [{', '.join(repr(float(x)) for x in planes[t, p])}])"
-        for t in range(n_tables)
-        for p in range(n_planes)
+        f"({t}, {p}, [{', '.join(repr(x) for x in plane)}])"
+        for t, p, plane in _gaussian_plane_rows(LSH_DIM, LSH_PLANES, LSH_TABLES)
     )
     return f"""
 WITH planes(table_id, plane_id, plane) AS (VALUES
@@ -535,7 +548,7 @@ buckets AS (
 ),
 qb AS (
   SELECT vec_id AS q_id, table_id, bucket FROM buckets
-  WHERE vec_id < {n_queries}
+  WHERE vec_id < {N_QUERIES}
 ),
 cand AS (
   SELECT DISTINCT qb.q_id, b.vec_id AS c_id
@@ -558,5 +571,5 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY cos_sim DESC, neighbor_id)
              AS rank
       FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """

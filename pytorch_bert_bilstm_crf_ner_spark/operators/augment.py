@@ -24,6 +24,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+# salt of the md5 filler pick, shared with the DuckDB twin
+FILLER_SEED = 1234
+
 
 def build_entity_inventory(mid: DataFrame) -> DataFrame:
     """(type, mentions array<string> sorted) — per-type distinct surface
@@ -53,7 +56,6 @@ def synthesize_from_templates(
     templates: DataFrame,
     inventory: DataFrame,
     repeat: int = 2,
-    seed: int = 1234,
 ) -> DataFrame:
     """Templates + inventory -> mid_data-shaped synthetic rows.
 
@@ -88,7 +90,7 @@ def synthesize_from_templates(
                                 F.md5(
                                     F.concat_ws(
                                         "|", "doc_id", "rep", "piece_idx",
-                                        F.lit(seed),
+                                        F.lit(FILLER_SEED),
                                     )
                                 ),
                                 1, 12,

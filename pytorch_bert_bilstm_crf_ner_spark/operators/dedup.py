@@ -42,8 +42,10 @@ FROM documents GROUP BY md5(text) HAVING COUNT(*) > 1
 # ------------------------------------------------------------------ #
 # word shingles
 
+SHINGLE_N = 3  # words per shingle
 
-def _shingles(documents: DataFrame, n: int = 3) -> DataFrame:
+
+def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, shingle): distinct n-word shingles per document.
 
     Round-6 formulation: explode the shingle POSITIONS and build each
@@ -70,7 +72,7 @@ def _shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def _shingles_sql(n: int = 3) -> str:
+def _shingles_sql(n: int = SHINGLE_N) -> str:
     return f"""
 SELECT doc_id, unnest(list_distinct(list_transform(
          range(0, greatest(len(string_split(text,' ')) - {n}, 0) + 1),
@@ -84,7 +86,7 @@ FROM documents
 # n-gram Jaccard near-dup pairs
 
 
-def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
+def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N,
                         threshold: float = 0.8,
                         max_shingle_docs: int | None = None) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs over the threshold; doc_a < doc_b.
@@ -133,7 +135,7 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
     )
 
 
-def ngram_jaccard_sql(n: int = 3, threshold: float = 0.8) -> str:
+def ngram_jaccard_sql(n: int = SHINGLE_N, threshold: float = 0.8) -> str:
     return f"""
 WITH sh AS ({_shingles_sql(n)}),
 counts AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY doc_id),
@@ -158,8 +160,7 @@ N_HASHES = 8
 BAND_SIZE = 2  # -> 4 bands
 
 
-def minhash_signatures(documents: DataFrame, n: int = 3,
-                       n_hashes: int = N_HASHES) -> DataFrame:
+def minhash_signatures(documents: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """(doc_id, h0..h{K-1}): K MinHash values = min over shingles of
     md5(k || '|' || shingle), as hex strings (engine-portable minima).
     One groupBy with K aggregates — the partial (map-side) combine
@@ -183,12 +184,12 @@ def minhash_signatures(documents: DataFrame, n: int = 3,
             "doc_id",
             "w",
             F.explode(
-                F.expr(f"sequence(0, greatest(size(w) - {n}, 0))")
+                F.expr(f"sequence(0, greatest(size(w) - {SHINGLE_N}, 0))")
             ).alias("i"),
         )
         .select(
             "doc_id",
-            F.expr(f"array_join(slice(w, i + 1, {n}), ' ')").alias("shingle"),
+            F.expr(f"array_join(slice(w, i + 1, {SHINGLE_N}), ' ')").alias("shingle"),
         )
     )
     aggs = [
@@ -198,25 +199,24 @@ def minhash_signatures(documents: DataFrame, n: int = 3,
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures_sql(n: int = 3, n_hashes: int = N_HASHES) -> str:
+def minhash_signatures_sql() -> str:
     mins = ",\n       ".join(
-        f"MIN(md5('{k}|' || shingle)) AS h{k}" for k in range(n_hashes)
+        f"MIN(md5('{k}|' || shingle)) AS h{k}" for k in range(N_HASHES)
     )
     return f"""
-WITH sh AS ({_shingles_sql(n)})
+WITH sh AS ({_shingles_sql()})
 SELECT doc_id,
        {mins}
 FROM sh GROUP BY doc_id
 """
 
 
-def lsh_candidate_pairs(documents: DataFrame, n: int = 3,
-                        n_hashes: int = N_HASHES,
+def lsh_candidate_pairs(documents: DataFrame, n_hashes: int = N_HASHES,
                         band_size: int = BAND_SIZE) -> DataFrame:
     """(doc_a, doc_b, n_bands): pairs sharing >= 1 LSH band.  Bands are
     md5 of the concatenated band signature; the pair search is a pure
     equi-join on (band_id, band_key)."""
-    sig = minhash_signatures(documents, n, n_hashes)
+    sig = minhash_signatures(documents, n_hashes)
     n_bands = n_hashes // band_size
     # unpivot via one explode (NOT a per-band union: that would re-run the
     # signature aggregation once per band)
@@ -250,20 +250,18 @@ def lsh_candidate_pairs(documents: DataFrame, n: int = 3,
     )
 
 
-def lsh_candidate_pairs_sql(n: int = 3, n_hashes: int = N_HASHES,
-                            band_size: int = BAND_SIZE) -> str:
-    n_bands = n_hashes // band_size
+def lsh_candidate_pairs_sql() -> str:
     selects = []
-    for b in range(n_bands):
+    for b in range(N_HASHES // BAND_SIZE):
         cols = " || '|' || ".join(
-            f"h{k}" for k in range(b * band_size, (b + 1) * band_size)
+            f"h{k}" for k in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
         )
         selects.append(
             f"SELECT doc_id, {b} AS band_id, md5({cols}) AS band_key FROM sig"
         )
     bands = " UNION ALL ".join(selects)
     return f"""
-WITH sig AS ({minhash_signatures_sql(n, n_hashes)}),
+WITH sig AS ({minhash_signatures_sql()}),
 bands AS ({bands})
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_bands
 FROM bands a JOIN bands b
@@ -277,6 +275,9 @@ GROUP BY a.doc_id, b.doc_id
 # SimHash (48-bit, md5-nibble based so both engines agree; bit 47..0)
 
 SIMHASH_BITS = 48
+# banded near-dup search: 4 bands of 12 bits, Hamming <= 3 (exact recall)
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 3
 
 
 def _check_simhash_bits(bits: int) -> None:
@@ -372,13 +373,14 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return per_doc.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_neardup_pairs(documents: DataFrame, bits: int = SIMHASH_BITS,
-                          max_hamming: int = 3, n_bands: int = 4,
+def simhash_neardup_pairs(documents: DataFrame,
+                          max_hamming: int = SIMHASH_MAX_HAMMING,
+                          n_bands: int = SIMHASH_BANDS,
                           max_band_docs: int | None = None) -> DataFrame:
     """(doc_a, doc_b, hamming): pairs whose simhash fingerprints differ in
     at most ``max_hamming`` bits; doc_a < doc_b.
 
-    Banding (the classic web-dedup construction): slice the ``bits``-bit
+    Banding (the classic web-dedup construction): slice the 48-bit
     fingerprint into ``n_bands`` contiguous slices and equi-join on
     (band_id, band_val).  Pigeonhole gives EXACT recall whenever
     ``max_hamming <= n_bands - 1``: at most ``max_hamming`` differing bits
@@ -397,11 +399,11 @@ def simhash_neardup_pairs(documents: DataFrame, bits: int = SIMHASH_BITS,
         raise ValueError(
             f"exact recall needs max_hamming <= n_bands - 1 "
             f"(got {max_hamming} > {n_bands - 1})")
-    if bits % n_bands:
-        raise ValueError(f"bits={bits} not divisible by n_bands={n_bands}")
-    band_bits = bits // n_bands
+    if SIMHASH_BITS % n_bands:
+        raise ValueError(f"bits={SIMHASH_BITS} not divisible by n_bands={n_bands}")
+    band_bits = SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
-    sig = simhash(documents, bits)
+    sig = simhash(documents)
     bands = sig.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
@@ -438,10 +440,8 @@ def simhash_neardup_pairs(documents: DataFrame, bits: int = SIMHASH_BITS,
     )
 
 
-def simhash_neardup_sql(bits: int = SIMHASH_BITS, max_hamming: int = 3,
-                        n_bands: int = 4,
-                        max_band_docs: int | None = None) -> str:
-    band_bits = bits // n_bands
+def simhash_neardup_sql(max_band_docs: int | None = None) -> str:
+    band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     cap_cte = ""
     bands_src = "bands"
@@ -456,11 +456,11 @@ capped AS MATERIALIZED (
 """
         bands_src = "capped"
     return f"""
-WITH sig AS MATERIALIZED ({simhash_sql(bits)}),
+WITH sig AS MATERIALIZED ({simhash_sql()}),
 bands AS MATERIALIZED (
   SELECT doc_id, simhash, CAST(b AS INT) AS band_id,
          (simhash >> (CAST(b AS INT) * {band_bits})) & {mask} AS band_val
-  FROM sig, (SELECT unnest(range({n_bands})) AS b)
+  FROM sig, (SELECT unnest(range({SIMHASH_BANDS})) AS b)
 ),
 {cap_cte}cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -471,17 +471,17 @@ bands AS MATERIALIZED (
 )
 SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
 FROM cand
-WHERE bit_count(xor(sim_a, sim_b)) <= {max_hamming}
+WHERE bit_count(xor(sim_a, sim_b)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
-def simhash_sql(bits: int = SIMHASH_BITS) -> str:
+def simhash_sql() -> str:
     return f"""
 WITH words AS (
   SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM documents
 ),
 bitsrc AS (
-  SELECT doc_id, h, CAST(unnest(range({bits})) AS INT) AS bit FROM words
+  SELECT doc_id, h, CAST(unnest(range({SIMHASH_BITS})) AS INT) AS bit FROM words
 ),
 votes AS (
   SELECT doc_id, bit,
@@ -491,7 +491,7 @@ votes AS (
 )
 SELECT doc_id,
        CAST(SUM(CASE WHEN vote > 0
-                THEN (CAST(1 AS BIGINT) << ({bits - 1} - bit))
+                THEN (CAST(1 AS BIGINT) << ({SIMHASH_BITS - 1} - bit))
                 ELSE 0 END) AS BIGINT) AS simhash
 FROM votes GROUP BY doc_id
 """
@@ -515,8 +515,13 @@ def auto_n_planes(n: int) -> int:
     return max(3, (n // 60).bit_length() - 1) if n > 60 else 3
 
 
-def md5_plane_rows(dim: int, n_planes: int, n_tables: int = 16,
-                   seed: int = 7) -> list[tuple[int, int, list[float]]]:
+# md5-derived sign-LSH family of the embedding near-dup route
+NEARDUP_TABLES = 16
+NEARDUP_SEED = 7
+
+
+def md5_plane_rows(dim: int, n_planes: int, n_tables: int = NEARDUP_TABLES,
+                   seed: int = NEARDUP_SEED) -> list[tuple[int, int, list[float]]]:
     """(table_id, plane_id, plane) sign-LSH hyperplanes derived from md5 —
     the engine-portable alternative to seeded-numpy planes: DuckDB can
     regenerate the IDENTICAL values in pure SQL (see
@@ -541,9 +546,6 @@ def md5_plane_rows(dim: int, n_planes: int, n_tables: int = 16,
 
 def embedding_neardup_pairs(embeddings: DataFrame,
                             threshold: float = 0.95,
-                            n_planes: int | None = None,
-                            n_tables: int = 16,
-                            seed: int = 7,
                             n: int | None = None,
                             dim: int | None = None) -> DataFrame:
     """(vec_a, vec_b, cos_sim) for pairs above threshold; vec_a < vec_b.
@@ -555,14 +557,14 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     so precision is always 1.0 and recall is the LSH collision probability
     — for a pair at cosine s, 1 - (1 - (1 - acos(s)/pi)^n_planes)^n_tables
     (0.996 at s = 0.5 with 3 planes / 16 tables; see BASELINE.md).
-    ``n_planes=None`` sizes the bucket count to the corpus: max(3,
-    floor(log2(n / 60))), i.e. ~60 vectors per bucket, so the candidate
-    join stays near-linear as n grows instead of degrading toward
-    quadratic with fixed buckets.  The exact quadratic baseline is a
+    The plane count sizes the bucket count to the corpus
+    (:func:`auto_n_planes`): max(3, floor(log2(n / 60))), i.e. ~60
+    vectors per bucket, so the candidate join stays near-linear as n
+    grows instead of degrading toward quadratic with fixed buckets.  The exact quadratic baseline is a
     test-side oracle (``tests/conftest.py::brute_neardup_pairs``), not a
     plan.
 
-    Pass ``n`` (row count, for auto-sizing ``n_planes``) and ``dim``
+    Pass ``n`` (row count, for sizing the plane count) and ``dim``
     (embedding width, for the hyperplanes) when known — e.g. from parquet
     footer metadata — so plan construction launches ZERO Spark jobs; at
     100 TB an implicit ``count()`` is a full scan before the real query
@@ -571,10 +573,7 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     """
     from .ann import _rerank_candidates, lsh_buckets
 
-    if n_planes is None:
-        if n is None:
-            n = embeddings.count()
-        n_planes = auto_n_planes(n)
+    n_planes = auto_n_planes(embeddings.count() if n is None else n)
     if dim is None:
         head = embeddings.select("embedding").head(1)
         if not head:
@@ -590,11 +589,7 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
     # collision rows cost more than the 16-byte-pair distinct it saved
     # (3.4s vs 1.9s at sf0.1; see BASELINE.md).
-    buckets = lsh_buckets(
-        embeddings, dim=dim, n_planes=n_planes, n_tables=n_tables,
-        seed=seed,
-        plane_rows=md5_plane_rows(dim, n_planes, n_tables, seed),
-    )
+    buckets = lsh_buckets(embeddings, plane_rows=md5_plane_rows(dim, n_planes))
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["table_id", "bucket"])
@@ -614,8 +609,7 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     )
 
 
-def embedding_neardup_lsh_sql(threshold: float = 0.95, n_tables: int = 16,
-                              seed: int = 7) -> str:
+def embedding_neardup_lsh_sql(threshold: float = 0.95) -> str:
     """DuckDB twin of :func:`embedding_neardup_pairs` (lsh route) that
     computes THE SAME LSH candidate set as the Spark plan AT ANY SCALE
     FACTOR by construction (round-3 VERDICT #2) — nothing data-dependent
@@ -648,10 +642,10 @@ np AS (
 planes AS (
   SELECT t.range AS table_id, p.range AS plane_id,
          list_transform(range(0, np.dim), d ->
-           (CAST(('0x' || substr(md5('{seed}|' || t.range || '|'
+           (CAST(('0x' || substr(md5('{NEARDUP_SEED}|' || t.range || '|'
                                  || p.range || '|' || d), 1, 8)) AS BIGINT)
             / 4294967295e0) * 2 - 1) AS plane
-  FROM np, range(0, {n_tables}) t, range(0, 63) p
+  FROM np, range(0, {NEARDUP_TABLES}) t, range(0, 63) p
   WHERE p.range < np.n_planes
 ),
 sb AS (

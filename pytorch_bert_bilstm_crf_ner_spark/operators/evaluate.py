@@ -1,10 +1,10 @@
 """Span-exact evaluation as DataFrame joins (J1 + A1-A3 per SURVEY.md).
 
 The reference's nested-loop span match (`utils/metricsUtils.py:11-28`) and
-per-type metric accumulation (`main.py:99-114`) become one inner join and
-two anti joins on the span key, then a hash aggregation per type — the
-positional zip of preds to callbacks (`main.py:101,147`) is replaced by
-carrying (conv_id, turn_idx) keys through the pipeline.
+per-type metric accumulation (`main.py:99-114`) become one full-outer join
+on the span key, then a hash aggregation per type — the positional zip of
+preds to callbacks (`main.py:101,147`) is replaced by carrying row keys
+((conv_id, turn_idx) or doc_id) through the pipeline.
 """
 
 from __future__ import annotations
@@ -12,12 +12,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-SPAN_KEY = ["conv_id", "turn_idx", "mention", "start", "type"]
-
-
 def span_metrics_by_type(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """-> (type, tp, fp, fn) — one row per entity type.
 
+    The span key is ``pred``'s columns (e.g. conv_id, turn_idx, mention,
+    start, type); ``gold`` must have them all, ``type`` among them.
     One pass per input: pre-count each side by span key, one full-outer
     join, one aggregation deriving tp/fp/fn from the pred/gold presence
     flags.  (The naive semi/anti/anti/union shape re-evaluates each input
@@ -25,9 +24,10 @@ def span_metrics_by_type(pred: DataFrame, gold: DataFrame) -> DataFrame:
     Multiplicity semantics match the reference's row-level counting: a
     duplicated pred row that matches gold counts as multiple tp.
     """
-    p = pred.groupBy(*SPAN_KEY).agg(F.count(F.lit(1)).alias("pred_n"))
-    g = gold.groupBy(*SPAN_KEY).agg(F.count(F.lit(1)).alias("gold_n"))
-    j = p.join(g, SPAN_KEY, "full_outer")
+    key = pred.columns
+    p = pred.groupBy(*key).agg(F.count(F.lit(1)).alias("pred_n"))
+    g = gold.groupBy(*key).agg(F.count(F.lit(1)).alias("gold_n"))
+    j = p.join(g, key, "full_outer")
     return (
         j.groupBy("type")
         .agg(
@@ -61,7 +61,7 @@ def micro_prf_row(metrics_by_type: DataFrame) -> DataFrame:
     return out.withColumn("f1", f1)
 
 
-def classification_report(metrics_by_type: DataFrame, digits: int = 4) -> str:
+def classification_report(metrics_by_type: DataFrame) -> str:
     """Driver-side per-type + micro P/R/F1 report — the
     `metricsUtils.py:37-72` format (support column = tp + fn)."""
     rows = sorted(metrics_by_type.collect(), key=lambda r: r["type"])
@@ -76,8 +76,8 @@ def classification_report(metrics_by_type: DataFrame, digits: int = 4) -> str:
     for r in rows:
         p, rc, f1 = get_p_r_f(r["tp"], r["fp"], r["fn"])
         lines.append(
-            f"{r['type']:>{width}} {p:>9.{digits}f} {rc:>9.{digits}f} "
-            f"{f1:>9.{digits}f} {r['tp'] + r['fn']:>9}"
+            f"{r['type']:>{width}} {p:>9.4f} {rc:>9.4f} "
+            f"{f1:>9.4f} {r['tp'] + r['fn']:>9}"
         )
         tot[0] += r["tp"]
         tot[1] += r["fp"]
@@ -85,8 +85,8 @@ def classification_report(metrics_by_type: DataFrame, digits: int = 4) -> str:
     p, rc, f1 = get_p_r_f(*tot)
     lines.append("")
     lines.append(
-        f"{'micro-f1':>{width}} {p:>9.{digits}f} {rc:>9.{digits}f} "
-        f"{f1:>9.{digits}f} {tot[0] + tot[2]:>9}"
+        f"{'micro-f1':>{width}} {p:>9.4f} {rc:>9.4f} "
+        f"{f1:>9.4f} {tot[0] + tot[2]:>9}"
     )
     return "\n".join(lines)
 

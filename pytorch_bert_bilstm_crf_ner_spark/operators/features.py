@@ -41,25 +41,19 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def build_features(mid: DataFrame, cfg: FeatureConfig | None = None,
-                   partitions: int | None = None) -> DataFrame:
+def build_features(mid: DataFrame, cfg: FeatureConfig | None = None) -> DataFrame:
     """mid_data DataFrame -> training-feature DataFrame (P2+P3+P4+P6+P7
     fused in one Arrow stage; write with ``.write.parquet`` partitioned as
     needed — the final_data.pkl analog that scales).
 
-    ``partitions`` sets the parallelism of the python encode stage
-    (default: the cluster's defaultParallelism, like the tag-UDF stage in
-    `plans/pipeline.py`).  Round-6: without this, AQE coalesces the small
-    upstream join output to ~1 partition by BYTES and the CPU-bound
-    encode runs serial — units of parallel python work need row-count
-    parallelism, not byte-sized partitions.  Pass 0 to keep the upstream
-    partitioning."""
+    The python encode stage runs on the cluster's defaultParallelism
+    partitions, like the tag-UDF stage in `plans/pipeline.py`.  Round-6:
+    without the repartition, AQE coalesces the small upstream join output
+    to ~1 partition by BYTES and the CPU-bound encode runs serial — units
+    of parallel python work need row-count parallelism, not byte-sized
+    partitions."""
     cfg = cfg or FeatureConfig()
-    n_part = partitions
-    if n_part is None:
-        n_part = mid.sparkSession.sparkContext.defaultParallelism
-    if n_part:
-        mid = mid.repartition(n_part)
+    mid = mid.repartition(mid.sparkSession.sparkContext.defaultParallelism)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,7 +9,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..core.model import TaggerConfig
 from ..operators.evaluate import (
     classification_report,
     micro_prf_row,
@@ -19,12 +18,14 @@ from ..operators.tagging import make_tag_turns_udf
 from ..sources.corpus import gold_mentions
 
 
-def evaluate_extractor(
-    mid: DataFrame, cfg: TaggerConfig | None = None
-) -> tuple[DataFrame, DataFrame]:
+def evaluate_extractor(mid: DataFrame) -> tuple[DataFrame, DataFrame]:
     """-> (metrics_by_type, micro_row).  Use
-    ``classification_report(metrics_by_type)`` for the formatted report."""
-    tag_udf = make_tag_turns_udf(cfg)
+    ``classification_report(metrics_by_type)`` for the formatted report.
+
+    The spans are keyed by (doc_id, mention, start, type), and
+    :func:`span_metrics_by_type` reads each side once, so the model
+    forward runs once per text."""
+    tag_udf = make_tag_turns_udf()
     pred = (
         mid.filter(F.length("text") > 0)
         .select("doc_id", "text")
@@ -38,25 +39,7 @@ def evaluate_extractor(
             F.col("sp.type").alias("type"),
         )
     )
-    gold = gold_mentions(mid)
-    key = ["doc_id", "mention", "start", "type"]
-    # reuse the span join with doc-level keys
-    tp = pred.join(gold, key, "left_semi").groupBy("type").agg(
-        F.count(F.lit(1)).alias("tp")
-    )
-    fp = pred.join(gold, key, "left_anti").groupBy("type").agg(
-        F.count(F.lit(1)).alias("fp")
-    )
-    fn = gold.join(pred, key, "left_anti").groupBy("type").agg(
-        F.count(F.lit(1)).alias("fn")
-    )
-    types = pred.select("type").union(gold.select("type")).distinct()
-    metrics = (
-        types.join(tp, "type", "left")
-        .join(fp, "type", "left")
-        .join(fn, "type", "left")
-        .na.fill(0, ["tp", "fp", "fn"])
-    )
+    metrics = span_metrics_by_type(pred, gold_mentions(mid))
     return metrics, micro_prf_row(metrics)
 
 

@@ -669,14 +669,17 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_cosine_topk(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
+_IVF_MAX_READ_ROWS = 131_072
+
+
 @functools.lru_cache(maxsize=8)
-def _ivf_centroids(path: str, max_read_rows: int = 131_072) -> tuple:
+def _ivf_centroids(path: str) -> tuple:
     """Coarse-quantizer centroids for the registered IVF query: trained
     driver-side in numpy from the embeddings parquet (the FAISS
     convention — quantizers train on a bounded sample), deterministically,
     so the SAME literals feed the Spark plan and the DuckDB twin.
 
-    The driver reads AT MOST ``max_read_rows`` leading rows via streamed
+    The driver reads AT MOST ``_IVF_MAX_READ_ROWS`` leading rows via streamed
     record batches — bounded memory at any table size (a full
     ``read_table`` would be a driver OOM at 100 TB); `ivf_train_centroids`
     then md5-subsamples those down to its own training cap."""
@@ -691,8 +694,8 @@ def _ivf_centroids(path: str, max_read_rows: int = 131_072) -> tuple:
                                 columns=["vec_id", "embedding"]):
         ids.extend(batch.column("vec_id").to_pylist())
         vecs.extend(batch.column("embedding").to_pylist())
-        if len(ids) >= max_read_rows:
-            ids, vecs = ids[:max_read_rows], vecs[:max_read_rows]
+        if len(ids) >= _IVF_MAX_READ_ROWS:
+            ids, vecs = ids[:_IVF_MAX_READ_ROWS], vecs[:_IVF_MAX_READ_ROWS]
             break
     cents = ivf_train_centroids(ids, vecs, k=8, max_iter=3, seed=7)
     return tuple(tuple(c) for c in cents)
@@ -834,6 +837,10 @@ def q_training_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# synthetic variants per template, in the query and its twin
+_AUGMENT_REPEAT = 1
+
+
 def q_augmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8+P9: template mask + deterministic entity substitution.  Labels
     (array<struct>) are projected to a canonical string hashed with md5
@@ -847,7 +854,8 @@ def q_augmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mid = _mid_from_documents(spark, sf_dir)
     inv = build_entity_inventory(mid)
-    synth = synthesize_from_templates(template_mask(mid), inv, repeat=1)
+    synth = synthesize_from_templates(template_mask(mid), inv,
+                                      repeat=_AUGMENT_REPEAT)
     labels_str = F.array_join(
         F.transform(
             "labels",
@@ -919,25 +927,26 @@ FROM v GROUP BY media_id, kind
 """
 
 
-def _training_features_sql(max_seq_len: int = 128, vocab_size: int = 4099) -> str:
-    """DuckDB twin of q_training_features, valid when every turn is at
-    most ``max_seq_len - 2`` chars (then `core/cut.py::cut_sent_for_bert`
-    is the identity and the whole feature encode is expressible in SQL:
+def _training_features_sql() -> str:
+    """DuckDB twin of q_training_features (the default ``FeatureConfig``),
+    valid when every turn is at most ``max_seq_len - 2`` chars (then
+    `core/cut.py::cut_sent_for_bert` is the identity and the whole feature encode is expressible in SQL:
     char ids = 3 + unicode(ch) % (vocab-3); BIOES label ids from the
     per-position LAST-label-wins overwrite — the Python loop writes labels
     in (start, mention, type) order, so per char the max such key wins).
     The driver's transcripts derivation caps turns at ~81 chars, asserted
     by the max-length CASE below erroring the twin if the assumption ever
     breaks (better a loud driver ERR than a silent mismatch)."""
-    from ..core.features import CHAR_OFFSET
-    from ..core.tags import CNER_TYPES, build_tag_vocab
+    from ..core.features import CHAR_OFFSET, FeatureConfig
+    from ..core.tags import build_tag_vocab
 
-    ent2id = build_tag_vocab(CNER_TYPES, "BIOES")
+    cfg = FeatureConfig()
+    ent2id = build_tag_vocab(cfg.types, cfg.scheme)
     tag_vals = ", ".join(
         f"('{tag}', {i})" for tag, i in ent2id.items() if tag != "O"
     )
-    body = max_seq_len - 2
-    mod = vocab_size - CHAR_OFFSET
+    body = cfg.max_seq_len - 2
+    mod = cfg.vocab_size - CHAR_OFFSET
     return f"""
 WITH m AS ({_DICT_MENTIONS_SQL}),
 tr AS ({_TR}),
@@ -978,7 +987,7 @@ best AS (
 ),
 tagmap(tag, tid) AS (VALUES {tag_vals}),
 pos AS (
-  SELECT doc_id, text, CAST(unnest(range({max_seq_len})) AS INT) AS p
+  SELECT doc_id, text, CAST(unnest(range({cfg.max_seq_len})) AS INT) AS p
   FROM mid
 ),
 cells AS (
@@ -1014,13 +1023,15 @@ FROM mid JOIN arrs ON arrs.doc_id = mid.doc_id
 """
 
 
-def _augmented_corpus_sql(repeat: int = 1, seed: int = 1234) -> str:
+def _augmented_corpus_sql() -> str:
     """DuckDB twin of q_augmented_corpus: the whole P8+P9 synthesis —
     sequential all-occurrence mention masking (list_reduce with the text
     prepended as the fold seed), '#;#' piece split with positional
     indices (the zip-unnest trick), inventory refill picked by the same
     12-hex-char md5 value as the Spark side, window offsets, canonical
     label string."""
+    from ..operators.augment import FILLER_SEED
+
     return f"""
 WITH m AS ({_DICT_MENTIONS_SQL}),
 tr AS ({_TR}),
@@ -1044,7 +1055,7 @@ tmpl AS (
   FROM mid LEFT JOIN midlab ON midlab.doc_id = mid.doc_id
 ),
 reps AS (
-  SELECT doc_id, template, CAST(unnest(range({repeat})) AS INT) AS rep
+  SELECT doc_id, template, CAST(unnest(range({_AUGMENT_REPEAT})) AS INT) AS rep
   FROM tmpl
 ),
 pieces AS (
@@ -1066,7 +1077,7 @@ filled AS (
          CASE WHEN i.mentions IS NOT NULL THEN
            i.mentions[CAST(
              CAST(('0x' || substr(md5(p.doc_id || '|' || p.rep || '|'
-                                      || p.piece_idx || '|' || {seed}),
+                                      || p.piece_idx || '|' || {FILLER_SEED}),
                                   1, 12)) AS BIGINT)
              % len(i.mentions) AS INT) + 1]
          ELSE p.piece END AS filler

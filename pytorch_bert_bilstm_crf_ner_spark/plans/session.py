@@ -37,7 +37,36 @@ CDS_DIR = "spark-kg-cds"
 # only: in local mode it runs the tasks too; cluster executors are
 # long-lived and keep HotSpot's defaults.
 JIT_OPTIONS = "-XX:CompileThresholdScaling=4"
+# Arrow records per batch into a python UDF: maxRecordsPerBatch x
+# max_seq_len x num_tags floats must fit executor memory
+ARROW_BATCH = 1024
 log = logging.getLogger(__name__)
+
+
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _package_sources() -> list[str]:
+    return sorted(
+        os.path.join(dirpath, fn)
+        for dirpath, _dirnames, filenames in os.walk(_PKG_ROOT)
+        for fn in filenames
+        if fn.endswith(".py")
+    )
+
+
+def write_package_zip(zpath: str) -> str:
+    """Zip every ``.py`` file of this package under its path relative to
+    the package's parent directory — the archive ``--py-files`` and
+    ``addPyFile`` take.  Written beside ``zpath`` and renamed, so no
+    reader sees half an archive."""
+    base = os.path.dirname(_PKG_ROOT)
+    tmp = zpath + ".tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for full in _package_sources():
+            zf.write(full, os.path.relpath(full, base))
+    os.replace(tmp, zpath)
+    return zpath
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -45,22 +74,10 @@ def ship_package(spark: SparkSession) -> str:
     equivalent of ``spark-submit --py-files engine.zip``).  Local mode
     usually inherits the driver's sys.path, but a driver launched from
     another cwd — or a real multi-executor cluster — needs the archive."""
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.dirname(pkg_root)
-    sources = [
-        os.path.join(dirpath, fn)
-        for dirpath, _dirnames, filenames in os.walk(pkg_root)
-        for fn in filenames
-        if fn.endswith(".py")
-    ]
     zpath = os.path.join(tempfile.gettempdir(), "pytorch_bert_bilstm_crf_ner_spark.zip")
-    newest = max(os.path.getmtime(p) for p in sources)
+    newest = max(os.path.getmtime(p) for p in _package_sources())
     if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for full in sorted(sources):
-                zf.write(full, os.path.relpath(full, base))
-        os.replace(tmp, zpath)
+        write_package_zip(zpath)
     spark.sparkContext.addPyFile(zpath)
     return zpath
 
@@ -69,7 +86,6 @@ def session_conf(
     app_name: str = "kg-construct",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 1024,
     extra_conf: dict | None = None,
 ) -> dict:
     """The Spark conf ``get_spark`` builds its session from: the engine's
@@ -87,7 +103,7 @@ def session_conf(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH),
         "spark.python.worker.reuse": "true",
         # generated-class cache (LRU, default 100 entries): one KG pass
         # compiles ~150 distinct classes, so at 100 every rerun of the
@@ -221,7 +237,6 @@ def get_spark(
     app_name: str = "kg-construct",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # One Spark task = one python worker = ONE BLAS thread.  Without this,
@@ -230,7 +245,7 @@ def get_spark(
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
         os.environ.setdefault(var, "1")
-    conf = session_conf(app_name, cores, shuffle_partitions, arrow_batch, extra_conf)
+    conf = session_conf(app_name, cores, shuffle_partitions, extra_conf)
     # only a JVM this call launches can start from an archive; spark-submit
     # or an earlier session has one up already
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:

@@ -330,9 +330,7 @@ def kg_mentions_sql(transcripts_sql: str,
 
 
 def kg_triples_sql(transcripts_sql: str, canonical_entities_sql: str,
-                   entity_dict_rel: str,
-                   cfg: TaggerConfig | None = None,
-                   rel: RelationConfig | None = None) -> str:
+                   entity_dict_rel: str) -> str:
     """DuckDB twin of the full pipeline's ``kg_triples``
     (`plans/pipeline.py::run_pipeline` -> `operators/relations.py::triples`
     with the default pre-aggregated co-occurrence): the CRF mentions come
@@ -348,8 +346,8 @@ def kg_triples_sql(transcripts_sql: str, canonical_entities_sql: str,
     co-occurrence (`relations.py:82-162`), and
     the evidence aggregation with post-agg name resolution
     (`relations.py:206-253`)."""
-    rel = rel or RelationConfig()
-    m_ctes, m_final = _kg_mentions_parts(transcripts_sql, cfg)
+    rel = RelationConfig()
+    m_ctes, m_final = _kg_mentions_parts(transcripts_sql)
     obj_types = ", ".join(f"'{t}'" for t in rel.adjacent_object_types)
     W = rel.cooccur_window
     return f"""

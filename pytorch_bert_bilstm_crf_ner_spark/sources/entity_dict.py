@@ -34,9 +34,9 @@ def entity_dict_df(spark: SparkSession, rows=ENTITY_DICT_ROWS) -> DataFrame:
     return local_frame(spark, rows, ENTITY_DICT_SCHEMA)
 
 
-def entity_dict_values_sql(rows=ENTITY_DICT_ROWS, alias: str = "d") -> str:
-    """Inline VALUES relation (aliased) for the DuckDB oracle twin."""
+def entity_dict_values_sql(rows=ENTITY_DICT_ROWS) -> str:
+    """Inline VALUES relation, aliased ``d``, for the DuckDB oracle twin."""
     vals = ", ".join(
         f"({eid}, '{a}', '{etype}', '{name}')" for eid, a, etype, name in rows
     )
-    return f"(VALUES {vals}) AS {alias}(entity_id, alias, type, canonical_name)"
+    return f"(VALUES {vals}) AS d(entity_id, alias, type, canonical_name)"

@@ -2,7 +2,7 @@
 
 Generates the input_hint-shaped transcripts table entirely JVM-side from
 ``spark.range`` — word choices come from ``xxhash64`` of (conv, turn, slot),
-so the same (n_convs, turns_per_conv) always yields the same table at any
+so the same n_convs always yields the same table at any
 parallelism, with zero python in the generation path (the tag UDF stays
 the only python stage when benchmarking).
 
@@ -25,24 +25,24 @@ VOCAB = (
 
 HOT_EVERY = 97
 HOT_FACTOR = 12
+TURNS_PER_CONV = 10
+WORDS_PER_TURN = 12
 
 
 def synth_transcripts(
     spark: SparkSession,
     n_convs: int,
-    turns_per_conv: int = 10,
-    words_per_turn: int = 12,
     partitions: int | None = None,
 ) -> DataFrame:
-    """~n_convs * turns_per_conv rows (hot conversations add more)."""
+    """~n_convs * TURNS_PER_CONV rows (hot conversations add more)."""
     vocab_arr = F.array(*[F.lit(w) for w in VOCAB])
     n_vocab = len(VOCAB)
 
     convs = spark.range(n_convs, numPartitions=partitions or spark.sparkContext.defaultParallelism)
     convs = convs.select(
         F.col("id").alias("conv_no"),
-        F.when(F.col("id") % HOT_EVERY == 0, turns_per_conv * HOT_FACTOR)
-        .otherwise(turns_per_conv)
+        F.when(F.col("id") % HOT_EVERY == 0, TURNS_PER_CONV * HOT_FACTOR)
+        .otherwise(TURNS_PER_CONV)
         .alias("n_turns"),
     )
     turns = convs.select(
@@ -51,7 +51,7 @@ def synth_transcripts(
     )
     text = F.array_join(
         F.transform(
-            F.sequence(F.lit(1), F.lit(words_per_turn)),
+            F.sequence(F.lit(1), F.lit(WORDS_PER_TURN)),
             lambda i: F.element_at(
                 vocab_arr,
                 (

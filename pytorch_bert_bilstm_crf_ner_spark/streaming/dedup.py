@@ -28,15 +28,14 @@ def stream_dedup_exact(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "30 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
-    """Start the dedup stream; returns the StreamingQuery.  Output: the
+    """Start the dedup stream, which drains the input and stops; returns
+    the StreamingQuery.  Each input file is one micro-batch.  Output: the
     surviving (first-arrival) rows, written append-only with the same
     idempotent batch_id=N directory layout as the ingest sink."""
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
     deduped = (
@@ -51,10 +50,9 @@ def stream_dedup_exact(
             .parquet(os.path.join(output_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
+    return (
         deduped.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

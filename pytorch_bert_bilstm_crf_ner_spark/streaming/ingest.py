@@ -11,8 +11,9 @@ at-least-once: a crash between the sink write and the checkpoint commit
 replays the batch.  The sink is therefore made IDEMPOTENT by writing each
 batch to its own ``batch_id=N/`` directory with overwrite — a replayed
 batch overwrites its own output instead of double-appending, yielding
-effectively-exactly-once end-to-end.  ``Trigger.AvailableNow`` drains the
-backlog then stops (incremental batch); a plain start() runs continuously.
+effectively-exactly-once end-to-end.  Every stream here runs
+``Trigger.AvailableNow``: it drains the backlog then stops (incremental
+batch).
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..core.model import TaggerConfig
 from ..operators.tagging import extract_mentions
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -48,10 +48,9 @@ def stream_mentions(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    cfg: TaggerConfig | None = None,
-    available_now: bool = True,
 ):
-    """Start the incremental tagging stream; returns the StreamingQuery."""
+    """Start the incremental tagging stream, which drains the input and
+    stops; returns the StreamingQuery."""
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
@@ -63,15 +62,14 @@ def stream_mentions(
         # at-least-once foreachBatch replay cannot double-append.  The
         # batch_id=N layout doubles as a Hive partition column on read.
         (
-            extract_mentions(batch_df, cfg)
+            extract_mentions(batch_df)
             .write.mode("overwrite")
             .parquet(os.path.join(output_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,7 +46,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.dedup import SIMHASH_BITS, simhash_expr
+from ..operators.dedup import (
+    SIMHASH_BANDS,
+    SIMHASH_BITS,
+    SIMHASH_MAX_HAMMING,
+    simhash_expr,
+)
 
 DOCUMENTS_STREAM_SCHEMA = StructType(
     [
@@ -73,12 +78,11 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def banded_fingerprints(stream: DataFrame, bits: int = SIMHASH_BITS,
-                        n_bands: int = 4) -> DataFrame:
+def banded_fingerprints(stream: DataFrame) -> DataFrame:
     """(doc_id, ts, simhash, band_id, band_val): stateless projection +
     band explode, reusing the batch operator's band arithmetic so the
     streaming and batch candidate spaces are identical."""
-    band_bits = bits // n_bands
+    band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     # the stream schema allows null text/ts; a null row reaching the
     # stateful matcher raises (NaT astype / None xor) and kills the
@@ -86,13 +90,13 @@ def banded_fingerprints(stream: DataFrame, bits: int = SIMHASH_BITS,
     sig = stream.filter(
         F.col("text").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        "doc_id", "ts", simhash_expr("text", bits).alias("simhash"))
+        "doc_id", "ts", simhash_expr("text").alias("simhash"))
     return sig.select(
         "doc_id", "ts", "simhash",
         F.explode(F.array(*[
             F.expr(f"named_struct('band_id', {b}, 'band_val', "
                    f"shiftright(simhash, {b * band_bits}) & {mask})")
-            for b in range(n_bands)
+            for b in range(SIMHASH_BANDS)
         ])).alias("b"),
     ).select(
         "doc_id", "ts", "simhash",
@@ -153,17 +157,17 @@ def _matcher(max_hamming: int, horizon_ms: int):
     return match_batches
 
 
-def incremental_neardup(stream: DataFrame, max_hamming: int = 3,
-                        bits: int = SIMHASH_BITS, n_bands: int = 4,
+def incremental_neardup(stream: DataFrame,
+                        max_hamming: int = SIMHASH_MAX_HAMMING,
                         horizon: str = "30 minutes") -> DataFrame:
     """Streaming (doc_id, text, ts) -> streaming match events
     (doc_a, doc_b, hamming), doc_a the earlier arrival.  Events may be
     repeated across band groups within a micro-batch — dedup per batch
     in the sink (see :func:`stream_neardup_simhash`)."""
-    if max_hamming > n_bands - 1:
+    if max_hamming > SIMHASH_BANDS - 1:
         raise ValueError(
             f"exact recall needs max_hamming <= n_bands - 1 "
-            f"(got {max_hamming} > {n_bands - 1})")
+            f"(got {max_hamming} > {SIMHASH_BANDS - 1})")
     unit_table = {"seconds": 1_000, "second": 1_000,
                   "minutes": 60_000, "minute": 60_000,
                   "hours": 3_600_000, "hour": 3_600_000}
@@ -175,7 +179,7 @@ def incremental_neardup(stream: DataFrame, max_hamming: int = 3,
             f"<{'|'.join(sorted(set(unit_table)))}>', e.g. '30 minutes' "
             f"(got {horizon!r})")
     horizon_ms = int(parts[0]) * unit_table[parts[1]]
-    bands = banded_fingerprints(stream, bits, n_bands)
+    bands = banded_fingerprints(stream)
     return bands.groupBy("band_id", "band_val").applyInPandasWithState(
         _matcher(max_hamming, horizon_ms),
         outputStructType=MATCH_SCHEMA,
@@ -190,17 +194,16 @@ def stream_neardup_simhash(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_hamming: int = 3,
+    max_hamming: int = SIMHASH_MAX_HAMMING,
     horizon: str = "30 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
-    """Start the near-dup match stream over a parquet document feed;
-    returns the StreamingQuery.  Output: per-batch-deduplicated match
-    events in the idempotent ``batch_id=N/`` layout."""
+    """Start the near-dup match stream over a parquet document feed, which
+    drains the input and stops; returns the StreamingQuery.  Each input
+    file is one micro-batch.  Output: per-batch-deduplicated match events
+    in the idempotent ``batch_id=N/`` layout."""
     stream = (
         spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
     matches = incremental_neardup(stream, max_hamming=max_hamming,
@@ -213,10 +216,9 @@ def stream_neardup_simhash(
             .parquet(os.path.join(output_dir, f"batch_id={batch_id}"))
         )
 
-    writer = (
+    return (
         matches.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -112,18 +112,17 @@ def stream_cooccurrence(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """File-source stream of canonical-mention parquet -> incremental pair
-    events appended to parquet; state restored from checkpoint on rerun."""
+    events appended to parquet; state restored from checkpoint on rerun.
+    The stream drains the input and stops."""
     stream = spark.readStream.schema(MENTION_STREAM_SCHEMA).parquet(input_dir)
     pairs = incremental_cooccurrence(stream)
-    writer = (
+    return (
         pairs.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -30,19 +30,18 @@ def windowed_entity_counts(
     checkpoint_dir: str,
     window: str = "10 minutes",
     watermark: str = "20 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
-    """Start the stream; returns the StreamingQuery.
+    """Start the stream, which drains the input and stops; returns the
+    StreamingQuery.
 
     Per event-time window and entity type: how many dictionary mentions
-    arrived.  ``max_files_per_trigger=1`` makes each input file its own
-    micro-batch so watermark advancement (and hence append-mode window
-    finalization) is observable in tests with a handful of files.
+    arrived.  Each input file is its own micro-batch, so watermark
+    advancement (and hence append-mode window finalization) is observable
+    with a handful of files.
     """
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
     # static broadcast side: single-word aliases, word-exact match.
@@ -70,12 +69,11 @@ def windowed_entity_counts(
             "n_mentions",
         )
     )
-    writer = (
+    return (
         counts.writeStream.outputMode("append")
         .format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

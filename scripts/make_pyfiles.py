@@ -5,21 +5,17 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pytorch_bert_bilstm_crf_ner_spark.plans.session import write_package_zip  # noqa: E402
 
 
 def main() -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(repo, "pytorch_bert_bilstm_crf_ner_spark")
-    dist = os.path.join(repo, "dist")
+    dist = os.path.join(REPO, "dist")
     os.makedirs(dist, exist_ok=True)
-    zpath = os.path.join(dist, "engine.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirs, files in os.walk(pkg):
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, repo))
+    zpath = write_package_zip(os.path.join(dist, "engine.zip"))
     print(zpath)
     return zpath
 

@@ -290,6 +290,23 @@ def test_evaluate_extractor_job(spark):
     assert micro2.collect()[0]["f1"] < 1.0
 
 
+def test_evaluate_extractor_runs_the_model_once(spark):
+    """tp, fp and fn come from one full-outer pass over the predicted
+    spans (`span_metrics_by_type`), so the micro row's plan runs the tag
+    UDF once: one ArrowEvalPython node, not one per semi/anti join."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.eval_job import evaluate_extractor
+    from pytorch_bert_bilstm_crf_ner_spark.sources.corpus import MID_SCHEMA
+
+    mid = spark.createDataFrame(
+        [(0, "run a table scan then hash join on the customer line", []),
+         (1, "spark query uses merge sort and a small window batch", [])],
+        MID_SCHEMA,
+    )
+    _, micro = evaluate_extractor(mid)
+    plan = micro._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_distributed_connected_components(spark, monkeypatch):
     """The large-star/small-star loop (the scale path the driver-side
     union-find takes over below ``DRIVER_CC_MAX_EDGES``), forced by a

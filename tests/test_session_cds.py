@@ -219,3 +219,33 @@ def test_running_gateway_is_left_alone(spark, monkeypatch):
 
     monkeypatch.setattr(session, "cds_java_options", launch)
     assert session.get_spark(app_name="tests", cores=4, shuffle_partitions=8) is spark
+
+
+def test_shipped_and_spark_submit_archives_list_the_same_names(tmp_path, monkeypatch):
+    """``ship_package`` (addPyFile) and ``scripts/make_pyfiles.py``
+    (``--py-files``) write the same archive: every package ``.py`` file,
+    named relative to the repo root.  Spark-free: the session is a stub."""
+    import importlib.util
+    import types
+    import zipfile
+
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))
+    added = []
+    stub = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(addPyFile=added.append))
+    shipped = session.ship_package(stub)
+    assert added == [shipped]
+
+    spec = importlib.util.spec_from_file_location(
+        "make_pyfiles", os.path.join(REPO, "scripts", "make_pyfiles.py"))
+    make_pyfiles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(make_pyfiles)
+    monkeypatch.setattr(make_pyfiles, "REPO", str(tmp_path))
+    built = make_pyfiles.main()
+    assert built == str(tmp_path / "dist" / "engine.zip")
+
+    names = zipfile.ZipFile(shipped).namelist()
+    assert names == zipfile.ZipFile(built).namelist()
+    pkg = "pytorch_bert_bilstm_crf_ner_spark"
+    assert f"{pkg}/plans/session.py" in names
+    assert all(n.startswith(pkg + "/") and n.endswith(".py") for n in names)
