@@ -76,10 +76,10 @@ def bench_pipeline_stages() -> None:
         t_all = time.time()
         cfg = PipelineConfig()
         st = run_pipeline(spark, SF_DIR, cfg)
-        # mentions.count() already ran eagerly inside run_pipeline; time
-        # the remaining actions separately
+        # building the stages runs no job; each action below runs the
+        # plan it needs, the tag UDF included
         t0 = time.time()
-        times["build_plus_mentions"] = round(t0 - t_all, 3)
+        times["build"] = round(t0 - t_all, 3)
         spark.sparkContext.setJobDescription("triples count")
         st["triples"].count()
         times["triples_count"] = round(time.time() - t0, 3)

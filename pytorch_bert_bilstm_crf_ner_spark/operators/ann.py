@@ -42,9 +42,11 @@ LSH_DIM = 64
 LSH_PLANES = 8
 LSH_TABLES = 4
 LSH_SEED = 7
-# IVF: buckets probed per query, training-sample cap of the quantizer
+# IVF: buckets probed per query, training-sample cap and Lloyd rounds of
+# the quantizer
 NPROBE = 3
 IVF_MAX_TRAIN_ROWS = 65536
+IVF_MAX_ITER = 3
 
 
 def _flat2d(col, width: int | None = None) -> np.ndarray:
@@ -376,7 +378,7 @@ def _assign_to_centroid(embeddings: DataFrame, centroids: list[list[float]],
     )
 
 
-def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
+def ivf_train_centroids(vec_ids, vectors, k: int = 8,
                         seed: int = 7) -> list[list[float]]:
     """Driver-side numpy Lloyd training for the IVF coarse quantizer.
 
@@ -419,7 +421,7 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8, max_iter: int = 3,
         return out
 
     vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-    for _ in range(max_iter):
+    for _ in range(IVF_MAX_ITER):
         cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
         assign = np.argmax(_scores(vn, cn), axis=1)  # ties -> lowest id
         for ci in range(len(cents)):

@@ -34,27 +34,21 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-EXACT_DUPLICATES_SQL = """
-SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
-FROM documents GROUP BY md5(text) HAVING COUNT(*) > 1
-"""
-
 # ------------------------------------------------------------------ #
 # word shingles
 
 SHINGLE_N = 3  # words per shingle
 
 
-def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """(doc_id, shingle): distinct n-word shingles per document.
+def _shingle_rows(documents: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle): every n-word shingle of every document, repeats
+    kept.
 
     Round-6 formulation: explode the shingle POSITIONS and build each
-    shingle with codegen'd slice/array_join, then dropDuplicates — the
-    former row-local ``array_distinct(transform(...))`` avoided the
-    dedup Exchange but paid interpreted lambda evaluation for every
-    shingle, and the Jaccard self-join evaluates this subtree three
-    times (two join sides + the counts): 4.8 s -> 1.5 s at sf0.1 for
-    ngram_jaccard_pairs.  Same distinct (doc_id, shingle) set."""
+    shingle with codegen'd slice/array_join per exploded row, instead of
+    materializing the whole shingle array via an interpreted
+    ``transform(...)`` lambda (guide §4.1 — measured 1.67 s -> 0.19 s for
+    the shingle stage alone at sf0.1)."""
     return (
         documents.select("doc_id", F.split("text", " ").alias("w"))
         .select(
@@ -68,8 +62,19 @@ def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
             "doc_id",
             F.expr(f"array_join(slice(w, i + 1, {n}), ' ')").alias("shingle"),
         )
-        .dropDuplicates(["doc_id", "shingle"])
     )
+
+
+def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, shingle): distinct n-word shingles per document.
+
+    :func:`_shingle_rows` then dropDuplicates — the former row-local
+    ``array_distinct(transform(...))`` avoided the dedup Exchange but paid
+    interpreted lambda evaluation for every shingle, and the Jaccard
+    self-join evaluates this subtree three times (two join sides + the
+    counts): 4.8 s -> 1.5 s at sf0.1 for ngram_jaccard_pairs.  Same
+    distinct (doc_id, shingle) set."""
+    return _shingle_rows(documents, n).dropDuplicates(["doc_id", "shingle"])
 
 
 def _shingles_sql(n: int = SHINGLE_N) -> str:
@@ -86,10 +91,13 @@ FROM documents
 # n-gram Jaccard near-dup pairs
 
 
+JACCARD_THRESHOLD = 0.8  # a near-dup pair's least Jaccard similarity
+
+
 def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N,
-                        threshold: float = 0.8,
                         max_shingle_docs: int | None = None) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for pairs over the threshold; doc_a < doc_b.
+    """(doc_a, doc_b, jaccard) for pairs at or over ``JACCARD_THRESHOLD``;
+    doc_a < doc_b.
 
     Shingle self-join counts the intersection; per-doc shingle counts give
     the union by inclusion-exclusion — no quadratic cross join.
@@ -130,12 +138,12 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N,
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def ngram_jaccard_sql(n: int = SHINGLE_N, threshold: float = 0.8) -> str:
+def ngram_jaccard_sql(n: int = SHINGLE_N) -> str:
     return f"""
 WITH sh AS ({_shingles_sql(n)}),
 counts AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY doc_id),
@@ -149,7 +157,7 @@ SELECT doc_a, doc_b,
 FROM inter
 JOIN counts ca ON ca.doc_id = doc_a
 JOIN counts cb ON cb.doc_id = doc_b
-WHERE ROUND(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) >= {threshold}
+WHERE ROUND(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) >= {JACCARD_THRESHOLD}
 """
 
 
@@ -170,28 +178,11 @@ def minhash_signatures(documents: DataFrame, n_hashes: int = N_HASHES) -> DataFr
     reverted — interpreted lambda evaluation lost to this codegen'd
     aggregation under forced-evaluation timing (the apparent win was an
     artifact of ``count()`` pruning the unevaluated columns)."""
-    # Round-6 shingle formulation: explode the POSITIONS and build each
-    # shingle with codegen'd slice/array_join per exploded row, instead of
-    # materializing the whole shingle array via an interpreted
-    # transform(...) lambda (guide §4.1 — measured 1.67s -> 0.19s for the
-    # shingle stage alone at sf0.1).  array_distinct is dropped: MIN over
-    # a multiset equals MIN over its distinct set, so the signatures are
-    # hash-identical (the Jaccard operator, whose counts DO need distinct
-    # shingles, keeps :func:`_shingles`).
-    sh = (
-        documents.select("doc_id", F.split("text", " ").alias("w"))
-        .select(
-            "doc_id",
-            "w",
-            F.explode(
-                F.expr(f"sequence(0, greatest(size(w) - {SHINGLE_N}, 0))")
-            ).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.expr(f"array_join(slice(w, i + 1, {SHINGLE_N}), ' ')").alias("shingle"),
-        )
-    )
+    # The shingles are not deduplicated: MIN over a multiset equals MIN
+    # over its distinct set, so the signatures are hash-identical (the
+    # Jaccard operator, whose counts DO need distinct shingles, reads
+    # :func:`_shingles`).
+    sh = _shingle_rows(documents, SHINGLE_N)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle")))).alias(f"h{k}")
         for k in range(n_hashes)
@@ -290,9 +281,9 @@ def _check_simhash_bits(bits: int) -> None:
         raise ValueError(f"bits={bits} must be at most 60")
 
 
-def simhash_expr(text_col: str = "text", bits: int = SIMHASH_BITS):
-    """Column expression computing the simhash fingerprint of one text
-    value — a SINGLE row-local fold, no aggregation, no Python.
+def simhash_expr(bits: int = SIMHASH_BITS):
+    """Column expression computing the simhash fingerprint of the ``text``
+    column — a SINGLE row-local fold, no aggregation, no Python.
 
     One pass over the words: the accumulator is the array of ``bits``
     per-bit votes.  Round-6: each word is first packed into ONE integer
@@ -319,7 +310,7 @@ def simhash_expr(text_col: str = "text", bits: int = SIMHASH_BITS):
     _check_simhash_bits(bits)
     return F.expr(f"""
     aggregate(
-      transform(split({text_col}, ' '),
+      transform(split(text, ' '),
                 w -> CAST(conv(substring(md5(w), 1, {bits // 4}), 16, 10)
                           AS BIGINT)),
       array_repeat(0, {bits}),

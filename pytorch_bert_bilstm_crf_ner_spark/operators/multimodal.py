@@ -1,12 +1,12 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata,
 decode / feature-extract as Arrow-batched ``mapInPandas``.
 
-The decode step itself is STUBBED (image/audio libraries are not in this
-container): ``decode_media(..., fake=True)`` produces deterministic fake
-features derived from the payload hash so the Spark-side plumbing —
-schema, batching, partition shape — is real and tested end-to-end;
-``fake=False`` raises NotImplementedError at the exact point a real
-``PIL.Image.open`` / ``soundfile.read`` call would go.
+The decode itself is deterministic: image/audio libraries are not
+dependencies, so :func:`decode_media` derives a ``FEATURE_DIM``-wide
+feature from the payload hash.  The Spark-side plumbing — schema,
+batching, partition shape — is real and tested end-to-end, and the
+DuckDB twin recomputes the features exactly.  A real decoder would
+replace :func:`_fake_feature` inside the same batch function.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
@@ -28,16 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),       # image / audio / video
-        StructField("payload", BinaryType(), False),    # opaque encoded bytes
-        StructField("width", IntegerType(), True),      # typed metadata
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
-)
+FEATURE_DIM = 16  # floats per decoded feature vector
 
 FEATURE_SCHEMA = StructType(
     [
@@ -69,7 +59,7 @@ def synth_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def _fake_feature(payload: bytes, dim: int) -> list[float]:
+def _fake_feature(payload: bytes) -> list[float]:
     """Deterministic stand-in for a decoded-media embedding: md5 blocks of
     the payload's hex string, bytes scaled to [-1, 1).  md5-over-VARCHAR is
     the engine-portable hash of this repo (Spark == DuckDB), so the driver
@@ -78,34 +68,27 @@ def _fake_feature(payload: bytes, dim: int) -> list[float]:
     out: list[float] = []
     hexs = payload.hex()
     block = 0
-    while len(out) < dim:
+    while len(out) < FEATURE_DIM:
         h = hashlib.md5(f"{hexs}|{block}".encode()).hexdigest()
         out.extend(
             int(h[2 * i : 2 * i + 2], 16) / 128.0 - 1.0 for i in range(16)
         )
         block += 1
-    return out[:dim]
+    return out[:FEATURE_DIM]
 
 
-def decode_media(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFrame:
-    """payload -> feature vector via Arrow-batched mapInPandas (the real
+def decode_media(media: DataFrame) -> DataFrame:
+    """payload -> feature vector via Arrow-batched mapInPandas (a real
     decode would run PIL/librosa here, batch-wise, one import per worker)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            raise NotImplementedError(
-                "real media decode needs PIL/soundfile/av — not in this "
-                "container; run with fake=True for the deterministic stub"
-            )
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "kind": pdf["kind"],
                     "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "feature": [
-                        _fake_feature(bytes(p), dim) for p in pdf["payload"]
-                    ],
+                    "feature": [_fake_feature(bytes(p)) for p in pdf["payload"]],
                 }
             )
 

@@ -5,10 +5,10 @@ M8, `predict_gdcq.py` D2) fused into ONE Arrow-batched iterator pandas UDF.
 Why this shape (and not per-row Python): the iterator form
 (``Iterator[pd.Series] -> Iterator[pd.Series]``) constructs the tagger once
 per task — the iterator body runs once per partition, not once per python
-worker — with weights regenerated from the small seeded config (nothing
-heavy is shipped; a real-BERT path would broadcast the state_dict
-instead), then every Arrow batch of the partition is tokenized,
-Viterbi-decoded and FSM-span-decoded as whole numpy batches.
+worker — with weights regenerated from the small seeded config, or
+rebuilt from a broadcast checkpoint (`core/checkpoint.py`), then every
+Arrow batch of the partition is tokenized, Viterbi-decoded and
+FSM-span-decoded as whole numpy batches.
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
 (B x Lmax x T fp32).
 
@@ -53,11 +53,11 @@ MENTIONS_SCHEMA = ArrayType(SPAN_STRUCT)
 
 def make_tag_turns_udf(cfg: TaggerConfig | None = None, tagger_factory=None):
     """``tagger_factory`` swaps in another tagger with the same
-    ``tag_batch`` interface — e.g. the real-model path
-    ``lambda: core.bert_encoder.BertCrfTagger(model_dir)``.  The iterator
-    body, and so ``factory()``, runs once per task (partition), not once
-    per python worker: a reused worker rebuilds the tagger for every
-    partition it serves."""
+    ``tag_batch`` interface — e.g. checkpointed weights through
+    ``core.checkpoint.broadcast_tagger_factory(spark, ckpt_dir)``.  The
+    iterator body, and so ``factory()``, runs once per task (partition),
+    not once per python worker: a reused worker rebuilds the tagger for
+    every partition it serves."""
     cfg = cfg or TaggerConfig()
     factory = tagger_factory or (lambda: DeterministicTagger(cfg))
 

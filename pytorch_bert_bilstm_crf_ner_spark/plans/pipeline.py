@@ -202,14 +202,8 @@ def run_pipeline(
     mentions = extract_mentions(transcripts, cfg.tagger,
                                 tagger_factory=tagger_factory)
     mentions = _materialize(mentions, out, "mentions", run_id)
-    # Each stage feeds only the next one, so none needs a cache for reuse.
-    # When stages are not materialized to parquet, the mentions are still
-    # cached and counted eagerly: they guard the model-forward UDF, whose
-    # recompute (a second action over the lazy frames) is the one cost a
-    # caller cannot afford.
-    if out is None:
-        mentions = mentions.persist()
-        mentions.count()
+    # Each stage feeds only the next one, so none is cached: without
+    # ``output_dir`` building the stages runs no job and leaves no cache.
 
     # Link straight to canonical entities: the driver-held dictionary is
     # canonicalized once (union-find over its alias-sharing graph), so one

@@ -296,54 +296,35 @@ WHERE type NOT IN ('TITLE','EDU') AND obj_type IN ('TITLE','EDU')
 """
 
 # --------------------------------------------------------------------- #
-# query: windowed co-occurrence triples over dict mentions (the
-# explode-to-equi-join pattern; W = 2 turns)
+# query: windowed co-occurrence triples over dict mentions (W = 2 turns)
 
 
 def q_cooccur_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE conv_id repartition feeds both join sides AND the final
-    # aggregation (round-6): HashPartitioning(conv_id) satisfies the
-    # ClusteredDistribution of the (conv_id, probe_turn) join and of the
-    # (conv_id, subj, obj) groupBy (subset rule), so the self-join and
-    # the aggregation run without further Exchanges and the two
-    # identical repartition exchanges are runtime-reused.  Conversations
-    # are bounded (~50 turns), so conv-hash partitioning cannot create a
-    # giant partition; AQE coalesces the column-repartition as usual.
-    m = _dict_mentions(spark, sf_dir).repartition(F.col("conv_id"))
-    probe = m.select(
-        "conv_id",
-        F.col("turn_idx").alias("src_turn"),
-        F.col("start").alias("src_start"),
-        F.col("entity_id").alias("src_eid"),
-        F.col("canonical_name").alias("subj"),
-        F.explode(F.sequence(F.col("turn_idx"), F.col("turn_idx") + 2)).alias(
-            "probe_turn"
-        ),
-    )
-    build = m.select(
-        "conv_id",
-        F.col("turn_idx").alias("probe_turn"),
-        F.col("start").alias("dst_start"),
-        F.col("entity_id").alias("dst_eid"),
-        F.col("canonical_name").alias("obj"),
+    """The pipeline's co-occurrence operator
+    (`operators/relations.py::relation_evidence`) over the dictionary
+    mentions: the entity id is the canonical id, and a null ``adj_start``
+    leaves no adjacency row.  One conv_id exchange feeds the frame and the
+    (conv_id, subj, obj) aggregation."""
+    from ..core.oracle import RelationConfig
+    from ..operators.relations import relation_evidence
+
+    cfg = RelationConfig()
+    mentions = _dict_mentions(spark, sf_dir).select(
+        "conv_id", "turn_idx", "start", "type",
+        F.lit(None).cast("int").alias("adj_start"),
+        F.col("entity_id").alias("canonical_id"), "canonical_name",
     )
     return (
-        probe.join(build, ["conv_id", "probe_turn"])
-        .filter(
-            (F.col("src_eid") != F.col("dst_eid"))
-            & (
-                (F.col("probe_turn") > F.col("src_turn"))
-                | (F.col("dst_start") > F.col("src_start"))
-            )
-        )
+        relation_evidence(mentions, cfg)
+        .filter(F.col("pred") == cfg.cooccur_pred)
         .groupBy("conv_id", "subj", "obj")
         .agg(
-            F.min("src_turn").alias("turn_idx"),
+            F.min("turn_idx").alias("turn_idx"),
             F.count(F.lit(1)).alias("n_evidence"),
         )
         .select(
             "subj",
-            F.lit("co_occurs_with").alias("pred"),
+            F.lit(cfg.cooccur_pred).alias("pred"),
             "obj",
             "conv_id",
             "turn_idx",
@@ -562,7 +543,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n=3, threshold=0.8
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), n=3
     )
 
 
@@ -697,7 +678,7 @@ def _ivf_centroids(path: str) -> tuple:
         if len(ids) >= _IVF_MAX_READ_ROWS:
             ids, vecs = ids[:_IVF_MAX_READ_ROWS], vecs[:_IVF_MAX_READ_ROWS]
             break
-    cents = ivf_train_centroids(ids, vecs, k=8, max_iter=3, seed=7)
+    cents = ivf_train_centroids(ids, vecs, k=8, seed=7)
     return tuple(tuple(c) for c in cents)
 
 
@@ -888,7 +869,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import decode_media, synth_media
 
     media = synth_media(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    feats = decode_media(media, dim=16, fake=True)
+    feats = decode_media(media)
     return feats.select(
         "media_id",
         "kind",
@@ -1258,7 +1239,7 @@ def _register_pipeline_sql() -> None:
     ORACLE_SQL.update(
         {
             "dedup_exact": Q_DEDUP_EXACT_SQL,
-            "dedup_ngram_jaccard": ngram_jaccard_sql(3, 0.8),
+            "dedup_ngram_jaccard": ngram_jaccard_sql(3),
             "minhash_signatures": minhash_signatures_sql(),
             "lsh_candidate_pairs": lsh_candidate_pairs_sql(),
             "simhash": simhash_sql(),

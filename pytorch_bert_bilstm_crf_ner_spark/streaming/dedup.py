@@ -21,13 +21,14 @@ from pyspark.sql import SparkSession
 
 from .ingest import TRANSCRIPTS_SCHEMA
 
+WATERMARK = "30 minutes"  # how late a duplicate may arrive and still be caught
+
 
 def stream_dedup_exact(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    watermark: str = "30 minutes",
 ):
     """Start the dedup stream, which drains the input and stops; returns
     the StreamingQuery.  Each input file is one micro-batch.  Output: the
@@ -40,7 +41,7 @@ def stream_dedup_exact(
     )
     deduped = (
         stream.withColumn("text_hash", F.md5("text"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
 

@@ -90,7 +90,7 @@ def banded_fingerprints(stream: DataFrame) -> DataFrame:
     sig = stream.filter(
         F.col("text").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        "doc_id", "ts", simhash_expr("text").alias("simhash"))
+        "doc_id", "ts", simhash_expr().alias("simhash"))
     return sig.select(
         "doc_id", "ts", "simhash",
         F.explode(F.array(*[

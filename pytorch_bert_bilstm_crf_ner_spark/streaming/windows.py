@@ -22,14 +22,15 @@ from pyspark.sql import SparkSession
 from ..sources.entity_dict import entity_dict_df
 from .ingest import TRANSCRIPTS_SCHEMA
 
+WINDOW = "10 minutes"     # event-time window length
+WATERMARK = "20 minutes"  # how late a row may arrive and still be counted
+
 
 def windowed_entity_counts(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "20 minutes",
 ):
     """Start the stream, which drains the input and stops; returns the
     StreamingQuery.
@@ -59,8 +60,8 @@ def windowed_entity_counts(
     )
     mentions = words.join(F.broadcast(d), "word")
     counts = (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "type")
+        mentions.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("win"), "type")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
         .select(
             F.col("win.start").alias("window_start"),

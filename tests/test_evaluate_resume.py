@@ -180,6 +180,22 @@ def test_resumed_run_with_every_stage_done_runs_no_job(spark, tmp_path):
     assert n == 0
 
 
+def test_lazy_pipeline_runs_no_job_and_caches_nothing(spark):
+    """Building the registered kg_triples query (``run_pipeline`` without
+    ``output_dir``) runs no Spark job, and counting it leaves no RDD
+    persisted (RDD ids compared as sets: the context cleaner may release
+    an earlier test's RDD meanwhile)."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.queries import q_kg_triples
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    built = []
+    assert _jobs_in_group(sc, "kg-triples-build",
+                          lambda: built.append(q_kg_triples(spark, SF_DIR))) == 0
+    assert built[0].count() > 0
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_documents_read_with_their_own_schema(spark, tmp_path):
     """A documents file without ``text`` fails at plan build instead of
     reading as nulls (zero mentions); a directory-shaped table reads the

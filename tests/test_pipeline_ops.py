@@ -39,28 +39,14 @@ def test_media_decode_plumbing(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     media = synth_media(docs)
-    feats = decode_media(media, dim=16, fake=True)
+    feats = decode_media(media)
     rows = feats.limit(20).collect()
     assert rows and all(len(r["feature"]) == 16 for r in rows)
     assert all(r["n_bytes"] == 16 for r in rows)  # md5 payload = 16 bytes
     # deterministic across runs
     a = {r["media_id"]: r["feature"] for r in feats.limit(20).collect()}
-    b = {r["media_id"]: r["feature"] for r in decode_media(media, dim=16, fake=True).limit(20).collect()}
+    b = {r["media_id"]: r["feature"] for r in decode_media(media).limit(20).collect()}
     assert a == b
-
-
-def test_media_decode_real_path_raises(spark):
-    from pytorch_bert_bilstm_crf_ner_spark.operators.multimodal import (
-        decode_media,
-        synth_media,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    with pytest.raises(Exception) as exc_info:
-        decode_media(synth_media(docs), fake=False).limit(1).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
 
 
 def test_synth_transcripts_deterministic(spark):
@@ -85,11 +71,11 @@ def test_jaccard_shingle_frequency_cap(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     exact = {
-        (r["doc_a"], r["doc_b"]) for r in ngram_jaccard_pairs(docs, 3, 0.8).collect()
+        (r["doc_a"], r["doc_b"]) for r in ngram_jaccard_pairs(docs, 3).collect()
     }
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(docs, 3, 0.8, max_shingle_docs=50).collect()
+        for r in ngram_jaccard_pairs(docs, 3, max_shingle_docs=50).collect()
     }
     assert exact, "expected planted near-dup pairs in sf0.01"
     assert capped == exact  # near-dup overlap here is rare shingles
@@ -167,15 +153,15 @@ def test_ivf_train_centroids_deterministic():
     rng = np.random.RandomState(3)
     ids = list(range(200))
     vecs = rng.normal(size=(200, 16)).tolist()
-    a = ivf_train_centroids(ids, vecs, k=4, max_iter=3, seed=7)
-    b = ivf_train_centroids(ids, vecs, k=4, max_iter=3, seed=7)
+    a = ivf_train_centroids(ids, vecs, k=4, seed=7)
+    b = ivf_train_centroids(ids, vecs, k=4, seed=7)
     assert a == b  # bit-exact, not approximately
     perm = rng.permutation(200)
     c = ivf_train_centroids(
-        [ids[i] for i in perm], [vecs[i] for i in perm], k=4, max_iter=3, seed=7
+        [ids[i] for i in perm], [vecs[i] for i in perm], k=4, seed=7
     )
     assert c == a  # row order must not matter (parquet scan order varies)
-    d = ivf_train_centroids(ids, vecs, k=4, max_iter=3, seed=8)
+    d = ivf_train_centroids(ids, vecs, k=4, seed=8)
     assert d != a  # seed actually steers the init
 
 
@@ -228,7 +214,7 @@ def test_ivf_ann_recall(spark):
     rows = emb.select("vec_id", "embedding").collect()
     cents = ivf_train_centroids(
         [r["vec_id"] for r in rows], [list(r["embedding"]) for r in rows],
-        k=8, max_iter=3, seed=7,
+        k=8, seed=7,
     )
     exact = cosine_topk(emb, n_queries=10, k=5).collect()
     approx = ivf_cosine_topk(emb, cents, n_queries=10, k=5, nprobe=3).collect()
@@ -313,7 +299,7 @@ def test_simhash_rejects_bits_over_60(spark):
     with _pytest.raises(ValueError, match="at most 60"):
         simhash(docs, bits=64)
     with _pytest.raises(ValueError, match="at most 60"):
-        simhash_expr("text", bits=64)
+        simhash_expr(bits=64)
     assert simhash(docs, bits=60).columns == ["doc_id", "simhash"]
 
 

@@ -102,7 +102,7 @@ def test_simhash_expr_is_projection_only(spark):
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash_expr
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(docs.select("doc_id", simhash_expr("text").alias("s")))
+    plan = _plan(docs.select("doc_id", simhash_expr().alias("s")))
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan, plan
 
@@ -181,3 +181,21 @@ def test_relation_triples_run_one_exchange(spark, pipeline_stages, tmp_path):
     exchanges = [ln for ln in final.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 1 and "REPARTITION_BY_COL" in exchanges[0], final
     assert "BroadcastExchange" not in final and "Join" not in final, final
+
+
+def test_cooccur_triples_run_one_exchange(spark):
+    """The registered co-occurrence query is the pipeline's
+    `relation_evidence` over the dictionary mentions: its final AQE plan
+    holds one conv_id repartition, reused by nothing, and no join but the
+    dictionary's broadcast."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.queries import (
+        q_cooccur_triples,
+    )
+
+    df = q_cooccur_triples(spark, SF_DIR)
+    assert df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("REPARTITION_BY_COL") == 1, final
+    assert "ReusedExchange" not in final, final
+    joins = [ln for ln in final.splitlines() if "Join" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], final

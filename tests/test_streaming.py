@@ -116,8 +116,7 @@ def test_windowed_entity_counts_watermark(spark, tmp_path):
         t = _time.time() - 300 + i * 10
         os.utime(dst, (t, t))
 
-    q = windowed_entity_counts(spark, d["in"], d["out"], d["ckpt"],
-                               window="10 minutes", watermark="20 minutes")
+    q = windowed_entity_counts(spark, d["in"], d["out"], d["ckpt"])
     q.awaitTermination(120)
 
     out = spark.read.parquet(d["out"]).collect()
@@ -178,8 +177,7 @@ def test_stream_dedup_exact_within_watermark(spark, tmp_path):
         t = _time.time() - 300 + i * 10
         os.utime(dst, (t, t))
 
-    q = stream_dedup_exact(spark, d["in"], d["out"], d["ckpt"],
-                           watermark="30 minutes")
+    q = stream_dedup_exact(spark, d["in"], d["out"], d["ckpt"])
     q.awaitTermination(120)
 
     out = spark.read.parquet(d["out"])
