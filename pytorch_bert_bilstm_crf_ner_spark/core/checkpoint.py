@@ -79,31 +79,21 @@ def load_state_dict(tagger: DeterministicTagger,
     return tagger
 
 
-def _config_to_jsonable(cfg: TaggerConfig) -> dict:
-    return dataclasses.asdict(cfg)
-
-
-def _config_from_jsonable(d: dict) -> TaggerConfig:
-    d = dict(d)
-    d["types"] = tuple(d["types"])
-    d["gazetteer"] = tuple(tuple(pair) for pair in d["gazetteer"])
-    return TaggerConfig(**d)
-
-
 def save_tagger(tagger: DeterministicTagger, path: str) -> None:
     """Write ``path/config.json`` + ``path/weights.npz`` (the torch.save
     analog, `trainUtils.py:60-65`)."""
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, "config.json"), "w", encoding="utf-8") as f:
-        json.dump(_config_to_jsonable(tagger.cfg), f)
+        json.dump(dataclasses.asdict(tagger.cfg), f)
     np.savez(os.path.join(path, "weights.npz"), **state_dict(tagger))
 
 
 def load_tagger(path: str) -> DeterministicTagger:
     """Rebuild the tagger from a checkpoint directory; the checkpoint's
-    weights are authoritative (they overwrite the seeded init)."""
+    weights are authoritative (they overwrite the seeded init).  A config
+    field the tagger does not have raises."""
     with open(os.path.join(path, "config.json"), encoding="utf-8") as f:
-        cfg = _config_from_jsonable(json.load(f))
+        cfg = TaggerConfig(**json.load(f))
     with np.load(os.path.join(path, "weights.npz")) as z:
         sd = {k: z[k] for k in z.files}
     return load_state_dict(DeterministicTagger(cfg), sd)
@@ -116,17 +106,17 @@ def broadcast_tagger_factory(spark, path: str):
     not once per python worker, and it rebuilds the tagger from the
     broadcast value (config + named arrays), never re-reading the
     checkpoint files — the distributed-serving shape of the reference's
-    `load_model_and_parallel` + `predict.py` flow."""
+    `load_model_and_parallel` + `predict.py` flow.  The config is built
+    before the broadcast, so a field the tagger does not have raises
+    here, not in a task."""
     with open(os.path.join(path, "config.json"), encoding="utf-8") as f:
-        cfg_jsonable = json.load(f)
+        cfg = TaggerConfig(**json.load(f))
     with np.load(os.path.join(path, "weights.npz")) as z:
         sd = {k: z[k] for k in z.files}
-    bcast = spark.sparkContext.broadcast((cfg_jsonable, sd))
+    bcast = spark.sparkContext.broadcast((cfg, sd))
 
     def factory() -> DeterministicTagger:
-        cfg_d, weights = bcast.value
-        return load_state_dict(
-            DeterministicTagger(_config_from_jsonable(cfg_d)), weights
-        )
+        cfg_b, weights = bcast.value
+        return load_state_dict(DeterministicTagger(cfg_b), weights)
 
     return factory

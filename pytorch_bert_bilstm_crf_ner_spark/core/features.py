@@ -16,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from .cut import cut_sent_for_bert, refactor_labels
-from .tags import CNER_TYPES, _tag_vocab_cached, build_tag_vocab  # noqa: F401
+from .tags import CHAR_VOCAB_SIZE, ENT2ID
 
 PAD_ID, CLS_ID, SEP_ID = 0, 1, 2
 CHAR_OFFSET = 3
@@ -25,9 +25,6 @@ CHAR_OFFSET = 3
 @dataclass(frozen=True)
 class FeatureConfig:
     max_seq_len: int = 128
-    vocab_size: int = 4099  # hashed char buckets (same as TaggerConfig)
-    types: tuple[str, ...] = CNER_TYPES
-    scheme: str = "BIOES"
     # P5: run fine_grade_tokenize ([BLANK]/[INV] char mapping) before id
     # lookup.  Default off — the reference itself leaves the call commented
     # out at its call sites (`preprocess.py:92`), and plain list(text) is
@@ -76,7 +73,6 @@ def encode_example(text: str, labels: list[tuple[str, str, int]],
     (`preprocess.py:113-129`); text longer than max_seq_len - 2 is
     truncated like encode_plus(truncation=True).
     """
-    ent2id = _tag_vocab_cached(cfg.types, cfg.scheme)
     L = cfg.max_seq_len
     body = L - 2
     # without fine_tokenize each "token" is exactly one char, so the
@@ -92,15 +88,15 @@ def encode_example(text: str, labels: list[tuple[str, str, int]],
         if start >= len(tokens):
             continue
         if n == 1:
-            label_ids[start] = ent2id[f"S-{etype}"]
+            label_ids[start] = ENT2ID[f"S-{etype}"]
         else:
             end = start + n - 1
             if end >= len(tokens):
                 continue  # truncated away, like the reference's cut+encode
-            label_ids[start] = ent2id[f"B-{etype}"]
+            label_ids[start] = ENT2ID[f"B-{etype}"]
             for k in range(start + 1, end):
-                label_ids[k] = ent2id[f"I-{etype}"]
-            label_ids[end] = ent2id[f"E-{etype}"]
+                label_ids[k] = ENT2ID[f"I-{etype}"]
+            label_ids[end] = ENT2ID[f"E-{etype}"]
 
     if cfg.fine_tokenize:
         def _tid(tok: str) -> int:
@@ -109,13 +105,13 @@ def encode_example(text: str, labels: list[tuple[str, str, int]],
             if tok == INV_TOKEN:
                 return INV_ID
             return FINE_CHAR_OFFSET + (
-                ord(tok) % (cfg.vocab_size - FINE_CHAR_OFFSET)
+                ord(tok) % (CHAR_VOCAB_SIZE - FINE_CHAR_OFFSET)
             )
 
         body_ids = [_tid(t) for t in tokens]
     else:
         body_ids = [
-            CHAR_OFFSET + (ord(c) % (cfg.vocab_size - CHAR_OFFSET))
+            CHAR_OFFSET + (ord(c) % (CHAR_VOCAB_SIZE - CHAR_OFFSET))
             for c in tokens
         ]
     token_ids = [CLS_ID] + body_ids + [SEP_ID]

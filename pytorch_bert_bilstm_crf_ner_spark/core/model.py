@@ -29,12 +29,19 @@ import numpy as np
 
 from .cut import cut_sent_for_bert
 from .decode import Span, bioes_decode_flat
-from .tags import CNER_TYPES, build_tag_vocab, invert_vocab
+from .tags import CHAR_VOCAB_SIZE, build_tag_vocab, invert_vocab
 from .viterbi import viterbi_decode_batch
+
+SEED = 20221           # every seeded weight draws from this RandomState
+EMB_DIM = 32
+NOISE_SCALE = 0.5      # amplitude of the random emission part
+O_BIAS = 1.0           # prior toward O off-dictionary
+BOOST = 8.0            # gazetteer prior strength
+FEATURE_HIDDEN = 16    # hidden width of the bilstm / idcnn feature layer
 
 # Aliases drawn from the synthetic corpus vocabulary; multi-word aliases
 # exercise multi-char B/I...E spans (incl. the space chars as I- tags).
-DEFAULT_GAZETTEER: tuple[tuple[str, str], ...] = (
+GAZETTEER: tuple[tuple[str, str], ...] = (
     ("hash join", "PRO"),
     ("table scan", "PRO"),
     ("order key", "ORG"),
@@ -58,19 +65,10 @@ DEFAULT_GAZETTEER: tuple[tuple[str, str], ...] = (
 
 @dataclass(frozen=True)
 class TaggerConfig:
-    seed: int = 20221
-    emb_dim: int = 32
-    vocab_size: int = 4099          # char codepoint hash buckets
     max_seq_len: int = 128          # reference default 150/256 family
-    noise_scale: float = 0.5        # amplitude of the random emission part
-    o_bias: float = 1.0             # prior toward O off-dictionary
-    boost: float = 8.0              # gazetteer prior strength
-    types: tuple[str, ...] = CNER_TYPES
-    gazetteer: tuple[tuple[str, str], ...] = DEFAULT_GAZETTEER
     scheme: str = "BIOES"       # or "BIO" (D3 decode path)
     use_crf: bool = True        # False -> argmax decode (M6, `main.py:92-93`)
     feature_layer: str = "none"  # "bilstm" (M2) / "idcnn" (M3) / "none" (M5)
-    feature_hidden: int = 16
     # M4: the reference's mid_linear block (Linear(out, 256) + ReLU +
     # train-only Dropout, `bert_ner_model.py:221-227`, applied at :276)
     # between the feature layer and the tag classifier.  None = off
@@ -105,25 +103,25 @@ class DeterministicTagger:
     def __init__(self, cfg: TaggerConfig | None = None) -> None:
         self.cfg = cfg or TaggerConfig()
         c = self.cfg
-        self.ent2id = build_tag_vocab(c.types, c.scheme)
+        self.ent2id = build_tag_vocab(c.scheme)
         self.id2ent = invert_vocab(self.ent2id)
         self.num_tags = len(self.ent2id)
-        rng = np.random.RandomState(c.seed)
+        rng = np.random.RandomState(SEED)
         self.embedding = rng.uniform(
-            -0.5, 0.5, (c.vocab_size, c.emb_dim)).astype(np.float32)
+            -0.5, 0.5, (CHAR_VOCAB_SIZE, EMB_DIM)).astype(np.float32)
         # optional feature layer between embedding and classifier — the
         # reference's bilstm_crf / idcnn_crf model families (M2/M3)
         self.feature = None
-        feat_dim = c.emb_dim
+        feat_dim = EMB_DIM
         if c.feature_layer == "bilstm":
             from .layers import NumpyBiLSTM
 
-            self.feature = NumpyBiLSTM(c.emb_dim, c.feature_hidden, c.seed + 1)
+            self.feature = NumpyBiLSTM(EMB_DIM, FEATURE_HIDDEN, SEED + 1)
             feat_dim = self.feature.out_dim
         elif c.feature_layer == "idcnn":
             from .layers import NumpyIDCNN
 
-            self.feature = NumpyIDCNN(c.emb_dim, c.feature_hidden, c.seed + 1)
+            self.feature = NumpyIDCNN(EMB_DIM, FEATURE_HIDDEN, SEED + 1)
             feat_dim = self.feature.out_dim
         # M4 mid_linear (`bert_ner_model.py:221-227`): Linear + ReLU
         # (Dropout is train-only — identity at inference)
@@ -142,11 +140,11 @@ class DeterministicTagger:
         self.transitions = rng.uniform(
             -0.1, 0.1, (self.num_tags, self.num_tags)).astype(np.float32)
         # longest-alternative-first so the regex picks the longest match
-        alts = sorted((a for a, _ in c.gazetteer), key=len, reverse=True)
+        alts = sorted((a for a, _ in GAZETTEER), key=len, reverse=True)
         self._gaz_re = re.compile(
             r"(?<![a-z0-9])(" + "|".join(re.escape(a) for a in alts) + r")(?![a-z0-9])"
         )
-        self._gaz_type = dict(c.gazetteer)
+        self._gaz_type = dict(GAZETTEER)
         # cache slot for the whole-vocab emission table (see _char_table)
         self._char_em_cache: tuple[bytes, np.ndarray] | None = None
 
@@ -181,11 +179,10 @@ class DeterministicTagger:
             h.update(self.mid_b.tobytes())
         key = h.digest()
         if self._char_em_cache is None or self._char_em_cache[0] != key:
-            c = self.cfg
             tbl = (
-                c.noise_scale * np.tanh(self._classify(self.embedding))
+                NOISE_SCALE * np.tanh(self._classify(self.embedding))
             ).astype(np.float32)
-            tbl[:, 0] += np.float32(c.o_bias)  # a+b == b+a bitwise in IEEE
+            tbl[:, 0] += np.float32(O_BIAS)  # a+b == b+a bitwise in IEEE
             self._char_em_cache = (key, tbl)
         return self._char_em_cache[1]
 
@@ -241,20 +238,20 @@ class DeterministicTagger:
         if np.any(lengths == 0):
             raise ValueError("empty text reached the tagger; filter upstream")
         flat = "".join(texts)
-        ids = np.frombuffer(flat.encode("utf-32-le"), dtype=np.uint32) % c.vocab_size
+        ids = np.frombuffer(flat.encode("utf-32-le"), dtype=np.uint32) % CHAR_VOCAB_SIZE
         B, Lmax = len(texts), int(lengths.max())
         offsets = np.concatenate(([0], np.cumsum(lengths)))
         char_tbl = self._char_table() if self.feature is None else None
         if self.feature is not None:
             # M2/M3 path: padded (B, Lmax, D) through the feature layer
-            emb = np.zeros((B, Lmax, self.cfg.emb_dim), dtype=np.float32)
+            emb = np.zeros((B, Lmax, EMB_DIM), dtype=np.float32)
             for b in range(B):
                 L = lengths[b]
                 emb[b, :L] = self.embedding[ids[offsets[b] : offsets[b] + L]]
             feats = self.feature(emb)
             logits_pad = self._classify(feats)
         em = np.zeros((B, Lmax, self.num_tags), dtype=np.float32)
-        em[:, :, 0] = c.o_bias
+        em[:, :, 0] = O_BIAS
         for b, text in enumerate(texts):
             L = lengths[b]
             if self.feature is None:
@@ -263,21 +260,21 @@ class DeterministicTagger:
                 em[b, :L, :] = char_tbl[ids[offsets[b] : offsets[b] + L]]
             else:
                 em[b, :L, :] += (
-                    c.noise_scale * np.tanh(logits_pad[b, :L])
+                    NOISE_SCALE * np.tanh(logits_pad[b, :L])
                 ).astype(np.float32)
             for m in self._gaz_re.finditer(text):
                 s, e = m.start(), m.end()
                 etype = self._gaz_type[m.group(1)]
                 if c.scheme == "BIO":
-                    em[b, s, self.ent2id[f"B-{etype}"]] += c.boost
+                    em[b, s, self.ent2id[f"B-{etype}"]] += BOOST
                     if e - s > 1:
-                        em[b, s + 1 : e, self.ent2id[f"I-{etype}"]] += c.boost
+                        em[b, s + 1 : e, self.ent2id[f"I-{etype}"]] += BOOST
                 elif e - s == 1:
-                    em[b, s, self.ent2id[f"S-{etype}"]] += c.boost
+                    em[b, s, self.ent2id[f"S-{etype}"]] += BOOST
                 else:
-                    em[b, s, self.ent2id[f"B-{etype}"]] += c.boost
-                    em[b, s + 1 : e - 1, self.ent2id[f"I-{etype}"]] += c.boost
-                    em[b, e - 1, self.ent2id[f"E-{etype}"]] += c.boost
+                    em[b, s, self.ent2id[f"B-{etype}"]] += BOOST
+                    em[b, s + 1 : e - 1, self.ent2id[f"I-{etype}"]] += BOOST
+                    em[b, e - 1, self.ent2id[f"E-{etype}"]] += BOOST
         return em, lengths
 
     def tag_ids(self, texts: list[str]) -> list[list[int]]:

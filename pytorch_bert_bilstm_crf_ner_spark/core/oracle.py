@@ -15,21 +15,18 @@ Pipeline shape (mirrors `plans/pipeline.py` stage for stage):
 from __future__ import annotations
 
 from collections import defaultdict
-from dataclasses import dataclass
 
 from .entities import ENTITY_DICT_ROWS, canonical_map
 from .model import DeterministicTagger
-from .pairing import SEPARATORS
+from .pairing import (
+    ADJACENT_OBJECT_TYPES,
+    ADJACENT_PRED,
+    COOCCUR_PRED,
+    COOCCUR_WINDOW,
+    SEPARATORS,
+)
 
 Turn = tuple[str, int, str]  # (conv_id, turn_idx, text)
-
-
-@dataclass(frozen=True)
-class RelationConfig:
-    cooccur_window: int = 2            # turns ahead (inclusive) for co-occurrence
-    adjacent_object_types: tuple[str, ...] = ("TITLE", "EDU")
-    adjacent_pred: str = "has_attribute"
-    cooccur_pred: str = "co_occurs_with"
 
 
 def extract_mentions(turns: list[Turn], tagger: DeterministicTagger | None = None
@@ -72,8 +69,7 @@ def canonicalize(linked):
     return out
 
 
-def relation_triples(mentions, canonical, turns: list[Turn],
-                     cfg: RelationConfig = RelationConfig()):
+def relation_triples(mentions, canonical, turns: list[Turn]):
     """Distinct triples (subj, pred, obj, conv_id, turn_idx=min evidence,
     n_evidence), sorted for stable comparison.
 
@@ -82,7 +78,7 @@ def relation_triples(mentions, canonical, turns: list[Turn],
       object set, right type in it, no sentence punctuation strictly
       between; both sides must be linked; emitted over canonical names.
     - co-occurrence: linked mentions in the same conversation within
-      ``cooccur_window`` turns ahead (same turn: later start), distinct
+      ``COOCCUR_WINDOW`` turns ahead (same turn: later start), distinct
       canonical pair, directed earlier -> later.
     """
     canon_at: dict[tuple[str, int, int, str], tuple[int, str]] = {}
@@ -102,7 +98,7 @@ def relation_triples(mentions, canonical, turns: list[Turn],
         text = text_at[(conv, idx)]
         for i in range(len(ents) - 1):
             left, right = ents[i], ents[i + 1]
-            if left[2] in cfg.adjacent_object_types or right[2] not in cfg.adjacent_object_types:
+            if left[2] in ADJACENT_OBJECT_TYPES or right[2] not in ADJACENT_OBJECT_TYPES:
                 continue
             between = text[left[1] + len(left[0]) : right[1]]
             if any(s in between for s in SEPARATORS):
@@ -110,7 +106,7 @@ def relation_triples(mentions, canonical, turns: list[Turn],
             lc = canon_at.get((conv, idx, left[1], left[0]))
             rc = canon_at.get((conv, idx, right[1], right[0]))
             if lc and rc and lc[0] != rc[0]:
-                evidence[(conv, lc[1], cfg.adjacent_pred, rc[1])].append(idx)
+                evidence[(conv, lc[1], ADJACENT_PRED, rc[1])].append(idx)
 
     # co-occurrence across the conversation window
     by_conv: dict[str, list[tuple[int, int, int, str]]] = defaultdict(list)
@@ -122,11 +118,11 @@ def relation_triples(mentions, canonical, turns: list[Turn],
             t1, s1, c1, n1 = items[a]
             for b in range(a + 1, len(items)):
                 t2, s2, c2, n2 = items[b]
-                if t2 - t1 > cfg.cooccur_window:
+                if t2 - t1 > COOCCUR_WINDOW:
                     break
                 if c1 == c2 or (t1 == t2 and s2 <= s1):
                     continue
-                evidence[(conv, n1, cfg.cooccur_pred, n2)].append(t1)
+                evidence[(conv, n1, COOCCUR_PRED, n2)].append(t1)
 
     triples = [
         (subj, pred, obj, conv, min(turns_), len(turns_))

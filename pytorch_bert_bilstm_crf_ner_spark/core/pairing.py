@@ -20,6 +20,15 @@ SEPARATORS = ("，", ",", "。", "！", "!", "？", "?")
 # set-disjointness test over the gap's characters
 _SEPARATOR_SET = frozenset(SEPARATORS)
 
+# The pipeline's relation rule, read by `operators/relations.py`,
+# `core/oracle.py` and their SQL twins: a non-object span followed by an
+# object span is ``ADJACENT_PRED``; linked spans up to ``COOCCUR_WINDOW``
+# turns ahead (inclusive) are ``COOCCUR_PRED``.
+ADJACENT_OBJECT_TYPES = ("TITLE", "EDU")
+ADJACENT_PRED = "has_attribute"
+COOCCUR_PRED = "co_occurs_with"
+COOCCUR_WINDOW = 2
+
 
 def adjacent_pairs(
     entities: list[Span], text: str

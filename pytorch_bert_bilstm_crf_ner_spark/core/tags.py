@@ -1,4 +1,4 @@
-"""Label vocabularies (BIOES / BIO tag <-> id maps).
+"""Vocabularies: BIOES / BIO tag <-> id maps and the char-hash size.
 
 Mirrors the reference's tag-vocabulary construction:
 - entity types: `data/cner/mid_data/labels.json` (8 cner types)
@@ -8,8 +8,6 @@ Mirrors the reference's tag-vocabulary construction:
 
 from __future__ import annotations
 
-import functools
-
 # reference data/cner/mid_data/labels.json
 CNER_TYPES: tuple[str, ...] = (
     "PRO", "ORG", "CONT", "RACE", "NAME", "EDU", "LOC", "TITLE",
@@ -18,24 +16,20 @@ CNER_TYPES: tuple[str, ...] = (
 BIOES_PREFIXES = ("B", "I", "E", "S")
 BIO_PREFIXES = ("B", "I")
 
-
-@functools.lru_cache(maxsize=32)
-def _tag_vocab_cached(types: tuple, scheme: str) -> dict[str, int]:
-    """Memoized :func:`build_tag_vocab` — encode paths call it once per
-    EXAMPLE (round-6 profile: ~20% of the whole feature encode); the
-    vocab depends only on (types, scheme), both hashable."""
-    return build_tag_vocab(types, scheme)
+# char codepoint hash buckets, read by the tagger's embedding and the
+# training-feature encoder
+CHAR_VOCAB_SIZE = 4099
 
 
-def build_tag_vocab(types: tuple[str, ...] = CNER_TYPES,
-                    scheme: str = "BIOES") -> dict[str, int]:
-    """``O`` -> 0, then per type: one tag per scheme prefix, in type order.
+def build_tag_vocab(scheme: str = "BIOES") -> dict[str, int]:
+    """``O`` -> 0, then per cner type: one tag per scheme prefix, in type
+    order.
 
     BIOES ordering matches `data/cner/mid_data/nor_ent2id.json` exactly.
     """
     prefixes = BIOES_PREFIXES if scheme == "BIOES" else BIO_PREFIXES
     vocab = {"O": 0}
-    for t in types:
+    for t in CNER_TYPES:
         for p in prefixes:
             vocab[f"{p}-{t}"] = len(vocab)
     return vocab
@@ -45,7 +39,7 @@ def invert_vocab(vocab: dict[str, int]) -> dict[int, str]:
     return {v: k for k, v in vocab.items()}
 
 
-# The default (cner-shaped) vocabulary used throughout the pipeline.
+# The BIOES vocabulary used throughout the pipeline.
 ENT2ID: dict[str, int] = build_tag_vocab()
 ID2ENT: dict[int, str] = invert_vocab(ENT2ID)
 NUM_TAGS: int = len(ENT2ID)  # 33

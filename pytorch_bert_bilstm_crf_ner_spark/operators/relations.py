@@ -16,7 +16,7 @@ patterns are written as frames.
   ``lead`` over the turn's LINKED spans (ordered by start) finds the next
   linked span; the pair holds when it starts at ``adj_start`` (so the next
   decoded span is itself linked) and the type rule holds.
-- **Co-occurrence** — linked mentions within ``cooccur_window`` turns
+- **Co-occurrence** — linked mentions within ``COOCCUR_WINDOW`` turns
   ahead in the same conversation, directed earlier -> later (same turn:
   later start).  A ``rangeBetween(0, window)`` frame over the
   conversation's turns collects the candidates; one explode and a filter
@@ -32,13 +32,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..core.oracle import RelationConfig
+from ..core.pairing import (
+    ADJACENT_OBJECT_TYPES,
+    ADJACENT_PRED,
+    COOCCUR_PRED,
+    COOCCUR_WINDOW,
+)
 
 
-def relation_evidence(
-    canonical_mentions: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
-) -> DataFrame:
+def relation_evidence(canonical_mentions: DataFrame) -> DataFrame:
     """-> one row per relation instance: (conv_id, subj_cid, subj, pred,
     obj_cid, obj, turn_idx, obj_turn), ``turn_idx`` the subject's turn and
     ``obj_turn`` the object's.
@@ -59,16 +61,15 @@ def relation_evidence(
         F.col("canonical_id").alias("cid"), F.col("canonical_name").alias("name"),
     )
     in_turn = Window.partitionBy("conv_id", "turn_idx").orderBy("start")
-    objects = cfg.adjacent_object_types
     adjacent = F.when(
-        ~F.col("type").isin(*objects)
+        ~F.col("type").isin(*ADJACENT_OBJECT_TYPES)
         & (F.lead("start").over(in_turn) == F.col("adj_start"))
-        & F.lead("type").over(in_turn).isin(*objects),
+        & F.lead("type").over(in_turn).isin(*ADJACENT_OBJECT_TYPES),
         F.lead(item).over(in_turn),
     )
     ahead = F.collect_list(item).over(
         Window.partitionBy("conv_id").orderBy("turn_idx")
-        .rangeBetween(0, cfg.cooccur_window)
+        .rangeBetween(0, COOCCUR_WINDOW)
     )
     # A window function and a generator cannot share one select: the
     # frames are computed first, then one posexplode emits the adjacency
@@ -96,8 +97,8 @@ def relation_evidence(
             "conv_id",
             F.col("canonical_id").alias("subj_cid"),
             F.col("canonical_name").alias("subj"),
-            F.when(F.col("pos") == 0, F.lit(cfg.adjacent_pred))
-            .otherwise(F.lit(cfg.cooccur_pred)).alias("pred"),
+            F.when(F.col("pos") == 0, F.lit(ADJACENT_PRED))
+            .otherwise(F.lit(COOCCUR_PRED)).alias("pred"),
             o["cid"].alias("obj_cid"),
             o["name"].alias("obj"),
             "turn_idx",
@@ -106,16 +107,13 @@ def relation_evidence(
     )
 
 
-def relation_triples(
-    canonical_mentions: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
-) -> DataFrame:
+def relation_triples(canonical_mentions: DataFrame) -> DataFrame:
     """Distinct triples with evidence: (subj, pred, obj, conv_id,
     turn_idx = min evidence turn, n_evidence).  The aggregation is keyed
     by conv_id, so it reads :func:`relation_evidence`'s partitioning with
     no further exchange."""
     return (
-        relation_evidence(canonical_mentions, cfg)
+        relation_evidence(canonical_mentions)
         .groupBy("conv_id", "subj_cid", "subj", "pred", "obj_cid", "obj")
         .agg(F.min("turn_idx").alias("turn_idx"),
              F.count(F.lit(1)).alias("n_evidence"))
@@ -125,42 +123,40 @@ def relation_triples(
 
 # The three functions below are views over relation_evidence /
 # relation_triples kept for callers written against the earlier
-# join-based operators; their extra parameters are not read.
+# join-based operators; their extra parameters, ``cfg`` among them, are
+# not read.
 
 
 def adjacent_relations(
     mentions: DataFrame,
     canonical_mentions: DataFrame,
     transcripts: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
+    cfg,
 ) -> DataFrame:
     """-> (conv_id, subj_cid, pred, obj_cid, turn_idx) adjacency evidence
     rows, with multiplicity: :func:`relation_evidence` filtered on
-    ``cfg.adjacent_pred``.
+    ``ADJACENT_PRED``.
 
     ``mentions`` and ``transcripts`` are not read (the text check moved
     into the tag UDF's ``adj_start``); they go when the benchmark's layer
     sweep is re-pointed at :func:`relation_evidence`."""
     return (
-        relation_evidence(canonical_mentions, cfg)
-        .filter(F.col("pred") == cfg.adjacent_pred)
+        relation_evidence(canonical_mentions)
+        .filter(F.col("pred") == ADJACENT_PRED)
         .select("conv_id", "subj_cid", "pred", "obj_cid", "turn_idx")
     )
 
 
-def cooccurrence_evidence_preagg(
-    canonical_mentions: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
-) -> DataFrame:
+def cooccurrence_evidence_preagg(canonical_mentions: DataFrame, cfg) -> DataFrame:
     """-> (conv_id, subj_cid, pred, obj_cid, turn_idx, n_evidence):
-    :func:`relation_evidence` filtered on ``cfg.cooccur_pred`` and counted
+    :func:`relation_evidence` filtered on ``COOCCUR_PRED`` and counted
     per (conv_id, subj_cid, pred, obj_cid, turn_idx, object turn), the
     grain of the earlier pre-aggregated operator.  Aggregate with
     SUM(n_evidence), MIN(turn_idx).  It goes when the benchmark's layer
     sweep is re-pointed at :func:`relation_evidence`."""
     return (
-        relation_evidence(canonical_mentions, cfg)
-        .filter(F.col("pred") == cfg.cooccur_pred)
+        relation_evidence(canonical_mentions)
+        .filter(F.col("pred") == COOCCUR_PRED)
         .groupBy("conv_id", "subj_cid", "pred", "obj_cid", "turn_idx", "obj_turn")
         .agg(F.count(F.lit(1)).alias("n_evidence"))
         .drop("obj_turn")
@@ -171,12 +167,12 @@ def triples(
     mentions: DataFrame,
     canonical_mentions: DataFrame,
     transcripts: DataFrame,
-    cfg: RelationConfig = RelationConfig(),
+    cfg,
     preagg_cooccurrence: bool = False,
 ) -> DataFrame:
     """:func:`relation_triples` of ``canonical_mentions``.
 
-    ``mentions``, ``transcripts`` and ``preagg_cooccurrence`` are not read;
-    they go when the benchmark's layer sweep is re-pointed at
+    ``mentions``, ``transcripts``, ``cfg`` and ``preagg_cooccurrence`` are
+    not read; they go when the benchmark's layer sweep is re-pointed at
     :func:`relation_triples`."""
-    return relation_triples(canonical_mentions, cfg)
+    return relation_triples(canonical_mentions)

@@ -42,7 +42,6 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 
 from ..core.entities import canonical_dict_rows
 from ..core.model import TaggerConfig
-from ..core.oracle import RelationConfig
 from ..operators.linking import link_mentions
 from ..operators.relations import relation_triples
 from ..operators.tagging import extract_mentions
@@ -53,7 +52,10 @@ from ..sources.transcripts import transcripts_from_documents
 @dataclass
 class PipelineConfig:
     tagger: TaggerConfig = field(default_factory=TaggerConfig)
-    relations: RelationConfig = field(default_factory=RelationConfig)
+    # Not read: the relation rule is constants (`core/pairing.py`).  Kept
+    # because the benchmark's layer sweep passes it to the relation views;
+    # it goes when that sweep is re-pointed at relation_triples.
+    relations: None = None
     broadcast_dict: bool = True
     repartition: int | None = None     # parallelism of the UDF stage
     output_dir: str | None = None      # None = fully lazy, no materialization
@@ -219,7 +221,7 @@ def run_pipeline(
     )
     canonical = _materialize(canonical, out, "canonical", run_id)
 
-    trip = relation_triples(canonical, cfg.relations)
+    trip = relation_triples(canonical)
     # graph table partitioned by predicate — partition pruning for
     # per-relation queries (Iceberg would add days(ts) etc.)
     trip = _materialize(trip, out, "triples", run_id, partition_by=("pred",))

@@ -19,6 +19,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..core.entities import ENTITY_DICT_ROWS
+from ..core.pairing import (
+    ADJACENT_OBJECT_TYPES,
+    ADJACENT_PRED,
+    COOCCUR_PRED,
+    COOCCUR_WINDOW,
+)
 from ..sources.entity_dict import entity_dict_df, entity_dict_values_sql
 from ..sources.transcripts import TRANSCRIPTS_SQL, transcripts_from_documents
 
@@ -263,19 +269,20 @@ def q_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.withColumn("obj", F.lead("mention").over(w))
         .withColumn("obj_type", F.lead("type").over(w))
         .filter(
-            (~F.col("type").isin("TITLE", "EDU"))
-            & F.col("obj_type").isin("TITLE", "EDU")
+            (~F.col("type").isin(*ADJACENT_OBJECT_TYPES))
+            & F.col("obj_type").isin(*ADJACENT_OBJECT_TYPES)
         )
         .select(
             "conv_id",
             "turn_idx",
             F.col("mention").alias("subj"),
-            F.lit("has_attribute").alias("pred"),
+            F.lit(ADJACENT_PRED).alias("pred"),
             "obj",
         )
     )
 
 
+_OBJECT_TYPES_SQL = ",".join(f"'{t}'" for t in ADJACENT_OBJECT_TYPES)
 Q_ADJACENT_PAIRS_SQL = f"""
 WITH m0 AS ({_DICT_MENTIONS_SQL}),
 m AS (
@@ -290,13 +297,13 @@ led AS (
          LEAD(type) OVER (PARTITION BY conv_id, turn_idx ORDER BY start) AS obj_type
   FROM m
 )
-SELECT conv_id, turn_idx, mention AS subj, 'has_attribute' AS pred, obj
+SELECT conv_id, turn_idx, mention AS subj, '{ADJACENT_PRED}' AS pred, obj
 FROM led
-WHERE type NOT IN ('TITLE','EDU') AND obj_type IN ('TITLE','EDU')
+WHERE type NOT IN ({_OBJECT_TYPES_SQL}) AND obj_type IN ({_OBJECT_TYPES_SQL})
 """
 
 # --------------------------------------------------------------------- #
-# query: windowed co-occurrence triples over dict mentions (W = 2 turns)
+# query: windowed co-occurrence triples over dict mentions (COOCCUR_WINDOW)
 
 
 def q_cooccur_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,18 +312,16 @@ def q_cooccur_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     mentions: the entity id is the canonical id, and a null ``adj_start``
     leaves no adjacency row.  One conv_id exchange feeds the frame and the
     (conv_id, subj, obj) aggregation."""
-    from ..core.oracle import RelationConfig
     from ..operators.relations import relation_evidence
 
-    cfg = RelationConfig()
     mentions = _dict_mentions(spark, sf_dir).select(
         "conv_id", "turn_idx", "start", "type",
         F.lit(None).cast("int").alias("adj_start"),
         F.col("entity_id").alias("canonical_id"), "canonical_name",
     )
     return (
-        relation_evidence(mentions, cfg)
-        .filter(F.col("pred") == cfg.cooccur_pred)
+        relation_evidence(mentions)
+        .filter(F.col("pred") == COOCCUR_PRED)
         .groupBy("conv_id", "subj", "obj")
         .agg(
             F.min("turn_idx").alias("turn_idx"),
@@ -324,7 +329,7 @@ def q_cooccur_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "subj",
-            F.lit(cfg.cooccur_pred).alias("pred"),
+            F.lit(COOCCUR_PRED).alias("pred"),
             "obj",
             "conv_id",
             "turn_idx",
@@ -335,12 +340,12 @@ def q_cooccur_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_COOCCUR_SQL = f"""
 WITH m AS ({_DICT_MENTIONS_SQL})
-SELECT a.canonical_name AS subj, 'co_occurs_with' AS pred,
+SELECT a.canonical_name AS subj, '{COOCCUR_PRED}' AS pred,
        b.canonical_name AS obj, a.conv_id,
        MIN(a.turn_idx) AS turn_idx, COUNT(*) AS n_evidence
 FROM m a JOIN m b
   ON a.conv_id = b.conv_id
- AND b.turn_idx BETWEEN a.turn_idx AND a.turn_idx + 2
+ AND b.turn_idx BETWEEN a.turn_idx AND a.turn_idx + {COOCCUR_WINDOW}
  AND a.entity_id <> b.entity_id
  AND (b.turn_idx > a.turn_idx OR b.start > a.start)
 GROUP BY a.conv_id, a.canonical_name, b.canonical_name
@@ -882,26 +887,38 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_MEDIA_FEATURES_SQL = """
+def _media_features_sql() -> str:
+    """DuckDB twin of q_media_features for the current
+    `operators/multimodal.py::FEATURE_DIM`: value ``i`` of
+    `_fake_feature` is byte ``i % 16`` of md5 block ``i // 16``.
+    ``n_bytes`` is the length of the md5 payload."""
+    from ..operators.multimodal import FEATURE_DIM
+
+    return f"""
 WITH m AS (
   SELECT doc_id AS media_id,
          (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS kind,
-         md5(md5(text) || '|0') AS fh
+         md5(text) AS ph
   FROM documents
 ),
 b AS (
-  SELECT media_id, kind, fh, CAST(unnest(range(16)) AS INT) AS i FROM m
+  SELECT media_id, kind, ph, CAST(unnest(range({FEATURE_DIM})) AS INT) AS i FROM m
+),
+h AS (
+  SELECT media_id, kind, i, i % 16 AS j,
+         md5(ph || '|' || CAST(i // 16 AS VARCHAR)) AS fh
+  FROM b
 ),
 v AS (
   SELECT media_id, kind, i,
-         ((strpos('0123456789abcdef', substr(fh, 2*i+1, 1)) - 1) * 16
-          + (strpos('0123456789abcdef', substr(fh, 2*i+2, 1)) - 1)) / 128.0
+         ((strpos('0123456789abcdef', substr(fh, 2*j+1, 1)) - 1) * 16
+          + (strpos('0123456789abcdef', substr(fh, 2*j+2, 1)) - 1)) / 128.0
          - 1.0 AS val
-  FROM b
+  FROM h
 )
 SELECT media_id, kind,
        CAST(16 AS INT) AS n_bytes,
-       CAST(16 AS INT) AS feature_dim,
+       CAST({FEATURE_DIM} AS INT) AS feature_dim,
        SUM(val) AS feature_sum,
        MIN(CASE WHEN i = 0 THEN val END) AS feature_first
 FROM v GROUP BY media_id, kind
@@ -919,15 +936,14 @@ def _training_features_sql() -> str:
     by the max-length CASE below erroring the twin if the assumption ever
     breaks (better a loud driver ERR than a silent mismatch)."""
     from ..core.features import CHAR_OFFSET, FeatureConfig
-    from ..core.tags import build_tag_vocab
+    from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID
 
     cfg = FeatureConfig()
-    ent2id = build_tag_vocab(cfg.types, cfg.scheme)
     tag_vals = ", ".join(
-        f"('{tag}', {i})" for tag, i in ent2id.items() if tag != "O"
+        f"('{tag}', {i})" for tag, i in ENT2ID.items() if tag != "O"
     )
     body = cfg.max_seq_len - 2
-    mod = cfg.vocab_size - CHAR_OFFSET
+    mod = CHAR_VOCAB_SIZE - CHAR_OFFSET
     return f"""
 WITH m AS ({_DICT_MENTIONS_SQL}),
 tr AS ({_TR}),
@@ -1154,7 +1170,7 @@ ORACLE_SQL = {
     "events_running_value": Q_EVENTS_RUNNING_SQL,
     "events_sessionized": Q_EVENTS_SESSION_SQL,
     "canonical_entities": Q_CANONICAL_ENTITIES_SQL,
-    "media_features": Q_MEDIA_FEATURES_SQL,
+    "media_features": _media_features_sql(),
     "training_features": _training_features_sql(),
     "augmented_corpus": _augmented_corpus_sql(),
 }

@@ -48,9 +48,14 @@ this SQL (pinned by `tests/test_viterbi_twin.py` at two scale factors).
 
 from __future__ import annotations
 
-from ..core.model import DeterministicTagger, TaggerConfig
-from ..core.oracle import RelationConfig
-from ..core.tags import build_tag_vocab, invert_vocab
+from ..core.model import BOOST, GAZETTEER, DeterministicTagger, TaggerConfig
+from ..core.pairing import (
+    ADJACENT_OBJECT_TYPES,
+    ADJACENT_PRED,
+    COOCCUR_PRED,
+    COOCCUR_WINDOW,
+)
+from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID, ID2ENT
 
 # chained gazetteer-scan depth: shortest alias is 3 chars and every match
 # needs a non-alnum follower, so <= ceil(126 / 4) + slack matches/turn
@@ -84,25 +89,24 @@ def _kg_mentions_parts(transcripts_sql: str,
     limit = cfg.max_seq_len - 2
 
     # --- charset: printable ASCII, emission vectors from the tagger's
-    # whole-vocab table (codepoint < vocab_size => id == codepoint)
+    # whole-vocab table (codepoint < CHAR_VOCAB_SIZE => id == codepoint)
     char_rows = []
     for cp in range(32, 127):
         ch = chr(cp)
         sql_ch = ch.replace("'", "''")
-        vec = t._char_table()[cp % cfg.vocab_size]
+        vec = t._char_table()[cp % CHAR_VOCAB_SIZE]
         char_rows.append(f"('{sql_ch}', {_list_lit(vec)})")
     charvec = ",\n    ".join(char_rows)
 
     # --- gazetteer alternation, longest-first (regex alternative order)
-    ent2id = build_tag_vocab(cfg.types, cfg.scheme)
-    alts = sorted((a for a, _ in cfg.gazetteer), key=len, reverse=True)
-    gaz_type = dict(cfg.gazetteer)
+    alts = sorted((a for a, _ in GAZETTEER), key=len, reverse=True)
+    gaz_type = dict(GAZETTEER)
     al_rows = []
     for idx, alias in enumerate(alts):
         ty = gaz_type[alias]
         al_rows.append(
-            f"({idx}, '{alias}', {len(alias)}, {ent2id[f'B-{ty}']}, "
-            f"{ent2id[f'I-{ty}']}, {ent2id[f'E-{ty}']}, {ent2id[f'S-{ty}']})"
+            f"({idx}, '{alias}', {len(alias)}, {ENT2ID[f'B-{ty}']}, "
+            f"{ENT2ID[f'I-{ty}']}, {ENT2ID[f'E-{ty}']}, {ENT2ID[f'S-{ty}']})"
         )
     al = ",\n    ".join(al_rows)
 
@@ -116,10 +120,9 @@ def _kg_mentions_parts(transcripts_sql: str,
     ) + "]"
 
     # --- tag id -> (prefix, type) with the id-0 -> id2ent[1] quirk
-    id2ent = invert_vocab(ent2id)
     tag_rows = []
     for tid in range(T):
-        label = id2ent[1] if tid == 0 else id2ent[tid]
+        label = ID2ENT[1] if tid == 0 else ID2ENT[tid]
         prefix, _, ty = label.partition("-")
         tag_rows.append(f"({tid}, '{prefix}', '{ty}')")
     tagmap = ",\n    ".join(tag_rows)
@@ -194,7 +197,7 @@ bt{k} AS MATERIALIZED (
     bt_stages_sql = ",".join(bt_stages)
     bt_union = "\n  UNION ALL\n  ".join(bt_parts)
 
-    boost = _lit(cfg.boost)
+    boost = _lit(BOOST)
     ctes = f"""
 tr AS MATERIALIZED ({transcripts_sql}),
 turns AS MATERIALIZED (
@@ -346,10 +349,9 @@ def kg_triples_sql(transcripts_sql: str, canonical_entities_sql: str,
     co-occurrence (`relations.py:82-162`), and
     the evidence aggregation with post-agg name resolution
     (`relations.py:206-253`)."""
-    rel = RelationConfig()
     m_ctes, m_final = _kg_mentions_parts(transcripts_sql)
-    obj_types = ", ".join(f"'{t}'" for t in rel.adjacent_object_types)
-    W = rel.cooccur_window
+    obj_types = ", ".join(f"'{t}'" for t in ADJACENT_OBJECT_TYPES)
+    W = COOCCUR_WINDOW
     return f"""
 WITH
 {m_ctes},
@@ -377,7 +379,7 @@ adj_base AS MATERIALIZED (
 ),
 adj_ev AS MATERIALIZED (
   SELECT a.conv_id, lc.canonical_id AS subj_cid,
-         '{rel.adjacent_pred}' AS pred, rc.canonical_id AS obj_cid,
+         '{ADJACENT_PRED}' AS pred, rc.canonical_id AS obj_cid,
          a.turn_idx, CAST(1 AS BIGINT) AS n_evidence
   FROM adj_base a
   JOIN trx t ON t.conv_id = a.conv_id AND t.turn_idx = a.turn_idx
@@ -397,7 +399,7 @@ per_turn AS MATERIALIZED (
   FROM canonical GROUP BY 1, 2, 3
 ),
 cross_ev AS MATERIALIZED (
-  SELECT p.conv_id, p.subj_cid, '{rel.cooccur_pred}' AS pred,
+  SELECT p.conv_id, p.subj_cid, '{COOCCUR_PRED}' AS pred,
          b.canonical_id AS obj_cid, p.src_turn AS turn_idx,
          CAST(p.n_src * b.n_inst AS BIGINT) AS n_evidence
   FROM (SELECT conv_id, turn_idx AS src_turn, canonical_id AS subj_cid,
@@ -409,7 +411,7 @@ cross_ev AS MATERIALIZED (
   WHERE p.subj_cid <> b.canonical_id
 ),
 same_ev AS MATERIALIZED (
-  SELECT a.conv_id, a.canonical_id AS subj_cid, '{rel.cooccur_pred}' AS pred,
+  SELECT a.conv_id, a.canonical_id AS subj_cid, '{COOCCUR_PRED}' AS pred,
          b.canonical_id AS obj_cid, a.turn_idx,
          CAST(COUNT(*) AS BIGINT) AS n_evidence
   FROM canonical a

@@ -1,11 +1,12 @@
 """Custom stateful streaming operator: incremental co-occurrence pairs.
 
 As canonical mentions stream in per conversation, emit each (subj_cid,
-obj_cid) canonical pair the FIRST time it becomes observable — new
-mentions pair with everything previously seen in that conversation plus
-the other new arrivals, and per-conversation state (the seen set) is kept
-by the engine in the state store, restored from the checkpoint across
-restarts.  This is the `applyInPandasWithState` re-expression of the batch
+obj_cid) canonical pair the FIRST time it becomes observable — a mention
+of an entity not yet seen in that conversation pairs with every entity
+seen before it, a mention of a seen entity emits nothing, and the
+per-conversation state (each entity's first arrival) is kept by the
+engine in the state store, restored from the checkpoint across restarts.
+This is the `applyInPandasWithState` re-expression of the batch
 co-occurrence frame (`operators/relations.py::relation_evidence`) for
 continuously arriving transcripts (streaming simplification, documented:
 pairing is conversation-wide rather than turn-windowed — the window bound
@@ -60,11 +61,10 @@ STATE_SCHEMA = StructType(
 
 def _pair_batches(key, pdf_iter: Iterator[pd.DataFrame], state):
     conv_id = key[0]
+    seen: dict[int, tuple[int, int]] = {}  # canonical id -> first (turn, start)
     if state.exists:
-        cids, turns, starts = state.get
-        seen = list(zip(cids, turns, starts))
-    else:
-        seen = []
+        for cid, turn, start in zip(*state.get):
+            seen.setdefault(cid, (turn, start))
     out_rows = []
     for pdf in pdf_iter:
         incoming = sorted(
@@ -76,20 +76,20 @@ def _pair_batches(key, pdf_iter: Iterator[pd.DataFrame], state):
             key=lambda m: (m[1], m[2]),
         )
         for cid, turn, start in incoming:
-            for s_cid, s_turn, s_start in seen:
-                if s_cid == cid:
-                    continue
+            if cid in seen:
+                continue
+            for s_cid, (s_turn, s_start) in seen.items():
                 # direct earlier -> later (batch operator's ordering rule)
                 if (s_turn, s_start) <= (turn, start):
                     subj, obj, ev = s_cid, cid, s_turn
                 else:
                     subj, obj, ev = cid, s_cid, turn
                 out_rows.append((conv_id, subj, obj, ev))
-            seen.append((cid, turn, start))
+            seen[cid] = (turn, start)
     state.update((
-        [m[0] for m in seen],
-        [m[1] for m in seen],
-        [m[2] for m in seen],
+        list(seen),
+        [t for t, _ in seen.values()],
+        [s for _, s in seen.values()],
     ))
     if out_rows:
         yield pd.DataFrame(out_rows, columns=["conv_id", "subj_cid", "obj_cid", "turn_idx"])

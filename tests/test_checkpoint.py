@@ -4,6 +4,9 @@ reference's `utils/trainUtils.py:60-115` contract without torch."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pytest
 
@@ -89,6 +92,24 @@ def test_roundtrip_idcnn_family(tmp_path):
     assert [tuple(r) for r in loaded.tag_batch(TEXTS)] == [
         tuple(r) for r in t.tag_batch(TEXTS)
     ]
+
+
+def test_config_with_a_removed_field_is_refused(tmp_path):
+    """A config.json carrying a field the config no longer has (the
+    embedding width is a constant now) makes both loaders raise instead of
+    loading with the field dropped; the broadcast factory raises before
+    it touches Spark."""
+    ckpt = str(tmp_path / "ckpt")
+    save_tagger(DeterministicTagger(), ckpt)
+    path = os.path.join(ckpt, "config.json")
+    with open(path, encoding="utf-8") as f:
+        cfg = json.load(f)
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(dict(cfg, emb_dim=64), f)
+    with pytest.raises(TypeError, match="emb_dim"):
+        load_tagger(ckpt)
+    with pytest.raises(TypeError, match="emb_dim"):
+        broadcast_tagger_factory(None, ckpt)
 
 
 def test_strict_load_rejects_mismatch():

@@ -37,7 +37,7 @@ def test_encode_example_roundtrip():
     )
     # strip CLS and decode the label ids back to spans (the reference's
     # pred[1:1+len(text)] slice, main.py:104)
-    id2ent = invert_vocab(build_tag_vocab(cfg.types))
+    id2ent = invert_vocab(build_tag_vocab())
     body = feat["label_ids"][1 : 1 + len(text)]
     spans = {(m, s, t) for m, s, t in bioes_decode_flat(body, text, id2ent)}
     assert ("spark", 3, "ORG") in spans

@@ -9,7 +9,12 @@ scripts and the entry points.  Spark-free.
 - Every defaulted parameter of a top-level package function is passed, by
   some call, an expression other than its own default.  A default that no
   caller overrides is a constant: the body reads a module constant
-  instead, and an operator and its twin read the same one."""
+  instead, and an operator and its twin read the same one.
+- Every field of a package dataclass is set, by some call to its class,
+  to an expression other than its default.  A ``**`` splat sets nothing:
+  the one splat, in `core/checkpoint.py`, rebuilds a config from the JSON
+  that `save_tagger` wrote from a config.  A field that no caller sets is
+  a module constant."""
 
 from __future__ import annotations
 
@@ -20,7 +25,11 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "pytorch_bert_bilstm_crf_ner_spark"
 SEARCHED = [f"{d}/**/*.py" for d in (PACKAGE, "tests", "perfbench", "scripts")] + [
-    "bench.py", "bench_extra.py", "__spark_entry__.py"]
+    "bench.py", "__spark_entry__.py"]
+# Fields no call sets, kept because the benchmark's layer sweep
+# (`perfbench/workloads.py::kg_layers`) reads ``PipelineConfig().tagger``
+# and passes ``cfg.relations`` on; they go when that sweep is re-pointed.
+UNSET_FIELDS_KEPT = {"PipelineConfig.tagger", "PipelineConfig.relations"}
 
 
 def _trees() -> dict[str, ast.Module]:
@@ -84,29 +93,38 @@ def test_every_top_level_definition_is_referenced():
     assert unused == [], "nothing references:\n" + "\n".join(unused)
 
 
-def test_every_default_is_passed_somewhere():
-    trees = _trees()
-    # callee name -> its calls; a callee is resolved by bare name
-    # (``f(...)`` and ``x.f(...)``), so a name shared by two functions
-    # keeps the knobs of both
+def _calls(trees: dict[str, ast.Module]) -> dict[str, list[ast.Call]]:
+    """Callee name -> its calls.  A callee is resolved by bare name
+    (``f(...)`` and ``x.f(...)``), so a name shared by two functions keeps
+    the knobs of both."""
     calls: dict[str, list[ast.Call]] = {}
     for tree in trees.values():
         for call in ast.walk(tree):
             if isinstance(call, ast.Call):
                 name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
                 calls.setdefault(name, []).append(call)
+    return calls
 
-    def overrides(call: ast.Call, i: int | None, arg: str, default: ast.expr) -> bool:
-        # the same literal or the same name as the default passes nothing new
-        if any(k.arg is None for k in call.keywords):
-            return True  # **kwargs passes every name
-        given = [k.value for k in call.keywords if k.arg == arg]
-        if i is not None:
-            if any(isinstance(a, ast.Starred) for a in call.args[: i + 1]):
-                return True  # *args passes every position from there on
-            given += call.args[i : i + 1]
-        return any(ast.dump(g) != ast.dump(default) for g in given)
 
+def _overrides(call: ast.Call, i: int | None, arg: str, default: ast.expr,
+               splats: bool = True) -> bool:
+    """Whether ``call`` passes ``arg`` (position ``i``) something other
+    than ``default``: the same literal or the same name passes nothing
+    new.  A ``*args`` or ``**kwargs`` splat passes everything if
+    ``splats``, else nothing."""
+    if splats and any(k.arg is None for k in call.keywords):
+        return True
+    given = [k.value for k in call.keywords if k.arg == arg]
+    if i is not None:
+        if any(isinstance(a, ast.Starred) for a in call.args[: i + 1]):
+            return splats  # *args covers every position from there on
+        given += call.args[i : i + 1]
+    return any(ast.dump(g) != ast.dump(default) for g in given)
+
+
+def test_every_default_is_passed_somewhere():
+    trees = _trees()
+    calls = _calls(trees)
     n_knobs, dead = 0, []
     for path, tree in trees.items():
         if not path.startswith(PACKAGE + os.sep):
@@ -123,9 +141,45 @@ def test_every_default_is_passed_somewhere():
                       if d is not None]
             for i, arg, default in knobs:
                 n_knobs += 1
-                if not any(overrides(call, i, arg, default)
+                if not any(_overrides(call, i, arg, default)
                            for call in calls.get(node.name, [])):
                     dead.append(f"{path}:{node.lineno} {node.name}.{arg}")
     assert n_knobs > 50  # the walk found the defaults
     assert dead == [], (f"{len(dead)} of {n_knobs} defaults no call overrides:\n"
+                        + "\n".join(dead))
+
+
+def _field_default(value: ast.expr) -> ast.expr:
+    """A dataclass field's default as a caller would pass it:
+    ``field(default_factory=F)`` is ``F()``."""
+    if isinstance(value, ast.Call) and getattr(value.func, "id", None) == "field":
+        (factory,) = [k.value for k in value.keywords if k.arg == "default_factory"]
+        return ast.Call(func=factory, args=[], keywords=[])
+    return value
+
+
+def test_every_config_field_is_set_somewhere():
+    trees = _trees()
+    calls = _calls(trees)
+    n_fields, dead = 0, []
+    for path, tree in trees.items():
+        if not path.startswith(PACKAGE + os.sep):
+            continue
+        for node in tree.body:
+            if not (isinstance(node, ast.ClassDef) and any(
+                    "dataclass" in ast.dump(d) for d in node.decorator_list)):
+                continue
+            fields = [f for f in node.body
+                      if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)]
+            for i, f in enumerate(fields):
+                n_fields += 1
+                name = f"{node.name}.{f.target.id}"
+                if f.value is None or name in UNSET_FIELDS_KEPT:
+                    continue  # a field with no default is set by every call
+                default = _field_default(f.value)
+                if not any(_overrides(call, i, f.target.id, default, splats=False)
+                           for call in calls.get(node.name, [])):
+                    dead.append(f"{path}:{f.lineno} {name}")
+    assert n_fields > 10  # the walk found the configs
+    assert dead == [], (f"{len(dead)} of {n_fields} config fields no call sets:\n"
                         + "\n".join(dead))

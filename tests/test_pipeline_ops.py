@@ -49,6 +49,31 @@ def test_media_decode_plumbing(spark):
     assert a == b
 
 
+@pytest.mark.parametrize("dim", [8, 24])
+def test_media_twin_follows_feature_dim(monkeypatch, dim):
+    """The DuckDB media twin reads FEATURE_DIM when it is built: at 8 and
+    at 24 (two md5 blocks) it equals `_fake_feature` of the payloads."""
+    import hashlib
+
+    import duckdb
+
+    from pytorch_bert_bilstm_crf_ner_spark.operators import multimodal
+    from pytorch_bert_bilstm_crf_ner_spark.plans.queries import _media_features_sql
+
+    monkeypatch.setattr(multimodal, "FEATURE_DIM", dim)
+    texts = ["", "spark hash join", "高勇 batch", "x" * 300]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(texts)))
+    want = []
+    for doc_id, text in enumerate(texts):
+        f = multimodal._fake_feature(hashlib.md5(text.encode()).digest())
+        assert len(f) == dim
+        want.append((doc_id, ("image", "audio", "video")[doc_id % 3], 16, dim,
+                     sum(f), f[0]))
+    assert sorted(con.execute(_media_features_sql()).fetchall()) == want
+
+
 def test_synth_transcripts_deterministic(spark):
     from pytorch_bert_bilstm_crf_ner_spark.sources.synth import synth_transcripts
 

@@ -50,7 +50,7 @@ def test_encode_decode_roundtrip(case):
     text, spans = case
     cfg = FeatureConfig(max_seq_len=70)
     feat = encode_example(text, spans, cfg)
-    id2ent = invert_vocab(build_tag_vocab(cfg.types))
+    id2ent = invert_vocab(build_tag_vocab())
     body = feat["label_ids"][1 : 1 + len(text)]
     got = {(m, s, t) for m, s, t in bioes_decode_flat(body, text, id2ent)}
     want = {(m, s, t) for t, m, s in spans}

@@ -59,7 +59,6 @@ def test_relation_triples_edge_cases_match_oracle(spark):
         relation_triples,
     )
 
-    cfg = oracle.RelationConfig(cooccur_window=2)
     # (conv, turn, text, [(mention, start, type, canonical id or None)])
     spec = [
         ("c1", 0, "ann bob dr ed", [("ann", 0, "NAME", 1), ("bob", 4, "NAME", None),
@@ -84,8 +83,8 @@ def test_relation_triples_edge_cases_match_oracle(spark):
         "conv_id string, turn_idx int, mention string, start int, type string, "
         "adj_start int, canonical_id bigint, canonical_name string")
 
-    want = oracle.relation_triples(mentions, canonical, turns, cfg)
-    got = sorted(tuple(r) for r in relation_triples(cm, cfg).collect())
+    want = oracle.relation_triples(mentions, canonical, turns)
+    got = sorted(tuple(r) for r in relation_triples(cm).collect())
     assert got == want
     preds = {(r[0], r[1], r[2]) for r in got}
     assert ("e1", "has_attribute", "e3") in preds      # turn 1, "ann dr"

@@ -14,6 +14,7 @@ import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.core.decode import bioes_decode_flat
 from pytorch_bert_bilstm_crf_ner_spark.core.model import (
+    GAZETTEER,
     DeterministicTagger,
     TaggerConfig,
 )
@@ -89,8 +90,7 @@ def test_gazetteer_greedy_scan_model_matches_finditer():
     the actual compiled regex's finditer on word soup built from alias
     fragments (overlap-heavy on purpose)."""
     t = DeterministicTagger()
-    cfg = t.cfg
-    alts = sorted((a for a, _ in cfg.gazetteer), key=len, reverse=True)
+    alts = sorted((a for a, _ in GAZETTEER), key=len, reverse=True)
     rng = random.Random(11)
     vocab = ["hash", "join", "hash join", "order", "key", "order key",
              "scan", "table scan", "spark", "x", "keykey", "hashs"]
