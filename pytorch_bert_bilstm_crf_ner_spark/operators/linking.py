@@ -7,12 +7,21 @@ side gets ``salt = pmod(xxhash64(alias_key), K)``, the dict side is
 exploded K ways, and the join key becomes (alias, type, salt) so one hot
 alias ("head entity") spreads over K reducers.  AQE skew-join splitting is
 enabled globally as the second line of defense.
+
+:func:`canonical_mentions` is the one link step of the batch pipeline and
+the stream: mentions straight to canonical entities.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..core.entities import canonical_dict_rows
+from ..sources.entity_dict import entity_dict_df
+
+# one canonical mention: a turn delivered twice yields the same keys
+CANONICAL_KEY = ["conv_id", "turn_idx", "start", "mention", "canonical_id"]
 
 
 def link_mentions(
@@ -55,3 +64,18 @@ def link_mentions(
             "inner",
         )
     return joined.select(*mentions.columns, "entity_id", "canonical_name")
+
+
+def canonical_mentions(mentions: DataFrame, broadcast_dict: bool = True) -> DataFrame:
+    """Link straight to canonical entities: the driver-held dictionary is
+    canonicalized once (union-find over its alias-sharing graph), so one
+    join replaces link -> connected components -> canonicalize.  Every
+    (alias, type) key lies in one component, so the rows equal
+    `canonicalize_mentions(link_mentions(...), canonical_entities(...))`;
+    the dedupe still folds repeated turns."""
+    edict = entity_dict_df(mentions.sparkSession, canonical_dict_rows())
+    return (
+        link_mentions(mentions, edict, broadcast_dict=broadcast_dict)
+        .withColumnRenamed("entity_id", "canonical_id")
+        .dropDuplicates(CANONICAL_KEY)
+    )

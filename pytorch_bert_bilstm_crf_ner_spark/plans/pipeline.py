@@ -5,7 +5,7 @@ Stages (SURVEY.md §3 "Spark lifecycle"):
   transcripts -> mentions (Arrow-batched tag UDF; each span carries
   ``adj_start``, the text half of the adjacency rule) -> canonical (one
   broadcast join against the dictionary canonicalized once on the driver,
-  `core/entities.py::canonical_dict_rows`) -> triples (adjacency and
+  `operators/linking.py::canonical_mentions`) -> triples (adjacency and
   windowed co-occurrence as window frames over one conv_id exchange of the
   canonical stage, `operators/relations.py::relation_triples`) ->
   partitioned graph table.
@@ -40,12 +40,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from ..core.entities import canonical_dict_rows
 from ..core.model import TaggerConfig
-from ..operators.linking import link_mentions
+from ..operators.linking import canonical_mentions
 from ..operators.relations import relation_triples
 from ..operators.tagging import extract_mentions
-from ..sources.entity_dict import entity_dict_df
 from ..sources.transcripts import transcripts_from_documents
 
 
@@ -207,18 +205,7 @@ def run_pipeline(
     # Each stage feeds only the next one, so none is cached: without
     # ``output_dir`` building the stages runs no job and leaves no cache.
 
-    # Link straight to canonical entities: the driver-held dictionary is
-    # canonicalized once (union-find over its alias-sharing graph), so one
-    # join replaces link -> connected components -> canonicalize.  Every
-    # (alias, type) key lies in one component, so the rows equal
-    # `canonicalize_mentions(link_mentions(...), canonical_entities(...))`;
-    # the dedupe still folds repeated turns.
-    canonical = (
-        link_mentions(mentions, entity_dict_df(spark, canonical_dict_rows()),
-                      broadcast_dict=cfg.broadcast_dict)
-        .withColumnRenamed("entity_id", "canonical_id")
-        .dropDuplicates(["conv_id", "turn_idx", "start", "mention", "canonical_id"])
-    )
+    canonical = canonical_mentions(mentions, broadcast_dict=cfg.broadcast_dict)
     canonical = _materialize(canonical, out, "canonical", run_id)
 
     trip = relation_triples(canonical)

@@ -25,7 +25,11 @@ from ..core.pairing import (
     COOCCUR_PRED,
     COOCCUR_WINDOW,
 )
-from ..sources.entity_dict import entity_dict_df, entity_dict_values_sql
+from ..sources.entity_dict import (
+    entity_dict_df,
+    entity_dict_values_sql,
+    single_word_dict_df,
+)
 from ..sources.transcripts import TRANSCRIPTS_SQL, transcripts_from_documents
 
 # --------------------------------------------------------------------- #
@@ -51,10 +55,6 @@ _CONV_NUM_SQL = (
 _SINGLE_DICT_SQL = entity_dict_values_sql(
     tuple(r for r in ENTITY_DICT_ROWS if " " not in r[1])
 )
-
-
-def _single_word_dict(spark: SparkSession) -> DataFrame:
-    return entity_dict_df(spark).filter(~F.col("alias").contains(" "))
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,7 +111,7 @@ FROM words
 def _dict_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-exact dictionary tagger (single-word aliases): the
     SQL-checkable twin of the extraction+linking chain."""
-    d = _single_word_dict(spark).select(
+    d = single_word_dict_df(spark).select(
         F.col("alias").alias("word"), "type", "entity_id", "canonical_name"
     )
     return (

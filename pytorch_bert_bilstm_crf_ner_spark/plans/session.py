@@ -73,8 +73,11 @@ def ship_package(spark: SparkSession) -> str:
     """Ship this package to executor python workers (the programmatic
     equivalent of ``spark-submit --py-files engine.zip``).  Local mode
     usually inherits the driver's sys.path, but a driver launched from
-    another cwd — or a real multi-executor cluster — needs the archive."""
-    zpath = os.path.join(tempfile.gettempdir(), "pytorch_bert_bilstm_crf_ner_spark.zip")
+    another cwd — or a real multi-executor cluster — needs the archive.
+    The archive name is keyed on the package path, so two checkouts that
+    share a temp dir never ship each other's code."""
+    key = hashlib.sha256(_PKG_ROOT.encode()).hexdigest()[:16]
+    zpath = os.path.join(tempfile.gettempdir(), f"pytorch_bert_bilstm_crf_ner_spark-{key}.zip")
     newest = max(os.path.getmtime(p) for p in _package_sources())
     if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
         write_package_zip(zpath)

@@ -335,20 +335,20 @@ def kg_mentions_sql(transcripts_sql: str,
 def kg_triples_sql(transcripts_sql: str, canonical_entities_sql: str,
                    entity_dict_rel: str) -> str:
     """DuckDB twin of the full pipeline's ``kg_triples``
-    (`plans/pipeline.py::run_pipeline` -> `operators/relations.py::triples`
-    with the default pre-aggregated co-occurrence): the CRF mentions come
+    (`plans/pipeline.py::run_pipeline` ->
+    `operators/relations.py::relation_triples`): the CRF mentions come
     from :func:`kg_mentions_sql` embedded as a CTE, then linking
     (alias+type equi-join), canonicalization (the recursive-CTE
     connected-components twin + DISTINCT — duplicate-key rows are fully
     identical, see `operators/canonicalize.py::canonicalize_mentions`;
-    the pipeline does both in one join against
-    `core/entities.py::canonical_dict_rows`, this twin keeps the two
-    steps as an independent check), adjacency (LEAD window +
-    between-text separator filter, `operators/relations.py:31-79`),
-    pre-aggregated cross-turn plus instance-level same-turn
-    co-occurrence (`relations.py:82-162`), and
-    the evidence aggregation with post-agg name resolution
-    (`relations.py:206-253`)."""
+    the pipeline does both in one join,
+    `operators/linking.py::canonical_mentions`, and this twin keeps the
+    two steps as an independent check).  The relation instances of
+    `relations.py::relation_evidence` are spelled as joins: adjacency
+    (LEAD window + between-text separator filter), pre-aggregated
+    cross-turn plus instance-level same-turn co-occurrence, then the
+    evidence aggregation of `relation_triples` with post-agg name
+    resolution."""
     m_ctes, m_final = _kg_mentions_parts(transcripts_sql)
     obj_types = ", ".join(f"'{t}'" for t in ADJACENT_OBJECT_TYPES)
     W = COOCCUR_WINDOW

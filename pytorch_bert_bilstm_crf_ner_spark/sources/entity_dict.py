@@ -1,6 +1,7 @@
 """Entity dictionary as a small Spark DataFrame — the broadcast side of the
-linking join, and the input of `canonical_entities`, `dict_mentions` and
-the streaming window join (reference analog: per-type entity inventories,
+linking join and the input of `canonical_entities`; its single-word
+aliases (:func:`single_word_dict_df`) feed `dict_mentions` and the
+streaming window join (reference analog: per-type entity inventories,
 `data/cner/aug_data/*.txt` built by `data_augment/aug.py:31-59`).
 
 The rows live on the driver, so the frame is a JVM ``LocalRelation``
@@ -9,6 +10,7 @@ task."""
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     LongType,
@@ -32,6 +34,12 @@ ENTITY_DICT_SCHEMA = StructType(
 
 def entity_dict_df(spark: SparkSession, rows=ENTITY_DICT_ROWS) -> DataFrame:
     return local_frame(spark, rows, ENTITY_DICT_SCHEMA)
+
+
+def single_word_dict_df(spark: SparkSession) -> DataFrame:
+    """The dictionary's single-word aliases: the side a word-exact join
+    (split on spaces) can match."""
+    return entity_dict_df(spark).filter(~F.col("alias").contains(" "))
 
 
 def entity_dict_values_sql(rows=ENTITY_DICT_ROWS) -> str:

@@ -1,6 +1,6 @@
 """Event-time windowed aggregation with a watermark — the late-data half
-of the Structured Streaming surface (the ingest module covers incremental
-arrival; `stateful.py` covers per-key custom state).
+of the Structured Streaming surface (`ingest.py` covers incremental
+arrival; `neardup.py` covers per-key custom state).
 
 ``windowed_entity_counts`` is the canonical shape for a 100 TB stream:
 stream–static broadcast join (the entity dictionary is the static side —
@@ -19,7 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from ..sources.entity_dict import entity_dict_df
+from ..sources.entity_dict import single_word_dict_df
 from .ingest import TRANSCRIPTS_SCHEMA
 
 WINDOW = "10 minutes"     # event-time window length
@@ -50,8 +50,7 @@ def windowed_entity_counts(
     # (different entity_ids later merged by canonicalization) and a plain
     # join would multiply each mention by its alias multiplicity.
     d = (
-        entity_dict_df(spark)
-        .filter(~F.col("alias").contains(" "))
+        single_word_dict_df(spark)
         .select(F.col("alias").alias("word"), "type")
         .distinct()
     )

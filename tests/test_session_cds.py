@@ -249,3 +249,26 @@ def test_shipped_and_spark_submit_archives_list_the_same_names(tmp_path, monkeyp
     pkg = "pytorch_bert_bilstm_crf_ner_spark"
     assert f"{pkg}/plans/session.py" in names
     assert all(n.startswith(pkg + "/") and n.endswith(".py") for n in names)
+
+
+def test_two_checkouts_ship_two_archives(tmp_path, monkeypatch):
+    """Two package roots that share a temp dir get one archive each, each
+    holding its own code.  Spark-free: the session is a stub."""
+    import types
+    import zipfile
+
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_path))
+    stub = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(addPyFile=lambda path: None))
+    pkg = "pytorch_bert_bilstm_crf_ner_spark"
+    shipped = {}
+    for checkout in ("a", "b"):
+        root = tmp_path / checkout / pkg
+        root.mkdir(parents=True)
+        (root / "__init__.py").write_text(f"CHECKOUT = {checkout!r}\n")
+        monkeypatch.setattr(session, "_PKG_ROOT", str(root))
+        shipped[checkout] = session.ship_package(stub)
+    assert shipped["a"] != shipped["b"]
+    for checkout, path in shipped.items():
+        with zipfile.ZipFile(path) as zf:
+            assert zf.read(f"{pkg}/__init__.py").decode() == f"CHECKOUT = {checkout!r}\n"
