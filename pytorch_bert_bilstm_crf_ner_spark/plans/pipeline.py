@@ -2,16 +2,19 @@
 resume.
 
 Stages (SURVEY.md §3 "Spark lifecycle"):
-  transcripts -> mentions (Arrow-batched tag UDF; each span carries
-  ``adj_start``, the text half of the adjacency rule) -> canonical (one
-  broadcast join against the dictionary canonicalized once on the driver,
+  transcripts -> mentions (Arrow-batched tag UDF over a round-robin
+  repartition of the transcripts; each span carries ``adj_start``, the
+  text half of the adjacency rule) -> canonical (one broadcast join
+  against the dictionary canonicalized once on the driver,
   `operators/linking.py::canonical_mentions`) -> triples (adjacency and
   windowed co-occurrence as window frames over one conv_id exchange of the
-  canonical stage, `operators/relations.py::relation_triples`) ->
+  canonical rows, `operators/relations.py::relation_triples`) ->
   partitioned graph table.
 
 Resume semantics (north_rule: "resumable from checkpoint with
-per-partition lineage + metrics"): every materialized stage writes
+per-partition lineage + metrics"): two stages are materialized, the ones
+dear to recompute — ``mentions`` (the tag UDF) and ``triples`` (the graph
+table).  Each writes
   <out>/<stage>/            stage rows (parquet, _SUCCESS marker)
   <out>/_lineage/<stage>/   one row per written part file (one parquet
                             file, _SUCCESS marker):
@@ -23,6 +26,8 @@ the file name), ``n_rows`` comes from the file's parquet footer and
 file per ``pred=`` directory of the triples stage).  A stage costs one
 Spark write: the lineage is read from the footers on the driver, and the
 stage is read back with its known schema, so no job infers it.
+``transcripts`` is the input itself, and ``canonical`` is rebuilt from
+the mentions inside the triples plan.
 A rerun with the same output dir skips every stage whose two _SUCCESS
 markers exist and reads it back instead of recomputing — kill the job
 between stages and relaunch, and only the missing stages run.
@@ -137,13 +142,7 @@ def _write_lineage(path: str, ldir: str, stage: str, run_id: str) -> None:
 def _write_stage(df: DataFrame, out: str, stage: str, run_id: str,
                  partition_by: tuple[str, ...] = ()) -> DataFrame:
     """Materialize a stage with one Spark write, then its lineage, then
-    read it back.
-
-    Lineage is ``<out>/_lineage/<stage>/``: one row per written part file,
-    ``(partition_id int, n_rows bigint, stage string, run_id string, file
-    string)``, where ``partition_id`` is the writing task's partition (from
-    the ``part-NNNNN-`` file name), ``n_rows`` the file footer's row count
-    and ``file`` the path relative to the stage directory.  The old lineage
+    read it back (the layout is in the module docstring).  The old lineage
     is removed before the write, so a run killed before the new lineage's
     _SUCCESS leaves the stage not done."""
     path, ldir = os.path.join(out, stage), _lineage_dir(out, stage)
@@ -174,10 +173,12 @@ def run_pipeline(
     transcripts_df: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Build every stage; returns all stage DataFrames.  With
-    ``cfg.output_dir`` set, stages are materialized with lineage and a
-    rerun resumes from the last completed stage.  ``transcripts_df``
-    overrides the documents-derived input (e.g. a synthesized bench table
-    or a real Iceberg transcripts table)."""
+    ``cfg.output_dir`` set, mentions and triples are materialized with
+    lineage and a rerun resumes from the last completed stage.
+    ``transcripts_df`` overrides the documents-derived input (e.g. a
+    synthesized bench table or a real Iceberg transcripts table).  A run
+    whose mentions stage is not done reads the input again, so a caller's
+    ``transcripts_df`` must be reproducible: parquet-backed or seeded."""
     cfg = cfg or PipelineConfig()
     out = cfg.output_dir
 
@@ -189,25 +190,22 @@ def run_pipeline(
     # Units of parallel model work for the UDF stage.  Tagging is per-turn
     # (no co-location requirement — downstream windows/joins shuffle on
     # their own keys), so round-robin gives the best load balance and makes
-    # one hot conversation harmless here.
+    # one hot conversation harmless here.  AQE does not coalesce a
+    # repartition(n), so the tag stage keeps n_part tasks.
     n_part = cfg.repartition or spark.sparkContext.defaultParallelism
-    transcripts = transcripts.repartition(n_part)
-    transcripts = _materialize(transcripts, out, "transcripts", run_id)
 
     tagger_factory = None
     if cfg.checkpoint_dir is not None:
         from ..core.checkpoint import broadcast_tagger_factory
 
         tagger_factory = broadcast_tagger_factory(spark, cfg.checkpoint_dir)
-    mentions = extract_mentions(transcripts, cfg.tagger,
+    mentions = extract_mentions(transcripts.repartition(n_part), cfg.tagger,
                                 tagger_factory=tagger_factory)
     mentions = _materialize(mentions, out, "mentions", run_id)
     # Each stage feeds only the next one, so none is cached: without
     # ``output_dir`` building the stages runs no job and leaves no cache.
 
     canonical = canonical_mentions(mentions, broadcast_dict=cfg.broadcast_dict)
-    canonical = _materialize(canonical, out, "canonical", run_id)
-
     trip = relation_triples(canonical)
     # graph table partitioned by predicate — partition pruning for
     # per-relation queries (Iceberg would add days(ts) etc.)

@@ -1237,11 +1237,7 @@ def _register_pipeline_sql() -> None:
         TEXT_PROFILE_SQL,
         doc_fingerprint_sql,
     )
-    from ..operators.ann import (
-        cosine_topk_sql,
-        ivf_cosine_topk_sql,
-        lsh_cosine_topk_sql,
-    )
+    from ..operators.ann import cosine_topk_sql, lsh_cosine_topk_sql
     from ..operators.dedup import (
         embedding_neardup_lsh_sql,
         lsh_candidate_pairs_sql,
@@ -1269,10 +1265,6 @@ def _register_pipeline_sql() -> None:
             "language_mixture": LANGUAGE_MIXTURE_SQL,
         }
     )
-    if os.path.exists(f"{_ORACLE_SF_DIR}/embeddings.parquet"):
-        ORACLE_SQL["ivf_ann_topk"] = ivf_cosine_topk_sql(
-            [list(c) for c in _ivf_centroids(f"{_ORACLE_SF_DIR}/embeddings.parquet")]
-        )
 
 
 _register_pipeline_sql()

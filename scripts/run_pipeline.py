@@ -19,12 +19,16 @@ Local sandbox run:
     python scripts/run_pipeline.py --input /root/testdata/sf0.001 \
         --output /tmp/kg_out
 
-The job is resumable: rerun with the same --output and completed stages
-are skipped.  Each stage's lineage is one parquet file under
-<output>/_lineage/<stage>/ with one row per written part file:
-(partition_id int, n_rows bigint, stage string, run_id string, file
-string) — the writing task's partition, the file footer's row count and
-the file's path relative to <output>/<stage>."""
+The job writes two stages, <output>/mentions (the tag UDF's output) and
+<output>/triples (the graph table, partitioned by pred), and is
+resumable: rerun with the same --output and a completed stage is skipped
+(triples are rebuilt from written mentions without tagging again).  Each
+stage's lineage is one parquet file under <output>/_lineage/<stage>/
+with one row per written part file: (partition_id int, n_rows bigint,
+stage string, run_id string, file string) — the writing task's
+partition, the file footer's row count and the file's path relative to
+<output>/<stage>.  The turn count reads the input, so it runs no
+shuffle."""
 
 from __future__ import annotations
 

@@ -78,7 +78,7 @@ def test_pipeline_resume(spark, tmp_path):
     assert got_t == {"r2"}
 
 
-STAGES = ("transcripts", "mentions", "canonical", "triples")
+STAGES = ("mentions", "triples")
 
 
 def _run_ids(spark, out, stage):
@@ -99,7 +99,7 @@ def test_stage_without_lineage_is_rerun(spark, tmp_path):
     shutil.rmtree(f"{out}/_lineage/mentions")
     run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=out), run_id="r2")
     assert _run_ids(spark, out, "mentions") == {"r2"}
-    assert _run_ids(spark, out, "transcripts") == {"r1"}
+    assert _run_ids(spark, out, "triples") == {"r1"}
 
 
 def _jobs_in_group(sc, group, action):
@@ -140,11 +140,68 @@ def test_stage_write_adds_no_jobs(spark, tmp_path, partition_by):
     assert n_bare >= 1 and n_stage == n_bare
 
 
-def test_triples_stage_write_runs_two_jobs(spark, tmp_path):
-    """The triples stage is one conv_id exchange and one write: a resumed
-    run whose only missing stage is the triples runs exactly two Spark
-    jobs (the shuffle map stage and the write) more than a resumed run
-    with nothing to do."""
+def test_fresh_run_writes_only_mentions_and_triples(spark, tmp_path):
+    """Only the stages dear to recompute are written: the tag UDF's
+    mentions and the graph table, each with its lineage.  Transcripts
+    are the input itself and canonical rows are rebuilt from mentions."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out = tmp_path / "kg"
+    run_pipeline(spark, SF_DIR, PipelineConfig(output_dir=str(out)), run_id="r1")
+    assert sorted(os.listdir(out)) == ["_lineage", *STAGES]
+    assert sorted(os.listdir(out / "_lineage")) == list(STAGES)
+
+
+def _digest(df):
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    return tuple(df.selectExpr("count(1)", f"bit_xor(xxhash64({cols}))").first())
+
+
+def _sql_plans_since(spark, execution_id):
+    """Final physical plan text of every SQL execution after
+    ``execution_id``, from the session's SQL status store."""
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > execution_id:
+            plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def test_resumed_triples_read_written_mentions(spark, tmp_path):
+    """With mentions done and triples gone, the rerun's one write is the
+    triples stage: its executed plan scans the written mentions, runs no
+    tag UDF (no ArrowEvalPython) and rebuilds the same triples."""
+    from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    out = str(tmp_path / "kg")
+    cfg = PipelineConfig(output_dir=out)
+    want = _digest(run_pipeline(spark, SF_DIR, cfg, run_id="r1")["triples"])
+    shutil.rmtree(f"{out}/triples")
+    last = max(_sql_plans_since(spark, -1), default=-1)
+    got = run_pipeline(spark, SF_DIR, cfg, run_id="r2")["triples"]
+    writes = [p for p in _sql_plans_since(spark, last).values()
+              if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1, writes
+    assert f"{out}/mentions]" in writes[0], writes[0]
+    assert "ArrowEvalPython" not in writes[0], writes[0]
+    assert _digest(got) == want and want[0] > 0
+
+
+def test_triples_stage_write_runs_four_jobs(spark, tmp_path):
+    """The triples stage reads the written mentions, links them and writes
+    the graph table: a resumed run whose only missing stage is the
+    triples runs exactly four Spark jobs more than a resumed run with
+    nothing to do — the dictionary broadcast of the link join, the
+    shuffle map stage of the canonical dedupe, the shuffle map stage of
+    the conv_id exchange, and the write."""
     from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -159,9 +216,9 @@ def test_triples_stage_write_runs_two_jobs(spark, tmp_path):
     shutil.rmtree(f"{out}/triples")
     n_triples = _jobs_in_group(sc, f"{g}/triples",
                                lambda: run_pipeline(spark, SF_DIR, cfg, run_id="r3"))
-    assert n_triples - n_done == 2
+    assert n_triples - n_done == 4
     assert _run_ids(spark, out, "triples") == {"r3"}
-    assert _run_ids(spark, out, "canonical") == {"r1"}
+    assert _run_ids(spark, out, "mentions") == {"r1"}
 
 
 def test_resumed_run_with_every_stage_done_runs_no_job(spark, tmp_path):
