@@ -88,14 +88,20 @@ def save_tagger(tagger: DeterministicTagger, path: str) -> None:
     np.savez(os.path.join(path, "weights.npz"), **state_dict(tagger))
 
 
-def load_tagger(path: str) -> DeterministicTagger:
-    """Rebuild the tagger from a checkpoint directory; the checkpoint's
-    weights are authoritative (they overwrite the seeded init).  A config
-    field the tagger does not have raises."""
+def _read_checkpoint(path: str) -> tuple[TaggerConfig, dict[str, np.ndarray]]:
+    """(config, state_dict) of a checkpoint directory.  A config field the
+    tagger does not have raises."""
     with open(os.path.join(path, "config.json"), encoding="utf-8") as f:
         cfg = TaggerConfig(**json.load(f))
     with np.load(os.path.join(path, "weights.npz")) as z:
         sd = {k: z[k] for k in z.files}
+    return cfg, sd
+
+
+def load_tagger(path: str) -> DeterministicTagger:
+    """Rebuild the tagger from a checkpoint directory; the checkpoint's
+    weights are authoritative (they overwrite the seeded init)."""
+    cfg, sd = _read_checkpoint(path)
     return load_state_dict(DeterministicTagger(cfg), sd)
 
 
@@ -109,11 +115,8 @@ def broadcast_tagger_factory(spark, path: str):
     `load_model_and_parallel` + `predict.py` flow.  The config is built
     before the broadcast, so a field the tagger does not have raises
     here, not in a task."""
-    with open(os.path.join(path, "config.json"), encoding="utf-8") as f:
-        cfg = TaggerConfig(**json.load(f))
-    with np.load(os.path.join(path, "weights.npz")) as z:
-        sd = {k: z[k] for k in z.files}
-    bcast = spark.sparkContext.broadcast((cfg, sd))
+    ckpt = _read_checkpoint(path)
+    bcast = spark.sparkContext.broadcast(ckpt)
 
     def factory() -> DeterministicTagger:
         cfg_b, weights = bcast.value

@@ -9,18 +9,22 @@ vector width from the batch and rejects null or ragged rows.
 
 - :func:`pair_cosine_parts` — (dot, norm_a, norm_b) per candidate pair;
   the division, ROUND and threshold stay Spark-side in the callers.
-- :func:`lsh_buckets` — sign bits against hyperplane literals, packed into
-  one BIGINT bucket per hash table, row-locally (no join, no Exchange).
+- :func:`lsh_buckets` — sign bits against the md5 hyperplanes of
+  :func:`md5_plane_rows` (the one hyperplane family, rebuilt in SQL by the
+  twins), packed into one BIGINT bucket per hash table, row-locally (no
+  join, no Exchange).
 - :func:`_assign_to_centroid` — the ``depth`` best centroids per vector by
   cosine against centroid literals (IVF assignment and query probe).
 
-Operators, each with a hash-checked DuckDB twin (``*_sql``):
+Operators, each with a hash-checked DuckDB twin (``*_sql``; the twins
+share one exact re-rank + ``ROW_NUMBER`` top-k tail):
 
 - :func:`cosine_topk` — exact top-k: the <= ``n_queries`` query rows are
   broadcast against the corpus, per-query ``row_number`` top-k.
-- :func:`lsh_cosine_topk` — seeded random-hyperplane LSH: candidates share
-  a (table_id, bucket) with a query (equi-join against the broadcast query
-  buckets), exact re-rank; recall tuned by (n_planes, n_tables).
+- :func:`lsh_cosine_topk` — md5-hyperplane sign-LSH at the data's width:
+  candidates share a (table_id, bucket) with a query (equi-join against
+  the broadcast query buckets), exact re-rank; recall tuned by
+  (n_planes, n_tables).
 - :func:`ivf_cosine_topk` — inverted file over caller-supplied centroids
   (:func:`ivf_train_centroids`): every vector joins its nearest centroid's
   bucket, each query searches its ``nprobe`` nearest buckets, exact
@@ -37,11 +41,11 @@ from pyspark.sql import DataFrame, Window
 # vec_ids, each returns its TOP_K neighbours.
 N_QUERIES = 10
 TOP_K = 5
-# seeded-numpy Gaussian hyperplanes of lsh_cosine_topk and its twin
-LSH_DIM = 64
+# md5 hyperplanes of every sign-LSH operator (md5_plane_rows) and the
+# plane and table counts of lsh_cosine_topk
+LSH_SEED = 7
 LSH_PLANES = 8
 LSH_TABLES = 4
-LSH_SEED = 7
 # IVF: buckets probed per query, training-sample cap and Lloyd rounds of
 # the quantizer
 NPROBE = 3
@@ -194,50 +198,80 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
     return _topk(_cosine(pairs, "q_id", "c_id"), k)
 
 
-def cosine_topk_sql() -> str:
-    return f"""
-WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {N_QUERIES}),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 4) AS cos_sim
-  FROM q JOIN embeddings c ON q.vec_id <> c.vec_id
+def _cos_sql(a: str, b: str) -> str:
+    """The twins' exact cosine of the embeddings of aliases ``a`` and
+    ``b``, rounded to 4 like :func:`_cosine`."""
+    return (
+        f"ROUND(list_dot_product(CAST({a}.embedding AS DOUBLE[]), CAST({b}.embedding AS DOUBLE[]))\n"
+        f"      / (sqrt(list_dot_product(CAST({a}.embedding AS DOUBLE[]), CAST({a}.embedding AS DOUBLE[])))\n"
+        f"         * sqrt(list_dot_product(CAST({b}.embedding AS DOUBLE[]), CAST({b}.embedding AS DOUBLE[])))), 4)"
+    )
+
+
+# The top-k twins' tail over a ``cand`` CTE of (q_id, c_id) pairs: the
+# exact cosine and per-query ROW_NUMBER top-k of _rerank_candidates + _topk.
+_RERANK_TOPK_SQL = f"""scored AS (
+  SELECT cand.q_id AS query_id, cand.c_id AS neighbor_id,
+         {_cos_sql("q", "c")} AS cos_sim
+  FROM cand
+  JOIN embeddings q ON q.vec_id = cand.q_id
+  JOIN embeddings c ON c.vec_id = cand.c_id
 )
-SELECT query_id, neighbor_id, cos_sim,
-       CAST(rank AS INT) AS rank
+SELECT query_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id) AS rank
+                                   ORDER BY cos_sim DESC, neighbor_id)
+             AS rank
       FROM scored)
 WHERE rank <= {TOP_K}
 """
 
 
-def _gaussian_plane_rows(dim: int, n_planes: int,
-                         n_tables: int) -> list[tuple[int, int, list[float]]]:
-    """(table_id, plane_id, plane) seeded-numpy Gaussian hyperplanes, the
-    one generator of the Spark plan's and the SQL twin's planes."""
-    rng = np.random.RandomState(LSH_SEED)
-    planes = rng.normal(size=(n_tables, n_planes, dim)).astype(float)
+def cosine_topk_sql() -> str:
+    return f"""
+WITH cand AS (
+  SELECT q.vec_id AS q_id, c.vec_id AS c_id
+  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+  WHERE q.vec_id < {N_QUERIES}
+),
+{_RERANK_TOPK_SQL}"""
+
+
+def md5_plane_rows(dim: int, n_planes: int,
+                   n_tables: int) -> list[tuple[int, int, list[float]]]:
+    """(table_id, plane_id, plane) sign-LSH hyperplanes derived from md5,
+    the one hyperplane family of every LSH operator.  DuckDB regenerates
+    the IDENTICAL values in pure SQL (:func:`_lsh_buckets_sql`), so a
+    twin's buckets match the Spark plan's at any width and scale factor
+    by construction, with no literal-inlining step that could desync.
+    Component (t, p, d) =
+    ``(int(md5(f"{LSH_SEED}|{t}|{p}|{d}")[:8], 16) / 4294967295) * 2 - 1``
+    (uniform in [-1, 1]; direction-uniformity is looser than Gaussian but
+    the exact re-rank keeps precision and pytest pins recall)."""
+    import hashlib
+
+    def val(t: int, p: int, d: int) -> float:
+        v = int(hashlib.md5(f"{LSH_SEED}|{t}|{p}|{d}".encode()).hexdigest()[:8], 16)
+        return (v / 4294967295) * 2 - 1
+
     return [
-        (t, p, [float(x) for x in planes[t, p]])
+        (t, p, [val(t, p, d) for d in range(dim)])
         for t in range(n_tables)
         for p in range(n_planes)
     ]
 
 
-def lsh_buckets(embeddings: DataFrame, dim: int = LSH_DIM,
-                n_planes: int = LSH_PLANES, n_tables: int = LSH_TABLES,
-                plane_rows: list[tuple[int, int, list[float]]] | None = None,
-                ) -> DataFrame:
-    """(vec_id, table_id, bucket): sign-LSH bucket per hash table.
+def embedding_width(embeddings: DataFrame) -> int:
+    """Width of the first embedding (one ``head(1)`` job), 0 for an empty
+    frame — the planes of an empty input are empty too."""
+    head = embeddings.select("embedding").head(1)
+    return len(head[0]["embedding"]) if head else 0
 
-    ``plane_rows`` swaps in externally generated hyperplanes (e.g. the
-    md5-derived, SQL-regenerable `dedup.md5_plane_rows`); default is the
-    seeded-numpy Gaussian family whose twin inlines literals
-    (:func:`lsh_cosine_topk_sql`)."""
-    if plane_rows is None:
-        plane_rows = _gaussian_plane_rows(dim, n_planes, n_tables)
+
+def lsh_buckets(embeddings: DataFrame,
+                plane_rows: list[tuple[int, int, list[float]]]) -> DataFrame:
+    """(vec_id, table_id, bucket): sign-LSH bucket per hash table over
+    ``plane_rows`` (:func:`md5_plane_rows`), whose width must equal the
+    embeddings' (ValueError otherwise)."""
     # Round-6 rewrite: ONE Arrow-batched numpy stage replaces the former
     # broadcast-plane join + interpreted HOF dot + groupBy-sum (guide
     # §4.2/§8.3: hand whole batches to vectorized native code; §2.4: the
@@ -291,10 +325,16 @@ def lsh_buckets(embeddings: DataFrame, dim: int = LSH_DIM,
 
 def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
                     k: int = TOP_K, n_planes: int = LSH_PLANES,
-                    n_tables: int = LSH_TABLES) -> DataFrame:
+                    n_tables: int = LSH_TABLES,
+                    dim: int | None = None) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in any table,
-    exact cosine re-rank within candidates."""
-    buckets = lsh_buckets(embeddings, n_planes=n_planes, n_tables=n_tables)
+    exact cosine re-rank within candidates.  The md5 planes are built at
+    the embedding width ``dim``; pass it when known (e.g. from the parquet
+    footer) so plan construction runs no Spark job, else one ``head(1)``
+    reads it."""
+    if dim is None:
+        dim = embedding_width(embeddings)
+    buckets = lsh_buckets(embeddings, md5_plane_rows(dim, n_planes, n_tables))
     # the query side is <= n_queries x n_tables rows by construction:
     # broadcast it so the corpus bucket side is never shuffled
     qb = buckets.filter(F.col("vec_id") < n_queries).select(
@@ -388,9 +428,8 @@ def ivf_train_centroids(vec_ids, vectors, k: int = 8,
     vec_id order, the init (and the over-cap subsample) picks the k rows
     with the smallest md5(vec_id|seed), ties in assignment break to the
     lowest centroid_id — so the returned centroids can be inlined as
-    LITERALS into both the Spark plan and the DuckDB twin (the
-    `lsh_cosine_topk_sql` precedent), removing iterative float drift from
-    the cross-engine comparison entirely.  The trainer is driver-side by
+    LITERALS into both the Spark plan and the DuckDB twin, removing
+    iterative float drift from the cross-engine comparison entirely.  The trainer is driver-side by
     design: :func:`ivf_cosine_topk` takes its centroids as literals."""
     import hashlib
 
@@ -504,38 +543,27 @@ cand AS (
   FROM assigned a JOIN qprobe qp ON qp.centroid_id = a.centroid_id
   WHERE a.vec_id <> qp.q_id
 ),
-scored AS (
-  SELECT cand.q_id AS query_id, cand.c_id AS neighbor_id,
-         ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 4)
-           AS cos_sim
-  FROM cand
-  JOIN embeddings q ON q.vec_id = cand.q_id
-  JOIN embeddings c ON c.vec_id = cand.c_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id)
-             AS rank
-      FROM scored)
-WHERE rank <= {TOP_K}
-"""
+{_RERANK_TOPK_SQL}"""
 
 
-def lsh_cosine_topk_sql() -> str:
-    """DuckDB twin of :func:`lsh_cosine_topk`: the seeded hyperplanes come
-    from the same :func:`_gaussian_plane_rows` and are inlined as literal
-    arrays, so both engines hash identical planes.  Sign bits compare a double
-    dot product against 0 on both sides; the re-rank cosine is rounded to
-    4 before ordering/filtering exactly like the Spark column."""
-    rows = ",\n    ".join(
-        f"({t}, {p}, [{', '.join(repr(x) for x in plane)}])"
-        for t, p, plane in _gaussian_plane_rows(LSH_DIM, LSH_PLANES, LSH_TABLES)
-    )
-    return f"""
-WITH planes(table_id, plane_id, plane) AS (VALUES
-    {rows}
+def _lsh_buckets_sql(n_planes: str, n_tables: int) -> str:
+    """The ``planes``, ``sb`` and ``buckets`` CTEs of the sign-LSH twins.
+    The planes are :func:`md5_plane_rows` rebuilt IN SQL at the table's
+    width ``MIN(len(embedding))``: both reduce to the same integer-from-hex
+    and the same IEEE-double ``(v / 4294967295) * 2 - 1``, so they are
+    bit-identical.  Sign bits compare a double dot product against 0 and
+    buckets are ``SUM(bit << plane_id)``, as in :func:`lsh_buckets`.
+    ``n_planes`` is a SQL expression; ``range(0, 63)`` bounds it, so
+    every ``bit << plane_id`` fits the BIGINT bucket."""
+    return f"""planes AS (
+  SELECT t.range AS table_id, p.range AS plane_id,
+         list_transform(range(0, w.dim), d ->
+           (CAST(('0x' || substr(md5('{LSH_SEED}|' || t.range || '|'
+                                 || p.range || '|' || d), 1, 8)) AS BIGINT)
+            / 4294967295e0) * 2 - 1) AS plane
+  FROM (SELECT COALESCE(MIN(len(embedding)), 0) AS dim FROM embeddings) w,
+       range(0, {n_tables}) t, range(0, 63) p
+  WHERE p.range < {n_planes}
 ),
 sb AS (
   SELECT e.vec_id, p.table_id, p.plane_id,
@@ -547,7 +575,15 @@ buckets AS (
   SELECT vec_id, table_id,
          SUM(CAST(bit AS BIGINT) << plane_id) AS bucket
   FROM sb GROUP BY vec_id, table_id
-),
+)"""
+
+
+def lsh_cosine_topk_sql() -> str:
+    """DuckDB twin of :func:`lsh_cosine_topk`: the same md5 planes and
+    buckets (:func:`_lsh_buckets_sql`), the candidates that share a
+    (table_id, bucket) with a query, and the exact re-rank top-k."""
+    return f"""
+WITH {_lsh_buckets_sql(str(LSH_PLANES), LSH_TABLES)},
 qb AS (
   SELECT vec_id AS q_id, table_id, bucket FROM buckets
   WHERE vec_id < {N_QUERIES}
@@ -558,20 +594,4 @@ cand AS (
                         AND qb.bucket = b.bucket
   WHERE b.vec_id <> qb.q_id
 ),
-scored AS (
-  SELECT cand.q_id AS query_id, cand.c_id AS neighbor_id,
-         ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 4)
-           AS cos_sim
-  FROM cand
-  JOIN embeddings q ON q.vec_id = cand.q_id
-  JOIN embeddings c ON c.vec_id = cand.c_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id)
-             AS rank
-      FROM scored)
-WHERE rank <= {TOP_K}
-"""
+{_RERANK_TOPK_SQL}"""

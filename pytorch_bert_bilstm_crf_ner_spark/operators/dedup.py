@@ -16,7 +16,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..sources.local import local_frame
+from .ann import (
+    _cos_sql,
+    _lsh_buckets_sql,
+    _rerank_candidates,
+    embedding_width,
+    lsh_buckets,
+    md5_plane_rows,
+)
 
 # ------------------------------------------------------------------ #
 # exact duplicates (hash groupBy)
@@ -506,33 +513,8 @@ def auto_n_planes(n: int) -> int:
     return max(3, (n // 60).bit_length() - 1) if n > 60 else 3
 
 
-# md5-derived sign-LSH family of the embedding near-dup route
+# hash tables of the embedding near-dup route
 NEARDUP_TABLES = 16
-NEARDUP_SEED = 7
-
-
-def md5_plane_rows(dim: int, n_planes: int, n_tables: int = NEARDUP_TABLES,
-                   seed: int = NEARDUP_SEED) -> list[tuple[int, int, list[float]]]:
-    """(table_id, plane_id, plane) sign-LSH hyperplanes derived from md5 —
-    the engine-portable alternative to seeded-numpy planes: DuckDB can
-    regenerate the IDENTICAL values in pure SQL (see
-    :func:`embedding_neardup_lsh_sql`), so the twin's candidate set
-    matches the Spark plan's at ANY scale factor by construction, with no
-    literal-inlining step that could desync.  Component (t, p, d) =
-    ``(int(md5(f"{seed}|{t}|{p}|{d}")[:8], 16) / 4294967295) * 2 - 1``
-    (uniform in [-1, 1]; direction-uniformity is looser than Gaussian but
-    the exact re-verify keeps precision at 1.0 and pytest pins recall)."""
-    import hashlib
-
-    def val(t: int, p: int, d: int) -> float:
-        v = int(hashlib.md5(f"{seed}|{t}|{p}|{d}".encode()).hexdigest()[:8], 16)
-        return (v / 4294967295) * 2 - 1
-
-    return [
-        (t, p, [val(t, p, d) for d in range(dim)])
-        for t in range(n_tables)
-        for p in range(n_planes)
-    ]
 
 
 def embedding_neardup_pairs(embeddings: DataFrame,
@@ -541,9 +523,10 @@ def embedding_neardup_pairs(embeddings: DataFrame,
                             dim: int | None = None) -> DataFrame:
     """(vec_a, vec_b, cos_sim) for pairs above threshold; vec_a < vec_b.
 
-    Sign-LSH bucketing (`operators/ann.py::lsh_buckets`) over md5-derived
-    hyperplanes generates candidate pairs via an equi-join on (table_id,
-    bucket); candidates are re-verified with the exact cosine
+    Sign-LSH bucketing (`operators/ann.py::lsh_buckets`) over the md5
+    hyperplanes (`operators/ann.py::md5_plane_rows`) generates candidate
+    pairs via an equi-join on (table_id, bucket); candidates are
+    re-verified with the exact cosine
     (`operators/ann.py::_rerank_candidates`) before the threshold filter,
     so precision is always 1.0 and recall is the LSH collision probability
     — for a pair at cosine s, 1 - (1 - (1 - acos(s)/pi)^n_planes)^n_tables
@@ -560,27 +543,19 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     footer metadata — so plan construction launches ZERO Spark jobs; at
     100 TB an implicit ``count()`` is a full scan before the real query
     starts.  Omitted, they fall back to one ``count()`` / one ``head(1)``
-    (empty input yields an empty pair frame rather than a TypeError).
+    (empty input has width 0 and yields an empty pair frame).
     """
-    from .ann import _rerank_candidates, lsh_buckets
-
     n_planes = auto_n_planes(embeddings.count() if n is None else n)
     if dim is None:
-        head = embeddings.select("embedding").head(1)
-        if not head:
-            # empty input: no pairs (and no hyperplanes to build)
-            return local_frame(
-                embeddings.sparkSession, [],
-                "vec_a BIGINT, vec_b BIGINT, cos_sim DOUBLE",
-            )
-        dim = len(head[0]["embedding"])
+        dim = embedding_width(embeddings)
     # Candidate generation stays (vec_id, table, bucket) self-join +
     # distinct: a leftmost-shared-table dedup (emit each pair from its
     # first colliding table, no distinct Exchange) was tried in round
     # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
     # collision rows cost more than the 16-byte-pair distinct it saved
     # (3.4s vs 1.9s at sf0.1; see BASELINE.md).
-    buckets = lsh_buckets(embeddings, plane_rows=md5_plane_rows(dim, n_planes))
+    buckets = lsh_buckets(embeddings,
+                          md5_plane_rows(dim, n_planes, NEARDUP_TABLES))
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["table_id", "bucket"])
@@ -603,71 +578,37 @@ def embedding_neardup_pairs(embeddings: DataFrame,
 def embedding_neardup_lsh_sql(threshold: float = 0.95) -> str:
     """DuckDB twin of :func:`embedding_neardup_pairs` (lsh route) that
     computes THE SAME LSH candidate set as the Spark plan AT ANY SCALE
-    FACTOR by construction (round-3 VERDICT #2) — nothing data-dependent
-    is frozen at twin-generation time:
+    FACTOR by construction — nothing data-dependent is frozen at
+    twin-generation time:
 
     - ``n_planes`` is derived IN SQL from ``COUNT(*)`` via the
       pure-integer log2 (``LENGTH(printf('%b', n // 60)) - 1`` ==
       :func:`auto_n_planes`, see its proof note);
-    - the hyperplanes are regenerated IN SQL from md5 — bit-identical to
-      :func:`md5_plane_rows` because both reduce to the same integer-
-      from-hex and the same IEEE-double ``(v / 4294967295) * 2 - 1``;
-    - sign bits, ``SUM(bit << plane_id)`` buckets, the bucket equi-join
-      and the exact re-verify mirror the Spark operators expression by
-      expression (ROUND to 4 before the threshold filter).
-
-    ``range(0, 63)``/filter bounds plane_id generation (n_planes = 63
-    would need n > 60 * 2^63 rows)."""
+    - the hyperplanes and buckets are the md5 ones rebuilt IN SQL
+      (`operators/ann.py::_lsh_buckets_sql`);
+    - the bucket equi-join and the exact re-verify mirror the Spark
+      operators expression by expression (ROUND to 4 before the threshold
+      filter)."""
+    cos = _cos_sql("a", "b")
     return f"""
-WITH params AS (
-  SELECT COUNT(*) AS n, COALESCE(MIN(len(embedding)), 0) AS dim
-  FROM embeddings
-),
-np AS (
+WITH np AS (
   SELECT CASE WHEN n > 60
               THEN GREATEST(3, LENGTH(printf('%b', n // 60)) - 1)
-              ELSE 3 END AS n_planes,
-         dim
-  FROM params
+              ELSE 3 END AS n_planes
+  FROM (SELECT COUNT(*) AS n FROM embeddings)
 ),
-planes AS (
-  SELECT t.range AS table_id, p.range AS plane_id,
-         list_transform(range(0, np.dim), d ->
-           (CAST(('0x' || substr(md5('{NEARDUP_SEED}|' || t.range || '|'
-                                 || p.range || '|' || d), 1, 8)) AS BIGINT)
-            / 4294967295e0) * 2 - 1) AS plane
-  FROM np, range(0, {NEARDUP_TABLES}) t, range(0, 63) p
-  WHERE p.range < np.n_planes
-),
-sb AS (
-  SELECT e.vec_id, p.table_id, p.plane_id,
-         CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(p.plane AS DOUBLE[])) > 0
-              THEN 1 ELSE 0 END AS bit
-  FROM embeddings e CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, table_id,
-         SUM(CAST(bit AS BIGINT) << plane_id) AS bucket
-  FROM sb GROUP BY vec_id, table_id
-),
+{_lsh_buckets_sql("(SELECT n_planes FROM np)", NEARDUP_TABLES)},
 cand AS (
   SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
   FROM buckets x JOIN buckets y
     ON x.table_id = y.table_id AND x.bucket = y.bucket
    AND x.vec_id < y.vec_id
 )
-SELECT cand.vec_a, cand.vec_b,
-       ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-             / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 4)
-         AS cos_sim
+SELECT cand.vec_a, cand.vec_b, {cos} AS cos_sim
 FROM cand
 JOIN embeddings a ON a.vec_id = cand.vec_a
 JOIN embeddings b ON b.vec_id = cand.vec_b
-WHERE ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-         * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 4)
-      >= {threshold}
+WHERE {cos} >= {threshold}
 """
 
 

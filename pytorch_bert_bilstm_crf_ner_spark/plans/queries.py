@@ -4,10 +4,10 @@ row-count + schema + order-insensitive value hash, so every computed column
 is aliased identically on both sides and floats are rounded.
 
 The KG queries run over the deterministically derived ``transcripts``
-table (see `sources/transcripts.py`); SQL-inexpressible stages (the CRF
-tagging UDF, iterative connected components) are registered without a SQL
-twin — the driver records a weaker rows-only check and the pytest parity
-suite covers them exactly.
+table (see `sources/transcripts.py`).  All 30 queries have hash-checked
+twins, the CRF tagging UDF stages (`plans/viterbi_twin.py`) and the
+connected-components queries (recursive CTEs) included; the pytest
+parity suite also checks the KG stages against the single-process oracle.
 """
 
 from __future__ import annotations
@@ -414,18 +414,12 @@ LEFT JOIN fn ON t.type = fn.type
 
 
 def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.tagging import extract_mentions
+    from .pipeline import PipelineConfig, run_pipeline
 
-    # round-robin repartition before the model-forward UDF (the same
-    # parallelism rule as run_pipeline): the parquet scan yields a
-    # handful of byte-sized partitions and the CPU-bound tag stage would
-    # otherwise run on that few cores (round-6: 9.3 s -> ~3 s at sf0.1)
-    transcripts = _transcripts(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
     # adj_start feeds the relations stage only; the twin's columns are the
     # five mention columns
-    return extract_mentions(transcripts).drop("adj_start")
+    mentions = run_pipeline(spark, sf_dir, PipelineConfig())["mentions"]
+    return mentions.drop("adj_start")
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,9 +644,13 @@ def q_language_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """md5-hyperplane LSH top-k at the width read from the parquet footer
+    (no plan-build job); the twin rebuilds the same planes in SQL."""
     from ..operators.ann import lsh_cosine_topk
 
-    return lsh_cosine_topk(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    _n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")
+    return lsh_cosine_topk(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), dim=dim)
 
 
 _IVF_MAX_READ_ROWS = 131_072
@@ -703,8 +701,8 @@ _IVF_TWIN_STATE: dict[str, str | None] = {
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: coarse quantizer trained driver-side in numpy on a
     bounded sample (`_ivf_centroids`; centroid literals shared with the
-    DuckDB twin — the lsh_ann precedent, VERDICT r2 #3) + nprobe bucket
-    probe, exact re-rank (`operators/ann.py::ivf_cosine_topk`)."""
+    DuckDB twin) + nprobe bucket probe, exact re-rank
+    (`operators/ann.py::ivf_cosine_topk`)."""
     from ..operators.ann import ivf_cosine_topk
 
     served = _IVF_TWIN_STATE["served_from"]
@@ -1203,10 +1201,11 @@ _register_viterbi_twins()
 # then runs at a different dir, q_ivf_ann_topk emits a precise named
 # warning so a subsequent hash mismatch is never inscrutable.
 # Absent testdata (e.g. a bare checkout) the entry is skipped and the
-# driver records the weaker rows-only check.  The data-dependent dedup
-# twins (embedding_neardup / neardup_clusters) avoid the coupling
-# entirely by computing their LSH parameters IN SQL from COUNT(*) — the
-# preferred pattern; k-means iteration in SQL is not worth it here.
+# driver records the weaker rows-only check.  The LSH twins
+# (embedding_neardup / neardup_clusters / lsh_ann_topk) avoid the coupling
+# entirely by rebuilding their md5 planes IN SQL at the data's width (and
+# the near-dup plane count from COUNT(*)) — the preferred pattern; k-means
+# iteration in SQL is not worth it here.
 _ORACLE_SF_DIR = os.environ.get(
     "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
 )

@@ -26,19 +26,18 @@ def test_lsh_buckets_kernel_matches_sequential_fold(spark):
     """Every bucket id from the Arrow kernel equals the one computed from
     python sequential-fold dots over the same md5 planes (the pre-rewrite
     JVM formulation) — pins the per-dim accumulation order."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import lsh_buckets
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
+        lsh_buckets,
         md5_plane_rows,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(64)
     rows = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     dim = len(next(iter(rows.values())))
-    planes = md5_plane_rows(dim, n_planes=4, n_tables=3, seed=7)
+    planes = md5_plane_rows(dim, n_planes=4, n_tables=3)
     got = {
         (r["vec_id"], r["table_id"]): r["bucket"]
-        for r in lsh_buckets(emb, dim=dim, n_planes=4, n_tables=3,
-                             plane_rows=planes).collect()
+        for r in lsh_buckets(emb, planes).collect()
     }
     expected: dict = {}
     for (t, p, plane) in planes:
