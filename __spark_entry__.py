@@ -63,8 +63,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """All twins; the ivf entry is derived from the sf_dir the registered
-    ivf query last ran with (see `plans/queries.py::oracle_sql_dict`), so
-    a driver that runs queries before fetching oracles gets matching
-    centroid literals at any comparison scale."""
+    """All 30 twins.  Each is a pure function of the tables it reads, so
+    one text holds at any scale factor, whether or not queries ran first."""
     return oracle_sql_dict()

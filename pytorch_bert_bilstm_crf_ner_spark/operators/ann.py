@@ -14,7 +14,7 @@ vector width from the batch and rejects null or ragged rows.
   twins), packed into one BIGINT bucket per hash table, row-locally (no
   join, no Exchange).
 - :func:`_assign_to_centroid` — the ``depth`` best centroids per vector by
-  cosine against centroid literals (IVF assignment and query probe).
+  cosine against driver-held centroids (IVF assignment and query probe).
 
 Operators, each with a hash-checked DuckDB twin (``*_sql``; the twins
 share one exact re-rank + ``ROW_NUMBER`` top-k tail):
@@ -26,9 +26,10 @@ share one exact re-rank + ``ROW_NUMBER`` top-k tail):
   the broadcast query buckets), exact re-rank; recall tuned by
   (n_planes, n_tables).
 - :func:`ivf_cosine_topk` — inverted file over caller-supplied centroids
-  (:func:`ivf_train_centroids`): every vector joins its nearest centroid's
-  bucket, each query searches its ``nprobe`` nearest buckets, exact
-  re-rank.
+  (:func:`ivf_sample_centroids`: the ``IVF_CENTROIDS`` md5-first rows,
+  which the twin picks again in SQL): every vector joins its nearest
+  centroid's bucket, each query searches its ``nprobe`` nearest buckets,
+  exact re-rank.
 """
 
 from __future__ import annotations
@@ -41,16 +42,15 @@ from pyspark.sql import DataFrame, Window
 # vec_ids, each returns its TOP_K neighbours.
 N_QUERIES = 10
 TOP_K = 5
-# md5 hyperplanes of every sign-LSH operator (md5_plane_rows) and the
-# plane and table counts of lsh_cosine_topk
+# md5 seed of every sign-LSH operator's hyperplanes (md5_plane_rows) and
+# of the IVF centroid pick, and the plane and table counts of
+# lsh_cosine_topk
 LSH_SEED = 7
 LSH_PLANES = 8
 LSH_TABLES = 4
-# IVF: buckets probed per query, training-sample cap and Lloyd rounds of
-# the quantizer
+# IVF: centroids of the coarse quantizer and buckets probed per query
+IVF_CENTROIDS = 8
 NPROBE = 3
-IVF_MAX_TRAIN_ROWS = 65536
-IVF_MAX_ITER = 3
 
 
 def _flat2d(col, width: int | None = None) -> np.ndarray:
@@ -282,8 +282,8 @@ def lsh_buckets(embeddings: DataFrame,
     # double add per element), which is exactly the sequential fold's
     # ((0.0 + e0*p0) + e1*p1) + ... chain, so every sign bit — and hence
     # every bucket id — is unchanged.  NO matmul here: BLAS reduction
-    # order varies with threading/kernel (the ivf_train_centroids
-    # precedent) and would break cross-engine sign equality.
+    # order varies with threading/kernel and would break cross-engine
+    # sign equality.
     order = sorted(range(len(plane_rows)),
                    key=lambda i: (plane_rows[i][0], plane_rows[i][1]))
     P = np.array([plane_rows[i][2] for i in order], dtype=np.float64).T
@@ -350,7 +350,7 @@ def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
 
 
 # --------------------------------------------------------------------- #
-# IVF (inverted-file) ANN: centroid literals -> per-centroid buckets ->
+# IVF (inverted-file) ANN: md5-picked centroids -> per-centroid buckets ->
 # nprobe-bucket candidate search with exact re-rank.
 
 def _centroid_matrix(centroids: list[list[float]]) -> tuple[np.ndarray, np.ndarray]:
@@ -376,8 +376,8 @@ def _assign_to_centroid(embeddings: DataFrame, centroids: list[list[float]],
                         depth: int = 1) -> DataFrame:
     """(vec_id, centroid_id): each vector's ``depth`` nearest centroids by
     cosine, best first — ``depth=1`` is the IVF assignment, ``nprobe`` on
-    the query rows is the probe.  Centroids are driver-held literals
-    (k x dim), so this is ONE Arrow-batched numpy stage, no join.
+    the query rows is the probe.  Centroids are driver-held (k x dim), so
+    this is ONE Arrow-batched numpy stage, no join.
 
     Bit-exactness: per-dim fixed-order float64 accumulation (see
     :func:`pair_cosine_parts`), score = dot / (norm_e * norm_c) in that
@@ -418,64 +418,28 @@ def _assign_to_centroid(embeddings: DataFrame, centroids: list[list[float]],
     )
 
 
-def ivf_train_centroids(vec_ids, vectors, k: int = 8,
-                        seed: int = 7) -> list[list[float]]:
-    """Driver-side numpy Lloyd training for the IVF coarse quantizer.
-
-    The FAISS convention: the quantizer trains on a bounded driver-held
-    sample, then the full corpus is ASSIGNED distributedly.  Everything
-    here is deterministic and engine-independent — rows are processed in
-    vec_id order, the init (and the over-cap subsample) picks the k rows
-    with the smallest md5(vec_id|seed), ties in assignment break to the
-    lowest centroid_id — so the returned centroids can be inlined as
-    LITERALS into both the Spark plan and the DuckDB twin, removing
-    iterative float drift from the cross-engine comparison entirely.  The trainer is driver-side by
-    design: :func:`ivf_cosine_topk` takes its centroids as literals."""
-    import hashlib
-
-    ids = [int(i) for i in vec_ids]
-    order = sorted(range(len(ids)), key=lambda j: ids[j])
-    v = np.asarray(vectors, dtype=np.float64)[order]
-    ids = [ids[j] for j in order]
-
-    def h(vid: int) -> str:
-        return hashlib.md5(f"{vid}|{seed}".encode()).hexdigest()
-
-    if len(ids) > IVF_MAX_TRAIN_ROWS:
-        keep = sorted(range(len(ids)), key=lambda j: h(ids[j]))[:IVF_MAX_TRAIN_ROWS]
-        keep.sort()
-        v = v[keep]
-        ids = [ids[j] for j in keep]
-    init_idx = sorted(range(len(ids)), key=lambda j: h(ids[j]))[:k]
-    cents = v[init_idx].copy()
-
-    def _scores(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        # NOT a @ b.T: BLAS reduction order varies with thread count, and
-        # these centroids must be bit-reproducible across processes (the
-        # Spark plan and the DuckDB twin inline them independently).  A
-        # sequential loop over dims is threading-independent.
-        out = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-        for d in range(a.shape[1]):
-            out += np.outer(a[:, d], b[:, d])
-        return out
-
-    vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-    for _ in range(IVF_MAX_ITER):
-        cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        assign = np.argmax(_scores(vn, cn), axis=1)  # ties -> lowest id
-        for ci in range(len(cents)):
-            members = v[assign == ci]
-            if len(members):
-                cents[ci] = members.mean(axis=0)
-    return [[float(x) for x in c] for c in cents]
+def ivf_sample_centroids(embeddings: DataFrame) -> list[list[float]]:
+    """The IVF coarse quantizer: the embeddings of the ``IVF_CENTROIDS``
+    rows with the smallest ``(md5("<vec_id>|<LSH_SEED>"), vec_id)``, in
+    that order, so centroid i is the i-th row.  One ``orderBy + limit``
+    job at plan build; the pick depends only on the table's vec_ids, never
+    on the scan order, and the DuckDB twin repeats it in SQL."""
+    key = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f"|{LSH_SEED}")))
+    rows = (
+        embeddings.orderBy(key, "vec_id")
+        .limit(IVF_CENTROIDS)
+        .select("embedding")
+        .collect()
+    )
+    return [list(r["embedding"]) for r in rows]
 
 
 def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
                     n_queries: int = N_QUERIES, k: int = TOP_K,
                     nprobe: int = NPROBE) -> DataFrame:
-    """IVF ANN over pre-trained ``centroids`` (e.g.
-    :func:`ivf_train_centroids`, whose literals also feed the DuckDB twin
-    :func:`ivf_cosine_topk_sql`): bucket every vector by its nearest
+    """IVF ANN over driver-held ``centroids`` (e.g.
+    :func:`ivf_sample_centroids`, whose pick the DuckDB twin
+    :func:`ivf_cosine_topk_sql` repeats): bucket every vector by its nearest
     centroid; for each query, search only its ``nprobe`` nearest buckets,
     exact cosine re-rank inside.  Assignment and probe are the same kernel
     (:func:`_assign_to_centroid`, depth 1 over the corpus and depth
@@ -504,20 +468,22 @@ def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
     return _topk(_rerank_candidates(cand, embeddings), k)
 
 
-def ivf_cosine_topk_sql(centroids: list[list[float]]) -> str:
-    """DuckDB twin of :func:`ivf_cosine_topk` given the SAME pre-trained
-    centroid literals the Spark plan broadcasts (`ivf_train_centroids`).
-    Assignment/probe scores are sequential double dot products from
-    identical literals on both engines, so they are bit-identical and the
-    argmax / nprobe ranking (score DESC, centroid_id ASC) picks the same
-    buckets; the re-rank cosine is rounded to 4 like the Spark column."""
-    rows = ",\n    ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(centroids)
-    )
+def ivf_cosine_topk_sql() -> str:
+    """DuckDB twin of :func:`ivf_cosine_topk` over
+    :func:`ivf_sample_centroids`: the ``cents`` CTE picks the same
+    md5-first rows in the same order, so both engines score against the
+    same float32-widened centroids.  Assignment/probe scores are
+    sequential double dot products on both engines, so they are
+    bit-identical and the argmax / nprobe ranking (score DESC, centroid_id
+    ASC) picks the same buckets; the re-rank cosine is rounded to 4 like
+    the Spark column."""
+    key = f"md5(vec_id || '|{LSH_SEED}'), vec_id"
     return f"""
-WITH cents(centroid_id, centroid) AS (VALUES
-    {rows}
+WITH cents AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY {key}) - 1 AS centroid_id,
+         embedding AS centroid
+  FROM (SELECT vec_id, embedding FROM embeddings
+        ORDER BY {key} LIMIT {IVF_CENTROIDS})
 ),
 cscore AS (
   SELECT e.vec_id, ct.centroid_id,

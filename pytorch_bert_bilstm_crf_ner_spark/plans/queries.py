@@ -12,9 +12,6 @@ parity suite also checks the KG stages against the single-process oracle.
 
 from __future__ import annotations
 
-import functools
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -25,12 +22,32 @@ from ..core.pairing import (
     COOCCUR_PRED,
     COOCCUR_WINDOW,
 )
+from ..functions.text import (
+    LANGUAGE_MIXTURE_SQL,
+    TEXT_PROFILE_SQL,
+    doc_fingerprint_sql,
+)
+from ..operators.ann import (
+    cosine_topk_sql,
+    ivf_cosine_topk_sql,
+    lsh_cosine_topk_sql,
+)
+from ..operators.dedup import (
+    embedding_neardup_lsh_sql,
+    lsh_candidate_pairs_sql,
+    minhash_signatures_sql,
+    neardup_clusters_sql,
+    ngram_jaccard_sql,
+    simhash_neardup_sql,
+    simhash_sql,
+)
 from ..sources.entity_dict import (
     entity_dict_df,
     entity_dict_values_sql,
     single_word_dict_df,
 )
 from ..sources.transcripts import TRANSCRIPTS_SQL, transcripts_from_documents
+from .viterbi_twin import kg_mentions_sql, kg_triples_sql
 
 # --------------------------------------------------------------------- #
 # shared fragments
@@ -407,8 +424,8 @@ LEFT JOIN fn ON t.type = fn.type
 
 # --------------------------------------------------------------------- #
 # KG-pipeline queries.  All three are hash-checked: kg_mentions /
-# kg_triples against the generated Viterbi-DP twins registered by
-# `_register_viterbi_twins` (plans/viterbi_twin.py), canonical_entities
+# kg_triples against the generated Viterbi-DP twins of
+# `plans/viterbi_twin.py`, canonical_entities
 # against its recursive-CTE twin — plus exactly by
 # tests/test_spark_parity.py against the single-process oracle.
 
@@ -653,82 +670,14 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), dim=dim)
 
 
-_IVF_MAX_READ_ROWS = 131_072
-
-
-@functools.lru_cache(maxsize=8)
-def _ivf_centroids(path: str) -> tuple:
-    """Coarse-quantizer centroids for the registered IVF query: trained
-    driver-side in numpy from the embeddings parquet (the FAISS
-    convention — quantizers train on a bounded sample), deterministically,
-    so the SAME literals feed the Spark plan and the DuckDB twin.
-
-    The driver reads AT MOST ``_IVF_MAX_READ_ROWS`` leading rows via streamed
-    record batches — bounded memory at any table size (a full
-    ``read_table`` would be a driver OOM at 100 TB); `ivf_train_centroids`
-    then md5-subsamples those down to its own training cap."""
-    import pyarrow.parquet as pq
-
-    from ..operators.ann import ivf_train_centroids
-
-    f = pq.ParquetFile(path)
-    ids: list = []
-    vecs: list = []
-    for batch in f.iter_batches(batch_size=8192,
-                                columns=["vec_id", "embedding"]):
-        ids.extend(batch.column("vec_id").to_pylist())
-        vecs.extend(batch.column("embedding").to_pylist())
-        if len(ids) >= _IVF_MAX_READ_ROWS:
-            ids, vecs = ids[:_IVF_MAX_READ_ROWS], vecs[:_IVF_MAX_READ_ROWS]
-            break
-    cents = ivf_train_centroids(ids, vecs, k=8, seed=7)
-    return tuple(tuple(c) for c in cents)
-
-
-# sf_dir coupling between q_ivf_ann_topk and its oracle twin (round-4
-# VERDICT #3): the twin inlines centroids trained on a CONCRETE parquet
-# file, so both literal-generation sites must read the same directory.
-# `last_query_dir` records where the registered query actually ran;
-# `oracle_sql_dict` derives the twin from it.  `served_from` records the
-# dir an already-served oracle was trained on, so a later query call at a
-# DIFFERENT dir fails loudly instead of hash-mismatching inscrutably.
-_IVF_TWIN_STATE: dict[str, str | None] = {
-    "last_query_dir": None,
-    "served_from": None,
-}
-
-
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: coarse quantizer trained driver-side in numpy on a
-    bounded sample (`_ivf_centroids`; centroid literals shared with the
-    DuckDB twin) + nprobe bucket probe, exact re-rank
-    (`operators/ann.py::ivf_cosine_topk`)."""
-    from ..operators.ann import ivf_cosine_topk
+    """IVF ANN: the md5-first rows as the coarse quantizer (one plan-build
+    job; the twin picks the same rows in SQL) + nprobe bucket probe, exact
+    re-rank (`operators/ann.py::ivf_cosine_topk`)."""
+    from ..operators.ann import ivf_cosine_topk, ivf_sample_centroids
 
-    served = _IVF_TWIN_STATE["served_from"]
-    if served is not None and served != sf_dir:
-        # A mismatch is legitimate for standalone query use (e.g. plan
-        # inspection at another SF in a process that already served an
-        # oracle), so this cannot raise — but if the ALREADY-SERVED twin
-        # is compared against THIS run, the hashes will differ, and this
-        # named warning in the driver log is the diagnostic for it.
-        import warnings
-
-        warnings.warn(
-            "ivf_ann_topk sf_dir desync: an oracle twin already served by "
-            f"oracle_sql() inlines centroids trained on {served!r}, but "
-            f"the registered query is now running on {sf_dir!r}.  If that "
-            "served SQL is compared against this run it will hash-"
-            "mismatch — re-fetch oracle_sql() after this call (it "
-            "re-derives from the query's sf_dir), or set "
-            f"SPARK_GRAFT_ORACLE_SF_DIR={sf_dir}.",
-            stacklevel=2,
-        )
-    _IVF_TWIN_STATE["last_query_dir"] = sf_dir
-    cents = [list(c) for c in _ivf_centroids(f"{sf_dir}/embeddings.parquet")]
-    return ivf_cosine_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), centroids=cents
-    )
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return ivf_cosine_topk(emb, ivf_sample_centroids(emb))
 
 
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,103 +1116,30 @@ ORACLE_SQL = {
     "span_eval": Q_SPAN_EVAL_SQL,
     "events_running_value": Q_EVENTS_RUNNING_SQL,
     "events_sessionized": Q_EVENTS_SESSION_SQL,
+    "kg_mentions": kg_mentions_sql(_TR),
+    "kg_triples": kg_triples_sql(_TR, Q_CANONICAL_ENTITIES_SQL, _DICT_SQL),
     "canonical_entities": Q_CANONICAL_ENTITIES_SQL,
+    "dedup_exact": Q_DEDUP_EXACT_SQL,
+    "dedup_ngram_jaccard": ngram_jaccard_sql(3),
+    "minhash_signatures": minhash_signatures_sql(),
+    "lsh_candidate_pairs": lsh_candidate_pairs_sql(),
+    "simhash": simhash_sql(),
+    "simhash_neardup": simhash_neardup_sql(),
+    "embedding_neardup": embedding_neardup_lsh_sql(0.5),
+    "cosine_topk": cosine_topk_sql(),
+    "text_profile": TEXT_PROFILE_SQL,
+    "doc_fingerprint": doc_fingerprint_sql(),
+    "language_mixture": LANGUAGE_MIXTURE_SQL,
+    "lsh_ann_topk": lsh_cosine_topk_sql(),
+    "ivf_ann_topk": ivf_cosine_topk_sql(),
+    "neardup_clusters": neardup_clusters_sql(0.5),
     "media_features": _media_features_sql(),
     "training_features": _training_features_sql(),
     "augmented_corpus": _augmented_corpus_sql(),
 }
 
 
-def _register_viterbi_twins() -> None:
-    """kg_mentions / kg_triples — the CRF tagging UDF queries, previously
-    rows-only — now have full DuckDB twins: the emission table + CRF
-    parameters are inlined as literals and the Viterbi DP + BIOES FSM are
-    recomputed in SQL (generated chained stages; see
-    `plans/viterbi_twin.py` for the bit-exactness argument and guards)."""
-    from .viterbi_twin import kg_mentions_sql, kg_triples_sql
-
-    ORACLE_SQL["kg_mentions"] = kg_mentions_sql(_TR)
-    ORACLE_SQL["kg_triples"] = kg_triples_sql(
-        _TR, Q_CANONICAL_ENTITIES_SQL, _DICT_SQL
-    )
-
-
-_register_viterbi_twins()
-
-# `oracle_sql()` takes no sf_dir, so the IVF twin needs a directory to
-# train its inlined quantizer on.  Resolution order (round-4 VERDICT #3 —
-# the freeze is gone): (1) the sf_dir the registered q_ivf_ann_topk was
-# LAST CALLED with (`oracle_sql_dict` re-derives at serve time, so a
-# driver that runs queries before fetching the oracle gets matching
-# literals at ANY sf_dir by construction); (2) the
-# SPARK_GRAFT_ORACLE_SF_DIR env override; (3) /root/testdata/sf0.01, the
-# driver's comparison scale.  If the oracle is served FIRST and the query
-# then runs at a different dir, q_ivf_ann_topk emits a precise named
-# warning so a subsequent hash mismatch is never inscrutable.
-# Absent testdata (e.g. a bare checkout) the entry is skipped and the
-# driver records the weaker rows-only check.  The LSH twins
-# (embedding_neardup / neardup_clusters / lsh_ann_topk) avoid the coupling
-# entirely by rebuilding their md5 planes IN SQL at the data's width (and
-# the near-dup plane count from COUNT(*)) — the preferred pattern; k-means
-# iteration in SQL is not worth it here.
-_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-
-
 def oracle_sql_dict() -> dict[str, str]:
-    """ORACLE_SQL with the ivf entry re-derived from the sf_dir the
-    registered ivf query last ran with (falling back to
-    ``_ORACLE_SF_DIR``) — both literal-generation sites read the SAME
-    parquet whenever the driver runs queries before fetching oracles."""
-    out = dict(ORACLE_SQL)
-    d = _IVF_TWIN_STATE["last_query_dir"] or _ORACLE_SF_DIR
-    if os.path.exists(f"{d}/embeddings.parquet"):
-        from ..operators.ann import ivf_cosine_topk_sql
-
-        out["ivf_ann_topk"] = ivf_cosine_topk_sql(
-            [list(c) for c in _ivf_centroids(f"{d}/embeddings.parquet")]
-        )
-        _IVF_TWIN_STATE["served_from"] = d
-    else:
-        out.pop("ivf_ann_topk", None)
-    return out
-
-
-def _register_pipeline_sql() -> None:
-    from ..functions.text import (
-        LANGUAGE_MIXTURE_SQL,
-        TEXT_PROFILE_SQL,
-        doc_fingerprint_sql,
-    )
-    from ..operators.ann import cosine_topk_sql, lsh_cosine_topk_sql
-    from ..operators.dedup import (
-        embedding_neardup_lsh_sql,
-        lsh_candidate_pairs_sql,
-        minhash_signatures_sql,
-        neardup_clusters_sql,
-        ngram_jaccard_sql,
-        simhash_neardup_sql,
-        simhash_sql,
-    )
-
-    ORACLE_SQL.update(
-        {
-            "dedup_exact": Q_DEDUP_EXACT_SQL,
-            "dedup_ngram_jaccard": ngram_jaccard_sql(3),
-            "minhash_signatures": minhash_signatures_sql(),
-            "lsh_candidate_pairs": lsh_candidate_pairs_sql(),
-            "simhash": simhash_sql(),
-            "simhash_neardup": simhash_neardup_sql(),
-            "embedding_neardup": embedding_neardup_lsh_sql(0.5),
-            "neardup_clusters": neardup_clusters_sql(0.5),
-            "cosine_topk": cosine_topk_sql(),
-            "lsh_ann_topk": lsh_cosine_topk_sql(),
-            "text_profile": TEXT_PROFILE_SQL,
-            "doc_fingerprint": doc_fingerprint_sql(),
-            "language_mixture": LANGUAGE_MIXTURE_SQL,
-        }
-    )
-
-
-_register_pipeline_sql()
+    """A copy of ORACLE_SQL: every twin is a pure function of the tables
+    it reads, so one text holds at any scale factor."""
+    return dict(ORACLE_SQL)

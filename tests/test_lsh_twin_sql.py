@@ -1,8 +1,9 @@
-"""The drift-proof LSH twins: the DuckDB SQL regenerates the md5-derived
+"""The drift-proof ANN twins: the DuckDB SQL regenerates the md5-derived
 hyperplanes at the data's width (and the near-dup twin its
-COUNT(*)-derived n_planes) itself, so the candidate sets match the Spark
-plans at ANY scale factor, width or threshold by construction — no
-literal frozen at twin-generation time."""
+COUNT(*)-derived n_planes), and the IVF twin its md5-picked centroids,
+itself, so the candidate sets match the Spark plans at ANY scale factor,
+width or threshold by construction — no literal frozen at
+twin-generation time."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
     _lsh_buckets_sql,
+    ivf_cosine_topk_sql,
     lsh_cosine_topk,
     lsh_cosine_topk_sql,
     md5_plane_rows,
@@ -104,6 +106,21 @@ def test_lsh_ann_twin_matches_spark_any_sf(spark, sf_dir):
         tuple(r) for r in SPARK_QUERIES["lsh_ann_topk"](spark, sf_dir).collect())
     want = sorted(map(tuple, _duck(f"{sf_dir}/embeddings.parquet")
                       .execute(lsh_cosine_topk_sql()).fetchall()))
+    assert got == want and got
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
+                                    "/root/testdata/sf0.01",
+                                    "/root/testdata/sf0.1"])
+def test_ivf_ann_twin_matches_spark_any_sf(spark, sf_dir):
+    """The ivf_ann_topk twin is fetched BEFORE the query runs and still
+    equals it at every scale factor: both engines pick the same md5-first
+    centroids from the table itself."""
+    sql = ivf_cosine_topk_sql()
+    got = sorted(
+        tuple(r) for r in SPARK_QUERIES["ivf_ann_topk"](spark, sf_dir).collect())
+    want = sorted(map(tuple, _duck(f"{sf_dir}/embeddings.parquet")
+                      .execute(sql).fetchall()))
     assert got == want and got
 
 

@@ -164,83 +164,38 @@ def test_embedding_neardup_explicit_meta_and_empty(spark):
     assert neardup_clusters(empty, 0.5).collect() == []
 
 
-def test_ivf_train_centroids_deterministic():
-    """The IVF twin inlines these centroids as literals from TWO
-    independent call sites (the registered Spark query and oracle_sql),
-    possibly in different processes — training must be bit-reproducible
-    and input-order independent."""
-    import numpy as np
+def test_ivf_sample_centroids_deterministic(spark):
+    """The IVF centroids are the embeddings of the IVF_CENTROIDS rows first
+    by (md5("<vec_id>|7"), vec_id), in that order, however the input is
+    partitioned: the twin picks the same rows in SQL."""
+    import hashlib
 
     from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
-        ivf_train_centroids,
-    )
-
-    rng = np.random.RandomState(3)
-    ids = list(range(200))
-    vecs = rng.normal(size=(200, 16)).tolist()
-    a = ivf_train_centroids(ids, vecs, k=4, seed=7)
-    b = ivf_train_centroids(ids, vecs, k=4, seed=7)
-    assert a == b  # bit-exact, not approximately
-    perm = rng.permutation(200)
-    c = ivf_train_centroids(
-        [ids[i] for i in perm], [vecs[i] for i in perm], k=4, seed=7
-    )
-    assert c == a  # row order must not matter (parquet scan order varies)
-    d = ivf_train_centroids(ids, vecs, k=4, seed=8)
-    assert d != a  # seed actually steers the init
-
-
-def test_ivf_oracle_follows_query_sf_dir():
-    """Round-4 VERDICT #3 (ivf twin de-freeze): oracle_sql derives the
-    ivf entry from the sf_dir the registered query LAST RAN with, so the
-    two centroid-literal sites agree at any comparison scale when the
-    driver runs queries first; and a query call AFTER an oracle trained
-    on a different dir emits a precise named warning, so a hash mismatch
-    is never inscrutable (it cannot raise: standalone multi-SF use in one
-    process — e.g. the plan-shape suite — is legitimate)."""
-    from pytorch_bert_bilstm_crf_ner_spark.plans import queries as Q
-
-    saved = dict(Q._IVF_TWIN_STATE)
-    try:
-        Q._IVF_TWIN_STATE.update(last_query_dir=None, served_from=None)
-        sql_default = Q.oracle_sql_dict()["ivf_ann_topk"]
-        assert Q._IVF_TWIN_STATE["served_from"] == Q._ORACLE_SF_DIR
-
-        # queries-first order: the oracle follows the query's dir
-        Q._IVF_TWIN_STATE.update(
-            last_query_dir="/root/testdata/sf0.001", served_from=None
-        )
-        sql_001 = Q.oracle_sql_dict()["ivf_ann_topk"]
-        assert Q._IVF_TWIN_STATE["served_from"] == "/root/testdata/sf0.001"
-        assert sql_001 != sql_default  # centroids genuinely differ by SF
-
-        # oracle-first order + a DIFFERENT query dir: loud, named warning
-        # (the call itself proceeds; None spark dies later at plan build,
-        # after the state bookkeeping we're pinning here)
-        with pytest.warns(UserWarning, match="ivf_ann_topk sf_dir desync"):
-            with pytest.raises(Exception):
-                Q.q_ivf_ann_topk(None, "/root/testdata/sf0.01")
-        assert Q._IVF_TWIN_STATE["last_query_dir"] == "/root/testdata/sf0.01"
-    finally:
-        Q._IVF_TWIN_STATE.update(saved)
-
-
-def test_ivf_ann_recall(spark):
-    """IVF (numpy-trained centroids + nprobe buckets) vs brute-force
-    cosine top-k; centroids trained on the collected rows as the
-    registered query trains them."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
-        cosine_topk,
-        ivf_cosine_topk,
-        ivf_train_centroids,
+        IVF_CENTROIDS,
+        ivf_sample_centroids,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    rows = emb.select("vec_id", "embedding").collect()
-    cents = ivf_train_centroids(
-        [r["vec_id"] for r in rows], [list(r["embedding"]) for r in rows],
-        k=8, seed=7,
+    cents = ivf_sample_centroids(emb)
+    assert cents == ivf_sample_centroids(emb.repartition(7))
+    rows = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    first = sorted(
+        rows, key=lambda v: (hashlib.md5(f"{v}|7".encode()).hexdigest(), v)
+    )[:IVF_CENTROIDS]
+    assert cents == [rows[v] for v in first]
+
+
+def test_ivf_ann_recall(spark):
+    """IVF (md5-picked centroids + nprobe buckets) vs brute-force cosine
+    top-k, with the centroids the registered query picks."""
+    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
+        cosine_topk,
+        ivf_cosine_topk,
+        ivf_sample_centroids,
     )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = ivf_sample_centroids(emb)
     exact = cosine_topk(emb, n_queries=10, k=5).collect()
     approx = ivf_cosine_topk(emb, cents, n_queries=10, k=5, nprobe=3).collect()
     exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}

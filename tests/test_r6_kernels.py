@@ -124,20 +124,38 @@ def test_ivf_rejects_degenerate_centroids(spark):
     raises ValueError while building the plan."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
         ivf_cosine_topk,
-        ivf_train_centroids,
+        ivf_sample_centroids,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    rows = emb.collect()
-    dim = len(rows[0]["embedding"])
-    cents = ivf_train_centroids(
-        [r["vec_id"] for r in rows], [list(r["embedding"]) for r in rows],
-        k=4,
-    )
+    cents = ivf_sample_centroids(emb)
+    dim = len(cents[0])
     for bad in ([0.0] * dim, [float("nan")] + [1.0] * (dim - 1),
                 [float("inf")] + [1.0] * (dim - 1)):
         with pytest.raises(ValueError, match="zero-norm or non-finite"):
             ivf_cosine_topk(emb, centroids=[bad] + cents)
+
+
+def test_ivf_query_rejects_zero_vector_sample(spark, tmp_path):
+    """A zero vector among the md5-picked centroids fails the registered
+    query's plan build (never NaN buckets): here it is the md5-first row
+    of a copy of sf0.001."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pytorch_bert_bilstm_crf_ner_spark.plans.queries import SPARK_QUERIES
+
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    ids = table.column("vec_id").to_pylist()
+    first = min(ids, key=lambda v: (hashlib.md5(f"{v}|7".encode()).hexdigest(), v))
+    i = table.schema.get_field_index("embedding")
+    embs = table.column(i).to_pylist()
+    embs[ids.index(first)] = [0.0] * len(embs[0])
+    table = table.set_column(i, table.schema.field(i),
+                             pa.array(embs, table.schema.field(i).type))
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ValueError, match="centroid 0 is zero-norm or non-finite"):
+        SPARK_QUERIES["ivf_ann_topk"](spark, str(tmp_path))
 
 
 def test_cosine_topk_rejects_ragged_rows(spark):
