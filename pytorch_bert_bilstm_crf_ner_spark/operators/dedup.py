@@ -101,31 +101,17 @@ FROM documents
 JACCARD_THRESHOLD = 0.8  # a near-dup pair's least Jaccard similarity
 
 
-def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N,
-                        max_shingle_docs: int | None = None) -> DataFrame:
+def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs at or over ``JACCARD_THRESHOLD``;
     doc_a < doc_b.
 
     Shingle self-join counts the intersection; per-doc shingle counts give
     the union by inclusion-exclusion — no quadratic cross join.
-
-    ``max_shingle_docs``: at corpus scale the self-join is dominated by
-    stop-shingles appearing in a large fraction of documents (a shingle in
-    k docs contributes k^2 join rows).  Capping drops those shingles from
-    the INTERSECTION counting (per-doc totals keep them), which slightly
-    under-estimates jaccard for pairs whose only overlap is ubiquitous
-    shingles — the standard recall/cost trade; leave None for exact.
     """
     sh = _shingles(documents, n)
-    if max_shingle_docs is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        rare = freq.filter(F.col("df") <= max_shingle_docs).select("shingle")
-        sh_join = sh.join(rare, "shingle", "left_semi")
-    else:
-        sh_join = sh
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh_join.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh_join.select(F.col("doc_id").alias("doc_b"), "shingle")
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -273,7 +259,8 @@ GROUP BY a.doc_id, b.doc_id
 # SimHash (48-bit, md5-nibble based so both engines agree; bit 47..0)
 
 SIMHASH_BITS = 48
-# banded near-dup search: 4 bands of 12 bits, Hamming <= 3 (exact recall)
+# banded near-dup search: 4 bands of 12 bits, Hamming <= 3; exact recall
+# needs SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1 (pigeonhole)
 SIMHASH_BANDS = 4
 SIMHASH_MAX_HAMMING = 3
 
@@ -286,49 +273,6 @@ def _check_simhash_bits(bits: int) -> None:
         raise ValueError(f"bits={bits} must be a multiple of 4")
     if bits > 60:
         raise ValueError(f"bits={bits} must be at most 60")
-
-
-def simhash_expr(bits: int = SIMHASH_BITS):
-    """Column expression computing the simhash fingerprint of the ``text``
-    column — a SINGLE row-local fold, no aggregation, no Python.
-
-    One pass over the words: the accumulator is the array of ``bits``
-    per-bit votes.  Round-6: each word is first packed into ONE integer
-    (``conv`` of the leading ``bits/4`` md5 hex chars — bit b of the
-    fingerprint is bit ``bits-1-b`` of that value, the same identity the
-    batch operator uses), so the per-bit lambda is an integer
-    shift/mask instead of the old locate+substring string ops: 2.5x
-    faster under forced evaluation (3.46 s -> 1.38 s at sf0.1),
-    bit-identical output.  The finish lambda packs votes into the
-    BIGINT fingerprint.
-
-    This exists for the STREAMING path (`streaming/neardup.py`): being a
-    plain projection it is legal where an aggregation is not (upstream of
-    a stateful operator, no watermark/output-mode constraints).  It is
-    NOT the batch formulation: higher-order lambdas are interpreted, not
-    codegen'd, and the honest forced-evaluation cost at sf0.1 (5,000
-    docs x ~54 words) is ~5.9 s vs ~0.7 s for :func:`simhash`'s
-    round-6 packed-hash single aggregation.  (An earlier claim that
-    this fold was faster came from timing ``count()`` on the projection
-    — Catalyst prunes the unused fingerprint column entirely; always
-    force evaluation through an aggregate over the computed value when
-    benchmarking projections.)  Bit-identical to :func:`simhash` — the
-    vote fold is an exact integer sum, so word order is irrelevant."""
-    _check_simhash_bits(bits)
-    return F.expr(f"""
-    aggregate(
-      transform(split(text, ' '),
-                w -> CAST(conv(substring(md5(w), 1, {bits // 4}), 16, 10)
-                          AS BIGINT)),
-      array_repeat(0, {bits}),
-      (acc, v) -> transform(acc, (a, b) ->
-          a + (CAST(shiftright(v, {bits - 1} - b) & 1 AS INT) * 2 - 1)),
-      votes -> aggregate(
-          transform(votes, (v, b) ->
-            IF(v > 0, shiftleft(CAST(1 AS BIGINT), {bits - 1} - b),
-               CAST(0 AS BIGINT))),
-          CAST(0 AS BIGINT), (a, x) -> a + x))
-    """)
 
 
 def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
@@ -371,88 +315,64 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return per_doc.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_neardup_pairs(documents: DataFrame,
-                          max_hamming: int = SIMHASH_MAX_HAMMING,
-                          n_bands: int = SIMHASH_BANDS,
-                          max_band_docs: int | None = None) -> DataFrame:
-    """(doc_a, doc_b, hamming): pairs whose simhash fingerprints differ in
-    at most ``max_hamming`` bits; doc_a < doc_b.
+def simhash_band_pairs(fingerprints: DataFrame) -> DataFrame:
+    """Every two rows of ``fingerprints`` (doc_id, simhash, ...) whose
+    fingerprints differ in at most ``SIMHASH_MAX_HAMMING`` bits, doc_a <
+    doc_b: (doc_a, sim_a, doc_b, sim_b, hamming) plus ``<c>_a`` and
+    ``<c>_b`` for every other column ``c``.
 
     Banding (the classic web-dedup construction): slice the 48-bit
-    fingerprint into ``n_bands`` contiguous slices and equi-join on
-    (band_id, band_val).  Pigeonhole gives EXACT recall whenever
-    ``max_hamming <= n_bands - 1``: at most ``max_hamming`` differing bits
-    can touch at most that many bands, so at least one band is identical
-    (the defaults 4 bands / Hamming 3 satisfy this; the constructor
-    asserts it).  Verification is one ``bit_count(a ^ b)`` on the
-    deduplicated candidate set — no quadratic stage anywhere.
-
-    ``max_band_docs``: at corpus scale a degenerate band value shared by
-    k documents contributes k^2 join rows (e.g. near-empty documents all
-    landing on band 0).  Capping drops those band values from CANDIDATE
-    GENERATION, which forfeits the recall guarantee only for pairs whose
-    every shared band is that hot — the standard recall/cost trade;
-    leave None for exact."""
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"exact recall needs max_hamming <= n_bands - 1 "
-            f"(got {max_hamming} > {n_bands - 1})")
-    if SIMHASH_BITS % n_bands:
-        raise ValueError(f"bits={SIMHASH_BITS} not divisible by n_bands={n_bands}")
-    band_bits = SIMHASH_BITS // n_bands
+    fingerprint into ``SIMHASH_BANDS`` contiguous slices and equi-join on
+    (band_id, band_val).  Pigeonhole gives EXACT recall because
+    ``SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1``: that many differing bits
+    touch at most that many bands, so at least one band is identical.
+    Verification is one ``bit_count(a ^ b)`` on the deduplicated
+    candidate set — no quadratic stage anywhere.  The batch operator and
+    the stream (`streaming/neardup.py`) both search with this."""
+    band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
-    sig = simhash(documents)
-    bands = sig.select(
-        "doc_id", "simhash",
+    extra = [c for c in fingerprints.columns if c not in ("doc_id", "simhash")]
+    bands = fingerprints.select(
+        "*",
         F.explode(F.array(*[
             F.expr(f"named_struct('band_id', {b}, 'band_val', "
                    f"shiftright(simhash, {b * band_bits}) & {mask})")
-            for b in range(n_bands)
+            for b in range(SIMHASH_BANDS)
         ])).alias("b"),
     ).select(
-        "doc_id", "simhash",
+        *fingerprints.columns,
         F.col("b.band_id").alias("band_id"),
         F.col("b.band_val").alias("band_val"),
     )
-    if max_band_docs is not None:
-        rare = (bands.groupBy("band_id", "band_val")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_band_docs)
-                .select("band_id", "band_val"))
-        bands = bands.join(rare, ["band_id", "band_val"], "left_semi")
-    a = bands.select(F.col("doc_id").alias("doc_a"),
-                     F.col("simhash").alias("sim_a"), "band_id", "band_val")
-    b = bands.select(F.col("doc_id").alias("doc_b"),
-                     F.col("simhash").alias("sim_b"), "band_id", "band_val")
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col("doc_id").alias(f"doc_{s}"), F.col("simhash").alias(f"sim_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in extra], "band_id", "band_val")
+
     cand = (
-        a.join(b, ["band_id", "band_val"])
+        side("a").join(side("b"), ["band_id", "band_val"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
+        .drop("band_id", "band_val")
         .distinct()   # a pair may share several bands
     )
     return (
         cand.withColumn(
             "hamming", F.expr("CAST(bit_count(sim_a ^ sim_b) AS INT)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
-def simhash_neardup_sql(max_band_docs: int | None = None) -> str:
+def simhash_neardup_pairs(documents: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming): document pairs whose simhash fingerprints
+    differ in at most ``SIMHASH_MAX_HAMMING`` bits; doc_a < doc_b
+    (:func:`simhash_band_pairs` over :func:`simhash`)."""
+    return simhash_band_pairs(simhash(documents)).select("doc_a", "doc_b", "hamming")
+
+
+def simhash_neardup_sql() -> str:
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
-    cap_cte = ""
-    bands_src = "bands"
-    if max_band_docs is not None:
-        cap_cte = f"""rare AS MATERIALIZED (
-  SELECT band_id, band_val FROM bands
-  GROUP BY band_id, band_val HAVING COUNT(*) <= {max_band_docs}
-),
-capped AS MATERIALIZED (
-  SELECT bands.* FROM bands JOIN rare USING (band_id, band_val)
-),
-"""
-        bands_src = "capped"
     return f"""
 WITH sig AS MATERIALIZED ({simhash_sql()}),
 bands AS MATERIALIZED (
@@ -460,11 +380,11 @@ bands AS MATERIALIZED (
          (simhash >> (CAST(b AS INT) * {band_bits})) & {mask} AS band_val
   FROM sig, (SELECT unnest(range({SIMHASH_BANDS})) AS b)
 ),
-{cap_cte}cand AS MATERIALIZED (
+cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          a.simhash AS sim_a, b.simhash AS sim_b
-  FROM {bands_src} a
-  JOIN {bands_src} b ON a.band_id = b.band_id AND a.band_val = b.band_val
+  FROM bands a
+  JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
              AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming

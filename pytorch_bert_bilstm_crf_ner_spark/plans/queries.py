@@ -586,16 +586,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint; 4 bands x 12 bits => exact recall by pigeonhole).  Twin:
     `operators/dedup.py::simhash_neardup_sql` — both engines share the
     identical integer band/xor/popcount arithmetic, so the match is
-    exact by construction.
-
-    Registered UNCAPPED (exact recall): the synthetic corpus
-    concentrates fingerprints (at sf0.1 one 12-bit band value is shared
-    by 549 of 5,000 docs -> 726k candidates), but once the aggregated
-    fingerprints are materialized those candidates are cheap rows —
-    measured 4.6 s uncapped vs 6.0 s with ``max_band_docs=64`` (the
-    cap's extra count+semi-join outweighs its saving at this scale).
-    At corpus scale with million-doc hot bands the cap is the safety
-    valve; it is plumbed through both the operator and the SQL twin."""
+    exact by construction."""
     from ..operators.dedup import simhash_neardup_pairs
 
     return simhash_neardup_pairs(

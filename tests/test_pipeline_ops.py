@@ -87,25 +87,6 @@ def test_synth_transcripts_deterministic(spark):
     assert max(sizes.values()) >= 10 * min(sizes.values())
 
 
-def test_jaccard_shingle_frequency_cap(spark):
-    """The stop-shingle cap must keep genuinely near-dup pairs (their
-    overlap is rare shingles) while pruning join volume."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact = {
-        (r["doc_a"], r["doc_b"]) for r in ngram_jaccard_pairs(docs, 3).collect()
-    }
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(docs, 3, max_shingle_docs=50).collect()
-    }
-    assert exact, "expected planted near-dup pairs in sf0.01"
-    assert capped == exact  # near-dup overlap here is rare shingles
-
-
 def test_embedding_neardup_lsh_route_vs_brute(spark):
     """The registered near-dup plan is the LSH route; the brute-force
     crossJoin is the oracle.  Precision is structurally 1.0 (candidates are
@@ -233,7 +214,7 @@ def test_simhash_banding_recall_is_exact(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     banded = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_neardup_pairs(docs, max_hamming=3).collect()
+        for r in simhash_neardup_pairs(docs).collect()
     }
     sig = simhash(docs)
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"))
@@ -251,67 +232,28 @@ def test_simhash_banding_recall_is_exact(spark):
     assert banded == brute
 
 
-def test_simhash_banding_rejects_unsound_params(spark):
-    """max_hamming > n_bands - 1 would silently lose recall; the
-    constructor must refuse."""
-    import pytest as _pytest
-
+def test_simhash_banding_params_meet_pigeonhole():
+    """Exact recall needs every pair within SIMHASH_MAX_HAMMING bits to
+    share an identical band: that many differing bits touch at most that
+    many of the SIMHASH_BANDS bands."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        simhash_neardup_pairs,
+        SIMHASH_BANDS,
+        SIMHASH_BITS,
+        SIMHASH_MAX_HAMMING,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    with _pytest.raises(ValueError, match="exact recall"):
-        simhash_neardup_pairs(docs, max_hamming=4, n_bands=4)
+    assert SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
+    assert SIMHASH_BITS % SIMHASH_BANDS == 0
 
 
 def test_simhash_rejects_bits_over_60(spark):
     """Past 60 bits the packed md5 prefix overflows BIGINT and the NULL
-    cast would silently drop votes; both formulations must refuse."""
+    cast would silently drop votes; the fingerprint must refuse."""
     import pytest as _pytest
 
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        simhash,
-        simhash_expr,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
     with _pytest.raises(ValueError, match="at most 60"):
         simhash(docs, bits=64)
-    with _pytest.raises(ValueError, match="at most 60"):
-        simhash_expr(bits=64)
     assert simhash(docs, bits=60).columns == ["doc_id", "simhash"]
-
-
-def test_simhash_banding_cap_twin_parity(spark):
-    """max_band_docs is plumbed through both the Spark operator and the
-    SQL twin; the registered query is uncapped, so pin the capped route's
-    cross-engine equality here (and that capping only ever drops pairs)."""
-    import duckdb
-
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        simhash_neardup_pairs,
-        simhash_neardup_sql,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    capped = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_neardup_pairs(docs, max_band_docs=8).collect()
-    }
-    uncapped = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_neardup_pairs(docs).collect()
-    }
-    assert capped <= uncapped
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.01/documents.parquet')"
-    )
-    sql_capped = {
-        (int(a), int(b), int(h))
-        for a, b, h in con.execute(
-            simhash_neardup_sql(max_band_docs=8)).fetchall()
-    }
-    assert capped == sql_capped

@@ -84,27 +84,13 @@ def test_simhash_shuffles_only_precombined_votes(spark):
     """simhash (round-6 form) is words-explode + ONE hash aggregation of
     packed word hashes: the partial (map-side) combine must keep shuffle
     volume at docs x (bits+1) pre-combined longs — pinned as at most two
-    Exchanges here (tests/test_r6_kernels.py pins exactly one).  The
-    row-local HOF fold (simhash_expr) is NOT the batch plan: interpreted
-    lambdas lost to codegen under forced-evaluation timing."""
+    Exchanges here (tests/test_r6_kernels.py pins exactly one)."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(simhash(docs))
     assert plan.count("Exchange") <= 2, plan
     assert "HashAggregate" in plan, plan
-
-
-def test_simhash_expr_is_projection_only(spark):
-    """The streaming fingerprint (simhash_expr) must stay a pure
-    projection — no Exchange, no Generate — or it stops being legal
-    upstream of the stateful near-dup matcher."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash_expr
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(docs.select("doc_id", simhash_expr().alias("s")))
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan, plan
 
 
 def test_minhash_signatures_single_combined_shuffle(spark):

@@ -1,6 +1,7 @@
 """Streaming simhash near-dup: equivalence with the batch operator when
-the horizon covers all arrivals, and horizon-bounded forgetting when it
-does not."""
+the horizon covers all arrivals, horizon-bounded forgetting when it does
+not, restart from the stored fingerprints, and null and late rows through
+the public stream."""
 
 from __future__ import annotations
 
@@ -55,11 +56,17 @@ def _batch_pairs(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     return {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_neardup_pairs(docs, max_hamming=3).collect()
+        for r in simhash_neardup_pairs(docs).collect()
     }
 
 
-def _stream_pairs(spark, tmp_path, name, batch2_offset_minutes, horizon):
+def _read_pairs(spark, out_dir):
+    """The drained pairs as a sorted list, so a pair written twice shows."""
+    pairs = spark.read.parquet(os.path.join(out_dir, "pairs"))
+    return sorted((r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs.collect())
+
+
+def _stream_pairs(spark, tmp_path, name, batch2_offset_minutes):
     from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import (
         stream_neardup_simhash,
     )
@@ -68,47 +75,37 @@ def _stream_pairs(spark, tmp_path, name, batch2_offset_minutes, horizon):
     base = dt.datetime(2024, 1, 1, 10, 0)
     b1, b2 = _doc_batches(spark, base, batch2_offset_minutes)
     _stage_batches(spark, tmp_path / name, d["in"], [b1, b2])
-    q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"],
-                               max_hamming=3, horizon=horizon)
+    q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"])
     q.awaitTermination(180)
-    out = spark.read.parquet(d["out"])
-    # normalize arrival-ordered events to the batch operator's id order
-    return {
-        (min(r["doc_a"], r["doc_b"]), max(r["doc_a"], r["doc_b"]),
-         r["hamming"])
-        for r in out.collect()
-    }
+    return _read_pairs(spark, d["out"])
 
 
 def test_stream_matches_batch_when_horizon_covers_all(spark, tmp_path):
-    """With both batches inside the horizon, the streaming match-event
-    set must equal the batch operator's pair set exactly — same banding,
-    same popcount, state carrying batch-1 fingerprints across the
-    micro-batch boundary."""
+    """With both batches inside the 30-minute horizon, the drained pairs
+    must equal the batch operator's pairs exactly — same banding, same
+    popcount, batch 2 searching against batch 1's stored fingerprints."""
     batch = _batch_pairs(spark)
     assert batch, "expected simhash near-dup pairs in sf0.001"
-    streamed = _stream_pairs(spark, tmp_path, "full",
-                             batch2_offset_minutes=5, horizon="30 minutes")
-    assert streamed == batch
+    streamed = _stream_pairs(spark, tmp_path, "full", batch2_offset_minutes=5)
+    assert streamed == sorted(batch)
 
 
 def test_stream_forgets_beyond_horizon(spark, tmp_path):
     """With batch 2 arriving beyond the horizon, cross-parity pairs (one
     doc per batch) must be forgotten, while pairs wholly inside one
-    batch survive — the bounded-state contract."""
+    batch survive — the horizon contract."""
     batch = _batch_pairs(spark)
     cross = {(a, b, h) for a, b, h in batch if (a % 2) != (b % 2)}
     within = batch - cross
     assert cross and within, "fixture needs both pair kinds"
-    streamed = _stream_pairs(spark, tmp_path, "short",
-                             batch2_offset_minutes=120, horizon="30 minutes")
-    assert streamed == within
+    streamed = _stream_pairs(spark, tmp_path, "short", batch2_offset_minutes=120)
+    assert streamed == sorted(within)
 
 
 def test_stream_neardup_state_survives_restart(spark, tmp_path):
     """True restart: run the query to completion on batch 1, then stage
-    batch 2 and start a NEW query against the SAME checkpoint — the
-    band-group state must be restored from the state store, so pairs
+    batch 2 and start a NEW query against the SAME checkpoint and output —
+    batch 2 must search against the fingerprints batch 1 stored, so pairs
     spanning the restart boundary are still found."""
     from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import (
         stream_neardup_simhash,
@@ -123,8 +120,7 @@ def test_stream_neardup_state_survives_restart(spark, tmp_path):
     b1, b2 = _doc_batches(spark, base, batch2_offset_minutes=5)
 
     _stage_batches(spark, tmp_path, d["in"], [b1])
-    q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"],
-                               max_hamming=3, horizon="30 minutes")
+    q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"])
     q.awaitTermination(180)
 
     import glob as _glob
@@ -134,86 +130,34 @@ def test_stream_neardup_state_survives_restart(spark, tmp_path):
     part = _glob.glob(f"{stage}/part-*.parquet")[0]
     _shutil.move(part, f"{d['in']}/b_restart.parquet")
 
-    q2 = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"],
-                                max_hamming=3, horizon="30 minutes")
+    q2 = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"])
     q2.awaitTermination(180)
 
-    out = spark.read.parquet(d["out"])
-    streamed = {
-        (min(r["doc_a"], r["doc_b"]), max(r["doc_a"], r["doc_b"]),
-         r["hamming"])
-        for r in out.collect()
-    }
-    assert streamed == batch  # includes every cross-restart pair
+    assert _read_pairs(spark, d["out"]) == sorted(batch)  # includes every cross-restart pair
 
 
-def test_horizon_parse_rejects_malformed(spark):
-    """Round-6 loud-guard: malformed horizon strings raise a guided
-    ValueError (was a bare KeyError / unpacking error)."""
-    import pytest
-
+def test_stream_drops_null_rows_and_checks_late_data_against_horizon(
+        spark, tmp_path):
+    """Null ``text`` and null ``ts`` rows are dropped before fingerprinting
+    and the query still finishes; a late doc is paired by event time, so
+    doc 2 (10:00, arriving after doc 1 at 11:00) meets nothing beyond the
+    30-minute horizon, while doc 3 (11:10) pairs with doc 1.  All docs
+    share one text, so every pair has Hamming 0."""
     from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import (
         DOCUMENTS_STREAM_SCHEMA,
-        incremental_neardup,
+        stream_neardup_simhash,
     )
 
-    empty = spark.createDataFrame([], DOCUMENTS_STREAM_SCHEMA)
-    for bad in ("1 day", "30minutes", "x minutes", "30 fortnights", ""):
-        with pytest.raises(ValueError, match="horizon"):
-            incremental_neardup(empty, horizon=bad)
-
-
-def test_null_rows_are_filtered_before_state(spark):
-    """A null text or ts row must be dropped by banded_fingerprints, not
-    reach the stateful matcher (where it would raise and kill the
-    query)."""
-    import datetime as dt
-
-    from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import (
-        DOCUMENTS_STREAM_SCHEMA,
-        banded_fingerprints,
-    )
-
-    rows = [
-        (1, "hello world", dt.datetime(2024, 1, 1, 10, 0)),
-        (2, None, dt.datetime(2024, 1, 1, 10, 0)),
-        (3, "hello world", None),
+    text = "the quick brown fox jumps over the lazy dog"
+    at = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
+    batches = [
+        [(1, text, at(11, 0)), (4, None, at(11, 0))],
+        [(5, text, None), (2, text, at(10, 0)), (3, text, at(11, 10))],
     ]
-    df = spark.createDataFrame(rows, DOCUMENTS_STREAM_SCHEMA)
-    got = banded_fingerprints(df).select("doc_id").distinct().collect()
-    assert {r["doc_id"] for r in got} == {1}
-
-
-def test_matcher_enforces_horizon_on_late_data():
-    """Late (out-of-order) data may meet stranded entries whose event
-    times are farther apart than the horizon; the per-candidate check
-    must reject them while in-horizon pairs still match."""
-    import pandas as pd
-
-    from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import _matcher
-
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
-    horizon_ms = 60_000
-    m = _matcher(max_hamming=3, horizon_ms=horizon_ms)
-    # doc 1 at t=10min, doc 2 (identical fingerprint) LATE at t=1min —
-    # 9 minutes apart, far beyond the 1-minute horizon.  Same batch, so
-    # front-eviction never fires (incoming is ts-sorted: doc 2 first).
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "simhash": [12345, 12345, 12345],
-        "ts": pd.to_datetime([
-            "2024-01-01 10:10:00",  # doc 1
-            "2024-01-01 10:01:00",  # doc 2, late
-            "2024-01-01 10:10:30",  # doc 3, within horizon of doc 1
-        ]),
-    })
-    out = list(m(("k",), iter([pdf]), FakeState()))
-    pairs = {(a, b) for a, b, _ in out[0].itertuples(index=False)}
-    assert (1, 3) in pairs          # 30 s apart -> match
-    assert (2, 1) not in pairs      # 9 min apart -> rejected
-    assert (2, 3) not in pairs
+    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
+    _stage_batches(spark, tmp_path, d["in"], [
+        spark.createDataFrame(rows, DOCUMENTS_STREAM_SCHEMA) for rows in batches])
+    q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"])
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+    assert _read_pairs(spark, d["out"]) == [(1, 3, 0)]
