@@ -136,28 +136,50 @@ def test_stream_neardup_state_survives_restart(spark, tmp_path):
     assert _read_pairs(spark, d["out"]) == sorted(batch)  # includes every cross-restart pair
 
 
-def test_stream_drops_null_rows_and_checks_late_data_against_horizon(
-        spark, tmp_path):
-    """Null ``text`` and null ``ts`` rows are dropped before fingerprinting
-    and the query still finishes; a late doc is paired by event time, so
-    doc 2 (10:00, arriving after doc 1 at 11:00) meets nothing beyond the
-    30-minute horizon, while doc 3 (11:10) pairs with doc 1.  All docs
-    share one text, so every pair has Hamming 0."""
+def _stream_rows(spark, tmp_path, batches):
+    """Stage each list of ``(doc_id, text, ts)`` rows as one micro-batch,
+    drain the stream, and return the query and its output dir."""
     from pytorch_bert_bilstm_crf_ner_spark.streaming.neardup import (
         DOCUMENTS_STREAM_SCHEMA,
         stream_neardup_simhash,
     )
 
-    text = "the quick brown fox jumps over the lazy dog"
-    at = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-    batches = [
-        [(1, text, at(11, 0)), (4, None, at(11, 0))],
-        [(5, text, None), (2, text, at(10, 0)), (3, text, at(11, 10))],
-    ]
     d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
     _stage_batches(spark, tmp_path, d["in"], [
         spark.createDataFrame(rows, DOCUMENTS_STREAM_SCHEMA) for rows in batches])
     q = stream_neardup_simhash(spark, d["in"], d["out"], d["ckpt"])
     assert q.awaitTermination(180)
     assert q.exception() is None
-    assert _read_pairs(spark, d["out"]) == [(1, 3, 0)]
+    return d["out"]
+
+
+_TEXT = "the quick brown fox jumps over the lazy dog"
+
+
+def _at(h, m):
+    return dt.datetime(2024, 1, 1, h, m)
+
+
+def test_null_rows_are_filtered_before_state(spark, tmp_path):
+    """Null ``text`` and null ``ts`` rows are dropped before fingerprinting:
+    the query still finishes, only docs 1 and 3 are stored as fingerprints,
+    and they pair with each other (one text, so Hamming 0)."""
+    out = _stream_rows(spark, tmp_path, [
+        [(1, _TEXT, _at(11, 0)), (4, None, _at(11, 0))],
+        [(5, _TEXT, None), (3, _TEXT, _at(11, 10))],
+    ])
+    stored = spark.read.parquet(os.path.join(out, "fingerprints"))
+    assert sorted(r["doc_id"] for r in stored.collect()) == [1, 3]
+    assert _read_pairs(spark, out) == [(1, 3, 0)]
+
+
+def test_matcher_enforces_horizon_on_late_data(spark, tmp_path):
+    """A late doc is paired by event time, not arrival: doc 2 (10:00,
+    arriving after doc 1 at 11:00) meets nothing beyond the 30-minute
+    horizon, while doc 3 (11:10) pairs with doc 1.  All docs share one
+    text, so every pair has Hamming 0."""
+    out = _stream_rows(spark, tmp_path, [
+        [(1, _TEXT, _at(11, 0))],
+        [(2, _TEXT, _at(10, 0)), (3, _TEXT, _at(11, 10))],
+    ])
+    assert _read_pairs(spark, out) == [(1, 3, 0)]
