@@ -11,10 +11,11 @@ partitioned graph tables.
 Layout
 ------
 - ``core/``       pure, Spark-free functions (Viterbi, BIOES FSM, sentence
-                  cut, pairing, metrics) shared by the distributed pipeline
-                  and the single-process parity oracle.
+                  cut, pairing) shared by the distributed pipeline and the
+                  single-process parity oracle.
 - ``sources/``    table derivations / synthetic generators (transcripts,
-                  entity dictionary).
+                  entity dictionary) and the reference's mid_data corpus,
+                  the evaluation job's input.
 - ``operators/``  DataFrame-level operators (tagging UDF, linking,
                   canonicalization, relations, dedup, similarity).
 - ``functions/``  column-expression helpers (text analysis, hashing).

@@ -98,13 +98,6 @@ def _read_checkpoint(path: str) -> tuple[TaggerConfig, dict[str, np.ndarray]]:
     return cfg, sd
 
 
-def load_tagger(path: str) -> DeterministicTagger:
-    """Rebuild the tagger from a checkpoint directory; the checkpoint's
-    weights are authoritative (they overwrite the seeded init)."""
-    cfg, sd = _read_checkpoint(path)
-    return load_state_dict(DeterministicTagger(cfg), sd)
-
-
 def broadcast_tagger_factory(spark, path: str):
     """Read the checkpoint ONCE on the driver, ``sc.broadcast`` it, and
     return a ``tagger_factory`` for `make_tag_turns_udf` /

@@ -9,8 +9,8 @@ spans whose text no longer matches and raises on spans crossing a cut.
 The serving/batch-predict path uses a DIFFERENT cutter — the three-tier
 `cut.py:24-76` (`predict.py:125`, `scripts/server.py:55`), which adds a
 comma split plus a strict-`<` repack, may silently DROP text, and never
-asserts the concat invariant.  :func:`cut_sentences_main` ports it quirk
-for quirk (parity-tested against the exec'd reference source).
+asserts the concat invariant.  :func:`cut_sentences_main_with_pos` ports it
+quirk for quirk (parity-tested against the exec'd reference source).
 """
 
 from __future__ import annotations
@@ -93,10 +93,13 @@ def _apply_pos(rules, sent: str, base: int) -> list[tuple[str, int]]:
     return out
 
 
-def cut_sentences_main(text: str, max_seq_len: int) -> list[str]:
+def cut_sentences_main_with_pos(
+    text: str, max_seq_len: int
+) -> list[tuple[str, int]]:
     """Three-tier serving cut — faithful port of `cut.py:30-76`, the cutter
     used by `predict.py:125` / `scripts/server.py:55` (callers pass their
-    model's ``max_seq_len - 2`` as ``max_seq_len``).
+    model's ``max_seq_len - 2`` as ``max_seq_len``) — with each emitted
+    piece's TRUE start offset in ``text``.
 
     Deliberately preserved reference quirks:
 
@@ -111,23 +114,12 @@ def cut_sentences_main(text: str, max_seq_len: int) -> list[str]:
       pieces can exceed ``max_seq_len``;
     - whitespace-only pieces are filtered from the final result.
 
-    Implemented as a projection of :func:`cut_sentences_main_with_pos`
-    (one source of truth for the quirky control flow).
-    """
-    return [p for p, _ in cut_sentences_main_with_pos(text, max_seq_len)]
-
-
-def cut_sentences_main_with_pos(
-    text: str, max_seq_len: int
-) -> list[tuple[str, int]]:
-    """:func:`cut_sentences_main` with each emitted piece's TRUE start
-    offset in ``text`` (round-4 VERDICT #5): after a silent drop, later
-    pieces keep their original positions, so mention offsets rebased with
-    these starts stay join-safe against the raw turn text —
-    ``text[start : start + len(piece)] == piece`` holds for every emitted
-    piece (the repack only concatenates CONTIGUOUS comma chunks; a
-    newline-free input is guaranteed by the upstream two-tier cutter's
-    concat assert)."""
+    After a silent drop, later pieces keep their original positions, so
+    mention offsets rebased with these starts stay join-safe against the
+    raw turn text — ``text[start : start + len(piece)] == piece`` holds for
+    every emitted piece (the repack only concatenates CONTIGUOUS comma
+    chunks; a newline-free input is guaranteed by the upstream two-tier
+    cutter's concat assert)."""
     if len(text) <= max_seq_len:
         return [(text, 0)]
 

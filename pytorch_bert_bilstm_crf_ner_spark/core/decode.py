@@ -1,8 +1,9 @@
 """BIOES / BIO span decoding — bit-exact re-implementation of the
 reference FSMs.
 
-- Flat-list BIOES decode mirrors `predict_gdcq.py:12-57`; the dict form
-  mirrors `utils/decodeUtils.py:100-152`.  Faithfully preserved quirks:
+- Flat-list BIOES decode mirrors `predict_gdcq.py:12-57` (grouped by
+  type, its output is the dict form `utils/decodeUtils.py:100-152`
+  returns).  Faithfully preserved quirks:
   * tag id 0 is looked up through ``id2ent[1]`` (`utils/decodeUtils.py:107-110`),
     so an ``O`` token behaves like the tag with id 1 (e.g. ``B-PRO``);
   * a ``B-`` span whose matching ``E-`` never arrives is silently dropped
@@ -20,7 +21,6 @@ functions expect exactly ``len(text)`` tag ids.
 from __future__ import annotations
 
 import functools
-from collections import defaultdict
 
 Span = tuple[str, int, str]  # (mention, start, type)
 
@@ -85,17 +85,6 @@ def bioes_decode_flat(tag_ids: list[int], text: str,
         else:
             i += 1
     return spans
-
-
-def bioes_decode_dict(tag_ids: list[int], text: str,
-                      id2ent: dict[int, str]) -> dict[str, list[tuple[str, int]]]:
-    """Dict form {type: [(mention, start)]} — reference
-    `utils/decodeUtils.py:100-152`; same traversal as the flat form, so the
-    grouping preserves scan order."""
-    out: dict[str, list[tuple[str, int]]] = defaultdict(list)
-    for mention, start, etype in bioes_decode_flat(tag_ids, text, id2ent):
-        out[etype].append((mention, start))
-    return dict(out)
 
 
 def _chunk_ends(prev_prefix: str, prefix: str, prev_type: str, type_: str) -> bool:

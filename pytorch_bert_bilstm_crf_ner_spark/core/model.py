@@ -81,8 +81,8 @@ class TaggerConfig:
     # "three_tier" — the reference serving cutter `cut.py:24-76`
     # (comma split + strict-< repack; reference quirks apply: text may be
     # silently dropped, so the concat invariant does NOT hold).
-    # OFFSET semantics in "three_tier" (round-4 VERDICT #5): the cutter
-    # may silently DROP text, so two rebase conventions exist.
+    # OFFSET semantics in "three_tier": the cutter may silently DROP
+    # text, so two rebase conventions exist.
     # "true" (default): each piece carries its TRUE start in the ORIGINAL
     # turn text (`cut_sentences_main_with_pos` tracks what was dropped),
     # so (conv_id, turn_idx, start) joins and text[start:start+len]

@@ -42,4 +42,3 @@ def invert_vocab(vocab: dict[str, int]) -> dict[int, str]:
 # The BIOES vocabulary used throughout the pipeline.
 ENT2ID: dict[str, int] = build_tag_vocab()
 ID2ENT: dict[int, str] = invert_vocab(ENT2ID)
-NUM_TAGS: int = len(ENT2ID)  # 33

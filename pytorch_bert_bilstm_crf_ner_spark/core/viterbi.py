@@ -110,24 +110,3 @@ def viterbi_decode_batch(
             tags[stepping, i - 1] = cur[stepping]
 
     return [tags[b, : lengths[b]].tolist() for b in range(B)]
-
-
-def viterbi_decode_brute(
-    emissions: np.ndarray,
-    start_transitions: np.ndarray,
-    transitions: np.ndarray,
-    end_transitions: np.ndarray,
-) -> list[int]:
-    """Exhaustive-enumeration reference for unit tests (single row, tiny T/L)."""
-    from itertools import product
-
-    L, T = emissions.shape
-    best_path, best_score = None, -np.inf
-    for path in product(range(T), repeat=L):
-        s = start_transitions[path[0]] + emissions[0, path[0]]
-        for i in range(1, L):
-            s += transitions[path[i - 1], path[i]] + emissions[i, path[i]]
-        s += end_transitions[path[-1]]
-        if s > best_score:
-            best_score, best_path = s, path
-    return list(best_path)

@@ -1,4 +1,4 @@
-"""Data augmentation (SURVEY §2 P8/P9, J3, A4, SO1) — the reference's
+"""Data augmentation (SURVEY §2 P8/P9, J3, A4) — the reference's
 `data_augment/aug.py` flow as pure DataFrame ops:
 
   build_entity_inventory  (A4, `aug.py:41-59`): per-type distinct mention
@@ -8,8 +8,7 @@
                           ``#;#TYPE#;#`` slots;
   synthesize_from_templates (P9+J3, `aug.py:61-123`): refill slots from
                           the inventory, rebuild texts with exact label
-                          offsets, ``repeat`` variants per template;
-  augment_union           (SO1, `aug.py:119-120`): original ∪ synthetic.
+                          offsets, ``repeat`` variants per template.
 
 Documented deviation: the reference samples slot fillers WITHOUT
 replacement from a mutable pool (`aug.py:99-103`), which is inherently
@@ -159,11 +158,4 @@ def synthesize_from_templates(
         ).cast("bigint").alias("doc_id"),
         "text",
         "labels",
-    )
-
-
-def augment_union(original: DataFrame, synthetic: DataFrame) -> DataFrame:
-    """SO1: original ∪ synthetic training set (`aug.py:119-120`)."""
-    return original.select("doc_id", "text", "labels").unionByName(
-        synthetic.select("doc_id", "text", "labels")
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+
 def span_metrics_by_type(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """-> (type, tp, fp, fn) — one row per entity type.
 
@@ -21,8 +22,15 @@ def span_metrics_by_type(pred: DataFrame, gold: DataFrame) -> DataFrame:
     join, one aggregation deriving tp/fp/fn from the pred/gold presence
     flags.  (The naive semi/anti/anti/union shape re-evaluates each input
     ~3x — at pipeline scale that tripled the mention-extraction cost.)
-    Multiplicity semantics match the reference's row-level counting: a
-    duplicated pred row that matches gold counts as multiple tp.
+    Multiplicity: tp and fp count pred rows, as the reference's span
+    match `metricsUtils.py:11-28` does (it breaks on the first matching
+    gold span and never removes it, so a duplicated pred row that matches
+    gold counts as multiple tp).  fn differs where a span key repeats on
+    either side: it counts the gold rows of keys no pred row has, where
+    the reference computes ``len(gt) - tp``.  Gold ``[a@0]`` against preds
+    ``[a@0, a@0]`` is (tp, fp, fn) = (2, 0, 0) here and (2, 0, -1) there;
+    gold ``[a@0, a@0]`` against ``[a@0]`` is (1, 0, 0) here and (1, 0, 1)
+    there.  With no repeated key the two agree.
     """
     key = pred.columns
     p = pred.groupBy(*key).agg(F.count(F.lit(1)).alias("pred_n"))
@@ -61,12 +69,19 @@ def micro_prf_row(metrics_by_type: DataFrame) -> DataFrame:
     return out.withColumn("f1", f1)
 
 
+def get_p_r_f(tp: int, fp: int, fn: int) -> tuple[float, float, float]:
+    """Driver-side P/R/F1 of one (tp, fp, fn), 0 where undefined
+    (`metricsUtils.py:31-35`)."""
+    p = tp / (tp + fp) if tp + fp else 0.0
+    r = tp / (tp + fn) if tp + fn else 0.0
+    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    return p, r, f1
+
+
 def classification_report(metrics_by_type: DataFrame) -> str:
     """Driver-side per-type + micro P/R/F1 report — the
     `metricsUtils.py:37-72` format (support column = tp + fn)."""
     rows = sorted(metrics_by_type.collect(), key=lambda r: r["type"])
-    from ..core.metrics import get_p_r_f
-
     width = max([len(r["type"]) for r in rows] + [len("micro-f1")])
     lines = [
         f"{'':>{width}} {'precision':>9} {'recall':>9} {'f1-score':>9} {'support':>9}",
@@ -112,8 +127,6 @@ def triple_metrics(pred: DataFrame, gold: DataFrame) -> dict:
         .first()
     )
     tp, p_cnt, g_cnt = row["tp"], row["pred"], row["gold"]
-    precision = tp / p_cnt if p_cnt else 0.0
-    recall = tp / g_cnt if g_cnt else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    precision, recall, f1 = get_p_r_f(tp, p_cnt - tp, g_cnt - tp)
     return {"tp": tp, "pred": p_cnt, "gold": g_cnt,
             "precision": precision, "recall": recall, "f1": f1}

@@ -56,9 +56,8 @@ _TR = TRANSCRIPTS_SQL
 _DICT_SQL = entity_dict_values_sql()
 
 # conv_id -> numeric id, erring LOUDLY on any id not shaped `conv_<n>`
-# (a positional substring parse silently corrupts doc_ids otherwise —
-# round-2 VERDICT nit #3).  Same guard on both engines so drift ERRs
-# instead of hash-mismatching.
+# (a positional substring parse silently corrupts doc_ids otherwise).
+# Same guard on both engines so drift ERRs instead of hash-mismatching.
 _CONV_NUM_EXPR = (
     "CASE WHEN conv_id RLIKE '^conv_[0-9]+$' "
     "THEN CAST(substring(conv_id, 6) AS BIGINT) "
@@ -533,8 +532,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (every doc_id % 7 == 0 re-added under doc_id + 1_000_000): the
     synthetic corpus has no byte-identical texts of its own, and a hash
     check that's green on an empty result proves only agreement on
-    emptiness (round-3 VERDICT #5) — the salted slice makes the count /
-    min-id arithmetic load-bearing."""
+    emptiness — the salted slice makes the count / min-id arithmetic
+    load-bearing."""
     from ..operators.dedup import exact_duplicates
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -616,8 +615,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally); the DuckDB twin (`embedding_neardup_lsh_sql`) computes
     the SAME md5-derived hyperplanes and COUNT(*)-derived n_planes in
     pure SQL, so the candidate sets — and therefore the hashes — agree at
-    ANY scale factor by construction (round-3 VERDICT #2 closed; recall
-    vs brute force remains pytest-pinned as a QUALITY gate only)."""
+    ANY scale factor by construction (recall vs brute force is pinned by
+    the tests as a quality gate only)."""
     from ..operators.dedup import embedding_neardup_pairs
 
     n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")

@@ -1,244 +1,18 @@
-"""Reference-corpus scans (SURVEY.md §2.1 S1-S4): every raw format the
-reference's per-corpus ``process.py`` scripts normalize is readable here as
-a DataFrame in the common mid_data shape
-``(doc_id long, text string, labels array<struct<span_id,type,start,end,mention>>)``
-so a user of the reference can point the engine at their existing corpora.
-
-- S1 BMES char files (`data/cner/raw_data/*.char.bmes`): wholetext read ->
-  Arrow-batched parse with the bit-exact `core/bmes.py` port.  Files are
-  the parallelism unit (a 100 TB corpus is many files; one file parses
-  streamed within a task).
-- S2 JSON-lines with entity_list (`data/weibo|msra/raw_data/*.txt`):
-  `spark.read.json` with explicit schema -> pure column transforms
-  (no python), mirroring `data/weibo/raw_data/process.py:4-45`.
-- S3 gdcq aspect/opinion CSV (`data/gdcq/raw_data/Train_merge.csv`):
-  `spark.read.csv(header=True)`.
-- S4 mid_data JSON (`preprocess.py:41-45`): multiLine JSON array; the
-  heterogeneous label arrays are cast into the typed struct.
+"""The reference's mid_data corpus (SURVEY.md §2.1 S4, `preprocess.py:41-45`):
+a multiLine JSON array of ``{id, text, labels}`` read as a DataFrame
+``(doc_id long, text string, labels array<struct<span_id,type,start,end,mention>>)``,
+and its flat golden span table.  `plans/eval_job.py::evaluate_extractor`
+takes this shape.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-LABEL_STRUCT = StructType(
-    [
-        StructField("span_id", StringType(), False),
-        StructField("type", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),  # exclusive
-        StructField("mention", StringType(), False),
-    ]
-)
-MID_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("text", StringType(), False),
-        StructField("labels", ArrayType(LABEL_STRUCT), False),
-    ]
-)
-
-
-def read_bmes(spark: SparkSession, path: str) -> DataFrame:
-    """S1: BMES char files -> mid_data-shaped DataFrame.  doc_id =
-    (42-bit md5 of the file name) << 20 | sentence index within the file —
-    unique across a multi-file directory scan (a bare per-file index
-    collides), still monotone in file order within each file."""
-    raw = spark.read.text(path, wholetext=True).withColumn(
-        "file", F.input_file_name()
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from ..core.bmes import parse_bmes_lines
-
-        for pdf in batches:
-            rows = []
-            for value, fname in zip(
-                pdf["value"].tolist(), pdf["file"].tolist()
-            ):
-                fhash = (
-                    int(hashlib.md5(fname.encode()).hexdigest()[:11], 16)
-                    & ((1 << 42) - 1)
-                ) << 20
-                for i, (text, labels) in enumerate(
-                    parse_bmes_lines(value.splitlines())
-                ):
-                    if i >= 1 << 20:
-                        # the sentence index lives in the low 20 bits of
-                        # doc_id; overflowing would silently bleed into the
-                        # file-hash bits and collide — err loudly instead
-                        # (the SQL twins' error() guard convention)
-                        raise ValueError(
-                            f"read_bmes: {fname} has >= 2^20 sentences; "
-                            "doc_id index field would overflow"
-                        )
-                    rows.append(
-                        {
-                            "doc_id": fhash | i,
-                            "text": text,
-                            "labels": [
-                                {
-                                    "span_id": sid,
-                                    "type": t,
-                                    "start": s,
-                                    "end": e,
-                                    "mention": m,
-                                }
-                                for sid, t, s, e, m in labels
-                            ],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "labels"])
-
-    return raw.mapInPandas(parse, MID_SCHEMA).filter(F.length("text") > 0)
-
-
-_ENTITY_LIST_SCHEMA = StructType(
-    [
-        StructField("text", StringType()),
-        StructField(
-            "entity_list",
-            ArrayType(
-                StructType(
-                    [
-                        StructField(
-                            "entity_index",
-                            StructType(
-                                [
-                                    StructField("begin", LongType()),
-                                    StructField("end", LongType()),
-                                ]
-                            ),
-                        ),
-                        StructField("entity_type", StringType()),
-                        StructField("entity", StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def read_jsonlines_entities(spark: SparkSession, path: str) -> DataFrame:
-    """S2: weibo/msra-style JSON lines -> mid_data shape, mirroring
-    `data/weibo/raw_data/process.py:4-45` (empty texts dropped, labels
-    numbered T0.. in entity_list order) with pure column expressions."""
-    df = (
-        spark.read.schema(_ENTITY_LIST_SCHEMA)
-        .json(path)
-        .filter(F.length("text") > 0)
-    )
-    labels = F.transform(
-        F.coalesce("entity_list", F.array()),
-        lambda e, j: F.struct(
-            F.concat(F.lit("T"), j.cast("string")).alias("span_id"),
-            e["entity_type"].alias("type"),
-            e["entity_index"]["begin"].cast("int").alias("start"),
-            e["entity_index"]["end"].cast("int").alias("end"),
-            e["entity"].alias("mention"),
-        ),
-    )
-    # doc_id: unique but not line-sequential (monotonically_increasing_id
-    # is partition-local — a global row_number would force one partition,
-    # which is wrong at corpus scale; join downstream on text/keys instead)
-    return df.select(
-        F.monotonically_increasing_id().alias("doc_id"),
-        "text",
-        labels.alias("labels"),
-    )
-
-
-def read_gdcq_csv(spark: SparkSession, path: str) -> DataFrame:
-    """S3: gdcq aspect/opinion CSV (`data/gdcq/raw_data/process.py`)."""
-    return spark.read.csv(path, header=True, inferSchema=False)
-
-
-def gdcq_to_mid(gdcq: DataFrame) -> DataFrame:
-    """gdcq CSV rows -> mid_data shape, reference-exact
-    (`data/gdcq/raw_data/process.py:66-98`) including its quirks:
-
-    - the OPINION label is gated on ``Categories != "_"`` (not on
-      OpinionTerms — `process.py:95`);
-    - label ids are always "T0" (`process.py:94,96`);
-    - a row whose aspect offsets don't parse contributes NOTHING (the
-      reference's try wraps both appends), while an unparseable opinion
-      offset keeps an already-appended aspect label;
-    - the doc text is the first row's text per id.
-    """
-    a_start = F.expr("try_cast(trim(A_start) AS INT)")
-    a_end = F.expr("try_cast(trim(A_end) AS INT)")
-    o_start = F.expr("try_cast(trim(O_start) AS INT)")
-    o_end = F.expr("try_cast(trim(O_end) AS INT)")
-    a_wanted = F.col("AspectTerms") != "_"
-    a_ok = a_wanted & a_start.isNotNull() & a_end.isNotNull()
-    # opinion survives only if the aspect append did not raise first
-    o_gate = (~a_wanted) | a_ok
-    o_ok = (
-        (F.col("Categories") != "_")
-        & o_gate
-        & o_start.isNotNull()
-        & o_end.isNotNull()
-    )
-    a_label = F.when(
-        a_ok,
-        F.struct(
-            F.lit("T0").alias("span_id"),
-            F.col("Categories").alias("type"),
-            a_start.alias("start"),
-            a_end.alias("end"),
-            F.col("AspectTerms").alias("mention"),
-        ),
-    )
-    o_label = F.when(
-        o_ok,
-        F.struct(
-            F.lit("T0").alias("span_id"),
-            F.col("Polarities").alias("type"),
-            o_start.alias("start"),
-            o_end.alias("end"),
-            F.col("OpinionTerms").alias("mention"),
-        ),
-    )
-    with_order = gdcq.withColumn("row_ord", F.expr("CAST(`_c0` AS BIGINT)")) if "_c0" in gdcq.columns else gdcq.withColumn(
-        "row_ord", F.monotonically_increasing_id()
-    )
-    return (
-        with_order.withColumn("labs", F.array(a_label, o_label))
-        .groupBy(F.col("id").cast("long").alias("doc_id"))
-        .agg(
-            F.min_by("text", "row_ord").alias("text"),
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("row_ord", F.col("labs").alias("labs")))
-                        ),
-                        lambda s: s["labs"],
-                    )
-                ),
-                lambda x: x.isNotNull(),
-            ).alias("labels"),
-        )
-    )
 
 
 def read_mid_data(spark: SparkSession, path: str) -> DataFrame:
-    """S4: mid_data JSON array -> typed mid_data DataFrame.  The raw label
+    """mid_data JSON array -> typed mid_data DataFrame.  The raw label
     rows are heterogeneous JSON arrays (["T0","NAME",0,2,"高勇"]) which
     Spark reads as array<string>; cast into the struct here."""
     raw = spark.read.option("multiLine", True).json(path)

@@ -3,13 +3,41 @@ from __future__ import annotations
 import os
 import sys
 
+import numpy as np
 import pytest
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 REFERENCE = "/root/reference"
+
+# The reference's mid_data corpus shape, as `sources/corpus.py::read_mid_data`
+# reads it; ``end`` is exclusive.
+LABEL_STRUCT = StructType(
+    [
+        StructField("span_id", StringType(), False),
+        StructField("type", StringType(), False),
+        StructField("start", IntegerType(), False),
+        StructField("end", IntegerType(), False),
+        StructField("mention", StringType(), False),
+    ]
+)
+MID_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("text", StringType(), False),
+        StructField("labels", ArrayType(LABEL_STRUCT), False),
+    ]
+)
 
 
 def load_reference_module(relpath: str):
@@ -97,3 +125,20 @@ def brute_neardup_pairs(embeddings, threshold: float):
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
     )
+
+
+def viterbi_decode_brute(emissions, start_transitions, transitions,
+                         end_transitions) -> list[int]:
+    """Exhaustive-enumeration Viterbi reference (single row, tiny T/L)."""
+    from itertools import product
+
+    L, T = emissions.shape
+    best_path, best_score = None, -np.inf
+    for path in product(range(T), repeat=L):
+        s = start_transitions[path[0]] + emissions[0, path[0]]
+        for i in range(1, L):
+            s += transitions[path[i - 1], path[i]] + emissions[i, path[i]]
+        s += end_transitions[path[-1]]
+        if s > best_score:
+            best_score, best_path = s, path
+    return list(best_path)

@@ -13,7 +13,6 @@ import pytest
 from pytorch_bert_bilstm_crf_ner_spark.core.checkpoint import (
     broadcast_tagger_factory,
     load_state_dict,
-    load_tagger,
     save_tagger,
     state_dict,
 )
@@ -29,7 +28,7 @@ TEXTS = [
 ]
 
 
-def test_roundtrip_loaded_weights_are_authoritative(tmp_path):
+def test_roundtrip_loaded_weights_are_authoritative(spark, tmp_path):
     """Mutated-then-saved weights must survive the round trip and drive
     the outputs — proving load overwrites the seeded init instead of
     silently regenerating it."""
@@ -42,7 +41,7 @@ def test_roundtrip_loaded_weights_are_authoritative(tmp_path):
 
     ckpt = str(tmp_path / "ckpt")
     save_tagger(t, ckpt)
-    loaded = load_tagger(ckpt)
+    loaded = broadcast_tagger_factory(spark, ckpt)()
     fresh = DeterministicTagger(cfg)
 
     for name, arr in state_dict(loaded).items():
@@ -56,7 +55,7 @@ def test_roundtrip_loaded_weights_are_authoritative(tmp_path):
 
 @pytest.mark.parametrize("feature_layer", ["none", "bilstm", "idcnn"])
 @pytest.mark.parametrize("mid_dim", [None, 8])
-def test_roundtrip_matrix_every_family(tmp_path, feature_layer, mid_dim):
+def test_roundtrip_matrix_every_family(spark, tmp_path, feature_layer, mid_dim):
     """Every (feature layer x mid_linear) combination round-trips with
     MUTATED weights driving the post-load outputs: a tensor missing from
     state_dict() would keep its seeded init after load and change the
@@ -75,19 +74,19 @@ def test_roundtrip_matrix_every_family(tmp_path, feature_layer, mid_dim):
 
     ckpt = str(tmp_path / "ckpt")
     save_tagger(t, ckpt)
-    loaded = load_tagger(ckpt)
+    loaded = broadcast_tagger_factory(spark, ckpt)()
     assert loaded.cfg == cfg
     for name, arr in state_dict(loaded).items():
         np.testing.assert_array_equal(arr, sd[name])
     assert [tuple(r) for r in loaded.tag_batch(TEXTS)] == trained
 
 
-def test_roundtrip_idcnn_family(tmp_path):
+def test_roundtrip_idcnn_family(spark, tmp_path):
     cfg = TaggerConfig(feature_layer="idcnn")
     t = DeterministicTagger(cfg)
     ckpt = str(tmp_path / "ckpt")
     save_tagger(t, ckpt)
-    loaded = load_tagger(ckpt)
+    loaded = broadcast_tagger_factory(spark, ckpt)()
     assert loaded.cfg == cfg
     assert [tuple(r) for r in loaded.tag_batch(TEXTS)] == [
         tuple(r) for r in t.tag_batch(TEXTS)
@@ -96,9 +95,8 @@ def test_roundtrip_idcnn_family(tmp_path):
 
 def test_config_with_a_removed_field_is_refused(tmp_path):
     """A config.json carrying a field the config no longer has (the
-    embedding width is a constant now) makes both loaders raise instead of
-    loading with the field dropped; the broadcast factory raises before
-    it touches Spark."""
+    embedding width is a constant now) makes the loader raise instead of
+    loading with the field dropped, before it touches Spark."""
     ckpt = str(tmp_path / "ckpt")
     save_tagger(DeterministicTagger(), ckpt)
     path = os.path.join(ckpt, "config.json")
@@ -106,8 +104,6 @@ def test_config_with_a_removed_field_is_refused(tmp_path):
         cfg = json.load(f)
     with open(path, "w", encoding="utf-8") as f:
         json.dump(dict(cfg, emb_dim=64), f)
-    with pytest.raises(TypeError, match="emb_dim"):
-        load_tagger(ckpt)
     with pytest.raises(TypeError, match="emb_dim"):
         broadcast_tagger_factory(None, ckpt)
 

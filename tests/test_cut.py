@@ -107,23 +107,26 @@ def test_cut_sentences_main_matches_reference_impl():
     ns = load_reference_module("cut.py")
     if ns is None:
         pytest.skip("reference tree unavailable")
-    from pytorch_bert_bilstm_crf_ner_spark.core.cut import cut_sentences_main
+    from pytorch_bert_bilstm_crf_ner_spark.core.cut import (
+        cut_sentences_main_with_pos,
+    )
 
     for text in _MAIN_FIXTURES:
         for max_len in (14, 40, 90, 126):
-            assert cut_sentences_main(text, max_len) == ns[
-                "cut_sentences_main"
-            ](text, max_len), (text[:30], max_len)
+            ours = [p for p, _ in cut_sentences_main_with_pos(text, max_len)]
+            ref = ns["cut_sentences_main"](text, max_len)
+            assert ours == ref, (text[:30], max_len)
 
 
 def test_cut_sentences_main_drop_quirk():
     """The reference silently drops a leading overlong comma piece; the
     port must too (documented quirk, not a bug)."""
-    from pytorch_bert_bilstm_crf_ner_spark.core.cut import cut_sentences_main
+    from pytorch_bert_bilstm_crf_ner_spark.core.cut import (
+        cut_sentences_main_with_pos,
+    )
 
     text = "x" * 50 + "，" + "ab，" * 5
-    out = cut_sentences_main(text, 40)
-    joined = "".join(out)
+    joined = "".join(p for p, _ in cut_sentences_main_with_pos(text, 40))
     assert "x" * 50 not in joined  # leading overlong piece dropped
     assert "ab，" in joined        # the short tail survives
 
@@ -179,12 +182,9 @@ def test_three_tier_true_offsets_after_drop():
 
 
 def test_cut_sentences_main_with_pos_matches_plain():
-    """The with-pos variant is the single source of truth; its projection
-    must equal cut_sentences_main on quirky inputs (drops, overlong
-    flushes, whitespace filtering), and every piece must slice back out
-    of the input at its reported start."""
+    """On quirky inputs (drops, overlong flushes, whitespace filtering)
+    every piece slices back out of the input at its reported start."""
     from pytorch_bert_bilstm_crf_ner_spark.core.cut import (
-        cut_sentences_main,
         cut_sentences_main_with_pos,
     )
 
@@ -197,9 +197,7 @@ def test_cut_sentences_main_with_pos_matches_plain():
     ]
     for text in cases:
         for n in (14, 30, 40):
-            wp = cut_sentences_main_with_pos(text, n)
-            assert [p for p, _ in wp] == cut_sentences_main(text, n)
-            for p, s in wp:
+            for p, s in cut_sentences_main_with_pos(text, n):
                 assert text[s : s + len(p)] == p, (text, n, p, s)
 
 

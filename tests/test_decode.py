@@ -10,10 +10,9 @@ import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.core.decode import (
     bio_get_entities,
-    bioes_decode_dict,
     bioes_decode_flat,
 )
-from pytorch_bert_bilstm_crf_ner_spark.core.tags import ENT2ID, ID2ENT, NUM_TAGS
+from pytorch_bert_bilstm_crf_ner_spark.core.tags import ENT2ID, ID2ENT
 
 from .conftest import extract_function, load_reference_module
 
@@ -65,9 +64,11 @@ def test_dict_form_matches_reference_randomized(ref_decode_ns):
     rng = random.Random(7)
     for _ in range(300):
         n = rng.randint(1, 40)
-        tags = [rng.randrange(NUM_TAGS) for _ in range(n)]
+        tags = [rng.randrange(len(ENT2ID)) for _ in range(n)]
         text = "".join(chr(ord("a") + rng.randrange(26)) for _ in range(n))
-        ours = bioes_decode_dict(tags, text, ID2ENT)
+        ours = {}
+        for mention, start, etype in bioes_decode_flat(tags, text, ID2ENT):
+            ours.setdefault(etype, []).append((mention, start))
         ref = ref_decode_ns["bioes_decode"](tags, text, ID2ENT)
         assert ours == ref
 
@@ -79,7 +80,7 @@ def test_flat_form_matches_reference_randomized():
     rng = random.Random(13)
     for _ in range(300):
         n = rng.randint(1, 40)
-        tags = [rng.randrange(NUM_TAGS) for _ in range(n)]
+        tags = [rng.randrange(len(ENT2ID)) for _ in range(n)]
         text = "".join(chr(ord("a") + rng.randrange(26)) for _ in range(n))
         assert bioes_decode_flat(tags, text, ID2ENT) == ref_flat(tags, text, ID2ENT)
 

@@ -326,7 +326,8 @@ def test_evaluate_extractor_job(spark):
         classification_report,
         evaluate_extractor,
     )
-    from pytorch_bert_bilstm_crf_ner_spark.sources.corpus import MID_SCHEMA
+
+    from .conftest import MID_SCHEMA
 
     texts = [
         "run a table scan then hash join on the customer line",
@@ -368,7 +369,8 @@ def test_evaluate_extractor_runs_the_model_once(spark):
     spans (`span_metrics_by_type`), so the micro row's plan runs the tag
     UDF once: one ArrowEvalPython node, not one per semi/anti join."""
     from pytorch_bert_bilstm_crf_ner_spark.plans.eval_job import evaluate_extractor
-    from pytorch_bert_bilstm_crf_ner_spark.sources.corpus import MID_SCHEMA
+
+    from .conftest import MID_SCHEMA
 
     mid = spark.createDataFrame(
         [(0, "run a table scan then hash join on the customer line", []),

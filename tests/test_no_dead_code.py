@@ -2,10 +2,15 @@
 scripts and the entry points.  Spark-free.
 
 - Every top-level ``def``, ``class`` and module constant in the package is
-  referenced in code outside its own definition: a name, an attribute, an
-  import, or a string that is a bare identifier (``setattr(mod, "NAME",
-  ...)``).  Comments and docstrings do not count.  A function that nothing
-  calls is deleted, not kept "for later".
+  reached from an entry point.  The roots are every name the entry files
+  (`scripts/`, `perfbench/`, `bench.py`, `__spark_entry__.py`) use, plus
+  `ROOTS`, the public surface no entry file calls, each with its reason.
+  From a reached definition the walk follows every name its code uses: a
+  name, an attribute, or a string that is a bare identifier
+  (``setattr(mod, "NAME", ...)``), resolved by bare name.  Tests are never
+  roots, and an import line or an ``__all__`` string reaches nothing;
+  comments and docstrings do not count.  A function that only a test
+  calls is deleted, or moved into the tests when it is their reference.
 - Every defaulted parameter of a top-level package function is passed, by
   some call, an expression other than its own default.  A default that no
   caller overrides is a constant: the body reads a module constant
@@ -26,6 +31,25 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "pytorch_bert_bilstm_crf_ner_spark"
 SEARCHED = [f"{d}/**/*.py" for d in (PACKAGE, "tests", "perfbench", "scripts")] + [
     "bench.py", "__spark_entry__.py"]
+ENTRY_FILES = ("scripts" + os.sep, "perfbench" + os.sep, "bench.py", "__spark_entry__.py")
+# Package names no entry file uses that stay: name -> why.  `perfbench/`
+# is an entry file set, which is what keeps the relation views and
+# `canonicalize_mentions` reached until its layer sweep
+# (`perfbench/workloads.py::kg_layers`) is re-pointed at `run_pipeline`.
+ROOTS = {
+    "run_pipeline": "the pipeline as a library call (scripts/run_pipeline.py wraps it)",
+    "PipelineConfig": "run_pipeline's config, built by library callers",
+    "evaluate_extractor": "E2: the reference's dev/test evaluation as one Spark job",
+    "classification_report": "E2: the reference's per-type P/R/F1 report",
+    "triple_metrics": "the north rule's triple P/R >= 0.95 measure",
+    "read_mid_data": "the one corpus format evaluate_extractor takes",
+    "save_tagger": "writes the checkpoint PipelineConfig.checkpoint_dir reads",
+    "stream_kg": "streaming: transcripts in, the batch's mentions and triples out",
+    "read_stream_triples": "streaming: the triples stream_kg wrote, as the batch reads them",
+    "stream_neardup_simhash": "streaming: near-dup pairs per micro-batch",
+    "stream_dedup_exact": "streaming: exact dedup with a watermark",
+    "windowed_entity_counts": "streaming: windowed entity-mention counts",
+}
 # Fields no call sets, kept because the benchmark's layer sweep
 # (`perfbench/workloads.py::kg_layers`) reads ``PipelineConfig().tagger``
 # and passes ``cfg.relations`` on; they go when that sweep is re-pointed.
@@ -42,10 +66,11 @@ def _trees() -> dict[str, ast.Module]:
     return trees
 
 
-def _references(tree: ast.Module):
-    """(name, line) for every name the code uses: a ``Name``, an
-    attribute, an imported name, or a string constant that is a bare
-    identifier; docstrings and other bare-string statements are prose."""
+def _references(tree: ast.AST):
+    """(name, line) for every name the code under ``tree`` uses: a
+    ``Name``, an attribute, or a string constant that is a bare
+    identifier; docstrings and other bare-string statements are prose.
+    An import uses nothing: the name it binds is used where it is read."""
     prose = {id(node.value) for node in ast.walk(tree)
              if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)}
     for node in ast.walk(tree):
@@ -53,44 +78,55 @@ def _references(tree: ast.Module):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
             yield node.attr, node.lineno
-        elif isinstance(node, ast.alias):
-            for name in [*node.name.split("."), node.asname]:
-                yield name, node.lineno
         elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
               and node.value.isidentifier() and id(node) not in prose):
             yield node.value, node.lineno
 
 
 def _definitions(tree: ast.Module):
-    """(name, first line, last line) of every top-level def, class and
-    non-dunder constant, decorators included."""
+    """(name, first line, last line, node) of every top-level def, class
+    and non-dunder constant, decorators included."""
     for node in tree.body:
         first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            yield node.name, first, node.end_lineno
+            yield node.name, first, node.end_lineno, node
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for target in targets:
                 for name in ast.walk(target):
                     if isinstance(name, ast.Name) and not name.id.startswith("__"):
-                        yield name.id, first, node.end_lineno
+                        yield name.id, first, node.end_lineno, node
 
 
-def test_every_top_level_definition_is_referenced():
+def test_every_definition_is_reached_from_an_entry_point():
     trees = _trees()
-    used: dict[str, list] = {}  # name -> [(path, line)]
+    defs: dict[str, list] = {}  # name -> [(path, first, last, node)]
     for path, tree in trees.items():
-        for name, line in _references(tree):
-            used.setdefault(name, []).append((path, line))
-    unused = []
+        if path.startswith(PACKAGE + os.sep):
+            for name, first, last, node in _definitions(tree):
+                defs.setdefault(name, []).append((path, first, last, node))
+    missing = sorted(set(ROOTS) - set(defs))
+    assert missing == [], f"ROOTS names no definition: {missing}"
+    assert all(ROOTS.values())  # every root says why
+    todo = set(ROOTS)
     for path, tree in trees.items():
-        if not path.startswith(PACKAGE + os.sep):
+        if path.startswith(ENTRY_FILES):
+            todo.update(name for name, _ in _references(tree))
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in defs:
             continue
-        for name, first, last in _definitions(tree):
-            if all(other == path and first <= line <= last
-                   for other, line in used.get(name, [])):
-                unused.append(f"{path}:{first} {name}")
-    assert unused == [], "nothing references:\n" + "\n".join(unused)
+        reached.add(name)
+        for _, _, _, node in defs[name]:
+            todo.update(used for used, _ in _references(node))
+    unreached = sorted((path, first, last, name) for name, sites in defs.items()
+                       if name not in reached for path, first, last, _ in sites)
+    assert unreached == [], (
+        f"{len(unreached)} definitions, {sum(l - f + 1 for _, f, l, _ in unreached)} "
+        "lines, that no entry point reaches:\n" + "\n".join(
+            f"{path}:{first}-{last} {name} ({last - first + 1})"
+            for path, first, last, name in unreached))
 
 
 def _calls(trees: dict[str, ast.Module]) -> dict[str, list[ast.Call]]:

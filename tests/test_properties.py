@@ -70,10 +70,9 @@ def test_encode_decode_roundtrip(case):
 def test_viterbi_optimality(L, T, seed):
     import numpy as np
 
-    from pytorch_bert_bilstm_crf_ner_spark.core.viterbi import (
-        viterbi_decode_batch,
-        viterbi_decode_brute,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.core.viterbi import viterbi_decode_batch
+
+    from .conftest import viterbi_decode_brute
 
     rng = np.random.RandomState(seed)
     em = rng.uniform(-1, 1, (1, L, T)).astype(np.float32)

@@ -9,7 +9,7 @@ import duckdb
 import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.core import oracle as py_oracle
-from pytorch_bert_bilstm_crf_ner_spark.core.metrics import get_p_r_f
+from pytorch_bert_bilstm_crf_ner_spark.operators.evaluate import get_p_r_f
 from pytorch_bert_bilstm_crf_ner_spark.plans.pipeline import PipelineConfig, run_pipeline
 from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import (
     TRANSCRIPTS_SQL,

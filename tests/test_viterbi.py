@@ -4,10 +4,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from pytorch_bert_bilstm_crf_ner_spark.core.viterbi import (
-    viterbi_decode_batch,
-    viterbi_decode_brute,
-)
+from pytorch_bert_bilstm_crf_ner_spark.core.viterbi import viterbi_decode_batch
+
+from .conftest import viterbi_decode_brute
 
 
 def _params(rng, T):
