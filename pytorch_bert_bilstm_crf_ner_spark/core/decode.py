@@ -37,7 +37,7 @@ def _resolve_table(id2ent_items: tuple) -> dict:
     """tag_id -> (is_S, is_B, is_I, is_E, type), precomputed through
     :func:`_resolve` (the id-0 quirk included) so the FSM's inner loop
     does one dict lookup per token instead of partition+startswith calls
-    (round-6: _resolve was ~30% of the per-turn decode cost).  Keyed on
+    (_resolve was ~30% of the per-turn decode cost).  Keyed on
     the id2ent ITEMS — a mutated or different vocab gets its own table."""
     id2ent = dict(id2ent_items)
     out = {}

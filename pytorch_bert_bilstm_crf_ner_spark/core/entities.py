@@ -40,10 +40,10 @@ ENTITY_DICT_ROWS: tuple[tuple[int, str, str, str], ...] = (
 )
 
 
-def alias_edges(rows=ENTITY_DICT_ROWS) -> list[tuple[int, int]]:
+def alias_edges() -> list[tuple[int, int]]:
     """Undirected edges between entity ids sharing a (alias, type) key."""
     by_alias: dict[tuple[str, str], list[int]] = defaultdict(list)
-    for eid, alias, etype, _ in rows:
+    for eid, alias, etype, _ in ENTITY_DICT_ROWS:
         by_alias[(alias, etype)].append(eid)
     edges = []
     for ids in by_alias.values():
@@ -74,15 +74,15 @@ def connected_components_py(
     return {n: find(n) for n in node_ids}
 
 
-def canonical_map(rows=ENTITY_DICT_ROWS) -> dict[int, tuple[int, str]]:
+def canonical_map() -> dict[int, tuple[int, str]]:
     """entity_id -> (canonical_id, canonical_name); canonical_name is the
     minimum spelling the dictionary gives the component's min entity_id
     (the rule of `operators/canonicalize.py::canonical_entities` and its
     recursive-CTE twin)."""
-    ids = sorted({r[0] for r in rows})
-    comp = connected_components_py(ids, alias_edges(rows))
+    ids = sorted({r[0] for r in ENTITY_DICT_ROWS})
+    comp = connected_components_py(ids, alias_edges())
     names: dict[int, str] = {}
-    for eid, _, _, name in rows:
+    for eid, _, _, name in ENTITY_DICT_ROWS:
         names[eid] = min(names.get(eid, name), name)
     return {eid: (comp[eid], names[comp[eid]]) for eid in ids}
 
@@ -94,6 +94,6 @@ def canonical_dict_rows() -> tuple[tuple[int, str, str, str], ...]:
     fall into one component, so each key maps to exactly one canonical
     entity and linking against these rows links and canonicalizes in one
     join."""
-    cmap = canonical_map(ENTITY_DICT_ROWS)
+    cmap = canonical_map()
     return tuple(sorted({(cmap[eid][0], alias, etype, cmap[eid][1])
                          for eid, alias, etype, _ in ENTITY_DICT_ROWS}))

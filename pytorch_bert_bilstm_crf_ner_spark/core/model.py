@@ -77,23 +77,15 @@ class TaggerConfig:
     mid_dim: int | None = None
     # P2 long-piece fallback when the two-tier cut leaves a piece over
     # max_seq_len - 2: "hard_chunk" (default — char slicing, concat
-    # invariant preserved, keeps round-1/2 parity outputs) or
+    # invariant preserved, so the pinned parity outputs hold) or
     # "three_tier" — the reference serving cutter `cut.py:24-76`
     # (comma split + strict-< repack; reference quirks apply: text may be
-    # silently dropped, so the concat invariant does NOT hold).
-    # OFFSET semantics in "three_tier": the cutter may silently DROP
-    # text, so two rebase conventions exist.
-    # "true" (default): each piece carries its TRUE start in the ORIGINAL
-    # turn text (`cut_sentences_main_with_pos` tracks what was dropped),
-    # so (conv_id, turn_idx, start) joins and text[start:start+len]
-    # slices stay valid even after drops.  "emitted": the reference's
-    # `merge_with_loc` serving behavior (`scripts/server.py:74-85`) —
-    # offsets rebased by CUMULATIVE EMITTED length, shifting every
-    # post-drop mention LEFT relative to the original text; keep only for
-    # bit-faithful serving replication.  Irrelevant for "hard_chunk"
-    # (no drops — the two conventions coincide).
+    # silently dropped, so the concat invariant does NOT hold).  Either
+    # way each piece carries its TRUE start in the ORIGINAL turn text
+    # (`cut_sentences_main_with_pos` tracks what was dropped), so
+    # (conv_id, turn_idx, start) joins and text[start:start+len] slices
+    # stay valid even after drops.
     long_piece_cut: str = "hard_chunk"
-    three_tier_offsets: str = "true"
 
 
 class DeterministicTagger:
@@ -187,10 +179,6 @@ class DeterministicTagger:
         return self._char_em_cache[1]
 
     # ------------------------------------------------------------------ #
-
-    def _piece(self, text: str) -> list[str]:
-        """Piece texts only (see :meth:`_piece_pos` for the offsets)."""
-        return [p for p, _ in self._piece_pos(text)]
 
     def _piece_pos(self, text: str) -> list[tuple[str, int]]:
         """Cut to <= max_seq_len - 2 chars: reference tiered sentence cut
@@ -293,32 +281,18 @@ class DeterministicTagger:
         Long texts are cut (reference `predict.py:12-53` batch shape), each
         piece decoded, and piece-local offsets rebased to the piece's TRUE
         start in the original turn text (`_piece_pos`), so downstream
-        (start, mention) joins and slices always line up — except under
-        ``three_tier_offsets="emitted"``, which reproduces the reference's
-        ``merge_with_loc`` cumulative-emitted-length rebase
-        (`scripts/server.py:74-85`) for bit-faithful serving.  The two
-        coincide whenever no text is dropped (always, for "hard_chunk").
-        All pieces of all rows go through ONE Viterbi batch.
+        (start, mention) joins and slices always line up.  All pieces of
+        all rows go through ONE Viterbi batch.
         """
-        if self.cfg.three_tier_offsets not in ("true", "emitted"):
-            raise ValueError(
-                f"three_tier_offsets: {self.cfg.three_tier_offsets!r}"
-            )
-        emitted_mode = (
-            self.cfg.long_piece_cut == "three_tier"
-            and self.cfg.three_tier_offsets == "emitted"
-        )
         pieces: list[str] = []
         owner: list[tuple[int, int]] = []  # (row, piece char start in row text)
         for b, text in enumerate(texts):
             if not text:
                 continue
-            pos = 0
-            for p, true_start in self._piece_pos(text):
+            for p, start in self._piece_pos(text):
                 if p:
                     pieces.append(p)
-                    owner.append((b, pos if emitted_mode else true_start))
-                pos += len(p)
+                    owner.append((b, start))
         out: list[list[Span]] = [[] for _ in texts]
         if not pieces:
             return out

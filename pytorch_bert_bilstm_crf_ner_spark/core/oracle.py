@@ -29,23 +29,22 @@ from .pairing import (
 Turn = tuple[str, int, str]  # (conv_id, turn_idx, text)
 
 
-def extract_mentions(turns: list[Turn], tagger: DeterministicTagger | None = None
-                     ) -> list[tuple[str, int, str, int, str]]:
-    """[(conv_id, turn_idx, mention, start, type)] in scan order per turn."""
-    tagger = tagger or DeterministicTagger()
+def extract_mentions(turns: list[Turn]) -> list[tuple[str, int, str, int, str]]:
+    """[(conv_id, turn_idx, mention, start, type)] in scan order per turn,
+    from the default tagger."""
     texts = [t[2] for t in turns]
     out = []
-    for (conv, idx, _), spans in zip(turns, tagger.tag_batch(texts)):
+    for (conv, idx, _), spans in zip(turns, DeterministicTagger().tag_batch(texts)):
         out.extend((conv, idx, m, s, ty) for m, s, ty in spans)
     return out
 
 
-def link_mentions(mentions, rows=ENTITY_DICT_ROWS):
+def link_mentions(mentions):
     """Inner 'join' on (lower(mention), type) == (alias, type); ambiguous
     aliases emit one linked row per dictionary entity (deduped later by
     canonical id).  -> [(conv, turn, mention, start, type, entity_id)]"""
     dict_idx: dict[tuple[str, str], list[int]] = defaultdict(list)
-    for eid, alias, etype, _ in rows:
+    for eid, alias, etype, _ in ENTITY_DICT_ROWS:
         dict_idx[(alias, etype)].append(eid)
     linked = []
     for conv, idx, mention, start, etype in mentions:
@@ -57,7 +56,7 @@ def link_mentions(mentions, rows=ENTITY_DICT_ROWS):
 def canonicalize(linked):
     """Map entity ids to canonical (id, name); dedupe rows that became
     identical -> [(conv, turn, mention, start, type, canon_id, canon_name)]"""
-    cmap = canonical_map(ENTITY_DICT_ROWS)
+    cmap = canonical_map()
     seen = set()
     out = []
     for conv, idx, mention, start, etype, eid in linked:

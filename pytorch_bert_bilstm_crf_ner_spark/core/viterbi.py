@@ -65,7 +65,7 @@ def viterbi_decode_batch(
     # Forward DP — score[b, j] = best score of any path over the first i+1
     # valid tokens of row b ending in tag j.
     #
-    # Round-6 layout: the candidate tensor is built TRANSPOSED as
+    # Layout: the candidate tensor is built TRANSPOSED as
     # (B, T_cur, T_prev) so both the argmax and the max reduce over the
     # CONTIGUOUS last axis (the strided middle-axis argmax was ~45% of
     # the whole decode), into a preallocated buffer (no per-step temps).

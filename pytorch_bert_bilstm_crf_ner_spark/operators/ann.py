@@ -19,16 +19,16 @@ vector width from the batch and rejects null or ragged rows.
 Operators, each with a hash-checked DuckDB twin (``*_sql``; the twins
 share one exact re-rank + ``ROW_NUMBER`` top-k tail):
 
-- :func:`cosine_topk` — exact top-k: the <= ``n_queries`` query rows are
+- :func:`cosine_topk` — exact top-k: the <= ``N_QUERIES`` query rows are
   broadcast against the corpus, per-query ``row_number`` top-k.
 - :func:`lsh_cosine_topk` — md5-hyperplane sign-LSH at the data's width:
   candidates share a (table_id, bucket) with a query (equi-join against
   the broadcast query buckets), exact re-rank; recall tuned by
-  (n_planes, n_tables).
+  (LSH_PLANES, LSH_TABLES).
 - :func:`ivf_cosine_topk` — inverted file over caller-supplied centroids
   (:func:`ivf_sample_centroids`: the ``IVF_CENTROIDS`` md5-first rows,
   which the twin picks again in SQL): every vector joins its nearest
-  centroid's bucket, each query searches its ``nprobe`` nearest buckets,
+  centroid's bucket, each query searches its ``NPROBE`` nearest buckets,
   exact re-rank.
 """
 
@@ -165,15 +165,15 @@ def _rerank_candidates(cand: DataFrame, embeddings: DataFrame,
     return _cosine(pairs, a_key, b_key)
 
 
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k of (q_id, c_id, cos_sim), ranked by (cos_sim desc,
+def _topk(scored: DataFrame) -> DataFrame:
+    """Per-query top-TOP_K of (q_id, c_id, cos_sim), ranked by (cos_sim desc,
     c_id asc): (query_id, neighbor_id, cos_sim, rank)."""
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("c_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
@@ -183,19 +183,18 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
-                k: int = TOP_K) -> DataFrame:
-    """Exact top-k cosine neighbors for the first ``n_queries`` vec_ids:
+def cosine_topk(embeddings: DataFrame) -> DataFrame:
+    """Exact top-k cosine neighbors for the first ``N_QUERIES`` vec_ids:
     (query_id, neighbor_id, cos_sim, rank).  The query rows are broadcast
     against the corpus (nested-loop join on vec_a != vec_b) and every
     pair is scored by :func:`pair_cosine_parts`, which takes the vector
     width from each Arrow batch.  The recall baseline for the approximate
     operators; DuckDB twin :func:`cosine_topk_sql`."""
-    q = _side(embeddings.filter(F.col("vec_id") < n_queries), "a")
+    q = _side(embeddings.filter(F.col("vec_id") < N_QUERIES), "a")
     pairs = _side(embeddings, "b").join(
         F.broadcast(q), F.col("vec_a") != F.col("vec_b")
     )
-    return _topk(_cosine(pairs, "q_id", "c_id"), k)
+    return _topk(_cosine(pairs, "q_id", "c_id"))
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -272,7 +271,7 @@ def lsh_buckets(embeddings: DataFrame,
     """(vec_id, table_id, bucket): sign-LSH bucket per hash table over
     ``plane_rows`` (:func:`md5_plane_rows`), whose width must equal the
     embeddings' (ValueError otherwise)."""
-    # Round-6 rewrite: ONE Arrow-batched numpy stage replaces the former
+    # ONE Arrow-batched numpy stage replaces the former
     # broadcast-plane join + interpreted HOF dot + groupBy-sum (guide
     # §4.2/§8.3: hand whole batches to vectorized native code; §2.4: the
     # per-(vec, table) aggregation Exchange is gone — buckets are computed
@@ -323,10 +322,7 @@ def lsh_buckets(embeddings: DataFrame,
     )
 
 
-def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
-                    k: int = TOP_K, n_planes: int = LSH_PLANES,
-                    n_tables: int = LSH_TABLES,
-                    dim: int | None = None) -> DataFrame:
+def lsh_cosine_topk(embeddings: DataFrame, dim: int | None = None) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in any table,
     exact cosine re-rank within candidates.  The md5 planes are built at
     the embedding width ``dim``; pass it when known (e.g. from the parquet
@@ -334,10 +330,10 @@ def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
     reads it."""
     if dim is None:
         dim = embedding_width(embeddings)
-    buckets = lsh_buckets(embeddings, md5_plane_rows(dim, n_planes, n_tables))
-    # the query side is <= n_queries x n_tables rows by construction:
+    buckets = lsh_buckets(embeddings, md5_plane_rows(dim, LSH_PLANES, LSH_TABLES))
+    # the query side is <= N_QUERIES x LSH_TABLES rows by construction:
     # broadcast it so the corpus bucket side is never shuffled
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
+    qb = buckets.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "table_id", "bucket"
     )
     cand = (
@@ -346,7 +342,7 @@ def lsh_cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
         .select("q_id", F.col("vec_id").alias("c_id"))
         .distinct()
     )
-    return _topk(_rerank_candidates(cand, embeddings), k)
+    return _topk(_rerank_candidates(cand, embeddings))
 
 
 # --------------------------------------------------------------------- #
@@ -434,30 +430,28 @@ def ivf_sample_centroids(embeddings: DataFrame) -> list[list[float]]:
     return [list(r["embedding"]) for r in rows]
 
 
-def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
-                    n_queries: int = N_QUERIES, k: int = TOP_K,
-                    nprobe: int = NPROBE) -> DataFrame:
+def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """IVF ANN over driver-held ``centroids`` (e.g.
     :func:`ivf_sample_centroids`, whose pick the DuckDB twin
     :func:`ivf_cosine_topk_sql` repeats): bucket every vector by its nearest
-    centroid; for each query, search only its ``nprobe`` nearest buckets,
+    centroid; for each query, search only its ``NPROBE`` nearest buckets,
     exact cosine re-rank inside.  Assignment and probe are the same kernel
     (:func:`_assign_to_centroid`, depth 1 over the corpus and depth
-    ``nprobe`` over the <= ``n_queries`` query rows); the candidate join is
+    ``NPROBE`` over the <= ``N_QUERIES`` query rows); the candidate join is
     an equi-join on centroid_id — no quadratic stage anywhere.  Recall is
-    tuned by (len(centroids), nprobe); pytest pins it against
+    tuned by (len(centroids), NPROBE); pytest pins it against
     :func:`cosine_topk`.  Zero-norm or non-finite centroids raise
     ValueError when the plan is built."""
     assigned = _assign_to_centroid(embeddings, centroids)
     probes = _assign_to_centroid(
-        embeddings.filter(F.col("vec_id") < n_queries), centroids,
-        depth=nprobe,
+        embeddings.filter(F.col("vec_id") < N_QUERIES), centroids,
+        depth=NPROBE,
     ).select(F.col("vec_id").alias("q_id"), "centroid_id")
 
-    # probes is <= n_queries x nprobe rows: broadcast it so the
+    # probes is <= N_QUERIES x NPROBE rows: broadcast it so the
     # full-corpus assignment side is never shuffled by the 8-key
     # centroid_id (a guaranteed-skew shuffle key).  No distinct: IVF
-    # assigns every vector to EXACTLY ONE centroid and the nprobe ids per
+    # assigns every vector to EXACTLY ONE centroid and the NPROBE ids per
     # query are distinct by construction, so a (q, c) pair can only arise
     # once (LSH keeps its distinct, where multi-table collisions are real).
     cand = (
@@ -465,7 +459,7 @@ def ivf_cosine_topk(embeddings: DataFrame, centroids: list[list[float]],
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", F.col("vec_id").alias("c_id"))
     )
-    return _topk(_rerank_candidates(cand, embeddings), k)
+    return _topk(_rerank_candidates(cand, embeddings))
 
 
 def ivf_cosine_topk_sql() -> str:

@@ -8,7 +8,8 @@
                           ``#;#TYPE#;#`` slots;
   synthesize_from_templates (P9+J3, `aug.py:61-123`): refill slots from
                           the inventory, rebuild texts with exact label
-                          offsets, ``repeat`` variants per template.
+                          offsets, ``AUGMENT_REPEAT`` variants per
+                          template.
 
 Documented deviation: the reference samples slot fillers WITHOUT
 replacement from a mutable pool (`aug.py:99-103`), which is inherently
@@ -23,8 +24,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-# salt of the md5 filler pick, shared with the DuckDB twin
+# salt of the md5 filler pick, and the synthetic variants per template,
+# shared with the DuckDB twin
 FILLER_SEED = 1234
+AUGMENT_REPEAT = 1
 
 
 def build_entity_inventory(mid: DataFrame) -> DataFrame:
@@ -51,11 +54,7 @@ def template_mask(mid: DataFrame) -> DataFrame:
     return mid.select("doc_id", tmpl.alias("template"))
 
 
-def synthesize_from_templates(
-    templates: DataFrame,
-    inventory: DataFrame,
-    repeat: int = 2,
-) -> DataFrame:
+def synthesize_from_templates(templates: DataFrame, inventory: DataFrame) -> DataFrame:
     """Templates + inventory -> mid_data-shaped synthetic rows.
 
     Pipeline: explode repeats x pieces -> broadcast-join type pieces to the
@@ -64,7 +63,7 @@ def synthesize_from_templates(
     pieces = (
         templates.select(
             "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(repeat - 1))).alias("rep"),
+            F.explode(F.sequence(F.lit(0), F.lit(AUGMENT_REPEAT - 1))).alias("rep"),
             F.posexplode(F.split("template", "#;#")).alias("piece_idx", "piece"),
         )
         .filter(F.col("piece") != "")

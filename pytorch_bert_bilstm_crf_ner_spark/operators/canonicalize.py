@@ -134,7 +134,7 @@ def _star_components(sym: DataFrame, max_iter: int,
         # construction, so set equality == "no (hi, lo) appears with an
         # unbalanced +1/-1 tag" — ONE job with ONE shuffle, where the old
         # two-directional exceptAll probe cost two jobs of two shuffles
-        # each (round-6; the probe dominated small-graph rounds)
+        # each (the probe dominated small-graph rounds)
         delta = (
             nxt.select("hi", "lo", F.lit(1).alias("s"))
             .unionAll(directed.select("hi", "lo", F.lit(-1).alias("s")))

@@ -47,12 +47,12 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
 SHINGLE_N = 3  # words per shingle
 
 
-def _shingle_rows(documents: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle): every n-word shingle of every document, repeats
-    kept.
+def _shingle_rows(documents: DataFrame) -> DataFrame:
+    """(doc_id, shingle): every SHINGLE_N-word shingle of every document,
+    repeats kept.
 
-    Round-6 formulation: explode the shingle POSITIONS and build each
-    shingle with codegen'd slice/array_join per exploded row, instead of
+    Explodes the shingle POSITIONS and builds each shingle with
+    codegen'd slice/array_join per exploded row, instead of
     materializing the whole shingle array via an interpreted
     ``transform(...)`` lambda (guide §4.1 — measured 1.67 s -> 0.19 s for
     the shingle stage alone at sf0.1)."""
@@ -62,18 +62,18 @@ def _shingle_rows(documents: DataFrame, n: int) -> DataFrame:
             "doc_id",
             "w",
             F.explode(
-                F.expr(f"sequence(0, greatest(size(w) - {n}, 0))")
+                F.expr(f"sequence(0, greatest(size(w) - {SHINGLE_N}, 0))")
             ).alias("i"),
         )
         .select(
             "doc_id",
-            F.expr(f"array_join(slice(w, i + 1, {n}), ' ')").alias("shingle"),
+            F.expr(f"array_join(slice(w, i + 1, {SHINGLE_N}), ' ')").alias("shingle"),
         )
     )
 
 
-def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """(doc_id, shingle): distinct n-word shingles per document.
+def _shingles(documents: DataFrame) -> DataFrame:
+    """(doc_id, shingle): distinct SHINGLE_N-word shingles per document.
 
     :func:`_shingle_rows` then dropDuplicates — the former row-local
     ``array_distinct(transform(...))`` avoided the dedup Exchange but paid
@@ -81,14 +81,14 @@ def _shingles(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     self-join evaluates this subtree three times (two join sides + the
     counts): 4.8 s -> 1.5 s at sf0.1 for ngram_jaccard_pairs.  Same
     distinct (doc_id, shingle) set."""
-    return _shingle_rows(documents, n).dropDuplicates(["doc_id", "shingle"])
+    return _shingle_rows(documents).dropDuplicates(["doc_id", "shingle"])
 
 
-def _shingles_sql(n: int = SHINGLE_N) -> str:
+def _shingles_sql() -> str:
     return f"""
 SELECT doc_id, unnest(list_distinct(list_transform(
-         range(0, greatest(len(string_split(text,' ')) - {n}, 0) + 1),
-         i -> array_to_string(list_slice(string_split(text,' '), i+1, i+{n}), ' ')
+         range(0, greatest(len(string_split(text,' ')) - {SHINGLE_N}, 0) + 1),
+         i -> array_to_string(list_slice(string_split(text,' '), i+1, i+{SHINGLE_N}), ' ')
        ))) AS shingle
 FROM documents
 """
@@ -101,14 +101,14 @@ FROM documents
 JACCARD_THRESHOLD = 0.8  # a near-dup pair's least Jaccard similarity
 
 
-def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs at or over ``JACCARD_THRESHOLD``;
     doc_a < doc_b.
 
     Shingle self-join counts the intersection; per-doc shingle counts give
     the union by inclusion-exclusion — no quadratic cross join.
     """
-    sh = _shingles(documents, n)
+    sh = _shingles(documents)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -136,9 +136,9 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     )
 
 
-def ngram_jaccard_sql(n: int = SHINGLE_N) -> str:
+def ngram_jaccard_sql() -> str:
     return f"""
-WITH sh AS ({_shingles_sql(n)}),
+WITH sh AS ({_shingles_sql()}),
 counts AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id doc_a, b.doc_id doc_b, COUNT(*) n_inter
@@ -175,7 +175,7 @@ def minhash_signatures(documents: DataFrame, n_hashes: int = N_HASHES) -> DataFr
     # over its distinct set, so the signatures are hash-identical (the
     # Jaccard operator, whose counts DO need distinct shingles, reads
     # :func:`_shingles`).
-    sh = _shingle_rows(documents, SHINGLE_N)
+    sh = _shingle_rows(documents)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle")))).alias(f"h{k}")
         for k in range(n_hashes)
@@ -258,6 +258,9 @@ GROUP BY a.doc_id, b.doc_id
 # ------------------------------------------------------------------ #
 # SimHash (48-bit, md5-nibble based so both engines agree; bit 47..0)
 
+# a multiple of 4 and at most 60: the packed form reads the leading
+# SIMHASH_BITS/4 md5 hex chars as one signed BIGINT, and past 60 bits a
+# leading hex digit >= 8 overflows and the cast yields NULL
 SIMHASH_BITS = 48
 # banded near-dup search: 4 bands of 12 bits, Hamming <= 3; exact recall
 # needs SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1 (pigeonhole)
@@ -265,33 +268,23 @@ SIMHASH_BANDS = 4
 SIMHASH_MAX_HAMMING = 3
 
 
-def _check_simhash_bits(bits: int) -> None:
-    """The packed form reads the leading ``bits/4`` md5 hex chars as one
-    signed BIGINT: past 60 bits a leading hex digit >= 8 overflows and the
-    cast yields NULL, silently dropping that word's votes."""
-    if bits % 4:
-        raise ValueError(f"bits={bits} must be a multiple of 4")
-    if bits > 60:
-        raise ValueError(f"bits={bits} must be at most 60")
-
-
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash): weighted-majority bit fingerprint over words.
 
     Bit b of a word's hash = bit (3 - b%4) of hex nibble b//4 of md5(word);
     the document bit is 1 iff more words set it than clear it.
 
-    Round-6 formulation: the first ``bits/4`` hex chars of md5(word) are
-    ONE packed integer ``v`` (bit b of the fingerprint = bit ``bits-1-b``
-    of ``v`` — the hex string IS the big-endian bit string), so the whole
-    vote tally is a SINGLE groupBy(doc_id) with ``bits`` conditional
+    The first ``SIMHASH_BITS/4`` hex chars of md5(word) are ONE packed
+    integer ``v`` (bit b of the fingerprint = bit ``SIMHASH_BITS-1-b`` of
+    ``v`` — the hex string IS the big-endian bit string), so the whole
+    vote tally is a SINGLE groupBy(doc_id) with ``SIMHASH_BITS`` conditional
     SUM((v >> k) & 1) aggregates plus COUNT(*): vote_b = 2*set_b - n > 0
-    iff 2*set_b > n.  This removes the former words x ``bits`` explode
+    iff 2*set_b > n.  This removes the former words x bits explode
     (13M intermediate rows at sf0.1) and the second aggregation /
-    Exchange entirely — one Generate, one Exchange of docs x (bits+1)
+    Exchange entirely — one Generate, one Exchange of docs x (bits + 1)
     pre-combined longs, all whole-stage-codegen.  Bit-identical output:
     same per-word bits, same majority rule, same packing."""
-    _check_simhash_bits(bits)
+    bits = SIMHASH_BITS
     nib = bits // 4
     words = documents.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
@@ -433,15 +426,17 @@ def auto_n_planes(n: int) -> int:
     return max(3, (n // 60).bit_length() - 1) if n > 60 else 3
 
 
-# hash tables of the embedding near-dup route
+# hash tables of the embedding near-dup route, and the least cosine of a
+# near-dup pair
 NEARDUP_TABLES = 16
+NEARDUP_THRESHOLD = 0.5
 
 
 def embedding_neardup_pairs(embeddings: DataFrame,
-                            threshold: float = 0.95,
                             n: int | None = None,
                             dim: int | None = None) -> DataFrame:
-    """(vec_a, vec_b, cos_sim) for pairs above threshold; vec_a < vec_b.
+    """(vec_a, vec_b, cos_sim) for pairs at or above ``NEARDUP_THRESHOLD``;
+    vec_a < vec_b.
 
     Sign-LSH bucketing (`operators/ann.py::lsh_buckets`) over the md5
     hyperplanes (`operators/ann.py::md5_plane_rows`) generates candidate
@@ -470,8 +465,8 @@ def embedding_neardup_pairs(embeddings: DataFrame,
         dim = embedding_width(embeddings)
     # Candidate generation stays (vec_id, table, bucket) self-join +
     # distinct: a leftmost-shared-table dedup (emit each pair from its
-    # first colliding table, no distinct Exchange) was tried in round
-    # 6 and REVERTED — carrying both 16-bucket arrays through 3.1M
+    # first colliding table, no distinct Exchange) was tried and
+    # REVERTED — carrying both 16-bucket arrays through 3.1M
     # collision rows cost more than the 16-byte-pair distinct it saved
     # (3.4s vs 1.9s at sf0.1; see BASELINE.md).
     buckets = lsh_buckets(embeddings,
@@ -490,12 +485,12 @@ def embedding_neardup_pairs(embeddings: DataFrame,
     # bit-identical to the SQL twin's
     return (
         _rerank_candidates(cand, embeddings, a_key="vec_a", b_key="vec_b")
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEARDUP_THRESHOLD)
         .select("vec_a", "vec_b", "cos_sim")
     )
 
 
-def embedding_neardup_lsh_sql(threshold: float = 0.95) -> str:
+def embedding_neardup_lsh_sql() -> str:
     """DuckDB twin of :func:`embedding_neardup_pairs` (lsh route) that
     computes THE SAME LSH candidate set as the Spark plan AT ANY SCALE
     FACTOR by construction — nothing data-dependent is frozen at
@@ -528,7 +523,7 @@ SELECT cand.vec_a, cand.vec_b, {cos} AS cos_sim
 FROM cand
 JOIN embeddings a ON a.vec_id = cand.vec_a
 JOIN embeddings b ON b.vec_id = cand.vec_b
-WHERE {cos} >= {threshold}
+WHERE {cos} >= {NEARDUP_THRESHOLD}
 """
 
 
@@ -538,11 +533,10 @@ WHERE {cos} >= {threshold}
 # "keep one per cluster" step of a dedup pipeline).
 
 
-def neardup_clusters(embeddings: DataFrame, threshold: float = 0.95,
-                     n: int | None = None,
+def neardup_clusters(embeddings: DataFrame, n: int | None = None,
                      dim: int | None = None) -> DataFrame:
     """(vec_id, cluster_id): cluster_id = min vec_id reachable through
-    above-threshold near-dup pairs.  Only vectors appearing in at least
+    near-dup pairs (cosine >= ``NEARDUP_THRESHOLD``).  Only vectors appearing in at least
     one pair are emitted (singletons are their own trivial cluster).
     Pairs come from :func:`embedding_neardup_pairs` (LSH candidates +
     exact re-verify); components come from
@@ -552,7 +546,7 @@ def neardup_clusters(embeddings: DataFrame, threshold: float = 0.95,
     A~B~C~... finish) above it."""
     from .canonicalize import connected_components
 
-    pairs = embedding_neardup_pairs(embeddings, threshold, n=n, dim=dim)
+    pairs = embedding_neardup_pairs(embeddings, n=n, dim=dim)
     edges = pairs.select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
@@ -561,13 +555,13 @@ def neardup_clusters(embeddings: DataFrame, threshold: float = 0.95,
     )
 
 
-def neardup_clusters_sql(threshold: float = 0.95) -> str:
+def neardup_clusters_sql() -> str:
     """Recursive-CTE twin: min-id reachability closure over the SAME
     LSH-candidates + exact-re-verify pair list the Spark plan computes
     (:func:`embedding_neardup_lsh_sql`), so equality no longer depends on
     LSH recall being 1.0 at the compared scale factor."""
     return f"""
-WITH RECURSIVE pairs AS ({embedding_neardup_lsh_sql(threshold)}),
+WITH RECURSIVE pairs AS ({embedding_neardup_lsh_sql()}),
 edges AS (
   SELECT vec_a AS src, vec_b AS dst FROM pairs
   UNION

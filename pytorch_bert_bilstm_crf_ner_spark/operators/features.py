@@ -47,8 +47,8 @@ def build_features(mid: DataFrame, cfg: FeatureConfig | None = None) -> DataFram
     needed — the final_data.pkl analog that scales).
 
     The python encode stage runs on the cluster's defaultParallelism
-    partitions, like the tag-UDF stage in `plans/pipeline.py`.  Round-6:
-    without the repartition, AQE coalesces the small upstream join output
+    partitions, like the tag-UDF stage in `plans/pipeline.py`: without
+    the repartition, AQE coalesces the small upstream join output
     to ~1 partition by BYTES and the CPU-bound encode runs serial — units
     of parallel python work need row-count parallelism, not byte-sized
     partitions."""

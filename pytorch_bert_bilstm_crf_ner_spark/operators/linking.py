@@ -5,8 +5,8 @@ Default path: broadcast-hash join against the small dictionary
 for dictionaries too large to broadcast: salted repartition join — the big
 side gets ``salt = pmod(xxhash64(alias_key), K)``, the dict side is
 exploded K ways, and the join key becomes (alias, type, salt) so one hot
-alias ("head entity") spreads over K reducers.  AQE skew-join splitting is
-enabled globally as the second line of defense.
+alias ("head entity") spreads over K = ``SALT_BUCKETS`` reducers.  AQE
+skew-join splitting is enabled globally as the second line of defense.
 
 :func:`canonical_mentions` is the one link step of the batch pipeline and
 the stream: mentions straight to canonical entities.
@@ -22,13 +22,14 @@ from ..sources.entity_dict import entity_dict_df
 
 # one canonical mention: a turn delivered twice yields the same keys
 CANONICAL_KEY = ["conv_id", "turn_idx", "start", "mention", "canonical_id"]
+# reducers one alias spreads over on the salted (non-broadcast) join
+SALT_BUCKETS = 16
 
 
 def link_mentions(
     mentions: DataFrame,
     entity_dict: DataFrame,
     broadcast_dict: bool = True,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Inner join on (lower(mention), type) == (alias, type).
 
@@ -51,7 +52,7 @@ def link_mentions(
             "inner",
         )
     else:
-        k = salt_buckets
+        k = SALT_BUCKETS
         m = m.withColumn("salt", F.pmod(F.xxhash64("alias_key"), F.lit(k)))
         d = d.withColumn(
             "salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1)))

@@ -9,18 +9,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..operators.evaluate import (
-    classification_report,
-    micro_prf_row,
-    span_metrics_by_type,
-)
+from ..operators.evaluate import micro_prf_row, span_metrics_by_type
 from ..operators.tagging import make_tag_turns_udf
 from ..sources.corpus import gold_mentions
 
 
 def evaluate_extractor(mid: DataFrame) -> tuple[DataFrame, DataFrame]:
     """-> (metrics_by_type, micro_row).  Use
-    ``classification_report(metrics_by_type)`` for the formatted report.
+    `operators/evaluate.py::classification_report(metrics_by_type)` for
+    the formatted report.
 
     The spans are keyed by (doc_id, mention, start, type), and
     :func:`span_metrics_by_type` reads each side once, so the model
@@ -41,10 +38,3 @@ def evaluate_extractor(mid: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     metrics = span_metrics_by_type(pred, gold_mentions(mid))
     return metrics, micro_prf_row(metrics)
-
-
-__all__ = [
-    "evaluate_extractor",
-    "classification_report",
-    "span_metrics_by_type",
-]

@@ -43,7 +43,6 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..core.model import TaggerConfig
 from ..operators.linking import canonical_mentions
@@ -94,27 +93,12 @@ def _stage_done(out: str, stage: str) -> bool:
                for d in (os.path.join(out, stage), _lineage_dir(out, stage)))
 
 
-def _nullable(t: DataType) -> DataType:
-    """``t`` with every field, element and value nullable: the schema a
-    parquet file source gives back for a written frame."""
-    if isinstance(t, StructType):
-        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
-                           for f in t.fields])
-    if isinstance(t, ArrayType):
-        return ArrayType(_nullable(t.elementType), True)
-    if isinstance(t, MapType):
-        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
-    return t
-
-
-def _read_stage(df: DataFrame, path: str, partition_by: tuple[str, ...]) -> DataFrame:
-    """Read a written stage back with ``df``'s schema made nullable and the
-    partition columns last, which is what schema inference returns, without
-    the Spark job that inference runs."""
-    fields = _nullable(df.schema).fields
-    schema = StructType([f for f in fields if f.name not in partition_by]
-                        + [f for c in partition_by for f in fields if f.name == c])
-    return df.sparkSession.read.schema(schema).parquet(path)
+def _read_stage(df: DataFrame, path: str) -> DataFrame:
+    """Read a written stage back with ``df``'s schema, without the Spark job
+    that schema inference runs.  The file source makes every field
+    nullable and puts the partition columns last, which is what inference
+    returns."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def _write_lineage(path: str, ldir: str, stage: str, run_id: str) -> None:
@@ -153,7 +137,7 @@ def _write_stage(df: DataFrame, out: str, stage: str, run_id: str,
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     _write_lineage(path, ldir, stage, run_id)
-    return _read_stage(df, path, partition_by)
+    return _read_stage(df, path)
 
 
 def _materialize(df: DataFrame, out: str | None, stage: str, run_id: str,
@@ -161,7 +145,7 @@ def _materialize(df: DataFrame, out: str | None, stage: str, run_id: str,
     if out is None:
         return df
     if _stage_done(out, stage):
-        return _read_stage(df, os.path.join(out, stage), partition_by)
+        return _read_stage(df, os.path.join(out, stage))
     return _write_stage(df, out, stage, run_id, partition_by)
 
 

@@ -82,7 +82,7 @@ def _words(spark: SparkSession, sf_dir: str) -> DataFrame:
     its char offset — cumulative (len+1) window, the W3 running-offset
     pattern (`scripts/server.py:77-82`).
 
-    Round-6 note: a window-free row-local variant (start =
+    A window-free row-local variant (start =
     ``length(array_join(slice(w, 1, wpos), ' ')) + 1``, provably equal)
     was measured across all seven consumers at sf0.1 AND a 5x surrogate
     and REVERTED: the Exchange it removes is also the pre-partitioning
@@ -380,8 +380,8 @@ def q_span_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (fp ≡ 0).  The general pred-vs-gold operator
     (`operators/evaluate.py::span_metrics_by_type`, one full-outer pass) is
     exercised by tests and `plans/eval_job.py`; this registered query keeps
-    the specialized single-scan plan — the round-1 shape re-evaluated the
-    mention extraction ~6x."""
+    the specialized single-scan plan, which evaluates the mention
+    extraction once."""
     spans = (
         _dict_mentions(spark, sf_dir)
         .groupBy("conv_id", "turn_idx", "mention", "start", "type")
@@ -557,9 +557,7 @@ FROM all_docs GROUP BY md5(text) HAVING COUNT(*) > 1
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n=3
-    )
+    return ngram_jaccard_pairs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -621,9 +619,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")
     return embedding_neardup_pairs(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.5,
-        n=n, dim=dim,
-    )
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), n=n, dim=dim)
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,9 +677,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n, dim = _embeddings_meta(f"{sf_dir}/embeddings.parquet")
     return neardup_clusters(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.5,
-        n=n, dim=dim,
-    )
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), n=n, dim=dim)
 
 
 def _mid_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +686,7 @@ def _mid_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two-pass on purpose: labels aggregate over the MATCHED mention rows
     only (no text payload through the aggregation), then join back to
-    transcripts.  A round-6 single-pass variant (text riding the words
+    transcripts.  A single-pass variant (text riding the words
     explode, LEFT dictionary join, one grouped aggregation) was measured
     and REVERTED: it pushes every word row WITH its ~80-char turn text
     through the partial aggregation — neutral at sf0.1 but ~45% slower
@@ -760,10 +754,6 @@ def q_training_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# synthetic variants per template, in the query and its twin
-_AUGMENT_REPEAT = 1
-
-
 def q_augmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8+P9: template mask + deterministic entity substitution.  Labels
     (array<struct>) are projected to a canonical string hashed with md5
@@ -777,8 +767,7 @@ def q_augmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mid = _mid_from_documents(spark, sf_dir)
     inv = build_entity_inventory(mid)
-    synth = synthesize_from_templates(template_mask(mid), inv,
-                                      repeat=_AUGMENT_REPEAT)
+    synth = synthesize_from_templates(template_mask(mid), inv)
     labels_str = F.array_join(
         F.transform(
             "labels",
@@ -964,7 +953,7 @@ def _augmented_corpus_sql() -> str:
     indices (the zip-unnest trick), inventory refill picked by the same
     12-hex-char md5 value as the Spark side, window offsets, canonical
     label string."""
-    from ..operators.augment import FILLER_SEED
+    from ..operators.augment import AUGMENT_REPEAT, FILLER_SEED
 
     return f"""
 WITH m AS ({_DICT_MENTIONS_SQL}),
@@ -989,7 +978,7 @@ tmpl AS (
   FROM mid LEFT JOIN midlab ON midlab.doc_id = mid.doc_id
 ),
 reps AS (
-  SELECT doc_id, template, CAST(unnest(range({_AUGMENT_REPEAT})) AS INT) AS rep
+  SELECT doc_id, template, CAST(unnest(range({AUGMENT_REPEAT})) AS INT) AS rep
   FROM tmpl
 ),
 pieces AS (
@@ -1110,19 +1099,19 @@ ORACLE_SQL = {
     "kg_triples": kg_triples_sql(_TR, Q_CANONICAL_ENTITIES_SQL, _DICT_SQL),
     "canonical_entities": Q_CANONICAL_ENTITIES_SQL,
     "dedup_exact": Q_DEDUP_EXACT_SQL,
-    "dedup_ngram_jaccard": ngram_jaccard_sql(3),
+    "dedup_ngram_jaccard": ngram_jaccard_sql(),
     "minhash_signatures": minhash_signatures_sql(),
     "lsh_candidate_pairs": lsh_candidate_pairs_sql(),
     "simhash": simhash_sql(),
     "simhash_neardup": simhash_neardup_sql(),
-    "embedding_neardup": embedding_neardup_lsh_sql(0.5),
+    "embedding_neardup": embedding_neardup_lsh_sql(),
     "cosine_topk": cosine_topk_sql(),
     "text_profile": TEXT_PROFILE_SQL,
     "doc_fingerprint": doc_fingerprint_sql(),
     "language_mixture": LANGUAGE_MIXTURE_SQL,
     "lsh_ann_topk": lsh_cosine_topk_sql(),
     "ivf_ann_topk": ivf_cosine_topk_sql(),
-    "neardup_clusters": neardup_clusters_sql(0.5),
+    "neardup_clusters": neardup_clusters_sql(),
     "media_features": _media_features_sql(),
     "training_features": _training_features_sql(),
     "augmented_corpus": _augmented_corpus_sql(),

@@ -88,7 +88,6 @@ def ship_package(spark: SparkSession) -> str:
 def session_conf(
     app_name: str = "kg-construct",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> dict:
     """The Spark conf ``get_spark`` builds its session from: the engine's
@@ -97,11 +96,10 @@ def session_conf(
     same flag comes later and wins."""
     cores = (cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0))
              or len(os.sched_getaffinity(0)))
-    shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
     conf = {
         "spark.master": f"local[{cores}]",
         "spark.app.name": app_name,
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": str(max(2 * cores, 8)),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -239,7 +237,6 @@ def _alive(pid: int) -> bool:
 def get_spark(
     app_name: str = "kg-construct",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # One Spark task = one python worker = ONE BLAS thread.  Without this,
@@ -248,7 +245,7 @@ def get_spark(
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
         os.environ.setdefault(var, "1")
-    conf = session_conf(app_name, cores, shuffle_partitions, extra_conf)
+    conf = session_conf(app_name, cores, extra_conf)
     # only a JVM this call launches can start from an archive; spark-submit
     # or an earlier session has one up already
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:

@@ -49,7 +49,7 @@ this SQL (pinned by `tests/test_viterbi_twin.py` at two scale factors).
 
 from __future__ import annotations
 
-from ..core.model import BOOST, GAZETTEER, DeterministicTagger, TaggerConfig
+from ..core.model import BOOST, GAZETTEER, DeterministicTagger
 from ..core.pairing import (
     ADJACENT_OBJECT_TYPES,
     ADJACENT_PRED,
@@ -73,21 +73,16 @@ def _list_lit(vals) -> str:
     return "[" + ", ".join(_lit(v) for v in vals) + "]"
 
 
-def _kg_mentions_parts(transcripts_sql: str,
-                       cfg: TaggerConfig | None = None) -> tuple[str, str]:
-    """(cte definitions, final SELECT) — split so `kg_triples_sql` can
-    flatten the mention program into its own top-level WITH: nesting the
-    whole program as one CTE body sends the DuckDB optimizer quadratic
-    (plan-only EXPLAIN: 8.6s flat vs 402s nested at the same CTE count)."""
-    cfg = cfg or TaggerConfig()
-    if cfg.feature_layer != "none" or cfg.scheme != "BIOES" or not cfg.use_crf:
-        raise ValueError(
-            "the SQL twin covers the registered default tagger family "
-            "(feature none / BIOES / CRF)"
-        )
-    t = DeterministicTagger(cfg)
+def _kg_mentions_parts(transcripts_sql: str) -> tuple[str, str]:
+    """(cte definitions, final SELECT) of the default tagger's decode
+    (feature none / BIOES / CRF, the registered ``kg_mentions``) — split
+    so `kg_triples_sql` can flatten the mention program into its own
+    top-level WITH: nesting the whole program as one CTE body sends the
+    DuckDB optimizer quadratic (plan-only EXPLAIN: 8.6s flat vs 402s
+    nested at the same CTE count)."""
+    t = DeterministicTagger()
     T = t.num_tags
-    limit = cfg.max_seq_len - 2
+    limit = t.cfg.max_seq_len - 2
 
     # --- charset: printable ASCII, emission vectors from the tagger's
     # whole-vocab table (codepoint < CHAR_VOCAB_SIZE => id == codepoint)
@@ -327,9 +322,8 @@ CROSS JOIN guard
     return ctes, final
 
 
-def kg_mentions_sql(transcripts_sql: str,
-                    cfg: TaggerConfig | None = None) -> str:
-    ctes, final = _kg_mentions_parts(transcripts_sql, cfg)
+def kg_mentions_sql(transcripts_sql: str) -> str:
+    ctes, final = _kg_mentions_parts(transcripts_sql)
     return f"WITH\n{ctes}\n{final}"
 
 

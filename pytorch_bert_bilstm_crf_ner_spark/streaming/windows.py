@@ -1,6 +1,6 @@
 """Event-time windowed aggregation with a watermark — the late-data half
 of the Structured Streaming surface (`ingest.py` covers incremental
-arrival; `neardup.py` covers per-key custom state).
+arrival; `neardup.py` covers near-dup pairs over stored fingerprints).
 
 ``windowed_entity_counts`` is the canonical shape for a 100 TB stream:
 stream–static broadcast join (the entity dictionary is the static side —

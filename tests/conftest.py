@@ -88,7 +88,7 @@ def extract_function(relpath: str, name: str):
 def spark():
     from pytorch_bert_bilstm_crf_ner_spark.plans.session import get_spark
 
-    s = get_spark(app_name="tests", cores=4, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cores=4)
     yield s
     s.stop()
 

@@ -7,12 +7,12 @@ from __future__ import annotations
 
 import pytest
 
-from pytorch_bert_bilstm_crf_ner_spark.core.entities import canonical_map
+from pytorch_bert_bilstm_crf_ner_spark.core import entities
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_canonical_map_takes_min_name_like_canonical_entities(spark):
+def test_canonical_map_takes_min_name_like_canonical_entities(spark, monkeypatch):
     """The component-minimum id (1) has two spellings, the smaller one
     first: the name is the minimum spelling, as in `canonical_entities`
     and its recursive-CTE twin, not the last row's."""
@@ -33,7 +33,8 @@ def test_canonical_map_takes_min_name_like_canonical_entities(spark):
         r["entity_id"]: (r["canonical_id"], r["canonical_name"])
         for r in canonical_entities(entity_dict_df(spark, rows)).collect()
     }
-    assert canonical_map(rows) == spark_map
+    monkeypatch.setattr(entities, "ENTITY_DICT_ROWS", rows)
+    assert entities.canonical_map() == spark_map
     assert spark_map[2] == (1, "Apache Spark")
 
 

@@ -60,7 +60,7 @@ def test_roundtrip_matrix_every_family(spark, tmp_path, feature_layer, mid_dim):
     MUTATED weights driving the post-load outputs: a tensor missing from
     state_dict() would keep its seeded init after load and change the
     decoded spans — so a new layer can't silently fall out of the
-    checkpoint format (round-3 VERDICT #7)."""
+    checkpoint format."""
     cfg = TaggerConfig(feature_layer=feature_layer, mid_dim=mid_dim)
     t = DeterministicTagger(cfg)
     sd = state_dict(t)

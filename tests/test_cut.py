@@ -132,12 +132,10 @@ def test_cut_sentences_main_drop_quirk():
 
 
 def test_three_tier_true_offsets_after_drop():
-    """Round-4 VERDICT #5: under `long_piece_cut="three_tier"` the cutter
-    silently DROPS text; the default offset convention ("true") must keep
-    every piece's — and therefore every mention's — `start` valid against
-    the ORIGINAL turn text, while the reference's merge_with_loc
-    cumulative-emitted rebase stays available behind
-    `three_tier_offsets="emitted"`."""
+    """Under `long_piece_cut="three_tier"` the cutter silently DROPS text;
+    every piece's — and therefore every mention's — `start` must stay
+    valid against the ORIGINAL turn text, so (conv_id, turn_idx, start)
+    joins and slices line up after a drop."""
     from pytorch_bert_bilstm_crf_ner_spark.core.model import (
         DeterministicTagger,
         TaggerConfig,
@@ -161,21 +159,8 @@ def test_three_tier_true_offsets_after_drop():
         assert text[start : start + len(mention)] == mention, (mention, start)
     assert any(m == "spark" and s == 17 for m, s, _ in spans), spans
 
-    # reference-faithful serving mode: same mentions, shifted LEFT by the
-    # 17 dropped chars (merge_with_loc semantics, scripts/server.py:74-85)
-    em = DeterministicTagger(
-        TaggerConfig(
-            max_seq_len=16,
-            long_piece_cut="three_tier",
-            three_tier_offsets="emitted",
-        )
-    )
-    assert em.tag_batch([text])[0] == [
-        (m, s - 17, ty) for m, s, ty in spans
-    ]
-
-    # hard_chunk (the registered default): conventions coincide, and the
-    # true-substring invariant holds by construction
+    # hard_chunk (the registered default): the true-substring invariant
+    # holds by construction
     hard = DeterministicTagger(TaggerConfig(max_seq_len=16))
     for p, s in hard._piece_pos(text):
         assert text[s : s + len(p)] == p
@@ -203,7 +188,7 @@ def test_cut_sentences_main_with_pos_matches_plain():
 
 def test_tagger_three_tier_piece_mode():
     """`long_piece_cut="three_tier"` routes overlong pieces through the
-    serving cutter; the default keeps the round-1/2 hard-chunk outputs."""
+    serving cutter; the default keeps the pinned hard-chunk outputs."""
     from pytorch_bert_bilstm_crf_ner_spark.core.model import (
         DeterministicTagger,
         TaggerConfig,
@@ -214,8 +199,8 @@ def test_tagger_three_tier_piece_mode():
     tiered = DeterministicTagger(
         TaggerConfig(max_seq_len=32, long_piece_cut="three_tier")
     )
-    hp = hard._piece(text)
-    tp = tiered._piece(text)
+    hp = [p for p, _ in hard._piece_pos(text)]
+    tp = [p for p, _ in tiered._piece_pos(text)]
     assert all(len(p) <= 30 for p in hp) and "".join(hp) == text
     assert all(len(p) <= 30 for p in tp)
     # three-tier cuts on comma boundaries instead of mid-word char slices

@@ -36,8 +36,8 @@ def test_span_metrics_and_report(spark):
     assert "micro-f1" in report and "NAME" in report
 
 
-def test_salted_linking_matches_broadcast(spark):
-    from pytorch_bert_bilstm_crf_ner_spark.operators.linking import link_mentions
+def test_salted_linking_matches_broadcast(spark, monkeypatch):
+    from pytorch_bert_bilstm_crf_ner_spark.operators import linking
     from pytorch_bert_bilstm_crf_ner_spark.operators.tagging import extract_mentions
     from pytorch_bert_bilstm_crf_ner_spark.sources.entity_dict import entity_dict_df
     from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import (
@@ -47,8 +47,9 @@ def test_salted_linking_matches_broadcast(spark):
     m = extract_mentions(transcripts_from_documents(spark, SF_DIR)).persist()
     m.count()
     ed = entity_dict_df(spark)
-    a = {tuple(r) for r in link_mentions(m, ed, broadcast_dict=True).collect()}
-    b = {tuple(r) for r in link_mentions(m, ed, broadcast_dict=False, salt_buckets=7).collect()}
+    a = {tuple(r) for r in linking.link_mentions(m, ed, broadcast_dict=True).collect()}
+    monkeypatch.setattr(linking, "SALT_BUCKETS", 7)
+    b = {tuple(r) for r in linking.link_mentions(m, ed, broadcast_dict=False).collect()}
     assert a == b and len(a) > 100
     m.unpersist()
 
@@ -322,10 +323,8 @@ def test_evaluate_extractor_job(spark):
     import pyspark.sql.functions as F
 
     from pytorch_bert_bilstm_crf_ner_spark.core.model import DeterministicTagger
-    from pytorch_bert_bilstm_crf_ner_spark.plans.eval_job import (
-        classification_report,
-        evaluate_extractor,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators.evaluate import classification_report
+    from pytorch_bert_bilstm_crf_ner_spark.plans.eval_job import evaluate_extractor
 
     from .conftest import MID_SCHEMA
 
@@ -428,7 +427,7 @@ def test_connected_components_materialize_modes_agree(
 
 def test_canonical_entities_driver_and_distributed_branches_agree(
         spark, monkeypatch):
-    """VERDICT r2 #9: the driver-side union-find fast path and the
+    """The driver-side union-find fast path and the
     distributed star loop must stay equivalence-pinned — run both on the
     same dictionary by forcing the limit to 0."""
     from pytorch_bert_bilstm_crf_ner_spark.operators import canonicalize
@@ -444,7 +443,7 @@ def test_canonical_entities_driver_and_distributed_branches_agree(
 
 
 def test_triple_metrics_one_action(spark):
-    """Single full-outer flag aggregation (VERDICT r2 #6): P/R over
+    """Single full-outer flag aggregation, one Spark action: P/R over
     distinct (subj, pred, obj, conv_id)."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.evaluate import (
         triple_metrics,

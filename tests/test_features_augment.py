@@ -67,7 +67,8 @@ def test_build_features_matches_reference_counts(spark):
         assert feats.count() == expected, mode
 
 
-def test_template_mask_and_synthesis(spark):
+def test_template_mask_and_synthesis(spark, monkeypatch):
+    from pytorch_bert_bilstm_crf_ner_spark.operators import augment
     from pytorch_bert_bilstm_crf_ner_spark.operators.augment import (
         build_entity_inventory,
         synthesize_from_templates,
@@ -84,7 +85,8 @@ def test_template_mask_and_synthesis(spark):
     tmpl = {r["doc_id"]: r["template"] for r in template_mask(mid).collect()}
     assert tmpl[0] == "#;#NAME#;#：男，#;#CONT#;#。"
     inv = build_entity_inventory(mid)
-    synth = synthesize_from_templates(template_mask(mid), inv, repeat=2)
+    monkeypatch.setattr(augment, "AUGMENT_REPEAT", 2)
+    synth = synthesize_from_templates(template_mask(mid), inv)
     out = synth.collect()
     assert len(out) == 4
     for r in out:
@@ -92,7 +94,7 @@ def test_template_mask_and_synthesis(spark):
             assert r["text"][lab["start"] : lab["end"]] == lab["mention"]
             assert lab["span_id"].startswith("T")
     # determinism
-    again = {r["text"] for r in synthesize_from_templates(template_mask(mid), inv, repeat=2).collect()}
+    again = {r["text"] for r in synthesize_from_templates(template_mask(mid), inv).collect()}
     assert again == {r["text"] for r in out}
 
 

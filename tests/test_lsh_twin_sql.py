@@ -19,6 +19,7 @@ from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
     lsh_cosine_topk_sql,
     md5_plane_rows,
 )
+from pytorch_bert_bilstm_crf_ner_spark.operators import dedup
 from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
     auto_n_planes,
     embedding_neardup_lsh_sql,
@@ -70,30 +71,22 @@ def test_sql_n_planes_formula_matches_python():
     ("/root/testdata/sf0.01", 0.3),
     ("/root/testdata/sf0.01", 0.5),
 ])
-def test_lsh_twin_matches_spark_any_sf(spark, sf_dir, threshold):
+def test_lsh_twin_matches_spark_any_sf(spark, sf_dir, threshold, monkeypatch):
     """Different scale factors -> different COUNT(*) -> different
     n_planes, yet the twin stays hash-equal with NOTHING regenerated —
     the any-sf-by-construction property.  threshold 0.3 yields non-empty
     results at both SFs."""
+    monkeypatch.setattr(dedup, "NEARDUP_THRESHOLD", threshold)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in embedding_neardup_pairs(emb, threshold).collect()
-    )
+    got = sorted(tuple(r) for r in embedding_neardup_pairs(emb).collect())
     con = _duck(f"{sf_dir}/embeddings.parquet")
-    want = sorted(
-        map(tuple, con.execute(embedding_neardup_lsh_sql(threshold)).fetchall())
-    )
+    want = sorted(map(tuple, con.execute(embedding_neardup_lsh_sql()).fetchall()))
     assert got == want
     if sf_dir.endswith("sf0.01") and threshold == 0.3:
         assert len(got) >= 3  # non-trivial: the arithmetic is load-bearing
 
-    cgot = sorted(
-        tuple(r) for r in neardup_clusters(emb, threshold).collect()
-    )
-    cwant = sorted(
-        map(tuple, con.execute(neardup_clusters_sql(threshold)).fetchall())
-    )
+    cgot = sorted(tuple(r) for r in neardup_clusters(emb).collect())
+    cwant = sorted(map(tuple, con.execute(neardup_clusters_sql()).fetchall()))
     assert cgot == cwant
 
 

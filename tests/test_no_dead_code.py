@@ -11,10 +11,16 @@ scripts and the entry points.  Spark-free.
   roots, and an import line or an ``__all__`` string reaches nothing;
   comments and docstrings do not count.  A function that only a test
   calls is deleted, or moved into the tests when it is their reference.
-- Every defaulted parameter of a top-level package function is passed, by
-  some call, an expression other than its own default.  A default that no
-  caller overrides is a constant: the body reads a module constant
-  instead, and an operator and its twin read the same one.
+- Every defaulted parameter of a top-level package function is a knob the
+  product uses.  Only calls in the package and the entry files count,
+  never a test's: some call passes it a pass-through (an expression that
+  is not a literal, a package constant or the default's own spelling) or
+  a splat, or the calls use two constant values, where a module constant
+  is its literal value and a call that omits the parameter uses the
+  default.  Any other default is a constant: the body reads a module
+  constant instead, an operator and its twin read the same one, and a
+  test that needs another value monkeypatches it.  `DEFAULTS_KEPT` names
+  the exceptions, each with its reason.
 - Every field of a package dataclass is set, by some call to its class,
   to an expression other than its default.  A ``**`` splat sets nothing:
   the one splat, in `core/checkpoint.py`, rebuilds a config from the JSON
@@ -54,6 +60,12 @@ ROOTS = {
 # (`perfbench/workloads.py::kg_layers`) reads ``PipelineConfig().tagger``
 # and passes ``cfg.relations`` on; they go when that sweep is re-pointed.
 UNSET_FIELDS_KEPT = {"PipelineConfig.tagger", "PipelineConfig.relations"}
+# Defaulted parameters the product uses at one value that stay: name -> why.
+DEFAULTS_KEPT = {
+    "build_features.cfg": "FeatureConfig travels in the encode UDF's closure to the "
+                          "Python workers, which a patched module constant would not reach",
+    "fine_grade_tokenize.is_known": "stands in for the reference tokenizer's OOV check",
+}
 
 
 def _trees() -> dict[str, ast.Module]:
@@ -142,25 +154,84 @@ def _calls(trees: dict[str, ast.Module]) -> dict[str, list[ast.Call]]:
     return calls
 
 
-def _overrides(call: ast.Call, i: int | None, arg: str, default: ast.expr,
-               splats: bool = True) -> bool:
+def _overrides(call: ast.Call, i: int | None, arg: str, default: ast.expr) -> bool:
     """Whether ``call`` passes ``arg`` (position ``i``) something other
     than ``default``: the same literal or the same name passes nothing
-    new.  A ``*args`` or ``**kwargs`` splat passes everything if
-    ``splats``, else nothing."""
-    if splats and any(k.arg is None for k in call.keywords):
-        return True
+    new, and neither does a ``*args`` or ``**kwargs`` splat."""
     given = [k.value for k in call.keywords if k.arg == arg]
     if i is not None:
         if any(isinstance(a, ast.Starred) for a in call.args[: i + 1]):
-            return splats  # *args covers every position from there on
+            return False
         given += call.args[i : i + 1]
     return any(ast.dump(g) != ast.dump(default) for g in given)
 
 
+def _constants(trees: dict[str, ast.Module]) -> dict[str, str]:
+    """Module constant name -> its literal value (as ``repr``), for every
+    package constant bound to one literal; a name bound to two values
+    resolves to neither."""
+    values: dict[str, set[str]] = {}
+    for path, tree in trees.items():
+        if not path.startswith(PACKAGE + os.sep):
+            continue
+        for node in tree.body:
+            target = node.targets[0] if isinstance(node, ast.Assign) and len(
+                node.targets) == 1 else getattr(node, "target", None)
+            if isinstance(target, ast.Name) and node.value is not None:
+                try:
+                    value = repr(ast.literal_eval(node.value))
+                except ValueError:
+                    continue
+                values.setdefault(target.id, set()).add(value)
+    return {name: v for name, (v, *more) in values.items() if not more}
+
+
+def _value(expr: ast.expr, default: ast.expr, constants: dict[str, str]) -> str | None:
+    """``expr`` as a constant: its literal value, the value of the module
+    constant it names, or, for the default's own spelling, that spelling.
+    None for anything else: a pass-through, whose own source is checked
+    where it is a parameter."""
+    try:
+        return repr(ast.literal_eval(expr))
+    except ValueError:
+        pass
+    name = getattr(expr, "id", None) or getattr(expr, "attr", None)
+    if isinstance(expr, (ast.Name, ast.Attribute)) and name in constants:
+        return constants[name]
+    if ast.dump(expr) == ast.dump(default):
+        return ast.dump(default)
+    return None
+
+
+def _is_knob(calls: list[ast.Call], i: int | None, arg: str, default: ast.expr,
+             constants: dict[str, str]) -> bool:
+    """Whether the calls use the parameter as a knob: some call passes it a
+    pass-through or a splat, or the calls use two constant values (a call
+    that omits it uses the default)."""
+    used = set()
+    for call in calls:
+        if any(k.arg is None for k in call.keywords):
+            return True
+        given = [k.value for k in call.keywords if k.arg == arg]
+        if i is not None:
+            if any(isinstance(a, ast.Starred) for a in call.args[: i + 1]):
+                return True  # *args covers every position from there on
+            given += call.args[i : i + 1]
+        for expr in given or [default]:
+            value = _value(expr, default, constants)
+            if value is None:
+                return True
+            used.add(value)
+    return len(used) > 1
+
+
 def test_every_default_is_passed_somewhere():
-    trees = _trees()
-    calls = _calls(trees)
+    """Every defaulted parameter of a top-level package function is a knob
+    that the product uses: calls in the package and the entry files, never
+    in the tests, pass it two constant values or a pass-through."""
+    trees = {path: tree for path, tree in _trees().items()
+             if path.startswith((PACKAGE + os.sep,) + ENTRY_FILES)}
+    calls, constants = _calls(trees), _constants(trees)
     n_knobs, dead = 0, []
     for path, tree in trees.items():
         if not path.startswith(PACKAGE + os.sep):
@@ -177,12 +248,16 @@ def test_every_default_is_passed_somewhere():
                       if d is not None]
             for i, arg, default in knobs:
                 n_knobs += 1
-                if not any(_overrides(call, i, arg, default)
-                           for call in calls.get(node.name, [])):
-                    dead.append(f"{path}:{node.lineno} {node.name}.{arg}")
-    assert n_knobs > 50  # the walk found the defaults
-    assert dead == [], (f"{len(dead)} of {n_knobs} defaults no call overrides:\n"
-                        + "\n".join(dead))
+                if not _is_knob(calls.get(node.name, []), i, arg, default, constants):
+                    dead.append((f"{node.name}.{arg}", f"{path}:{node.lineno}"))
+    assert n_knobs > 30  # the walk found the defaults
+    kept = {name for name, _ in dead} & set(DEFAULTS_KEPT)
+    stale = sorted(set(DEFAULTS_KEPT) - kept)
+    assert stale == [], f"DEFAULTS_KEPT names no one-value default: {stale}"
+    assert all(DEFAULTS_KEPT.values())  # every kept default says why
+    dead = [f"{where} {name}" for name, where in dead if name not in kept]
+    assert dead == [], (f"{len(dead)} of {n_knobs} defaults the product uses at "
+                        "one value:\n" + "\n".join(dead))
 
 
 def _field_default(value: ast.expr) -> ast.expr:
@@ -213,7 +288,7 @@ def test_every_config_field_is_set_somewhere():
                 if f.value is None or name in UNSET_FIELDS_KEPT:
                     continue  # a field with no default is set by every call
                 default = _field_default(f.value)
-                if not any(_overrides(call, i, f.target.id, default, splats=False)
+                if not any(_overrides(call, i, f.target.id, default)
                            for call in calls.get(node.name, [])):
                     dead.append(f"{path}:{f.lineno} {name}")
     assert n_fields > 10  # the walk found the configs

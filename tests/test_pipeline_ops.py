@@ -10,15 +10,14 @@ from .conftest import brute_neardup_pairs
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_lsh_ann_recall(spark):
-    from pytorch_bert_bilstm_crf_ner_spark.operators.ann import (
-        cosine_topk,
-        lsh_cosine_topk,
-    )
+def test_lsh_ann_recall(spark, monkeypatch):
+    from pytorch_bert_bilstm_crf_ner_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = cosine_topk(emb, n_queries=10, k=5).collect()
-    approx = lsh_cosine_topk(emb, n_queries=10, k=5, n_planes=3, n_tables=10).collect()
+    exact = ann.cosine_topk(emb).collect()
+    monkeypatch.setattr(ann, "LSH_PLANES", 3)
+    monkeypatch.setattr(ann, "LSH_TABLES", 10)
+    approx = ann.lsh_cosine_topk(emb).collect()
     exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
     approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
@@ -87,16 +86,14 @@ def test_synth_transcripts_deterministic(spark):
     assert max(sizes.values()) >= 10 * min(sizes.values())
 
 
-def test_embedding_neardup_lsh_route_vs_brute(spark):
+def test_embedding_neardup_lsh_route_vs_brute(spark, monkeypatch):
     """The registered near-dup plan is the LSH route; the brute-force
     crossJoin is the oracle.  Precision is structurally 1.0 (candidates are
     re-verified with the exact cosine); on the driver's sf0.01 data the
     default 3-plane/16-table parameters achieve recall 1.0 at threshold
     0.5 — asserted here so a parameter/seed change that breaks the driver's
     hash check fails fast in pytest instead."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        embedding_neardup_pairs,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators import dedup
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     brute = {
@@ -105,7 +102,7 @@ def test_embedding_neardup_lsh_route_vs_brute(spark):
     }
     lsh = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, 0.5).collect()
+        for r in dedup.embedding_neardup_pairs(emb).collect()
     }
     assert lsh == brute and len(brute) == 1
     # at a looser threshold the LSH result must stay a subset (precision 1)
@@ -113,9 +110,10 @@ def test_embedding_neardup_lsh_route_vs_brute(spark):
         (r["vec_a"], r["vec_b"])
         for r in brute_neardup_pairs(emb, 0.45).collect()
     }
+    monkeypatch.setattr(dedup, "NEARDUP_THRESHOLD", 0.45)
     lsh45 = {
         (r["vec_a"], r["vec_b"])
-        for r in embedding_neardup_pairs(emb, 0.45).collect()
+        for r in dedup.embedding_neardup_pairs(emb).collect()
     }
     assert lsh45 <= brute45
     assert len(lsh45) / len(brute45) >= 0.8, "recall collapsed"
@@ -124,25 +122,22 @@ def test_embedding_neardup_lsh_route_vs_brute(spark):
 def test_embedding_neardup_explicit_meta_and_empty(spark):
     """Passing n/dim must skip the plan-build count()/head() probes and
     return the identical result; an EMPTY embeddings table must yield an
-    empty pair frame, not a TypeError (round-2 ADVICE)."""
+    empty pair frame, not a TypeError."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
         embedding_neardup_pairs,
         neardup_clusters,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    auto = {
-        tuple(r) for r in embedding_neardup_pairs(emb, 0.5).collect()
-    }
+    auto = {tuple(r) for r in embedding_neardup_pairs(emb).collect()}
     explicit = {
-        tuple(r)
-        for r in embedding_neardup_pairs(emb, 0.5, n=500, dim=64).collect()
+        tuple(r) for r in embedding_neardup_pairs(emb, n=500, dim=64).collect()
     }
     assert explicit == auto and auto
 
     empty = emb.limit(0)
-    assert embedding_neardup_pairs(empty, 0.5).collect() == []
-    assert neardup_clusters(empty, 0.5).collect() == []
+    assert embedding_neardup_pairs(empty).collect() == []
+    assert neardup_clusters(empty).collect() == []
 
 
 def test_ivf_sample_centroids_deterministic(spark):
@@ -177,8 +172,8 @@ def test_ivf_ann_recall(spark):
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = ivf_sample_centroids(emb)
-    exact = cosine_topk(emb, n_queries=10, k=5).collect()
-    approx = ivf_cosine_topk(emb, cents, n_queries=10, k=5, nprobe=3).collect()
+    exact = cosine_topk(emb).collect()
+    approx = ivf_cosine_topk(emb, cents).collect()
     exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
     approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
@@ -192,9 +187,7 @@ def test_ivf_ann_recall(spark):
     # determinism (deterministic centroids + first-max tie rule)
     again = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_cosine_topk(
-            emb, cents, n_queries=10, k=5, nprobe=3
-        ).collect()
+        for r in ivf_cosine_topk(emb, cents).collect()
     }
     assert again == approx_set
 
@@ -207,10 +200,14 @@ def test_simhash_banding_recall_is_exact(spark):
     them, and survivors are re-verified; equality proves zero drops)."""
     import pyspark.sql.functions as F
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
+        SIMHASH_BITS,
         simhash,
         simhash_neardup_pairs,
     )
 
+    # the packed form reads SIMHASH_BITS/4 md5 hex chars as one signed
+    # BIGINT: whole nibbles, and no overflow to a NULL vote past 60 bits
+    assert SIMHASH_BITS % 4 == 0 and SIMHASH_BITS <= 60
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     banded = {
         (r["doc_a"], r["doc_b"], r["hamming"])
@@ -244,16 +241,3 @@ def test_simhash_banding_params_meet_pigeonhole():
 
     assert SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
     assert SIMHASH_BITS % SIMHASH_BANDS == 0
-
-
-def test_simhash_rejects_bits_over_60(spark):
-    """Past 60 bits the packed md5 prefix overflows BIGINT and the NULL
-    cast would silently drop votes; the fingerprint must refuse."""
-    import pytest as _pytest
-
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
-    with _pytest.raises(ValueError, match="at most 60"):
-        simhash(docs, bits=64)
-    assert simhash(docs, bits=60).columns == ["doc_id", "simhash"]

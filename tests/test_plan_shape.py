@@ -81,7 +81,7 @@ def test_embedding_dots_run_only_in_arrow_kernels(spark, name):
 
 
 def test_simhash_shuffles_only_precombined_votes(spark):
-    """simhash (round-6 form) is words-explode + ONE hash aggregation of
+    """simhash is words-explode + ONE hash aggregation of
     packed word hashes: the partial (map-side) combine must keep shuffle
     volume at docs x (bits+1) pre-combined longs — pinned as at most two
     Exchanges here (tests/test_r6_kernels.py pins exactly one)."""

@@ -1,4 +1,4 @@
-"""Round-6 optimization guards: the Arrow numpy kernels that replaced
+"""Optimization guards: the Arrow numpy kernels that replaced
 JVM fold expressions must stay BIT-IDENTICAL to the sequential
 ((0.0 + x0) + x1) + ... double fold (the contract the DuckDB twins rely
 on), and the simhash rewrite must keep its single-Exchange plan."""
@@ -169,7 +169,7 @@ def test_cosine_topk_rejects_ragged_rows(spark):
     )
     with pytest.raises(PythonException, match="ValueError: embedding rows "
                                               "must have equal widths"):
-        cosine_topk(emb, n_queries=2, k=1).collect()
+        cosine_topk(emb).collect()
 
 
 @pytest.mark.parametrize("case", ["ragged_rows", "unequal_widths", "null_row"])
@@ -194,7 +194,7 @@ def test_pair_cosine_parts_rejects_malformed_rows(spark, case):
 
 
 def test_simhash_plans_single_exchange(spark):
-    """The round-6 packed-word-hash simhash is ONE aggregation: exactly
+    """The packed-word-hash simhash is ONE aggregation: exactly
     one Exchange (was <= 2 for the old two-aggregation form)."""
     from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import simhash
 

@@ -218,7 +218,7 @@ def test_running_gateway_is_left_alone(spark, monkeypatch):
         raise AssertionError("the session's JVM is already up")
 
     monkeypatch.setattr(session, "cds_java_options", launch)
-    assert session.get_spark(app_name="tests", cores=4, shuffle_partitions=8) is spark
+    assert session.get_spark(app_name="tests", cores=4) is spark
 
 
 def test_shipped_and_spark_submit_archives_list_the_same_names(tmp_path, monkeypatch):

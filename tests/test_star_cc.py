@@ -115,7 +115,7 @@ def test_star_checkpoint_mode_deep_graph(spark, star_only, tmp_path,
 
 
 def test_neardup_chain_defaults_to_star(spark, monkeypatch):
-    """Chain-shaped NEAR-DUP fixture (round-4 VERDICT #2): 32 embeddings
+    """Chain-shaped NEAR-DUP fixture: 32 embeddings
     built as a sliding window of 25 ones, so consecutive vectors have
     cosine 24/25 = 0.96 (>= the 0.95 threshold) and every other pair is
     <= 23/25 = 0.92 — the pair graph is a 31-hop chain, which a
@@ -123,10 +123,7 @@ def test_neardup_chain_defaults_to_star(spark, monkeypatch):
     finds every chain pair the brute-force oracle finds, and
     neardup_clusters resolves the chain on the driver path and, over the
     limit, on the star loop."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        embedding_neardup_pairs,
-        neardup_clusters,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators import dedup
 
     w, n_vec = 25, 32
     dim = n_vec + w - 1
@@ -138,14 +135,15 @@ def test_neardup_chain_defaults_to_star(spark, monkeypatch):
     got = {(r["vec_a"], r["vec_b"])
            for r in brute_neardup_pairs(emb, 0.95).collect()}
     assert got == {(i, i + 1) for i in range(n_vec - 1)}, got
+    monkeypatch.setattr(dedup, "NEARDUP_THRESHOLD", 0.95)
     lsh = {(r["vec_a"], r["vec_b"])
-           for r in embedding_neardup_pairs(emb, 0.95).collect()}
+           for r in dedup.embedding_neardup_pairs(emb).collect()}
     assert lsh == got
 
     def clusters():
         return {
             r["vec_id"]: r["cluster_id"]
-            for r in neardup_clusters(emb, 0.95).collect()
+            for r in dedup.neardup_clusters(emb).collect()
         }
 
     assert clusters() == {i: 0 for i in range(n_vec)}
@@ -164,12 +162,10 @@ def test_rounds_tracked(spark, monkeypatch):
     assert 1 <= stats["rounds"] <= 3
 
 
-def test_fast_path_leaves_no_persisted_rdd(spark):
+def test_fast_path_leaves_no_persisted_rdd(spark, monkeypatch):
     """The size gate caches the symmetrized edge list; the driver path
     must release it, for a bare edge list and for neardup_clusters."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.dedup import (
-        neardup_clusters,
-    )
+    from pytorch_bert_bilstm_crf_ner_spark.operators import dedup
 
     before = _persisted(spark)
     stats: dict = {}
@@ -183,7 +179,8 @@ def test_fast_path_leaves_no_persisted_rdd(spark):
         [(i, [1.0, float(i % 3)]) for i in range(12)],
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     )
-    assert neardup_clusters(emb, 0.99).count() == 12
+    monkeypatch.setattr(dedup, "NEARDUP_THRESHOLD", 0.99)
+    assert dedup.neardup_clusters(emb).count() == 12
     assert _persisted(spark) <= before
 
 

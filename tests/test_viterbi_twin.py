@@ -133,7 +133,7 @@ def test_twin_guards_error_loudly():
 
 
 def test_registered_corpus_within_twin_scope():
-    """Round-4 VERDICT #4: the twin's loud error() guards cover turn text
+    """The twin's loud error() guards cover turn text
     > max_seq_len - 2 chars and chars outside printable ASCII.  Scan the
     driver's registered corpora (the SAME transcripts derivation the
     oracle runs) for BOTH bounds, so a driver data refresh fails here
@@ -168,11 +168,6 @@ def test_registered_corpus_within_twin_scope():
         )
         max_len = max(len(x) for _, _, x in rows)
         assert max_len <= limit, (sf_dir, max_len)
-
-
-def test_twin_rejects_unsupported_tagger_family():
-    with pytest.raises(ValueError, match="default tagger family"):
-        kg_mentions_sql("SELECT 1", TaggerConfig(feature_layer="bilstm"))
 
 
 def test_kg_twins_match_spark_sf0001(spark):
