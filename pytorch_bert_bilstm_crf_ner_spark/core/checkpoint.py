@@ -26,7 +26,7 @@ from .model import DeterministicTagger, TaggerConfig
 
 def state_dict(tagger: DeterministicTagger) -> dict[str, np.ndarray]:
     """Flat name -> array map covering every learned tensor (embedding,
-    optional feature layer, optional mid_linear, classifier, CRF)."""
+    optional feature layer, classifier, CRF)."""
     sd = {
         "embedding": tagger.embedding,
         "linear_w": tagger.linear_w,
@@ -35,23 +35,11 @@ def state_dict(tagger: DeterministicTagger) -> dict[str, np.ndarray]:
         "end_transitions": tagger.end_transitions,
         "transitions": tagger.transitions,
     }
-    if tagger.mid_w is not None:
-        sd["mid_w"] = tagger.mid_w
-        sd["mid_b"] = tagger.mid_b
     feat = tagger.feature
-    if feat is not None:
-        from .layers import NumpyBiLSTM
-
-        if isinstance(feat, NumpyBiLSTM):
-            sd["feature.w_ih"] = feat.w_ih
-            sd["feature.w_hh"] = feat.w_hh
-            sd["feature.bias"] = feat.bias
-        else:  # NumpyIDCNN
-            sd["feature.proj"] = feat.proj
-            for i, k in enumerate(feat.kernels):
-                sd[f"feature.kernels.{i}"] = k
-            for i, b in enumerate(feat.biases):
-                sd[f"feature.biases.{i}"] = b
+    if feat is not None:  # NumpyBiLSTM
+        sd["feature.w_ih"] = feat.w_ih
+        sd["feature.w_hh"] = feat.w_hh
+        sd["feature.bias"] = feat.bias
     return sd
 
 

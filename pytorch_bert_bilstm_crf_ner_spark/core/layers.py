@@ -1,18 +1,13 @@
-"""Numpy feature layers mirroring the reference's model variants:
+"""Numpy BiLSTM feature layer mirroring the reference's model variant
+(M2, `bert_ner_model.py:216-217, 264-271`): one forward and one backward
+LSTM pass over the batch, concatenated to ``2*hidden``.
 
-- :class:`NumpyBiLSTM` — the BiLSTM feature layer (M2,
-  `bert_ner_model.py:216-217, 264-271`): one forward and one backward LSTM
-  pass over the batch, concatenated to ``2*hidden``.
-- :class:`NumpyIDCNN` — the IDCNN feature layer (M3, `bert_ner_model.py:
-  25-84`): stacked 1-D convolutions with dilations (1, 1, 2) repeated in
-  blocks, ReLU between layers.
-
-Both are deterministic (seeded uniform init, like the torch defaults in
-spirit), vectorized over (batch, time) — the only python loop is over the
-sequence axis for the LSTM recurrence, exactly like TorchScript would
-unroll it.  They plug between the embedding and the linear classifier in
+Deterministic (seeded uniform init, like the torch defaults in spirit),
+vectorized over the batch — the only python loop is over the sequence
+axis for the LSTM recurrence, exactly like TorchScript would unroll it.
+It plugs between the embedding and the linear classifier in
 ``DeterministicTagger`` so the engine exercises the reference's
-bilstm_crf / idcnn_crf model families end-to-end without torch.
+bilstm_crf model family end-to-end without torch.
 """
 
 from __future__ import annotations
@@ -58,48 +53,3 @@ class NumpyBiLSTM:
         return np.concatenate(
             [self._direction(x, 0), self._direction(x, 1)], axis=2
         )
-
-
-class NumpyIDCNN:
-    """Iterated dilated convolutions: ``blocks`` repeats of conv layers
-    with dilations (1, 1, 2), kernel 3, ReLU — the reference's block shape
-    (`bert_ner_model.py:43-63`)."""
-
-    DILATIONS = (1, 1, 2)
-
-    def __init__(self, input_dim: int, filters: int, seed: int,
-                 blocks: int = 4) -> None:
-        rng = np.random.RandomState(seed)
-        self.blocks = blocks
-        self.proj = rng.uniform(-0.1, 0.1, (input_dim, filters)).astype(np.float32)
-        self.kernels = [
-            rng.uniform(-0.1, 0.1, (3, filters, filters)).astype(np.float32)
-            for _ in range(len(self.DILATIONS))
-        ]
-        self.biases = [
-            rng.uniform(-0.1, 0.1, filters).astype(np.float32)
-            for _ in range(len(self.DILATIONS))
-        ]
-        self.out_dim = filters
-
-    @staticmethod
-    def _dilated_conv(x: np.ndarray, kernel: np.ndarray, bias: np.ndarray,
-                      dilation: int) -> np.ndarray:
-        B, L, C = x.shape
-        pad = dilation
-        xp = np.pad(x, ((0, 0), (pad, pad), (0, 0)))
-        # kernel taps at offsets (-d, 0, +d)
-        out = (
-            xp[:, pad - dilation : pad - dilation + L, :] @ kernel[0]
-            + xp[:, pad : pad + L, :] @ kernel[1]
-            + xp[:, pad + dilation : pad + dilation + L, :] @ kernel[2]
-            + bias
-        )
-        return out
-
-    def __call__(self, x: np.ndarray) -> np.ndarray:
-        h = np.maximum(x @ self.proj, 0.0)
-        for _ in range(self.blocks):
-            for kernel, bias, dil in zip(self.kernels, self.biases, self.DILATIONS):
-                h = np.maximum(self._dilated_conv(h, kernel, bias, dil), 0.0)
-        return h

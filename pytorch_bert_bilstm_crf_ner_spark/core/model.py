@@ -29,7 +29,7 @@ import numpy as np
 
 from .cut import cut_sent_for_bert
 from .decode import Span, bioes_decode_flat
-from .tags import CHAR_VOCAB_SIZE, build_tag_vocab, invert_vocab
+from .tags import CHAR_VOCAB_SIZE, MAX_SEQ_LEN, build_tag_vocab, invert_vocab
 from .viterbi import viterbi_decode_batch
 
 SEED = 20221           # every seeded weight draws from this RandomState
@@ -37,7 +37,7 @@ EMB_DIM = 32
 NOISE_SCALE = 0.5      # amplitude of the random emission part
 O_BIAS = 1.0           # prior toward O off-dictionary
 BOOST = 8.0            # gazetteer prior strength
-FEATURE_HIDDEN = 16    # hidden width of the bilstm / idcnn feature layer
+FEATURE_HIDDEN = 16    # hidden width of the bilstm feature layer
 
 # Aliases drawn from the synthetic corpus vocabulary; multi-word aliases
 # exercise multi-char B/I...E spans (incl. the space chars as I- tags).
@@ -65,27 +65,8 @@ GAZETTEER: tuple[tuple[str, str], ...] = (
 
 @dataclass(frozen=True)
 class TaggerConfig:
-    max_seq_len: int = 128          # reference default 150/256 family
-    scheme: str = "BIOES"       # or "BIO" (D3 decode path)
-    use_crf: bool = True        # False -> argmax decode (M6, `main.py:92-93`)
-    feature_layer: str = "none"  # "bilstm" (M2) / "idcnn" (M3) / "none" (M5)
-    # M4: the reference's mid_linear block (Linear(out, 256) + ReLU +
-    # train-only Dropout, `bert_ner_model.py:221-227`, applied at :276)
-    # between the feature layer and the tag classifier.  None = off
-    # (keeps the pinned parity weights byte-identical); set e.g. 16 to
-    # run the full encoder->mid->classifier shape.
-    mid_dim: int | None = None
-    # P2 long-piece fallback when the two-tier cut leaves a piece over
-    # max_seq_len - 2: "hard_chunk" (default — char slicing, concat
-    # invariant preserved, so the pinned parity outputs hold) or
-    # "three_tier" — the reference serving cutter `cut.py:24-76`
-    # (comma split + strict-< repack; reference quirks apply: text may be
-    # silently dropped, so the concat invariant does NOT hold).  Either
-    # way each piece carries its TRUE start in the ORIGINAL turn text
-    # (`cut_sentences_main_with_pos` tracks what was dropped), so
-    # (conv_id, turn_idx, start) joins and text[start:start+len] slices
-    # stay valid even after drops.
-    long_piece_cut: str = "hard_chunk"
+    scheme: str = "BIOES"        # or "BIO" (D3 decode path)
+    feature_layer: str = "none"  # "bilstm" (M2) / "none" (M5)
 
 
 class DeterministicTagger:
@@ -102,7 +83,7 @@ class DeterministicTagger:
         self.embedding = rng.uniform(
             -0.5, 0.5, (CHAR_VOCAB_SIZE, EMB_DIM)).astype(np.float32)
         # optional feature layer between embedding and classifier — the
-        # reference's bilstm_crf / idcnn_crf model families (M2/M3)
+        # reference's bilstm_crf model family (M2)
         self.feature = None
         feat_dim = EMB_DIM
         if c.feature_layer == "bilstm":
@@ -110,19 +91,6 @@ class DeterministicTagger:
 
             self.feature = NumpyBiLSTM(EMB_DIM, FEATURE_HIDDEN, SEED + 1)
             feat_dim = self.feature.out_dim
-        elif c.feature_layer == "idcnn":
-            from .layers import NumpyIDCNN
-
-            self.feature = NumpyIDCNN(EMB_DIM, FEATURE_HIDDEN, SEED + 1)
-            feat_dim = self.feature.out_dim
-        # M4 mid_linear (`bert_ner_model.py:221-227`): Linear + ReLU
-        # (Dropout is train-only — identity at inference)
-        self.mid_w = self.mid_b = None
-        if c.mid_dim is not None:
-            self.mid_w = rng.uniform(
-                -0.5, 0.5, (feat_dim, c.mid_dim)).astype(np.float32)
-            self.mid_b = rng.uniform(-0.1, 0.1, c.mid_dim).astype(np.float32)
-            feat_dim = c.mid_dim
         self.linear_w = rng.uniform(
             -0.5, 0.5, (feat_dim, self.num_tags)).astype(np.float32)
         self.linear_b = rng.uniform(-0.1, 0.1, self.num_tags).astype(np.float32)
@@ -141,10 +109,7 @@ class DeterministicTagger:
         self._char_em_cache: tuple[bytes, np.ndarray] | None = None
 
     def _classify(self, h: np.ndarray) -> np.ndarray:
-        """M4 mid_linear + ReLU (`bert_ner_model.py:276`), then the tag
-        classifier — shared by the flat and padded paths."""
-        if self.mid_w is not None:
-            h = np.maximum(h @ self.mid_w + self.mid_b, 0.0)
+        """The tag classifier, shared by the flat and padded paths."""
         return h @ self.linear_w + self.linear_b
 
     def _char_table(self) -> np.ndarray:
@@ -166,9 +131,6 @@ class DeterministicTagger:
         h = hashlib.md5(self.embedding.tobytes())
         h.update(self.linear_w.tobytes())
         h.update(self.linear_b.tobytes())
-        if self.mid_w is not None:
-            h.update(self.mid_w.tobytes())
-            h.update(self.mid_b.tobytes())
         key = h.digest()
         if self._char_em_cache is None or self._char_em_cache[0] != key:
             tbl = (
@@ -181,35 +143,17 @@ class DeterministicTagger:
     # ------------------------------------------------------------------ #
 
     def _piece_pos(self, text: str) -> list[tuple[str, int]]:
-        """Cut to <= max_seq_len - 2 chars: reference tiered sentence cut
-        first (`cutSentences.py:24-58`), then the configured fallback for
-        pieces still over the limit — hard char-chunking (default; concat
-        invariant preserved) or the reference serving cutter
-        `cut.py:30-76` (``long_piece_cut="three_tier"``; comma repack,
-        may drop text per reference semantics — any piece it emits over
-        the limit is still hard-chunked so downstream padding holds).
-
-        Each piece is returned with its TRUE start offset in ``text``
-        (``text[start : start + len(piece)] == piece`` always holds —
-        the two-tier cutter asserts its concat invariant and
-        `cut_sentences_main_with_pos` tracks through drops)."""
-        limit = self.cfg.max_seq_len - 2
+        """Cut to <= MAX_SEQ_LEN - 2 chars: reference tiered sentence cut
+        first (`cutSentences.py:24-58`), then hard char-chunking of the
+        pieces still over the limit, so ``"".join`` of the pieces is
+        ``text``.  Each piece is returned with its start offset in
+        ``text``."""
+        limit = MAX_SEQ_LEN - 2
         pieces: list[tuple[str, int]] = []
         pos0 = 0
-        for p in cut_sent_for_bert(text, self.cfg.max_seq_len):
+        for p in cut_sent_for_bert(text, MAX_SEQ_LEN):
             if len(p) <= limit:
                 pieces.append((p, pos0))
-            elif self.cfg.long_piece_cut == "three_tier":
-                from .cut import cut_sentences_main_with_pos
-
-                for q, qs in cut_sentences_main_with_pos(p, limit):
-                    if len(q) <= limit:
-                        pieces.append((q, pos0 + qs))
-                    else:
-                        pieces.extend(
-                            (q[i : i + limit], pos0 + qs + i)
-                            for i in range(0, len(q), limit)
-                        )
             else:
                 pieces.extend(
                     (p[i : i + limit], pos0 + i)
@@ -231,7 +175,7 @@ class DeterministicTagger:
         offsets = np.concatenate(([0], np.cumsum(lengths)))
         char_tbl = self._char_table() if self.feature is None else None
         if self.feature is not None:
-            # M2/M3 path: padded (B, Lmax, D) through the feature layer
+            # M2 path: padded (B, Lmax, D) through the feature layer
             emb = np.zeros((B, Lmax, EMB_DIM), dtype=np.float32)
             for b in range(B):
                 L = lengths[b]
@@ -267,10 +211,6 @@ class DeterministicTagger:
 
     def tag_ids(self, texts: list[str]) -> list[list[int]]:
         em, lengths = self.emissions(texts)
-        if not self.cfg.use_crf:
-            # M6 argmax decode (`main.py:92-93`, `predict.py:47-48`)
-            arg = np.argmax(em, axis=2)
-            return [arg[b, : lengths[b]].tolist() for b in range(len(texts))]
         return viterbi_decode_batch(
             em, lengths, self.start_transitions, self.transitions, self.end_transitions
         )

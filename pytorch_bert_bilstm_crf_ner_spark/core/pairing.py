@@ -11,7 +11,7 @@ are removed from the leftover list (set difference by value).
 
 from __future__ import annotations
 
-Span = tuple[str, int, str]  # (mention, start, type)
+from .decode import Span
 
 # reference `predict_gdcq.py:96` — gdcq opinion polarity types
 GDCQ_OBJECT_TYPES = ("正面", "中性", "负面")

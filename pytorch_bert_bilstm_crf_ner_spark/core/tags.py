@@ -19,6 +19,9 @@ BIO_PREFIXES = ("B", "I")
 # char codepoint hash buckets, read by the tagger's embedding and the
 # training-feature encoder
 CHAR_VOCAB_SIZE = 4099
+# model input length in tokens, [CLS] and [SEP] included: the tagger cuts
+# turns to MAX_SEQ_LEN - 2 chars and the feature encoder pads to it
+MAX_SEQ_LEN = 128
 
 
 def build_tag_vocab(scheme: str = "BIOES") -> dict[str, int]:

@@ -25,7 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core.features import FeatureConfig, encode_example, examples_from_document
+from ..core.features import encode_example, examples_from_document
+from ..core.tags import MAX_SEQ_LEN
 
 FEATURES_SCHEMA = StructType(
     [
@@ -41,7 +42,7 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def build_features(mid: DataFrame, cfg: FeatureConfig | None = None) -> DataFrame:
+def build_features(mid: DataFrame) -> DataFrame:
     """mid_data DataFrame -> training-feature DataFrame (P2+P3+P4+P6+P7
     fused in one Arrow stage; write with ``.write.parquet`` partitioned as
     needed — the final_data.pkl analog that scales).
@@ -51,8 +52,11 @@ def build_features(mid: DataFrame, cfg: FeatureConfig | None = None) -> DataFram
     the repartition, AQE coalesces the small upstream join output
     to ~1 partition by BYTES and the CPU-bound encode runs serial — units
     of parallel python work need row-count parallelism, not byte-sized
-    partitions."""
-    cfg = cfg or FeatureConfig()
+    partitions.
+
+    ``MAX_SEQ_LEN`` is read here, on the driver, so the encode closure
+    carries its value to the Python workers."""
+    max_seq_len = MAX_SEQ_LEN
     mid = mid.repartition(mid.sparkSession.sparkContext.defaultParallelism)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -73,11 +77,11 @@ def build_features(mid: DataFrame, cfg: FeatureConfig | None = None) -> DataFram
                     for lab in labs
                 ]
                 for sent, labels, cut_idx, cut_start in examples_from_document(
-                    text, mid_labels, cfg
+                    text, mid_labels, max_seq_len
                 ):
                     if not sent:
                         continue
-                    feat = encode_example(sent, labels, cfg)
+                    feat = encode_example(sent, labels, max_seq_len)
                     rows.append(
                         {
                             "doc_id": doc_id,

@@ -59,7 +59,6 @@ class PipelineConfig:
     # it goes when that sweep is re-pointed at relation_triples.
     relations: None = None
     broadcast_dict: bool = True
-    repartition: int | None = None     # parallelism of the UDF stage
     output_dir: str | None = None      # None = fully lazy, no materialization
     # Not read: there is one co-occurrence formulation.  Kept because the
     # hash-frozen bench.py and the benchmark's layer sweep still set it;
@@ -176,7 +175,7 @@ def run_pipeline(
     # their own keys), so round-robin gives the best load balance and makes
     # one hot conversation harmless here.  AQE does not coalesce a
     # repartition(n), so the tag stage keeps n_part tasks.
-    n_part = cfg.repartition or spark.sparkContext.defaultParallelism
+    n_part = spark.sparkContext.defaultParallelism
 
     tagger_factory = None
     if cfg.checkpoint_dir is not None:

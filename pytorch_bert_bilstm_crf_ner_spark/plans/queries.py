@@ -852,8 +852,8 @@ FROM v GROUP BY media_id, kind
 
 
 def _training_features_sql() -> str:
-    """DuckDB twin of q_training_features (the default ``FeatureConfig``),
-    valid when every turn is at most ``max_seq_len - 2`` chars (then
+    """DuckDB twin of q_training_features, valid when every turn is at
+    most ``MAX_SEQ_LEN - 2`` chars (then
     `core/cut.py::cut_sent_for_bert` is the identity and the whole feature encode is expressible in SQL:
     char ids = 3 + unicode(ch) % (vocab-3); BIOES label ids from the
     per-position LAST-label-wins overwrite — the Python loop writes labels
@@ -861,14 +861,13 @@ def _training_features_sql() -> str:
     The driver's transcripts derivation caps turns at ~81 chars, asserted
     by the max-length CASE below erroring the twin if the assumption ever
     breaks (better a loud driver ERR than a silent mismatch)."""
-    from ..core.features import CHAR_OFFSET, FeatureConfig
-    from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID
+    from ..core.features import CHAR_OFFSET
+    from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID, MAX_SEQ_LEN
 
-    cfg = FeatureConfig()
     tag_vals = ", ".join(
         f"('{tag}', {i})" for tag, i in ENT2ID.items() if tag != "O"
     )
-    body = cfg.max_seq_len - 2
+    body = MAX_SEQ_LEN - 2
     mod = CHAR_VOCAB_SIZE - CHAR_OFFSET
     return f"""
 WITH m AS ({_DICT_MENTIONS_SQL}),
@@ -910,7 +909,7 @@ best AS (
 ),
 tagmap(tag, tid) AS (VALUES {tag_vals}),
 pos AS (
-  SELECT doc_id, text, CAST(unnest(range({cfg.max_seq_len})) AS INT) AS p
+  SELECT doc_id, text, CAST(unnest(range({MAX_SEQ_LEN})) AS INT) AS p
   FROM mid
 ),
 cells AS (

@@ -37,7 +37,7 @@ in DuckDB, bit-for-bit:
   start inside an emitted span, so pointer jumps don't change the set).
 
 Scope guards (loud `error()` instead of silent drift): turn text over
-``max_seq_len - 2`` chars (the two-tier cutter provably returns a single
+``MAX_SEQ_LEN - 2`` chars (the two-tier cutter provably returns a single
 piece at or under it — `cut_sent_for_bert` greedily re-merges, so any
 text <= the bound IS one piece), chars outside printable ASCII, and
 gazetteer-scan stage overflow.
@@ -56,7 +56,7 @@ from ..core.pairing import (
     COOCCUR_PRED,
     COOCCUR_WINDOW,
 )
-from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID, ID2ENT
+from ..core.tags import CHAR_VOCAB_SIZE, ENT2ID, ID2ENT, MAX_SEQ_LEN
 
 # chained gazetteer-scan depth: shortest alias is 3 chars and every match
 # needs a non-alnum follower, so <= ceil(126 / 4) + slack matches/turn
@@ -82,7 +82,7 @@ def _kg_mentions_parts(transcripts_sql: str) -> tuple[str, str]:
     nested at the same CTE count)."""
     t = DeterministicTagger()
     T = t.num_tags
-    limit = t.cfg.max_seq_len - 2
+    limit = MAX_SEQ_LEN - 2
 
     # --- charset: printable ASCII, emission vectors from the tagger's
     # whole-vocab table (codepoint < CHAR_VOCAB_SIZE => id == codepoint)

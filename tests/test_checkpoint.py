@@ -32,7 +32,7 @@ def test_roundtrip_loaded_weights_are_authoritative(spark, tmp_path):
     """Mutated-then-saved weights must survive the round trip and drive
     the outputs — proving load overwrites the seeded init instead of
     silently regenerating it."""
-    cfg = TaggerConfig(feature_layer="bilstm", mid_dim=8)
+    cfg = TaggerConfig(feature_layer="bilstm")
     t = DeterministicTagger(cfg)
     # "train": perturb every tensor deterministically
     for name, arr in state_dict(t).items():
@@ -53,21 +53,17 @@ def test_roundtrip_loaded_weights_are_authoritative(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("feature_layer", ["none", "bilstm", "idcnn"])
-@pytest.mark.parametrize("mid_dim", [None, 8])
-def test_roundtrip_matrix_every_family(spark, tmp_path, feature_layer, mid_dim):
-    """Every (feature layer x mid_linear) combination round-trips with
-    MUTATED weights driving the post-load outputs: a tensor missing from
-    state_dict() would keep its seeded init after load and change the
-    decoded spans — so a new layer can't silently fall out of the
-    checkpoint format."""
-    cfg = TaggerConfig(feature_layer=feature_layer, mid_dim=mid_dim)
+@pytest.mark.parametrize("feature_layer", ["none", "bilstm"])
+def test_roundtrip_matrix_every_family(spark, tmp_path, feature_layer):
+    """Every feature layer round-trips with MUTATED weights driving the
+    post-load outputs: a tensor missing from state_dict() would keep its
+    seeded init after load and change the decoded spans — so a new layer
+    can't silently fall out of the checkpoint format."""
+    cfg = TaggerConfig(feature_layer=feature_layer)
     t = DeterministicTagger(cfg)
     sd = state_dict(t)
     # the families must actually differ in their tensor sets
-    assert ("mid_w" in sd) == (mid_dim is not None)
     assert ("feature.w_ih" in sd) == (feature_layer == "bilstm")
-    assert ("feature.proj" in sd) == (feature_layer == "idcnn")
     for name, arr in sd.items():
         arr += 0.01 * (hash(name) % 7 + 1)
     trained = [tuple(r) for r in t.tag_batch(TEXTS)]
@@ -81,30 +77,32 @@ def test_roundtrip_matrix_every_family(spark, tmp_path, feature_layer, mid_dim):
     assert [tuple(r) for r in loaded.tag_batch(TEXTS)] == trained
 
 
-def test_roundtrip_idcnn_family(spark, tmp_path):
-    cfg = TaggerConfig(feature_layer="idcnn")
-    t = DeterministicTagger(cfg)
-    ckpt = str(tmp_path / "ckpt")
-    save_tagger(t, ckpt)
-    loaded = broadcast_tagger_factory(spark, ckpt)()
-    assert loaded.cfg == cfg
-    assert [tuple(r) for r in loaded.tag_batch(TEXTS)] == [
-        tuple(r) for r in t.tag_batch(TEXTS)
-    ]
+# fields a config.json may carry that TaggerConfig no longer has, each at
+# the value the config last wrote by default
+REMOVED_FIELDS = {
+    "emb_dim": 32,
+    "use_crf": True,
+    "mid_dim": None,
+    "long_piece_cut": "hard_chunk",
+    "max_seq_len": 128,
+}
 
 
-def test_config_with_a_removed_field_is_refused(tmp_path):
+@pytest.mark.parametrize("field", list(REMOVED_FIELDS))
+def test_config_with_a_removed_field_is_refused(tmp_path, field):
     """A config.json carrying a field the config no longer has (the
-    embedding width is a constant now) makes the loader raise instead of
-    loading with the field dropped, before it touches Spark."""
+    embedding width and the sequence length are constants now; argmax
+    decoding, the mid-linear block and the three-tier cut are gone) makes
+    the loader raise instead of loading with the field dropped, before it
+    touches Spark."""
     ckpt = str(tmp_path / "ckpt")
     save_tagger(DeterministicTagger(), ckpt)
     path = os.path.join(ckpt, "config.json")
     with open(path, encoding="utf-8") as f:
         cfg = json.load(f)
     with open(path, "w", encoding="utf-8") as f:
-        json.dump(dict(cfg, emb_dim=64), f)
-    with pytest.raises(TypeError, match="emb_dim"):
+        json.dump(dict(cfg, **{field: REMOVED_FIELDS[field]}), f)
+    with pytest.raises(TypeError, match=field):
         broadcast_tagger_factory(None, ckpt)
 
 

@@ -1,5 +1,5 @@
-"""Training-feature build (E1 ETL) + augmentation operators + tagger
-decode-mode variants."""
+"""Training-feature build (E1 ETL) + augmentation operators + the
+tagger's BIO scheme."""
 
 from __future__ import annotations
 
@@ -8,10 +8,7 @@ import os
 import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.core.decode import bioes_decode_flat
-from pytorch_bert_bilstm_crf_ner_spark.core.features import (
-    FeatureConfig,
-    encode_example,
-)
+from pytorch_bert_bilstm_crf_ner_spark.core.features import encode_example
 from pytorch_bert_bilstm_crf_ner_spark.core.model import (
     DeterministicTagger,
     TaggerConfig,
@@ -25,10 +22,9 @@ needs_ref = pytest.mark.skipif(
 
 
 def test_encode_example_roundtrip():
-    cfg = FeatureConfig(max_seq_len=32)
     text = "ab spark cd"
     labels = [("ORG", "spark", 3), ("NAME", "a", 0)]
-    feat = encode_example(text, labels, cfg)
+    feat = encode_example(text, labels, 32)
     assert (
         len(feat["token_ids"])
         == len(feat["attention_mask"])
@@ -46,24 +42,23 @@ def test_encode_example_roundtrip():
 
 
 def test_encode_truncation():
-    cfg = FeatureConfig(max_seq_len=8)
-    feat = encode_example("abcdefghijkl", [("ORG", "ghijkl", 6)], cfg)
+    feat = encode_example("abcdefghijkl", [("ORG", "ghijkl", 6)], 8)
     assert len(feat["token_ids"]) == 8
     assert all(x == 0 for x in feat["label_ids"])  # span truncated away
 
 
 @needs_ref
-def test_build_features_matches_reference_counts(spark):
+def test_build_features_matches_reference_counts(spark, monkeypatch):
     """The reference preprocess (cut@max_seq_len=150) built 463 dev / 477
     test features for cner (`logs/preprocess.log`) — our distributed E1
     must produce the same cut counts from the same mid_data."""
-    from pytorch_bert_bilstm_crf_ner_spark.operators.features import build_features
+    from pytorch_bert_bilstm_crf_ner_spark.operators import features
     from pytorch_bert_bilstm_crf_ner_spark.sources.corpus import read_mid_data
 
-    cfg = FeatureConfig(max_seq_len=150)
+    monkeypatch.setattr(features, "MAX_SEQ_LEN", 150)  # read on the driver
     for mode, expected in (("dev", 463), ("test", 477)):
         mid = read_mid_data(spark, f"{REF}/data/cner/mid_data/{mode}.json")
-        feats = build_features(mid, cfg)
+        feats = features.build_features(mid)
         assert feats.count() == expected, mode
 
 
@@ -98,74 +93,10 @@ def test_template_mask_and_synthesis(spark, monkeypatch):
     assert again == {r["text"] for r in out}
 
 
-def test_tagger_bio_and_argmax_modes():
+def test_tagger_bio_mode():
     texts = ["run a table scan then hash join now", "spark query merge"]
     bio = DeterministicTagger(TaggerConfig(scheme="BIO")).tag_batch(texts)
     assert any(spans for spans in bio)
     for text, spans in zip(texts, bio):
         for m, s, _ in spans:
             assert text[s : s + len(m)] == m
-    argmax = DeterministicTagger(TaggerConfig(use_crf=False)).tag_batch(texts)
-    again = DeterministicTagger(TaggerConfig(use_crf=False)).tag_batch(texts)
-    assert argmax == again
-    for text, spans in zip(texts, argmax):
-        for m, s, _ in spans:
-            assert text[s : s + len(m)] == m
-
-
-def test_fine_grade_tokenize_matches_reference():
-    """P5 parity: our fine_grade_tokenize == the reference's
-    utils/commonUtils.py function, exec'd live with a stub tokenizer."""
-    from pytorch_bert_bilstm_crf_ner_spark.core.features import (
-        fine_grade_tokenize,
-    )
-
-    from .conftest import extract_function
-
-    ref_fn = extract_function("utils/commonUtils.py", "fine_grade_tokenize")
-    if ref_fn is None:
-        import pytest
-
-        pytest.skip("reference tree unavailable")
-
-    known = set("高勇男abc123，。")
-
-    class StubTokenizer:
-        def tokenize(self, ch):
-            return [ch] if ch in known else []
-
-    cases = [
-        "高勇：男 abc\t123\n，。",
-        "   ",
-        "高×勇",  # × unknown -> [INV]
-        "",
-        "a b\tc\nd",
-    ]
-    for text in cases:
-        assert fine_grade_tokenize(text, lambda c: c in known) == ref_fn(
-            text, StubTokenizer()
-        ), text
-
-
-def test_encode_example_fine_tokenize_mode():
-    from pytorch_bert_bilstm_crf_ner_spark.core.features import (
-        BLANK_ID,
-        INV_ID,
-        FeatureConfig,
-        encode_example,
-        fine_grade_tokenize,
-    )
-
-    text = "高勇 男"
-    toks = fine_grade_tokenize(text)
-    assert toks == ["高", "勇", "[BLANK]", "男"]
-    cfg = FeatureConfig(max_seq_len=16, fine_tokenize=True)
-    feat = encode_example(text, [("NAME", "高勇", 0)], cfg)
-    assert len(feat["token_ids"]) == 16
-    assert feat["token_ids"][3] == BLANK_ID  # CLS shift: position 2 -> idx 3
-    # label alignment unaffected by [BLANK]: B at 1, E at 2 (+CLS)
-    assert feat["label_ids"][1] != 0 and feat["label_ids"][2] != 0
-    # [INV] path
-    cfg2 = FeatureConfig(max_seq_len=8, fine_tokenize=True)
-    f2 = encode_example("a", [], cfg2)
-    assert INV_ID not in f2["token_ids"]  # default is_known=None: no OOV

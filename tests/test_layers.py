@@ -1,11 +1,11 @@
-"""BiLSTM / IDCNN feature layers (M2/M3): shapes, determinism, locality,
-and end-to-end tagging through both model families."""
+"""BiLSTM feature layer (M2): shapes, determinism, locality, and
+end-to-end tagging through the bilstm model family."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from pytorch_bert_bilstm_crf_ner_spark.core.layers import NumpyBiLSTM, NumpyIDCNN
+from pytorch_bert_bilstm_crf_ner_spark.core.layers import NumpyBiLSTM
 from pytorch_bert_bilstm_crf_ner_spark.core.model import (
     DeterministicTagger,
     TaggerConfig,
@@ -28,38 +28,17 @@ def test_bilstm_shapes_and_determinism():
     assert not np.array_equal(a[:, 0, 5:], c[:, 0, 5:])  # bwd sees the change
 
 
-def test_idcnn_shapes_and_receptive_field():
-    x = np.random.RandomState(1).uniform(-1, 1, (2, 15, 8)).astype(np.float32)
-    layer = NumpyIDCNN(8, 6, seed=3, blocks=2)
-    out = layer(x)
-    assert out.shape == (2, 15, 6)
-    assert np.array_equal(out, NumpyIDCNN(8, 6, seed=3, blocks=2)(x))
-    # a far-away perturbation beyond the receptive field leaves early
-    # positions unchanged is NOT guaranteed with 2 blocks x dil(1,1,2)=8
-    # radius each... perturb the last position and check position 0 of a
-    # long-enough sequence stays equal for blocks=1 (radius 4)
-    small = NumpyIDCNN(8, 6, seed=3, blocks=1)
-    x3 = np.random.RandomState(2).uniform(-1, 1, (1, 30, 8)).astype(np.float32)
-    y3 = small(x3)
-    x4 = x3.copy()
-    x4[:, 29, :] += 1.0
-    y4 = small(x4)
-    assert np.allclose(y3[:, :20], y4[:, :20])
-    assert not np.allclose(y3[:, 29], y4[:, 29])
-
-
 def test_tagging_through_feature_layers():
-    for fl in ("bilstm", "idcnn"):
-        cfg = TaggerConfig(feature_layer=fl)
-        a = DeterministicTagger(cfg).tag_batch(TEXTS)
-        b = DeterministicTagger(cfg).tag_batch(TEXTS)
-        assert a == b, fl
-        for text, spans in zip(TEXTS, a):
-            for m, s, _ in spans:
-                assert text[s : s + len(m)] == m
-        # gazetteer prior still dominates -> multi-word mentions found
-        got = {(m, t) for m, _, t in a[0]}
-        assert ("table scan", "PRO") in got, fl
-    # the three families decode independently (different weights)
+    cfg = TaggerConfig(feature_layer="bilstm")
+    a = DeterministicTagger(cfg).tag_batch(TEXTS)
+    b = DeterministicTagger(cfg).tag_batch(TEXTS)
+    assert a == b
+    for text, spans in zip(TEXTS, a):
+        for m, s, _ in spans:
+            assert text[s : s + len(m)] == m
+    # gazetteer prior still dominates -> multi-word mentions found
+    got = {(m, t) for m, _, t in a[0]}
+    assert ("table scan", "PRO") in got
+    # "none" is the default family
     plain = DeterministicTagger().tag_batch(TEXTS)
     assert plain == DeterministicTagger(TaggerConfig(feature_layer="none")).tag_batch(TEXTS)

@@ -19,13 +19,17 @@ scripts and the entry points.  Spark-free.
   is its literal value and a call that omits the parameter uses the
   default.  Any other default is a constant: the body reads a module
   constant instead, an operator and its twin read the same one, and a
-  test that needs another value monkeypatches it.  `DEFAULTS_KEPT` names
-  the exceptions, each with its reason.
-- Every field of a package dataclass is set, by some call to its class,
-  to an expression other than its default.  A ``**`` splat sets nothing:
-  the one splat, in `core/checkpoint.py`, rebuilds a config from the JSON
-  that `save_tagger` wrote from a config.  A field that no caller sets is
-  a module constant."""
+  test that needs another value monkeypatches it.
+- Every field of a package dataclass is set, by some call to its class in
+  the package or the entry files (never a test's), to an expression other
+  than its default.  A ``**`` splat sets nothing: the one splat, in
+  `core/checkpoint.py`, rebuilds a config from the JSON that `save_tagger`
+  wrote from a config.  A field that no caller sets is a module constant,
+  or it is deleted, unless `UNSET_FIELDS_KEPT` names it with its reason.
+- Both call-reading guards resolve ``f(...)`` through the calling module's
+  own definitions and ``from … import`` lines, so two functions that share
+  a name are judged by their own calls; ``x.f(...)`` counts for every
+  function named ``f``."""
 
 from __future__ import annotations
 
@@ -56,15 +60,15 @@ ROOTS = {
     "stream_dedup_exact": "streaming: exact dedup with a watermark",
     "windowed_entity_counts": "streaming: windowed entity-mention counts",
 }
-# Fields no call sets, kept because the benchmark's layer sweep
-# (`perfbench/workloads.py::kg_layers`) reads ``PipelineConfig().tagger``
-# and passes ``cfg.relations`` on; they go when that sweep is re-pointed.
-UNSET_FIELDS_KEPT = {"PipelineConfig.tagger", "PipelineConfig.relations"}
-# Defaulted parameters the product uses at one value that stay: name -> why.
-DEFAULTS_KEPT = {
-    "build_features.cfg": "FeatureConfig travels in the encode UDF's closure to the "
-                          "Python workers, which a patched module constant would not reach",
-    "fine_grade_tokenize.is_known": "stands in for the reference tokenizer's OOV check",
+# Config fields no product call sets that stay: "Class.field" -> why.
+UNSET_FIELDS_KEPT = {
+    "PipelineConfig.tagger": "the benchmark's layer sweep "
+                             "(`perfbench/workloads.py::kg_layers`) reads it",
+    "PipelineConfig.relations": "the benchmark's layer sweep passes it to the relation views",
+    "PipelineConfig.broadcast_dict": "the benchmark's layer sweep passes it to link_mentions",
+    "PipelineConfig.checkpoint_dir": "deployment path: the trained weights to serve",
+    "TaggerConfig.scheme": "north star: BIO/BIOES label schemes",
+    "TaggerConfig.feature_layer": "north star: BiLSTM encoding",
 }
 
 
@@ -76,6 +80,12 @@ def _trees() -> dict[str, ast.Module]:
                 trees[os.path.relpath(path, REPO)] = ast.parse(fh.read())
     assert len(trees) > 50  # the globs found the code
     return trees
+
+
+def _product_trees() -> dict[str, ast.Module]:
+    """The package and the entry files: the code whose calls count."""
+    return {path: tree for path, tree in _trees().items()
+            if path.startswith((PACKAGE + os.sep,) + ENTRY_FILES)}
 
 
 def _references(tree: ast.AST):
@@ -141,17 +151,67 @@ def test_every_definition_is_reached_from_an_entry_point():
             for path, first, last, name in unreached))
 
 
-def _calls(trees: dict[str, ast.Module]) -> dict[str, list[ast.Call]]:
-    """Callee name -> its calls.  A callee is resolved by bare name
-    (``f(...)`` and ``x.f(...)``), so a name shared by two functions keeps
-    the knobs of both."""
-    calls: dict[str, list[ast.Call]] = {}
-    for tree in trees.values():
+def _module(path: str) -> str:
+    """``a/b/c.py`` -> ``a.b.c``; a package's ``__init__.py`` is the package."""
+    module = path[: -len(".py")].replace(os.sep, ".")
+    return module[: -len(".__init__")] if module.endswith(".__init__") else module
+
+
+def _imports(path: str, tree: ast.Module) -> dict[str, set[tuple[str, str]]]:
+    """Name -> the (module, name) pairs the module's ``from … import``
+    lines bind it to, at any depth, relative ones resolved against the
+    module's own package."""
+    package = _module(path) if path.endswith("__init__.py") else _module(path).rpartition(".")[0]
+    bound: dict[str, set[tuple[str, str]]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            source = node.module or ""
+            if node.level:
+                base = package
+                for _ in range(node.level - 1):
+                    base = base.rpartition(".")[0]
+                source = ".".join(filter(None, (base, node.module)))
+            for alias in node.names:
+                bound.setdefault(alias.asname or alias.name, set()).add((source, alias.name))
+    return bound
+
+
+def _calls(trees: dict[str, ast.Module]) -> dict[tuple[str | None, str], list[ast.Call]]:
+    """(module, name) of the callee -> its calls.  ``f(...)`` resolves
+    through the calling module's own top-level definitions and its
+    ``from … import`` lines (a re-export is followed to the defining
+    module); ``x.f(...)`` names no module and is keyed ``(None, "f")``,
+    so it counts for every function named ``f``."""
+    imports = {_module(path): _imports(path, tree) for path, tree in trees.items()}
+    defined = {(_module(path), name) for path, tree in trees.items()
+               for name, *_ in _definitions(tree)}
+
+    def resolve(key: tuple[str, str]) -> set[tuple[str, str]]:
+        module, name = key
+        if key in defined or name not in imports.get(module, {}):
+            return {key}
+        return set().union(*(resolve(k) for k in imports[module][name]))
+
+    calls: dict[tuple[str | None, str], list[ast.Call]] = {}
+    for path, tree in trees.items():
+        module = _module(path)
         for call in ast.walk(tree):
-            if isinstance(call, ast.Call):
-                name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
-                calls.setdefault(name, []).append(call)
+            if not isinstance(call, ast.Call):
+                continue
+            if isinstance(call.func, ast.Attribute):
+                keys = {(None, call.func.attr)}
+            elif isinstance(call.func, ast.Name):
+                keys = resolve((module, call.func.id))
+            else:
+                keys = set()
+            for key in keys:
+                calls.setdefault(key, []).append(call)
     return calls
+
+
+def _calls_to(calls, path: str, name: str) -> list[ast.Call]:
+    """The calls of the top-level ``name`` defined in ``path``."""
+    return calls.get((_module(path), name), []) + calls.get((None, name), [])
 
 
 def _overrides(call: ast.Call, i: int | None, arg: str, default: ast.expr) -> bool:
@@ -229,8 +289,7 @@ def test_every_default_is_passed_somewhere():
     """Every defaulted parameter of a top-level package function is a knob
     that the product uses: calls in the package and the entry files, never
     in the tests, pass it two constant values or a pass-through."""
-    trees = {path: tree for path, tree in _trees().items()
-             if path.startswith((PACKAGE + os.sep,) + ENTRY_FILES)}
+    trees = _product_trees()
     calls, constants = _calls(trees), _constants(trees)
     n_knobs, dead = 0, []
     for path, tree in trees.items():
@@ -248,14 +307,10 @@ def test_every_default_is_passed_somewhere():
                       if d is not None]
             for i, arg, default in knobs:
                 n_knobs += 1
-                if not _is_knob(calls.get(node.name, []), i, arg, default, constants):
+                if not _is_knob(_calls_to(calls, path, node.name), i, arg, default, constants):
                     dead.append((f"{node.name}.{arg}", f"{path}:{node.lineno}"))
     assert n_knobs > 30  # the walk found the defaults
-    kept = {name for name, _ in dead} & set(DEFAULTS_KEPT)
-    stale = sorted(set(DEFAULTS_KEPT) - kept)
-    assert stale == [], f"DEFAULTS_KEPT names no one-value default: {stale}"
-    assert all(DEFAULTS_KEPT.values())  # every kept default says why
-    dead = [f"{where} {name}" for name, where in dead if name not in kept]
+    dead = [f"{where} {name}" for name, where in dead]
     assert dead == [], (f"{len(dead)} of {n_knobs} defaults the product uses at "
                         "one value:\n" + "\n".join(dead))
 
@@ -270,7 +325,10 @@ def _field_default(value: ast.expr) -> ast.expr:
 
 
 def test_every_config_field_is_set_somewhere():
-    trees = _trees()
+    """Every field of a package dataclass is set, by some call in the
+    package or the entry files (never a test's), to an expression other
+    than its default, bar the `UNSET_FIELDS_KEPT` entries."""
+    trees = _product_trees()
     calls = _calls(trees)
     n_fields, dead = 0, []
     for path, tree in trees.items():
@@ -285,12 +343,17 @@ def test_every_config_field_is_set_somewhere():
             for i, f in enumerate(fields):
                 n_fields += 1
                 name = f"{node.name}.{f.target.id}"
-                if f.value is None or name in UNSET_FIELDS_KEPT:
+                if f.value is None:
                     continue  # a field with no default is set by every call
                 default = _field_default(f.value)
                 if not any(_overrides(call, i, f.target.id, default)
-                           for call in calls.get(node.name, [])):
-                    dead.append(f"{path}:{f.lineno} {name}")
-    assert n_fields > 10  # the walk found the configs
-    assert dead == [], (f"{len(dead)} of {n_fields} config fields no call sets:\n"
+                           for call in _calls_to(calls, path, node.name)):
+                    dead.append((name, f"{path}:{f.lineno}"))
+    assert n_fields > 5  # the walk found the configs
+    kept = {name for name, _ in dead} & set(UNSET_FIELDS_KEPT)
+    stale = sorted(set(UNSET_FIELDS_KEPT) - kept)
+    assert stale == [], f"UNSET_FIELDS_KEPT names a field some call sets: {stale}"
+    assert all(UNSET_FIELDS_KEPT.values())  # every kept field says why
+    dead = [f"{where} {name}" for name, where in dead if name not in kept]
+    assert dead == [], (f"{len(dead)} of {n_fields} config fields no product call sets:\n"
                         + "\n".join(dead))

@@ -8,10 +8,7 @@ from hypothesis import strategies as st
 
 from pytorch_bert_bilstm_crf_ner_spark.core.cut import cut_sent_for_bert
 from pytorch_bert_bilstm_crf_ner_spark.core.decode import bioes_decode_flat
-from pytorch_bert_bilstm_crf_ner_spark.core.features import (
-    FeatureConfig,
-    encode_example,
-)
+from pytorch_bert_bilstm_crf_ner_spark.core.features import encode_example
 from pytorch_bert_bilstm_crf_ner_spark.core.tags import build_tag_vocab, invert_vocab
 
 CHINESE_ISH = st.text(
@@ -48,8 +45,7 @@ def spans_for_text(draw):
 def test_encode_decode_roundtrip(case):
     """decode(encode(spans)) == spans for in-bounds, non-touching spans."""
     text, spans = case
-    cfg = FeatureConfig(max_seq_len=70)
-    feat = encode_example(text, spans, cfg)
+    feat = encode_example(text, spans, 70)
     id2ent = invert_vocab(build_tag_vocab())
     body = feat["label_ids"][1 : 1 + len(text)]
     got = {(m, s, t) for m, s, t in bioes_decode_flat(body, text, id2ent)}

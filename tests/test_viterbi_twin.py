@@ -13,11 +13,8 @@ import numpy as np
 import pytest
 
 from pytorch_bert_bilstm_crf_ner_spark.core.decode import bioes_decode_flat
-from pytorch_bert_bilstm_crf_ner_spark.core.model import (
-    GAZETTEER,
-    DeterministicTagger,
-    TaggerConfig,
-)
+from pytorch_bert_bilstm_crf_ner_spark.core.model import GAZETTEER, DeterministicTagger
+from pytorch_bert_bilstm_crf_ner_spark.core.tags import MAX_SEQ_LEN
 from pytorch_bert_bilstm_crf_ner_spark.plans.viterbi_twin import (
     kg_mentions_sql,
 )
@@ -134,14 +131,14 @@ def test_twin_guards_error_loudly():
 
 def test_registered_corpus_within_twin_scope():
     """The twin's loud error() guards cover turn text
-    > max_seq_len - 2 chars and chars outside printable ASCII.  Scan the
+    > MAX_SEQ_LEN - 2 chars and chars outside printable ASCII.  Scan the
     driver's registered corpora (the SAME transcripts derivation the
     oracle runs) for BOTH bounds, so a driver data refresh fails here
     with a named cause before it ERRs inscrutably in the oracle run —
     and record that real headroom exists, not a knife-edge fit."""
     from pytorch_bert_bilstm_crf_ner_spark.sources.transcripts import TRANSCRIPTS_SQL
 
-    limit = TaggerConfig().max_seq_len - 2
+    limit = MAX_SEQ_LEN - 2
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         con = duckdb.connect()
         con.execute(
@@ -156,7 +153,7 @@ def test_registered_corpus_within_twin_scope():
         ]
         assert not too_long, (
             f"{sf_dir}: {len(too_long)} turn(s) exceed the kg twin's "
-            f"max_seq_len-2 = {limit} guard (driver data refresh?) — "
+            f"MAX_SEQ_LEN-2 = {limit} guard (driver data refresh?) — "
             f"first: {too_long[:3]}"
         )
         bad = sorted(
